@@ -104,10 +104,15 @@ class Tracer:
 
     def patch_attr(self, owner, attr: str, name: str, outermost=False,
                    after=None) -> None:
-        orig = owner.__dict__[attr] if isinstance(owner, type) \
-            else getattr(owner, attr)
+        """Wrap a method, classmethod or function attribute of a class."""
+        orig = owner.__dict__[attr]
         self._undo.append((owner, attr, orig))
-        setattr(owner, attr, self._wrapper(orig, name, outermost, after))
+        if isinstance(orig, classmethod):
+            wrapped = classmethod(self._wrapper(orig.__func__, name,
+                                                outermost, after))
+        else:
+            wrapped = self._wrapper(orig, name, outermost, after)
+        setattr(owner, attr, wrapped)
 
     def patch_function(self, orig, name: str, outermost=False,
                        after=None) -> None:
@@ -121,7 +126,7 @@ class Tracer:
                     self._undo.append((mod, attr, orig))
                     setattr(mod, attr, wrapped)
 
-    def install(self, api) -> None:
+    def install(self, workload) -> None:
         from py4j.clientserver import ClientServerConnection
         from py4j.protocol import MEMORY_COMMAND_NAME
         from pyspark.sql import DataFrameWriter
@@ -176,15 +181,17 @@ class Tracer:
         self.patch_attr(ClientServerConnection, "send_command", "py4j",
                         after=count_py4j)
         self.patch_function(session.get_spark, "session.get_spark")
-        self.patch_attr(api, "ingest", "localrel.ingest")
+        self.patch_attr(engine.Jetro, "from_value", "localrel.ingest")
         self.patch_attr(engine.JetroTables, "_doc_fallback", "engine.fallback",
                         after=lambda a, r: self.counts.update(
                             ["engine.fallbacks"]))
         # gate functions are looked up in the registry dict the workload
         # holds; wrap the dict's values
-        self._queries = (api.queries, dict(api.queries))
-        for name, fn in list(api.queries.items()):
-            api.queries[name] = self._wrapper(fn, "gate.build", False)
+        queries = getattr(workload, "queries", None)
+        if queries is not None:
+            self._queries = (queries, dict(queries))
+            for name, fn in list(queries.items()):
+                queries[name] = self._wrapper(fn, "gate.build", False)
 
     def uninstall(self) -> None:
         for owner, attr, orig in reversed(self._undo):
@@ -265,9 +272,21 @@ def _metric_number(text: str) -> float:
     return v * scale
 
 
+def _scala_iter(coll):
+    """Python iterator over a Scala collection seen through py4j."""
+    it = coll.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
 class SparkStats:
     """Per-request counters from the job and SQL status stores. Works
-    with the UI disabled: both stores are fed by listeners regardless."""
+    with the UI disabled: both stores are fed by listeners regardless.
+
+    A request's counters cover only its own work: jobs of its job group,
+    and SQL executions that started after ``begin`` and ran none but the
+    request's jobs (work the benchmark does between requests, such as
+    collecting a reference result, falls outside both)."""
 
     def __init__(self, spark):
         self.spark = spark
@@ -275,20 +294,24 @@ class SparkStats:
         self.jsc = self.sc._jsc.sc()
         self.store = self.jsc.statusStore()
         self.sql_store = spark._jsparkSession.sharedState().statusStore()
-        self.seen_exec = self._exec_count()
+        self.seen_exec = 0
 
-    def _exec_count(self) -> int:
-        return int(self.sql_store.executionsCount())
+    def _settle(self) -> None:
+        """Wait until the listeners have seen every event posted so far."""
+        self.jsc.listenerBus().waitUntilEmpty(30_000)
 
     def begin(self, rid: int) -> None:
+        self._settle()
+        self.seen_exec = int(self.sql_store.executionsCount())
         self.sc.setJobGroup(f"perfbench-{rid}", "perfbench request", False)
 
     def collect(self, rid: int, action_df) -> Counter:
-        self.jsc.listenerBus().waitUntilEmpty(30_000)
+        self._settle()
         out: Counter = Counter()
         tracker = self.sc.statusTracker()
         skews = []
-        for jid in tracker.getJobIdsForGroup(f"perfbench-{rid}"):
+        jobs = list(tracker.getJobIdsForGroup(f"perfbench-{rid}"))
+        for jid in jobs:
             out["exec.jobs"] += 1
             info = tracker.getJobInfo(jid)
             for sid in (info.stageIds if info else []):
@@ -309,7 +332,7 @@ class SparkStats:
         if skews:
             out["exec.task_skew_sum"] += max(skews)
             out["exec.task_skew_n"] += 1
-        self._sql(out)
+        self._sql(out, set(jobs))
         if action_df is not None:
             self._catalyst(action_df, out)
         self.sc._jsc.clearJobGroup()
@@ -326,15 +349,17 @@ class SparkStats:
                 run_ms.append(m.get().executorRunTime())
         return run_ms, delay
 
-    def _sql(self, out: Counter) -> None:
-        total = self._exec_count()
-        new = total - self.seen_exec
-        self.seen_exec = total
+    def _sql(self, out: Counter, jobs: set[int]) -> None:
+        new = int(self.sql_store.executionsCount()) - self.seen_exec
         if new <= 0:
             return
-        execs = self.sql_store.executionsList(total - new, new)
+        execs = self.sql_store.executionsList(self.seen_exec, new)
         for i in range(execs.size()):
-            eid = execs.apply(i).executionId()
+            ex = execs.apply(i)
+            ex_jobs = ex.jobs().keySet()
+            if any(int(j) not in jobs for j in _scala_iter(ex_jobs)):
+                continue
+            eid = ex.executionId()
             values = self.sql_store.executionMetrics(eid)
             nodes = self.sql_store.planGraph(eid).allNodes()
             for j in range(nodes.size()):
