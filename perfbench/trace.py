@@ -16,6 +16,7 @@ import functools
 import json
 import re
 import sys
+import threading
 import time
 from collections import Counter
 
@@ -58,6 +59,11 @@ class Tracer:
         self._undo: list[tuple] = []
         self.action_df = None   # DataFrame of the request's outermost action
         self._queries = None
+        # Spans are recorded on the thread that runs the requests only.
+        # py4j's FinalizerWorker thread sends Java-object releases through
+        # the same send_command; recorded, they would interleave with this
+        # thread's span stack and give later spans the wrong parent.
+        self.thread = threading.get_ident()
 
     # ------------------------------------------------------------ spans
 
@@ -88,7 +94,8 @@ class Tracer:
 
         @functools.wraps(orig)
         def wrapper(*args, **kwargs):
-            if tracer.rid is None or (outermost and tracer.depth[name]):
+            if tracer.rid is None or (outermost and tracer.depth[name]) \
+                    or threading.get_ident() != tracer.thread:
                 return orig(*args, **kwargs)
             tracer.depth[name] += 1
             idx = tracer._open(name)
