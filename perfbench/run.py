@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """End-to-end benchmark: expression string in, checked result out.
 
-    python3 perfbench/run.py --workload rel_session --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload rel_session --seed 1 --seconds 18 --trace 0
 
-Runs from the root of a source checkout, on ``local[<cores>]`` with one
+Runs from the root of a source checkout, on ``local[2]`` with one
 closed-loop client. Workloads (see perfbench/README.md):
 
 - ``rel_session``: JQL strings through ``JetroTables.query(...).collect()``,
@@ -42,6 +42,9 @@ SETUPS = 3
 # its first tier (see _environment), latency levels off within two cycles;
 # two cycles also run each of rel_session's gate rows once.
 WARMUP_CYCLES = {"rel_session": 2, "doc_session": 2}
+# Spark task threads. Two, not one per core: the client, the driver JVM's
+# own threads and the Python workers need the other cores.
+CORES = 2
 
 
 def _metric_units() -> tuple[dict, dict]:
@@ -66,7 +69,8 @@ def _environment(run_dir: str) -> None:
     sys.path.insert(0, ROOT)
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(run_dir, "spark")
-    os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
+    os.environ["SPARK_GRAFT_CPUS"] = str(
+        min(CORES, len(os.sched_getaffinity(0))))
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = "4g"
     # no JVM perf-data files in /tmp, for the launcher JVM or Spark's
     os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
@@ -105,6 +109,29 @@ def _stop_spark(spark) -> None:
     SparkContext._jvm = None
 
 
+def _steal_s() -> float:
+    """CPU time the hypervisor has taken from this machine so far, summed
+    over its CPUs, in seconds: the steal column of /proc/stat (0 where
+    there is none)."""
+    try:
+        with open("/proc/stat") as fh:
+            fields = fh.readline().split()
+    except OSError:
+        return 0.0
+    return int(fields[8]) / os.sysconf("SC_CLK_TCK") if len(fields) > 8 else 0.0
+
+
+def _clock() -> float:
+    """Seconds of wall time in which this machine was not stolen from.
+
+    On a shared host the hypervisor takes the machine's CPUs away in
+    bursts of seconds; a request that runs through one is slower for a
+    reason outside the program, by the time it was stolen. Every
+    end-to-end time is a difference of this clock. Traced runs use plain
+    wall time, the clock their spans are timed with."""
+    return time.perf_counter() - _steal_s()
+
+
 def _median(xs):
     return statistics.median(xs) if xs else 0.0
 
@@ -135,6 +162,7 @@ def run(args, run_dir: str) -> dict:
         tracer = trace.Tracer()
         tracer.install(wl)
     cpus = int(os.environ["SPARK_GRAFT_CPUS"])
+    clock = _clock if tracer is None else time.perf_counter
     spark = None
     stopped = []  # keep stopped sessions alive: load_tables keys on id()
 
@@ -147,11 +175,11 @@ def run(args, run_dir: str) -> dict:
             stopped.append(spark)
         if tracer is not None:
             tracer.rid = 0
-        t0 = time.perf_counter()
+        t0 = clock()
         spark = session.get_spark("perfbench", cpus=cpus)
-        t1 = time.perf_counter()
+        t1 = clock()
         wl.setup(spark)
-        t2 = time.perf_counter()
+        t2 = clock()
         if tracer is not None:
             tracer.rid = None
         return (t1 - t0) * 1000, (t2 - t1) * 1000
@@ -160,12 +188,13 @@ def run(args, run_dir: str) -> dict:
         set_up()  # the first set-up also launches the JVM
         # the timed set-ups follow on the running JVM, so that they do not
         # carry the JVM launch
-        t0 = time.perf_counter()
+        t0, s0 = time.perf_counter(), _steal_s()
         setups = [set_up() for _ in range(SETUPS)]
         t1 = time.perf_counter()
         result = _measure(args, wl, spark, tracer)
         print(f"phases: {SETUPS} set-ups {t1 - t0:.1f} s, warm-up and window "
-              f"{time.perf_counter() - t1:.1f} s", file=sys.stderr)
+              f"{time.perf_counter() - t1:.1f} s; host steal "
+              f"{_steal_s() - s0:.1f} s", file=sys.stderr)
         setup_ms = [a + b for a, b in setups]
         if tracer is not None:
             tracer.write(os.path.join(
@@ -197,6 +226,7 @@ def _measure(args, wl, spark, tracer) -> dict:
     added by the caller)."""
     from perfbench import trace
 
+    clock = _clock if tracer is None else time.perf_counter
     stream = iter(wl.stream(args.seed))
     seen: set[str] = set()
     attempted = failed = 0
@@ -204,12 +234,12 @@ def _measure(args, wl, spark, tracer) -> dict:
 
     def timed(req):
         """Run one request: (elapsed seconds, result, exception)."""
-        t0 = time.perf_counter()
+        t0 = clock()
         try:
             out, err = wl.run(req), None
         except Exception as exc:  # counted as a failed request
             out, err = None, exc
-        return time.perf_counter() - t0, out, err
+        return max(clock() - t0, 0.0), out, err
 
     def checked(req, out, err) -> bool:
         nonlocal first_failure

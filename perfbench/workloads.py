@@ -6,7 +6,13 @@ cycle issues each template once, in a seeded order, so every seed runs the
 same template mix and only literals, order and repeats differ. In each
 cycle a fixed share of the slots re-issues an earlier string of the same
 template, picked by Zipf-weighted popularity rank, so a cache keyed on the
-expression string would see hits.
+expression string would see hits. The other slots issue a string not seen
+before, where the template's literals allow one. Which templates repeat
+rotates through a seeded order, so every template repeats equally often
+and the first-seen requests of every seed have the same template mix:
+with repeat slots drawn at random, one seed's window held 1 first-seen
+``group_by`` and another's 6, and ``first_seen_latency_p50_ms`` moved
+with the seed.
 
 The repeat share and the Zipf exponent are assumptions, not measurements:
 no query log of this program exists to fit them to. They are fixed here so
@@ -30,6 +36,8 @@ from perfbench import refs
 REPEAT_SHARE = 0.34
 # Exponent of the Zipf popularity law a repeat is drawn from (assumed).
 ZIPF_S = 1.2
+# Literal draws a slot makes to find a string not issued before.
+FRESH_DRAWS = 20
 
 
 @dataclass
@@ -46,8 +54,11 @@ class Stream:
 
     ``templates`` maps a template name to ``fill(rng) -> (key, lit)``.
     ``REPEAT_SHARE`` of each cycle's slots (rounded down) repeat an
-    earlier key of the same template when one exists; templates named in
-    ``fixed`` never repeat (their fill does not depend on the seed)."""
+    earlier key of the same template when one exists, the repeating
+    templates taken in turn from a seeded order; the other slots draw a
+    key not issued before, giving up after ``FRESH_DRAWS`` draws.
+    Templates named in ``fixed`` never repeat (their fill does not depend
+    on the seed)."""
 
     def __init__(self, templates: dict, seed: int, fixed: tuple = ()):
         self.templates = templates
@@ -63,18 +74,23 @@ class Stream:
 
     def __iter__(self):
         names = list(self.templates)
+        turns = [n for n in names if n not in self.fixed]
+        self.rng.shuffle(turns)
+        turns = itertools.cycle(turns)
         while True:
             self.rng.shuffle(names)
-            open_slots = [i for i, n in enumerate(names) if n not in self.fixed]
-            repeats = set(self.rng.sample(open_slots, self.repeat_slots))
+            repeats = {next(turns) for _ in range(self.repeat_slots)}
             for slot, name in enumerate(names):
                 past = self.history[name]
-                if slot in repeats and past:
+                if name in repeats and past:
                     key, lit = past[self._zipf(len(past))]
                 else:
-                    key, lit = self.templates[name](self.rng)
-                    if (key, lit) not in past:
-                        past.append((key, lit))
+                    draws = 1 if name in self.fixed else FRESH_DRAWS
+                    for _ in range(draws):
+                        key, lit = self.templates[name](self.rng)
+                        if all(key != k for k, _ in past):
+                            past.append((key, lit))
+                            break
                 self.rid += 1
                 yield Request(self.rid, name, key, dict(lit),
                               cycle_end=slot == len(names) - 1)
