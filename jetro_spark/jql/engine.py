@@ -300,6 +300,19 @@ def _analyzed_select(df: DataFrame, col: Column) -> DataFrame:
         ) from exc
 
 
+# Compiled plans (and warm handles) one Jetro handle keeps, one per
+# expression string. An entry holds a plan's driver-side objects only;
+# the bound caps a long-lived handle fed ever-new expressions.
+PLAN_CACHE_MAX = 256
+
+
+def _remember(cache: dict, key, value) -> None:
+    """cache[key] = value, evicting the oldest entry past PLAN_CACHE_MAX."""
+    if len(cache) >= PLAN_CACHE_MAX:
+        del cache[next(iter(cache))]
+    cache[key] = value
+
+
 class Jetro:
     """Document-mode handle: ``Jetro.from_bytes(spark, data).collect(expr)``.
     Reference API: jc/lib.rs:354-380 (from_bytes), :477 (collect)."""
@@ -357,7 +370,8 @@ class Jetro:
             df = df.coalesce(1).localCheckpoint(eager=True)
         self.df = df
         self.spark = spark
-        self._plan_cache: dict[str, DataFrame] = {}
+        # expr -> compiled DataFrame, or the CompileError it raised
+        self._plan_cache: dict[str, DataFrame | CompileError] = {}
         # expr -> WarmQuery | None (None = warm path unavailable, use
         # fresh_execute); False sentinel = not yet compiled
         self._warm_cache: dict[str, object] = {}
@@ -398,13 +412,24 @@ class Jetro:
         immutable). This is the Spark analog of the reference's plan +
         pointer caches (jc/lib.rs "hits the pointer cache on repeat
         calls"): deep-search expressions spend 0.5-1.3 s building the
-        schema-walk Column tree through py4j — paid once."""
-        df = self._plan_cache.get(expr)
-        if df is None:
-            tc = Compiler().compile(parse(expr), self._env())
-            df = _analyzed_select(self.df, tc.col.alias("value"))
-            self._plan_cache[expr] = df
-        return df
+        schema-walk Column tree through py4j — paid once. A CompileError
+        is memoized too and raised again. At most ``PLAN_CACHE_MAX``
+        expressions are kept; the oldest goes first."""
+        return self._frame(expr)
+
+    def _frame(self, expr: str, node: A.Node | None = None) -> DataFrame:
+        plan = self._plan_cache.get(expr)
+        if plan is None:
+            try:
+                tc = Compiler().compile(parse(expr) if node is None else node,
+                                        self._env())
+                plan = _analyzed_select(self.df, tc.col.alias("value"))
+            except CompileError as exc:
+                plan = exc
+            _remember(self._plan_cache, expr, plan)
+        if isinstance(plan, CompileError):
+            raise plan.with_traceback(None)
+        return plan
 
     def execute(self, expr: str) -> int:
         """Run ``expr`` end-to-end and materialize the result in engine
@@ -424,7 +449,7 @@ class Jetro:
         wq = self._warm_cache.get(expr, False)
         if wq is False:
             wq = compile_warm(self.frame(expr))
-            self._warm_cache[expr] = wq
+            _remember(self._warm_cache, expr, wq)
         if wq is not None:
             return wq.run()
         df = self.frame(expr)
@@ -441,25 +466,35 @@ class Jetro:
         return n
 
     def collect(self, expr: str):
-        """Evaluate and return a plain Python value (jetro collect())."""
-        node = parse(expr)
-        # rec(λ): apply to fixpoint — a driver-side loop (SURVEY §2.10);
-        # data-dependent iteration counts can't live in one static plan.
-        # Reference: ops/array.rs:741-758 rec_apply (10k iteration cap).
-        if (isinstance(node, A.Path) and node.steps
-                and isinstance(node.steps[-1], A.Method)
-                and node.steps[-1].name == "rec"):
-            lam = node.steps[-1].args[0].value
-            base: A.Node = (A.Path(node.base, node.steps[:-1])
-                            if len(node.steps) > 1 else node.base)
-            value = self._collect_node(base)
-            for _ in range(10_000):
-                nxt = _apply_lambda(self.spark, lam, value)
-                if nxt == value:
-                    return nxt
-                value = nxt
-            raise CompileError("rec: exceeded 10000 iterations without fixpoint")
-        return self._collect_node(node)
+        """Evaluate and return a plain Python value (jetro collect()).
+
+        Reuses the compiled plan that ``frame``/``execute`` memoize, so a
+        repeated expression skips parsing, compilation and analysis and
+        only runs the plan (a handle's document never changes, so the
+        plan stays valid). ``rec(λ)`` expressions are not cached: their
+        fixpoint loop compiles each step against the value before it."""
+        node = None
+        if expr not in self._plan_cache:
+            node = parse(expr)
+            # rec(λ): apply to fixpoint — a driver-side loop (SURVEY
+            # §2.10); data-dependent iteration counts can't live in one
+            # static plan. Reference: ops/array.rs:741-758 rec_apply (10k
+            # iteration cap).
+            if (isinstance(node, A.Path) and node.steps
+                    and isinstance(node.steps[-1], A.Method)
+                    and node.steps[-1].name == "rec"):
+                lam = node.steps[-1].args[0].value
+                base: A.Node = (A.Path(node.base, node.steps[:-1])
+                                if len(node.steps) > 1 else node.base)
+                value = self._collect_node(base)
+                for _ in range(10_000):
+                    nxt = _apply_lambda(self.spark, lam, value)
+                    if nxt == value:
+                        return nxt
+                    value = nxt
+                raise CompileError(
+                    "rec: exceeded 10000 iterations without fixpoint")
+        return to_python(self._frame(expr, node).first()["value"])
 
     def _collect_node(self, node: A.Node):
         tc = Compiler().compile(node, self._env())
@@ -1191,49 +1226,44 @@ class JetroTables:
         return (df.withColumn(rn, F.row_number().over(w))
                 .filter(keep).drop(rn))
 
-    def _rematerialize_order(self, df: DataFrame, order: list):
-        """Materialize the order keys into the hidden ``__ord{i}`` slots
-        and return ``(df, slot_order)``. Every key is computed in ONE
-        projection against the INPUT df before the old hidden columns
-        are dropped: the sequential withColumn loop this replaces
-        overwrote ``__ord0`` first, so a later entry referencing an
-        existing hidden column by name (stable sort's scan-order id, a
-        prior sort's carry) read the freshly clobbered value instead
-        (r8 fuzz catch)."""
-        tmp = df.select("*", *[col.alias(f"__ordc{i}")
-                               for i, (col, _d) in enumerate(order)])
-        stale = [c2 for c2 in tmp.columns
-                 if c2.startswith("__ord") and not c2.startswith("__ordc")]
-        df = tmp.drop(*stale)
-        for i in range(len(order)):
-            df = df.withColumnRenamed(f"__ordc{i}", f"__ord{i}")
-        return df, [(F.col(f"__ord{i}"), d)
-                    for i, (_c, d) in enumerate(order)]
+    def _rematerialize_order(self, df: DataFrame, order: list,
+                             cols: list[Column] | None = None):
+        """Project ``cols`` (default: the visible columns) and the order
+        keys, as the hidden ``__ord{i}`` slots, in ONE projection of
+        ``df``; return ``(df, slot_order)``. Every key reads the INPUT
+        df, so a key may reference an existing hidden column by name
+        (stable sort's scan-order id, a prior sort's carry): the
+        sequential withColumn loop this once was overwrote ``__ord0``
+        before a later key read it (r8 fuzz catch)."""
+        if cols is None:
+            cols = [F.col("`%s`" % c.replace("`", "``"))
+                    for c in _vis_cols(df)]
+        keys = [col.alias(f"__ord{i}") for i, (col, _d) in enumerate(order)]
+        return (df.select(*cols, *keys),
+                [(F.col(f"__ord{i}"), d) for i, (_c, d) in enumerate(order)])
 
     def _select_carry(self, df: DataFrame, body: A.Node, env: Env,
                       order: list | None) -> DataFrame:
         """_select_body, but when a sort order is live the sort keys ride
         along as hidden ``__ord{i}`` columns (stripped at pipeline end) so
         a later window builtin can still order by them after the
-        projection dropped the original key columns."""
+        projection dropped the original key columns. Body fields and
+        keys come from ONE projection of the input frame: every chained
+        select/drop/rename is an eager JVM analysis."""
         if not order:
             return self._select_body(df, body, env)
-        df, _ = self._rematerialize_order(df, order)
-        # keep the CALLER's env: rebuilding from df here dropped any
-        # lambda-param binding (`map(x => ...)` under a live sort
-        # compiled x.* to the missing-field null — r8 fuzz catch); bare
-        # field refs resolve by name against the final df either way,
-        # and the hidden __ord columns are only read via `extras`
-        extras = [F.col(f"__ord{i}") for i in range(len(order))]
+        # the CALLER's env: rebuilding it dropped any lambda-param binding
+        # (`map(x => ...)` under a live sort compiled x.* to the
+        # missing-field null — r8 fuzz catch)
         tc = self.c.compile(body, env)
         if isinstance(tc.dtype, T.StructType):
             self._scalar = False
-            out = df.select(tc.col.alias("__s"), *extras).select("__s.*", *[
-                f"__ord{i}" for i in range(len(order))])
+            cols = [tc.col.getField(f.name).alias(f.name)
+                    for f in tc.dtype.fields]
         else:
             self._scalar = True
-            out = df.select(tc.col.alias(self._scalar_name(body)), *extras)
-        self._order = [(F.col(f"__ord{i}"), d) for i, (_, d) in enumerate(order)]
+            cols = [tc.col.alias(self._scalar_name(body))]
+        out, self._order = self._rematerialize_order(df, order, cols)
         return out
 
     def _method_stage(self, df: DataFrame, step: A.Method, env: Env,

@@ -213,12 +213,30 @@ def _coerce(c: Column, have, want) -> Column:
     return c.cast(want)
 
 
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every nullability flag set."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True)
+                             for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(dt.keyType, _nullable(dt.valueType), True)
+    return dt
+
+
 def _unify_elem(comp, a, b):
+    """The element type both the rewritten and the untouched elements of
+    an array write are cast to. Fully nullable: Spark refuses a cast that
+    makes a nullable field NOT NULL, and Spark may type a rebuilt element
+    nullable where the document's inferred schema says NOT NULL (element
+    writes on ingested documents raised
+    DATATYPE_MISMATCH.CAST_WITHOUT_SUGGESTION)."""
     u = unify([a, b])
     if u is None:
         raise PatchError("patch write changes an array element to an "
                          "incompatible type")
-    return u
+    return _nullable(u)
 
 
 def _write_index(comp, col, dt, st: A.PatchStep, rest, value, env):

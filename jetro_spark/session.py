@@ -9,6 +9,7 @@ At cluster scale the same code runs unchanged — only master/memory change.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -90,20 +91,26 @@ def get_spark(app_name: str = "jetro_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        # Call-site capture (on by default) wraps every functions.* and
+        # Column call in four extra JVM round trips plus a Python stack
+        # walk, only to name the DataFrame call site in an
+        # AnalysisException's query context. Query building is mostly
+        # such calls. Static conf: it only takes effect on a session
+        # this builder starts.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
-_TABLE_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-# id(DataFrame) -> (splittable units, row count) for tables loaded by
+# DataFrame -> (splittable units, row count) for tables loaded by
 # load_tables — the inputs fan_out needs to decide whether the scan can
 # parallelize at all (parquet splits at row-group granularity: a
 # single-row-group file yields ONE row-carrying task no matter what
-# maxPartitionBytes says)
-_FAN_META: dict[int, tuple[int, int]] = {}
+# maxPartitionBytes says). Weakly keyed: the entry lives as long as the
+# loaded frame object does.
+_FAN_META: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def fan_out(df: DataFrame, *, full: bool = False) -> DataFrame:
@@ -131,7 +138,7 @@ def fan_out(df: DataFrame, *, full: bool = False) -> DataFrame:
     served by its map-side partial aggregate than by shuffling full
     rows (measured: group_agg LOSES 25% fanned; dedup_spans WINS
     2.5x)."""
-    meta = _FAN_META.get(id(df))
+    meta = _FAN_META.get(df)
     if meta is None:
         return df
     units, rows = meta
@@ -152,14 +159,16 @@ def load_tables(
     Results are memoized per (session, sf_dir): re-reading parquet footers
     and re-inferring schemas added ~0.1-0.3 s of fixed cost to EVERY gate
     query (each calls load_tables) — the cached DataFrames are lazy plans,
-    so reuse is free and safe.
+    so reuse is free and safe. The memo lives on the session object, so
+    it ends with the session. A weakly keyed map would never drop an
+    entry: the cached frames hold their session.
 
     The driver's parquet carries nanosecond timestamps (TIMESTAMP(NANOS));
     Spark reads those only with the legacy nanosAsLong conf, under which
     they surface as timestamp_ntz — set it on whatever session we're given.
     """
-    key = (id(spark), sf_dir)
-    cached = _TABLE_CACHE.get(key)
+    memo = spark.__dict__.setdefault("_jetro_tables", {})
+    cached = memo.get(sf_dir)
     if cached is not None:
         if register:
             for name, df in cached.items():
@@ -187,9 +196,9 @@ def load_tables(
             # operators regardless of the physical representation.
             df = with_event_timestamp(df, "ts", "event_time")
         if meta is not None:
-            _FAN_META[id(df)] = meta
+            _FAN_META[df] = meta
         dfs[name] = df
         if register:
             df.createOrReplaceTempView(name)
-    _TABLE_CACHE[key] = dict(dfs)
+    memo[sf_dir] = dict(dfs)
     return dfs

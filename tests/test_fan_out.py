@@ -29,7 +29,7 @@ def tables(spark):
 
 def test_single_row_group_table_is_fanned(spark, tables):
     d = tables["documents"]
-    assert _FAN_META[id(d)] == (1, 5000)
+    assert _FAN_META[d] == (1, 5000)
     f = fan_out(d)
     assert f is not d
     n = f.rdd.getNumPartitions()

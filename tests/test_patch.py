@@ -5,8 +5,12 @@ chain-write desugar on document roots, Phase-B pipe/object/let fusion."""
 
 from __future__ import annotations
 
+import copy
+import json
+
 import pytest
 
+from jetro_spark.benchdoc import synth_doc
 from jetro_spark.jql.compiler import CompileError
 from jetro_spark.jql.engine import Jetro
 
@@ -341,3 +345,50 @@ def test_patch_over_jetro_docs_corpus(spark):
     assert "tmp" not in rows[0].__fields__
     assert [r["total"] for r in rows] == [200.0, 400.0, 600.0, 800.0, 1000.0]
     assert [r["big"] for r in rows] == [False, False, True, True, True]
+
+
+# ------------------------------------ element writes on ingested documents
+
+
+def _edit_orders(doc, edit):
+    """Hand-computed patch result: a copy of ``doc`` with ``edit(i, order)``
+    applied to every order."""
+    out = copy.deepcopy(doc)
+    for i, order in enumerate(out["orders"]):
+        edit(i, order)
+    return out
+
+
+def _double_total(i, order):
+    order["total"] *= 2
+
+
+def _status_first(i, order):
+    if i == 0:
+        order["status"] = "x"
+
+
+def _flag_big(i, order):
+    if order["total"] > 9000:
+        order["status"] = "flagged"
+
+
+@pytest.mark.parametrize("ingest", ["from_value", "from_bytes"])
+@pytest.mark.parametrize("expr,edit", [
+    ("patch $ { orders[*].total: @ * 2 }", _double_total),
+    ('patch $ { orders[0].status: "x" }', _status_first),
+    ('patch $ { orders[* if total > 9000].status: "flagged" }', _flag_big),
+], ids=["wild", "index", "wild_if"])
+def test_patch_array_element_on_not_null_schema(spark, ingest, expr, edit):
+    # the ingested schema of a generated document claims NOT NULL nested
+    # fields; writing into array elements cast the rebuilt (nullable)
+    # element to it and failed analysis. 60 orders: the first size with an
+    # order over 9000, so the filtered write changes one element.
+    doc = synth_doc(60, 6)
+    want = _edit_orders(doc, edit)
+    assert want != doc
+    if ingest == "from_value":
+        j = Jetro.from_value(spark, doc)
+    else:
+        j = Jetro.from_bytes(spark, json.dumps(doc).encode())
+    assert j.collect(expr) == want

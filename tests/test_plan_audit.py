@@ -364,8 +364,8 @@ def test_r14_pass_reduction_shapes(plans, spark):
       of which are the 10-row query side.
     - bm25_topk: tf and corpus-stats share ONE tokenize via the
       doc-level repartition (REPARTITION_BY_COL exchange present;
-      its reuse is runtime-AQE, visible in
-      plans/r14/bm25_topk_after2_final.txt).
+      its reuse is runtime-AQE: the ReusedExchange shows only in the
+      final adaptive plan, after execution).
     - set_ops: both memberships fold into one aggregate — never the
       old 4-scan intersect/subtract chain.
     - check_constraints: row checks ride the uniqueness groupBy —
