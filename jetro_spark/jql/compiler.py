@@ -1825,6 +1825,23 @@ def _arr_out(recv: TC) -> T.DataType:
     return recv.dtype if isinstance(recv.dtype, T.ArrayType) else T.ArrayType(T.NullType())
 
 
+def comparator_desc(lam: A.Lambda) -> bool:
+    """Direction of a two-param comparator sort: the canonical
+    `(a, b) => a < b` shapes (either operand order, strict or not) are a
+    natural sort, descending when they compare the other way; anything
+    else is rejected loudly. Shared by both compilers."""
+    body = lam.body
+    if not (isinstance(body, A.Binary) and body.op in ("<", "<=", ">", ">=")
+            and isinstance(body.left, A.Ident)
+            and isinstance(body.right, A.Ident)
+            and {body.left.name, body.right.name} == set(lam.params)):
+        raise CompileError(
+            "comparator sort supports only `(a, b) => a < b` shapes; "
+            "use sort(key) / sort(-key) for key-based ordering")
+    asc_ops = ("<", "<=") if body.left.name == lam.params[0] else (">", ">=")
+    return body.op not in asc_ops
+
+
 def _sort_args(self: Compiler, recv: TC, args: list[A.Arg], env: Env):
     """sort() natural; sort(key) asc; sort(-key) desc; multi-key;
     sort((a, b) => a < b) comparator form — Spark's array_sort has no
@@ -1835,18 +1852,7 @@ def _sort_args(self: Compiler, recv: TC, args: list[A.Arg], env: Env):
         return None, False
     if (len(args) == 1 and isinstance(args[0].value, A.Lambda)
             and len(args[0].value.params) == 2):
-        lam = args[0].value
-        body = lam.body
-        if isinstance(body, A.Binary) and body.op in ("<", "<=", ">", ">=") \
-                and isinstance(body.left, A.Ident) \
-                and isinstance(body.right, A.Ident) \
-                and {body.left.name, body.right.name} == set(lam.params):
-            asc_ops = ("<", "<=") if body.left.name == lam.params[0] \
-                else (">", ">=")
-            return [(lambda x: x, body.op not in asc_ops)], True
-        raise CompileError(
-            "comparator sort supports only `(a, b) => a < b` shapes; "
-            "use sort(key) / sort(-key) for key-based ordering")
+        return [(lambda x: x, comparator_desc(args[0].value))], True
     keyspecs = []
     for a in args:
         node, desc = a.value, False
@@ -2832,7 +2838,7 @@ def m_explode_doc(self, recv, args, env):
     """Doc-mode explode(field): one copy of each object per element of
     its (array-typed) field; a null field keeps the item; a uniformly
     non-array field is the identity. Reference: ops/collection.rs:497-520
-    (the relational table form lowers in engine._method_stage)."""
+    (the relational table form lowers in engine.JetroTables._explode)."""
     field = _field_name_arg(args)
     el = _elem(recv)
     if not isinstance(el, T.StructType) or field not in el.fieldNames() \
@@ -3444,54 +3450,62 @@ def _m_win0(fn):
     return m
 
 
+# Alternative spellings of builtins (registry.rs:384-388), the only place
+# they are declared: METHODS and the relational stage table
+# (engine.STAGES) are keyed by the canonical name alone.
+ALIASES = {
+    "find": "filter", "find_all": "filter", "drop": "skip",
+    "takewhile": "take_while", "dropwhile": "drop_while",
+    "find_one": "find_first", "sort_by": "sort", "reverse_str": "reverse",
+    "distinct": "unique", "batch": "chunk", "contains": "includes",
+    "index": "index_of", "exists": "any",
+    # the reference spells cummax/cummin (defs.rs:2299,2314); cum_max/
+    # cum_min are the operator-level spelling
+    "cum_max": "cummax", "cum_min": "cummin",
+    "to_pairs": "entries", "lstrip": "trim_left",
+}
+
 METHODS = {
     # arrays / pipelines (§2.3)
-    "filter": m_filter, "find": m_filter, "find_all": m_filter,
-    "map": m_map, "flat_map": m_flat_map,
-    "take": m_take, "skip": m_skip, "drop": m_skip,
+    "filter": m_filter, "map": m_map, "flat_map": m_flat_map,
+    "take": m_take, "skip": m_skip,
     "take_while": m_take_while, "drop_while": m_drop_while,
-    "takewhile": m_take_while, "dropwhile": m_drop_while,
     "first": m_first, "last": m_last, "nth": m_nth,
-    "find_first": m_find_first, "find_one": m_find_first,
+    "find_first": m_find_first,
     "find_index": m_find_index, "indices_where": m_indices_where,
-    "sort": m_sort, "sort_by": m_sort,
-    "reverse": m_reverse, "reverse_str": m_reverse,
-    "unique": m_unique, "distinct": m_unique, "unique_by": m_unique_by,
+    "sort": m_sort, "reverse": m_reverse,
+    "unique": m_unique, "unique_by": m_unique_by,
     "compact": m_compact, "flatten": m_flatten,
     "append": m_append, "prepend": m_prepend, "remove": m_remove,
     "enumerate": m_enumerate, "pairwise": m_pairwise,
-    "window": m_window, "chunk": m_chunk, "batch": m_chunk,
+    "window": m_window, "chunk": m_chunk,
     "accumulate": m_accumulate, "partition": m_partition,
     "zip": m_zip, "zip_longest": m_zip_longest,
     "fanout": m_fanout, "collect": m_collect,
     "diff": m_diff, "intersect": m_intersect, "union": m_union,
-    "includes": m_includes, "contains": m_includes,
-    "index": m_index_of, "index_of": m_index_of,
+    "includes": m_includes, "index_of": m_index_of,
     "last_index_of": m_last_index_of, "indices_of": m_indices_of,
     "zip_shape": m_zip_shape, "group_shape": m_group_shape,
     "join": m_join,
     # aggregates (§2.4)
     "len": m_len, "count": m_count,
     "sum": m_sum, "avg": m_avg, "min": m_min, "max": m_max,
-    "any": m_any, "exists": m_any, "all": m_all,
+    "any": m_any, "all": m_all,
     "min_by": m_min_by, "max_by": m_max_by,
     "group_by": m_group_by, "count_by": m_count_by, "index_by": m_index_by,
     "explode": m_explode_doc, "implode": m_implode_doc, "pivot": m_pivot_doc,
     "approx_count_distinct": m_approx_count_distinct,
     "equi_join": m_equi_join,
-    # positional analytics (§2.6) — ops/collection.rs:124-343; reference
-    # names are cummax/cummin (defs.rs:2299,2314); cum_max/cum_min kept
-    # as aliases for the operator-level spelling
+    # positional analytics (§2.6) — ops/collection.rs:124-343
     "lag": m_lag, "lead": m_lead,
     "rolling_sum": _m_rolling("sum"), "rolling_avg": _m_rolling("avg"),
     "rolling_min": _m_rolling("min"), "rolling_max": _m_rolling("max"),
-    "cummax": _m_win0(AR.cum_max), "cum_max": _m_win0(AR.cum_max),
-    "cummin": _m_win0(AR.cum_min), "cum_min": _m_win0(AR.cum_min),
+    "cummax": _m_win0(AR.cum_max), "cummin": _m_win0(AR.cum_min),
     "diff_window": _m_win0(AR.diff_window), "pct_change": _m_win0(AR.pct_change),
     "zscore": _m_win0(AR.zscore),
     # object transforms (§2.7)
     "keys": m_keys, "values": m_values,
-    "entries": m_entries, "to_pairs": m_entries,
+    "entries": m_entries,
     "from_pairs": _ob1(OB.from_pairs), "invert": _ob1(OB.invert),
     "pick": m_pick, "omit": m_omit,
     "merge": _ob2(OB.merge), "deep_merge": _ob2(OB.deep_merge),
@@ -3514,7 +3528,7 @@ METHODS = {
     "capitalize": _s1(S.capitalize), "title_case": _s1(S.title_case),
     "snake_case": _s1(S.snake_case), "kebab_case": _s1(S.kebab_case),
     "camel_case": _s1(S.camel_case), "pascal_case": _s1(S.pascal_case),
-    "trim": _s1(S.trim), "trim_left": _s1(S.trim_left), "lstrip": _s1(S.trim_left),
+    "trim": _s1(S.trim), "trim_left": _s1(S.trim_left),
     "trim_right": _s1(S.trim_right),
     "pad_left": m_pad("left"), "pad_right": m_pad("right"), "center": m_pad("center"),
     "indent": m_indent, "repeat": m_repeat,
@@ -3559,6 +3573,7 @@ METHODS = {
     "ceil": _s1(S.ceil, T.LongType()), "floor": _s1(S.floor, T.LongType()),
     "round": m_round, "abs": _s1(S.abs_, None),
 }
+METHODS.update({a: METHODS[c] for a, c in ALIASES.items()})
 
 
 # ---------------------------------------------------------------------------

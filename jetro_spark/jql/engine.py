@@ -23,21 +23,36 @@ sorts JSON fields alphabetically, but jetro objects are insertion-ordered
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import json
+import os
 import warnings
+from collections.abc import Callable
 
 from pyspark.errors.exceptions.base import AnalysisException
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
-from jetro_spark.functions.core import jt_truthy
 from jetro_spark.jql import ast as A
 from jetro_spark.jql.compiler import (
+    ALIASES,
     TC,
     Compiler,
     CompileError,
     Env,
+    _canon_str,
+    _cross_renders,
+    _csv_cell,
+    _family,
+    _key_collide,
+    _reorder_struct_probe,
+    _skips_numeric_fold,
+    comparator_desc,
+    eq_comparable,
+    field_access,
     is_objrepr,
     unify,
     union_struct,
@@ -122,8 +137,7 @@ def _to_row(v, dt: T.DataType):
     if v is None:
         return None
     if isinstance(dt, T.VariantType):
-        from pyspark.sql.types import VariantVal
-        return VariantVal.parseJson(json.dumps(v))
+        return T.VariantVal.parseJson(json.dumps(v))
     if isinstance(dt, T.StructType):
         src = v if isinstance(v, dict) else {}
         return tuple(_to_row(src.get(f.name), f.dataType) for f in dt.fields)
@@ -141,8 +155,7 @@ def to_python(v):
     group_by, dynamic object literals, dict comprehensions) converts to
     a plain insertion-ordered dict with last-wins on duplicate keys,
     matching jetro's Val::Obj presentation (IndexMap, value.rs:47)."""
-    from pyspark.sql.types import VariantVal
-    if isinstance(v, VariantVal):
+    if isinstance(v, T.VariantVal):
         return v.toPython()
     if isinstance(v, Row):
         v = {k: to_python(x) for k, x in zip(v.__fields__, v)}
@@ -174,8 +187,6 @@ def _apply_lambda(spark: SparkSession, lam: A.Node, value):
     re-ingesting it as a single-field document."""
     sub = Jetro.from_value(spark, {"v": value})
     root = sub.root()
-    from jetro_spark.jql.compiler import field_access
-
     vtc = field_access(root, "v")
     env = Env(root=root, current=vtc)
     body = lam
@@ -189,6 +200,64 @@ def _apply_lambda(spark: SparkSession, lam: A.Node, value):
 def _vis_cols(df: DataFrame) -> list[str]:
     """Visible (non-``__ord``) columns — the pipeline's data columns."""
     return [c for c in df.columns if not c.startswith("__ord")]
+
+
+def _hidden_cols(df: DataFrame) -> list[Column]:
+    """The hidden ``__ord`` columns, to carry through a projection."""
+    return [F.col(c) for c in df.columns if c.startswith("__ord")]
+
+
+def _element(df: DataFrame, bare: bool = True) -> TC:
+    """The pipeline element as one typed column: with ``bare``, the
+    column of a one-column pipeline itself; else the row struct. A
+    lambda param bound to the struct (``row=True``) still compiles field
+    access to top-level F.col (pushdown-friendly), while VALUE uses of
+    the whole param (`x => x > 40`) reach Spark's analyzer and fail
+    controlled, exactly like doc mode."""
+    vis = _vis_cols(df)
+    if bare and len(vis) == 1:
+        return TC(F.col(vis[0]), df.schema[vis[0]].dataType)
+    return TC(F.struct(*[F.col(c) for c in vis]),
+              T.StructType([df.schema[c] for c in vis]), row=True)
+
+
+def _canon_key(col: Column, dt: T.DataType) -> Column:
+    """The reference's canonical key string (val_to_key, util.rs:216-226):
+    a Null key renders "null"."""
+    return F.coalesce(_canon_str(col, dt), F.lit("null"))
+
+
+def _canon_cols(df: DataFrame, *names: str) -> DataFrame:
+    for n in names:
+        df = df.withColumn(n, _canon_key(F.col(n), df.schema[n].dataType))
+    return df
+
+
+def _first_per_key(df: DataFrame, keys: list[Column],
+                   order: list) -> DataFrame:
+    """Each key's FIRST row in pipeline order, re-sorted by it (the
+    dedup window's shuffle destroys the physical order)."""
+    w = Window.partitionBy(*keys).orderBy(*_order_by(order))
+    return (df.withColumn("__uq_rn", F.row_number().over(w))
+            .filter(F.col("__uq_rn") == 1).drop("__uq_rn")
+            .orderBy(*_order_by(order)))
+
+
+def _window_operand(df: DataFrame) -> tuple[str, Column]:
+    """(name, value) of a positional analytic's single projected column,
+    coerced to f64 like ``numeric_options`` (ops/collection.rs:89-105)."""
+    data = _vis_cols(df)
+    if len(data) != 1:
+        raise CompileError(
+            "window builtin: expected a single projected column "
+            f"(use .map(field) first), got {data}")
+    cname = data[0]
+    dt = df.schema[cname].dataType
+    if isinstance(dt, (T.NumericType, T.NullType)):
+        return cname, F.col(cname).cast("double")
+    if isinstance(dt, T.VariantType):
+        return cname, F.try_variant_get(F.col(cname), "$", "double")
+    return cname, F.lit(None).cast("double")
 
 
 def _order_by(order: list) -> list[Column]:
@@ -231,7 +300,6 @@ def _collected_elems(df: DataFrame, elem: Column, order: list | None,
     of always paying the interpreted comparator (the b78d241 gate never
     applied on this shared path)."""
     if order is not None:
-        from pyspark.sql.window import Window
         w = Window.orderBy(*_order_by(order))
         tagged = df.select(F.row_number().over(w).alias("__oc_rn"),
                            elem.alias("__oc_e"))
@@ -268,18 +336,14 @@ def _join_key_kwargs(ldt: T.DataType, rdt: T.DataType,
     null → 'null'). int-vs-float stays canonical (eqNullSafe would
     cast longs through double and collide keys past 2^53 where
     val_to_key strings differ)."""
-    from jetro_spark.jql.compiler import _canon_str
-
     ints = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     flts = (T.FloatType, T.DoubleType)
     for fam in (ints, flts, T.BooleanType,
                 T.DateType, T.TimestampType):
         if isinstance(ldt, fam) and isinstance(rdt, fam):
             return {"null_safe": True}
-    return {"lkey_col": F.coalesce(_canon_str(F.col(lk), ldt),
-                                   F.lit("null")),
-            "rkey_col": F.coalesce(_canon_str(F.col(rk), rdt),
-                                   F.lit("null"))}
+    return {"lkey_col": _canon_key(F.col(lk), ldt),
+            "rkey_col": _canon_key(F.col(rk), rdt)}
 
 
 def _analyzed_select(df: DataFrame, col: Column) -> DataFrame:
@@ -505,77 +569,6 @@ class Jetro:
 # ------------------------------------------------------- relational mode
 
 
-_REL_TERMINALS = {"count", "sum", "avg", "min", "max", "any", "exists", "all",
-                  "len", "approx_count_distinct"}
-
-# positional analytics (§2.6) with a relational Window lowering
-_WINDOW_STAGES = {"lag", "lead", "rolling_sum", "rolling_avg", "rolling_min",
-                  "rolling_max", "cummax", "cummin", "cum_max", "cum_min",
-                  "diff_window", "pct_change", "zscore"}
-
-# Stages whose semantics are defined by the pipeline's SEQUENCE order.
-# With no .sort(...) upstream they historically collapsed to the doc
-# fallback; since r8 they lower off the scan-order surrogate whenever
-# the physical row order still IS the document order (see _scan_ok).
-_ORDER_HUNGRY = _WINDOW_STAGES | {
-    "last", "nth", "enumerate", "chunk", "pairwise", "reverse",
-    "take_while", "drop_while", "takewhile", "dropwhile", "accumulate",
-    "window", "unique", "distinct", "unique_by",
-    # set ops keep the RECEIVER's document order (and ordered union
-    # appends the other table's own order) — route unsorted pipelines
-    # through the order-restoring branches so the output sequence stays
-    # doc-faithful (r8 2500-soak catch: diff's left_anti shuffle order
-    # leaked into a downstream accumulate)
-    "diff", "intersect", "union",
-    # keyed reducers whose doc semantics read pipeline order: group_by
-    # collects groups IN ORDER, index_by/pivot are last-wins, pivot3 /
-    # group_shape collect per-cell/per-group sequences (r9 —
-    # collect_list arrival order is arbitrary under real multi-mapper
-    # shuffles; these now sort collected elements by a scan-order
-    # surrogate and fall back honestly when order is unrecoverable)
-    "group_by", "index_by", "implode", "pivot", "group_shape"}
-
-# Stages after which the PHYSICAL row order still equals the document
-# order when no explicit order is carried: narrow transformations
-# (filter/projection/generate/limit — no exchange, partition order
-# kept) and single-row/scalar sinks (any order of one row is every
-# order). A stage outside this set that completes with no carried
-# order invalidates the scan-order surrogate for the rest of the
-# pipeline (its output row order is shuffle-arbitrary).
-_SCAN_KEEPERS = {
-    "filter", "map", "take", "drop", "skip", "first", "flat_map", "explode",
-    "compact", "flatten", "remove", "find", "min_by", "max_by",
-    "count", "len", "sum", "avg", "min", "max", "any", "all", "exists",
-    "approx_count_distinct", "to_json", "to_csv", "to_tsv", "join",
-    "includes", "index_of", "indices_of", "partition"}
-
-
-def _keeps_scan_order(step) -> bool:
-    if isinstance(step, (A.InlineFilter, A.MapShape, A.Index, A.Slice,
-                         A.Quantifier)):
-        return True
-    return isinstance(step, A.Method) and step.name in _SCAN_KEEPERS
-
-
-# Stages that never READ the pipeline's order: projections, filters,
-# order-insensitive reducers (multiset semantics), and keyed reducers
-# whose doc/relational comparison contract is order-normalized
-# (count_by). Everything else — positional stages, windows, sorts
-# (stable ties), min_by/max_by (ties), first-seen/last-wins keyed
-# reducers (unique_by, index_by, group_by's collected group order),
-# find_index/index_of, and any stage that might doc-fallback — is
-# conservatively treated as an order CONSUMER.
-_ORDER_BLIND = {"map", "filter", "count_by", "sum", "avg", "min", "max",
-                "len", "count", "any", "all", "approx_count_distinct",
-                "includes", "compact", "equi_join", "explode"}
-
-
-def _order_blind(step) -> bool:
-    if isinstance(step, (A.InlineFilter, A.MapShape, A.Quantifier)):
-        return True
-    return isinstance(step, A.Method) and step.name in _ORDER_BLIND
-
-
 class JetroDocs:
     """Multi-document engine — the reference's ``JetroEngine`` (explicit
     plan cache + shared VM for long-lived multi-document use,
@@ -674,10 +667,6 @@ class JetroTables:
         # a .sort(...) stage and threaded through order-preserving stages
         # so positional analytics (lag/rolling/... §2.6) can window on it
         self._order: list | None = None
-        # True once a set-op union stage emitted a plan Union: positional
-        # sinks then avoid GlobalLimit above it (Spark 4.1 AQE drop —
-        # see _ordered_prefix / SCALE.md)
-        self._has_union: bool = False
         # True while the current pipeline's PHYSICAL row order still is
         # its document order (root scan + order-preserving stages) — the
         # precondition for the scan-order surrogate _maybe_scan_order
@@ -688,6 +677,25 @@ class JetroTables:
         # ambiguous (`map({v: v})` also has one column), so the engine
         # tracks which projection produced it for the doc fallback
         self._scalar: bool = False
+        self._new_query()
+
+    def _new_query(self) -> None:
+        """Reset the per-query pipeline state, so nothing one query
+        learned (a Union in its plan, hidden-name counters) leaks into
+        the next query on this handle."""
+        # True once a set-op union stage emitted a plan Union: positional
+        # sinks then avoid GlobalLimit above it (Spark 4.1 AQE drop —
+        # see _ordered_prefix / SCALE.md)
+        self._has_union = False
+        # counters that make hidden column names unique within a plan
+        self._sort_seq = 0
+        self._setop_seq = 0
+        # order-demand lookahead for the stage being lowered (_pipeline)
+        self._tail_reads_order = True
+        self._has_tail = False
+        # is the last compiled pipeline's physical row order its
+        # document order? Read by _let and table-argument stages.
+        self._pipe_end_ordered = True
 
     # row-scope env: bare idents resolve to F.col via TC(row=True);
     # let-bound scalars shadow nothing (row fields win — locals are
@@ -809,6 +817,7 @@ class JetroTables:
 
     def compile_node(self, node: A.Node,
                      demand_order: bool = False) -> DataFrame:
+        self._new_query()
         if isinstance(node, A.Comp) and node.kind in ("list", "gen", "set"):
             df = self._comp(node, want_order=demand_order)
             if df is not None:
@@ -895,7 +904,7 @@ class JetroTables:
             # pipelines over an untrusted binding must not mint the
             # scan-order surrogate (r10 — `let a = $.s.group_by(g) in
             # a.last()` silently returned a shuffle-arbitrary row)
-            trust = getattr(self, "_pipe_end_ordered", True)
+            trust = self._pipe_end_ordered
             child = JetroTables(self.spark, {**self.tables, n.name: bound},
                                 scalars=self._scalars,
                                 ordered={**self._tables_ordered,
@@ -904,15 +913,14 @@ class JetroTables:
             # the body compiled in the CHILD scope — surface its order
             # trust on self, read by an enclosing _let / join caller
             # (nested bindings, r11 advice)
-            self._pipe_end_ordered = getattr(child, "_pipe_end_ordered",
-                                             True)
+            self._pipe_end_ordered = child._pipe_end_ordered
             return out
         scalar = self.c.compile(n.value, Env(locals=dict(self._scalars)))
         child = JetroTables(self.spark, self.tables,
                             scalars={**self._scalars, n.name: scalar},
                             ordered=self._tables_ordered)
         out = child.compile_node(n.body, demand_order=demand_order)
-        self._pipe_end_ordered = getattr(child, "_pipe_end_ordered", True)
+        self._pipe_end_ordered = child._pipe_end_ordered
         return out
 
     def _table_of(self, src: A.Node) -> str | None:
@@ -1074,8 +1082,7 @@ class JetroTables:
         saved, self._order = self._order, None
         saved_sc, self._scalar = self._scalar, scalar
         saved_scan, self._scan_ok = self._scan_ok, scan_ok
-        saved_last = getattr(self, "_tail_reads_order", True)
-        saved_tail = getattr(self, "_has_tail", False)
+        saved_last, saved_tail = self._tail_reads_order, self._has_tail
         try:
             i = 0
             while i < len(steps):
@@ -1106,7 +1113,7 @@ class JetroTables:
             # pipeline as a table arg (equi_join's right side needs the
             # right-ARRAY order, r10 advice): physical row order is the
             # document order iff an order is carried (carried ⇒
-            # physically materialized, the doc_ord invariant) or the
+            # physically materialized, see _keyed_input) or the
             # scan-order surrogate is still valid
             self._pipe_end_ordered = (self._order is not None
                                       or self._scan_ok)
@@ -1131,62 +1138,26 @@ class JetroTables:
                 env = self._row_env(df)
             return self._select_carry(df, step.shape, env, order)
         if isinstance(step, A.Index):
-            v = step.expr
             try:
-                i = _lit_int(v)
+                i = _lit_int(step.expr)
             except CompileError:
                 return None
-            if i >= 0:
-                if order is None and not self._scan_ok:
-                    return None
-                self._order = order
-                # OOB index is Null in the reference (value.rs
-                # get_index) — pad like nth (r10 let-soak catch: the
-                # `[i]` sink was the one positional stage the r7
-                # null-padding pass missed)
-                if getattr(self, "_has_union", False):
-                    df, o2 = self._maybe_scan_order(df, order)
-                    return self._pad_single_null(
-                        self._ordered_prefix(df, o2, 1, offset=i))
-                return self._pad_single_null(df.offset(i).limit(1))
-            # [-n]: inverted-sort offset, like nth (scan-order surrogate
-            # when unsorted, r8)
-            df, order = self._maybe_scan_order(df, order)
-            if order is not None:
-                self._order = order
-                if getattr(self, "_has_union", False):
-                    inv_ord = [(c2, not d) for c2, d in order]
-                    return self._pad_single_null(
-                        self._ordered_prefix(df, inv_ord, 1,
-                                             offset=-i - 1))
-                inv = df.orderBy(*[c2.asc() if d else c2.desc()
-                                   for c2, d in order])
-                return self._pad_single_null(inv.offset(-i - 1).limit(1))
-            return None
+            return self._at(df, order, i)
         if isinstance(step, A.Slice):
-            if order is None and not self._scan_ok:
-                return None
-            self._order = order
             a = step.start or 0
-            if a >= 0 and step.stop is not None and step.stop >= a:
-                if getattr(self, "_has_union", False):
-                    df, o2 = self._maybe_scan_order(df, order)
-                    return self._ordered_prefix(df, o2, step.stop - a,
-                                                offset=a)
-                return df.offset(a).limit(step.stop - a)
-            if a >= 0 and step.stop is None:
-                if getattr(self, "_has_union", False):
-                    df, o2 = self._maybe_scan_order(df, order)
-                    return self._ordered_prefix(df, o2, None, offset=a)
-                return df.offset(a)
-            self._order = None
-            return None
+            if a < 0 or (step.stop is not None and step.stop < a):
+                return None
+            return self._positional(
+                df, order, None if step.stop is None else step.stop - a, a)
         if isinstance(step, A.Quantifier):
             self._order = order
             return df  # `?` null-safe is free; `!` asserted at action time
-        if not isinstance(step, A.Method):
+        stage = _stage_entry(step)
+        if stage is None:
             return None
-        return self._method_stage(df, step, env, order)
+        if stage.hungry:
+            df, order = self._maybe_scan_order(df, order)
+        return stage.lower(self, df, step.args, env, order)
 
     def _maybe_scan_order(self, df: DataFrame, order: list | None):
         """Hand an order-dependent stage the SCAN-ORDER surrogate when
@@ -1198,7 +1169,7 @@ class JetroTables:
         hidden name per use (Column refs resolve by name)."""
         if order is not None or not self._scan_ok:
             return df, order
-        self._sort_seq = getattr(self, "_sort_seq", 0) + 1
+        self._sort_seq += 1
         sid = f"__ord_sc{self._sort_seq}"
         return (df.withColumn(sid, F.monotonically_increasing_id()),
                 [(F.col(sid), False)])
@@ -1217,9 +1188,8 @@ class JetroTables:
         to union-carrying pipelines only — everywhere else the plain
         limit (and its whole-stage-codegen TakeOrderedAndProject) is
         kept."""
-        from pyspark.sql.window import Window
         w = Window.orderBy(*_order_by(order))
-        self._sort_seq = getattr(self, "_sort_seq", 0) + 1
+        self._sort_seq += 1
         rn = f"__pfx{self._sort_seq}"
         keep = (F.col(rn) > offset) if n is None else (
             (F.col(rn) > offset) & (F.col(rn) <= offset + n))
@@ -1266,1263 +1236,1063 @@ class JetroTables:
         out, self._order = self._rematerialize_order(df, order, cols)
         return out
 
-    def _method_stage(self, df: DataFrame, step: A.Method, env: Env,
-                      order: list | None = None) -> DataFrame | None:
-        name, args = step.name, step.args
-        c = self.c
-        if name in _ORDER_HUNGRY:
-            df, order = self._maybe_scan_order(df, order)
+    # ------------------------------------------------- stage arguments
 
-        def elem_tc() -> TC:
-            # what a lambda param binds to: the row struct for object
-            # pipelines, the BARE column for scalar ones (after map(v),
-            # `x => x * 2` sees the element, same as doc mode). The row
-            # case materializes F.struct so VALUE uses of the whole param
-            # (`x => x > 40`) reach Spark's analyzer and fail controlled,
-            # exactly like doc mode; field access still compiles to
-            # top-level F.col via the row=True branch (pushdown-friendly)
-            vis2 = _vis_cols(df)
-            if self._scalar and len(vis2) == 1:
-                return TC(F.col(vis2[0]), df.schema[vis2[0]].dataType)
-            return TC(F.struct(*[F.col(c2) for c2 in vis2]),
-                      T.StructType([f for f in df.schema.fields
-                                    if f.name in vis2]), row=True)
+    def _lam(self, node: A.Node, df: DataFrame, env: Env):
+        """(body, env) to compile a stage argument in. A one-param
+        lambda binds its param to the element, as in doc mode: the BARE
+        column of a scalar pipeline (after map(v), `x => x * 2` sees the
+        element), else the row struct (see _element)."""
+        if isinstance(node, A.Lambda):
+            return node.body, env.bind(node.params[0],
+                                       _element(df, self._scalar))
+        return node, env
 
-        def pred(node):
-            # condition context: bare comparisons push down to parquet
-            # and keep join keys extractable (see Compiler.compile_cond).
-            # `x => x.v > 6` binds its param to the element, like doc mode.
-            if isinstance(node, A.Lambda):
-                env2 = env.bind(node.params[0], elem_tc())
-                return c.compile_cond(node.body, env2)
-            return c.compile_cond(node, env)
+    def _pred(self, node: A.Node, df: DataFrame, env: Env) -> Column:
+        # condition context: bare comparisons push down to parquet and
+        # keep join keys extractable (see Compiler.compile_cond)
+        return self.c.compile_cond(*self._lam(node, df, env))
 
-        def key_col(node):
-            n2, desc = node, False
-            if isinstance(n2, A.Neg):
-                # direct `sort(-key)` is the documented DESCENDING
-                # syntax (purely syntactic — works on any key type)
-                n2, desc = n2.expr, True
-            if isinstance(n2, A.Lambda):
-                # a LAMBDA body is an expression evaluated per element:
-                # `x => -x.v` really negates (r9 soak catch — stripping
-                # the Neg silently desc-sorted non-numeric keys that
-                # doc mode type-errors on, e.g. an imploded array).
-                # For numeric keys, asc-by-negated ≡ desc, so nothing
-                # changes where it was valid.
-                env2 = env.bind(n2.params[0], elem_tc())
-                return c.compile(n2.body, env2).col, desc
-            col = c.compile(n2, env).col
-            return col, desc
+    def _key(self, node: A.Node, df: DataFrame,
+             env: Env) -> tuple[TC, bool]:
+        """A key argument and whether it sorts descending. A direct
+        `-key` is the documented DESCENDING syntax (purely syntactic —
+        works on any key type); a LAMBDA body is evaluated per element,
+        so `x => -x.v` really negates (r9 soak catch — stripping that
+        Neg desc-sorted non-numeric keys doc mode type-errors on)."""
+        desc = isinstance(node, A.Neg)
+        if desc:
+            node = node.expr
+        return self.c.compile(*self._lam(node, df, env)), desc
 
-        def key_str_col(node):
-            """Keyed-reducer key → the reference's canonical key STRING
-            (val_to_key): integral doubles render without the trailing
-            .0 — matches the doc-mode _key_lam wrapping."""
-            from jetro_spark.jql.compiler import _canon_str
-            n2 = node.expr if isinstance(node, A.Neg) else node
-            if isinstance(n2, A.Lambda):
-                env2 = env.bind(n2.params[0], elem_tc())
-                tc2 = c.compile(n2.body, env2)
-            else:
-                tc2 = c.compile(n2, env)
-            return F.coalesce(_canon_str(tc2.col, tc2.dtype),
-                              F.lit("null"))
+    def _key_str(self, node: A.Node, df: DataFrame, env: Env) -> Column:
+        """Keyed-reducer key → the reference's canonical key STRING
+        (val_to_key): integral doubles render without the trailing .0 —
+        matches the doc-mode _key_lam wrapping."""
+        tc, _desc = self._key(node, df, env)
+        return _canon_key(tc.col, tc.dtype)
 
-        if name in ("filter", "find", "find_all"):
-            self._order = order
-            return df.filter(pred(args[0].value))
-        if name == "map":
-            body = args[0].value
-            if isinstance(body, A.Lambda):
-                env2 = env.bind(body.params[0], elem_tc())
-                return self._select_carry(df, body.body, env2, order)
-            return self._select_carry(df, body, env, order)
-        if name in ("sort", "sort_by"):
-            if not args:
-                keys = [(F.col(x), False) for x in df.columns
-                        if not x.startswith("__ord")]
-            elif (len(args) == 1 and isinstance(args[0].value, A.Lambda)
-                  and len(args[0].value.params) == 2):
-                # comparator form: the two canonical `(a, b) => a < b`
-                # shapes lower to a natural sort over the element
-                # (struct ordering = field-order lexicographic, same as
-                # doc mode's whole-element compare); see _sort_args
-                lam = args[0].value
-                body = lam.body
-                if not (isinstance(body, A.Binary)
-                        and body.op in ("<", "<=", ">", ">=")
-                        and isinstance(body.left, A.Ident)
-                        and isinstance(body.right, A.Ident)
-                        and {body.left.name, body.right.name}
-                        == set(lam.params)):
-                    raise CompileError(
-                        "comparator sort supports only `(a, b) => a < b` "
-                        "shapes; use sort(key) / sort(-key) for key-based "
-                        "ordering")
-                asc_ops = ("<", "<=") if body.left.name == lam.params[0]                     else (">", ">=")
-                keys = [(elem_tc().col, body.op not in asc_ops)]
-            else:
-                keys = [key_col(a.value) for a in args]
-            # null keys sort FIRST both directions (doc-mode convention;
-            # the reference's null-equal comparator is non-transitive
-            # and unimplementable as a distributed total order) — as an
-            # explicit flag entry so reverse/inversion stay mechanical
-            keys = _null_first_keys(keys)
-            # stable sort (doc mode = Rust Vec::sort_by, r8 fuzz catch:
-            # mass ties from a patch stage made instability observable):
-            # ties keep their prior pipeline order — append the carried
-            # order as secondary keys; with no carried order yet the
-            # document order IS the scan order, captured as a
-            # partition-prefixed monotonic id (unique name per stage —
-            # a later sort must not clobber a column an earlier order
-            # list still references by name).
-            if order:
-                keys = keys + list(order)
-            else:
-                # the tie-break surrogate is only valid while physical
-                # row order still IS the document order — after an
-                # order-destroying stage (equi_join, keyed group) a
-                # monotonic id numbers shuffle-arbitrary rows and ties
-                # diverge from doc mode's deterministic pipeline order
-                # (r9 advice catch) → warned doc fallback instead
-                df, scan = self._maybe_scan_order(df, None)
-                if scan is None:
-                    return None
-                keys = keys + list(scan)
-            self._order = keys
-            return df.orderBy(*[c.desc() if d else c.asc() for c, d in keys])
-        if name == "take":
-            if order is None and not self._scan_ok:
-                return None   # physical prefix != doc prefix (r10)
-            self._order = order
-            if getattr(self, "_has_union", False):
-                # a Union is in the subtree: no GlobalLimit above it
-                # (the Spark 4.1 AQE drop — see _ordered_prefix)
-                df, o2 = self._maybe_scan_order(df, order)
-                return self._ordered_prefix(df, o2,
-                                            _lit_int(args[0].value))
-            return df.limit(_lit_int(args[0].value))
-        if name in ("skip", "drop"):
-            if order is None and not self._scan_ok:
-                return None
-            self._order = order
-            if getattr(self, "_has_union", False):
-                df, o2 = self._maybe_scan_order(df, order)
-                return self._ordered_prefix(
-                    df, o2, None, offset=_lit_int(args[0].value))
-            return df.offset(_lit_int(args[0].value))
-        if name == "first":
-            # the physical-prefix limit is only doc-faithful while the
-            # physical row order IS the document order — an untrusted
-            # table binding (multi-generator comp) starts with
-            # _scan_ok off and must take the warned fallback (r10)
-            if order is None and not self._scan_ok:
-                return None
-            self._order = order
-            if getattr(self, "_has_union", False):
-                df, o2 = self._maybe_scan_order(df, order)
-                k = 1 if not args else _lit_int(args[0].value)
-                head = self._ordered_prefix(df, o2, k)
-                if not args or k == 1:
-                    return self._pad_single_null(head)
-                return head
-            if not args or _lit_int(args[0].value) == 1:
-                # scalar form (collection.rs first_apply: n==1 unwraps to
-                # a scalar, Null when empty) → pad the empty case
-                return self._pad_single_null(df.limit(1))
-            return df.limit(_lit_int(args[0].value))
-        if name in _WINDOW_STAGES:
-            return self._window_stage(df, name, args, order)
-        if name == "last":
-            # reverse-sort + limit (logical stage Last, jc/ir/logical.rs:
-            # 16-57): needs the pipeline's order; unordered → doc fallback
-            if order is None or (args and _lit_int(args[0].value) < 0):
-                return None
-            self._order = order
-            k = 1 if not args else _lit_int(args[0].value)
-            if getattr(self, "_has_union", False):
-                # tail via an inverted-order window filter — the plain
-                # lowering is EXACTLY the Sort+GlobalLimit-above-Union
-                # shape Spark 4.1's AQE can drop (see _ordered_prefix)
-                inv_ord = [(c2, not d) for c2, d in order]
-                tail = self._ordered_prefix(df, inv_ord, k)
-                if not args or k == 1:
-                    return self._pad_single_null(tail)
-                return tail.orderBy(*_order_by(order))
-            inv = df.orderBy(*[c2.asc() if d else c2.desc() for c2, d in order])
-            if not args or k == 1:
-                # scalar form (last_apply n==1): Null when empty
-                return self._pad_single_null(inv.limit(1))
-            # last(n>=2) keeps the ORIGINAL pipeline order (doc mode
-            # slices the tail; the inverted limit alone emitted the
-            # rows reversed — r11 probe catch): re-sort the n survivors
-            return (inv.limit(k).orderBy(*_order_by(order)))
-        if name == "nth":
-            # OOB nth is Null in the reference (value.rs get_index), not
-            # an absent value → pad the empty row set with one null row
-            i = _lit_int(args[0].value)
-            if i >= 0:
-                if order is None and not self._scan_ok:
-                    return None
-                self._order = order
-                if getattr(self, "_has_union", False):
-                    df, o2 = self._maybe_scan_order(df, order)
-                    return self._pad_single_null(
-                        self._ordered_prefix(df, o2, 1, offset=i))
-                return self._pad_single_null(df.offset(i).limit(1))
-            if order is None:
-                return None
-            self._order = order
-            if getattr(self, "_has_union", False):
-                inv_ord = [(c2, not d) for c2, d in order]
-                return self._pad_single_null(
-                    self._ordered_prefix(df, inv_ord, 1, offset=-i - 1))
-            inv = df.orderBy(*[c2.asc() if d else c2.desc() for c2, d in order])
-            return self._pad_single_null(inv.offset(-i - 1).limit(1))
-        if name == "enumerate":
-            # → rows of {index, value} over the pipeline order
-            # (ops/collection.rs:409). Dense global indexing is an
-            # inherently single-sequence operation (same class as
-            # take_while's running sum); unordered tables fall back.
-            if order is None:
-                return None
-            from pyspark.sql.window import Window
-            w = Window.orderBy(*_order_by(order))
-            vis = _vis_cols(df)
-            hid = [F.col(c2) for c2 in df.columns if c2.startswith("__ord")]
-            # scalar pipelines keep the bare element as `value` (doc-mode
-            # semantics: value IS the element); only object rows wrap
-            val = (F.col(vis[0]) if len(vis) == 1
-                   else F.struct(*[F.col(c2) for c2 in vis]))
-            out = df.select(
-                (F.row_number().over(w) - 1).cast("long").alias("index"),
-                val.alias("value"),
-                *hid)
-            self._order = [(F.col("index"), False)]
-            return out
-        if name == "accumulate":
-            # Running-SUM pattern — `(a, x) => a + <expr(x)>` (either
-            # operand order, optional scalar init) — lowers to a window
-            # prefix sum; the general fold (multiplication, conditionals)
-            # has no closed window form and keeps the doc fallback.
-            lowered = self._accumulate_window(df, args, env, order)
-            if lowered is not None:
-                return lowered
+    # -------------------------------------------- shared stage shapes
+
+    def _positional(self, df: DataFrame, order: list | None,
+                    n: int | None, offset: int | None = None, *,
+                    pad: bool = False, from_end: bool = False,
+                    guard: bool = True) -> DataFrame | None:
+        """Rows ``[offset, offset + n)`` of the pipeline order (``n``
+        None: to the end), counted from the back when ``from_end``.
+        ``pad``: the scalar form — one element, the reference's Null
+        (first_apply/last_apply n == 1, get_index out of bounds) when
+        there is none, as one all-null row (_pad_single_null).
+
+        The plain shape is ``offset``/``limit``, over an inverted sort
+        from the back. A Union upstream (``_has_union``) takes the
+        row_number window filter instead (see _ordered_prefix). The
+        physical prefix is the document prefix only while an order is
+        carried or the scan order still holds (r10): with ``guard``,
+        anything else is None — the warned doc fallback."""
+        if guard and order is None and not self._scan_ok:
             return None
-        if name == "chunk":
-            # groups of n consecutive rows → one row per chunk holding
-            # the group as an array (ops/collection.rs chunk). The
-            # per-chunk collect_list is bounded by the user's n — unlike
-            # group_collect there is no unbounded-group OOM surface.
-            if order is None or not args:
-                return None
-            self._scalar = True
-            n = _lit_int(args[0].value)
-            if n <= 0:
-                raise CompileError("chunk size must be positive")
-            from pyspark.sql.window import Window
-            w = Window.orderBy(*_order_by(order))
-            vis = _vis_cols(df)
-            elem = (F.col(vis[0]) if len(vis) == 1
-                    else F.struct(*[F.col(c2) for c2 in vis]))
-            elem_pdt = (df.schema[vis[0]].dataType if len(vis) == 1
-                        else T.StructType([df.schema[c2] for c2 in vis]))
-            rn = F.row_number().over(w) - 1
-            d2 = df.select((F.floor(rn / F.lit(n))).alias("__chunk"),
-                           rn.alias("__rn"), elem.alias("__e"))
-            out = (d2.groupBy(F.col("__chunk").alias("__ord0"))
-                   .agg(F.transform(
-                       R.sort_by_field(
-                           F.collect_list(F.struct("__rn", "__e")), "__rn",
-                           payload_dt=elem_pdt),
-                       lambda s: s["__e"]).alias("value"))
-                   .select("value", "__ord0")
-                   .orderBy("__ord0"))
-            self._order = [(F.col("__ord0"), False)]  # chunk sequence order
+        self._order = order
+        if from_end:
+            order = [(c, not d) for c, d in order]
+        if self._has_union:
+            df, order = self._maybe_scan_order(df, order)
+        if self._has_union and order is not None:
+            out = self._ordered_prefix(df, order, n, offset or 0)
+        else:
+            if from_end:
+                df = df.orderBy(*_order_by(order))
+            if offset is not None:
+                df = df.offset(offset)
+            out = df if n is None else df.limit(n)
+        return self._pad_single_null(out) if pad else out
+
+    def _at(self, df: DataFrame, order: list | None,
+            i: int) -> DataFrame | None:
+        """Element ``i`` of the pipeline order (``[i]``, ``nth``);
+        negative counts from the back, off the scan-order surrogate when
+        unsorted (r8). Out of bounds is Null (value.rs get_index)."""
+        if i >= 0:
+            return self._positional(df, order, 1, i, pad=True)
+        df, order = self._maybe_scan_order(df, order)
+        if order is None:
+            return None
+        return self._positional(df, order, 1, -i - 1, pad=True,
+                                from_end=True)
+
+    def _reorder(self, out: DataFrame, order: list | None) -> DataFrame:
+        """Carry ``order`` and re-sort by it: the stage's shuffle
+        destroyed the physical pipeline order position sinks rely on."""
+        self._order = order
+        return out if order is None else out.orderBy(*_order_by(order))
+
+    def _keyed_input(self, df: DataFrame, tag: str | None = None):
+        """``(df, go, eo)`` for an ordered keyed collect: ``df`` tagged
+        with a fresh doc-order surrogate ``go`` — valid because the
+        stage's input order was vetted (carried ⇒ physically
+        materialized, else the scan surrogate was minted), so physical
+        row order IS pipeline order and a partition-prefixed monotonic
+        id captures it. ``eo`` names the emitted first-seen key order
+        column when a later stage reads order (doc keyed results are
+        insertion-ordered IndexMaps; r10), else None — see
+        _emit_sorted."""
+        self._sort_seq += 1
+        go = f"__ord_go{self._sort_seq}"
+        eo = (f"__ord_{tag}{self._sort_seq}"
+              if tag and self._tail_reads_order else None)
+        return df.withColumn(go, F.monotonically_increasing_id()), go, eo
+
+    def _emit_sorted(self, out: DataFrame, eo: str | None) -> DataFrame:
+        if eo is None:
             return out
-        if name == "pairwise":
-            # overlapping [prev, cur] pairs over the pipeline order
-            # (ops/collection.rs:556): lag window, first row dropped.
-            # Order keys ride along as __ord columns (the _select_carry
-            # convention) since the projection replaces the data columns.
-            if order is None:
+        self._order = [(F.col(eo), False)]
+        return out.orderBy(F.col(eo).asc())
+
+    # ------------------------------------------------ stage lowerings
+    # Each lowers one builtin: (df, args, env, order) → its frame, or
+    # None for the doc fallback. STAGES (end of module) maps builtin
+    # names to them with their order traits.
+
+    def _filter(self, df, args, env, order):
+        self._order = order
+        return df.filter(self._pred(args[0].value, df, env))
+
+    def _map(self, df, args, env, order):
+        return self._select_carry(df, *self._lam(args[0].value, df, env),
+                                  order)
+
+    def _sort(self, df, args, env, order):
+        if not args:
+            keys = [(F.col(x), False) for x in _vis_cols(df)]
+        elif (len(args) == 1 and isinstance(args[0].value, A.Lambda)
+              and len(args[0].value.params) == 2):
+            # comparator form: the two canonical `(a, b) => a < b`
+            # shapes lower to a natural sort over the element (struct
+            # ordering = field-order lexicographic, same as doc mode's
+            # whole-element compare); see _sort_args
+            keys = [(_element(df, self._scalar).col,
+                     comparator_desc(args[0].value))]
+        else:
+            keys = [(tc.col, desc) for tc, desc in
+                    (self._key(a.value, df, env) for a in args)]
+        # null keys sort FIRST both directions (doc-mode convention;
+        # the reference's null-equal comparator is non-transitive
+        # and unimplementable as a distributed total order) — as an
+        # explicit flag entry so reverse/inversion stay mechanical
+        keys = _null_first_keys(keys)
+        # stable sort (doc mode = Rust Vec::sort_by, r8 fuzz catch:
+        # mass ties from a patch stage made instability observable):
+        # ties keep their prior pipeline order — append the carried
+        # order as secondary keys; with no carried order yet the
+        # document order IS the scan order, captured as a
+        # partition-prefixed monotonic id (unique name per stage —
+        # a later sort must not clobber a column an earlier order
+        # list still references by name).
+        if order:
+            keys = keys + list(order)
+        else:
+            # the tie-break surrogate is only valid while physical
+            # row order still IS the document order — after an
+            # order-destroying stage (equi_join, keyed group) a
+            # monotonic id numbers shuffle-arbitrary rows and ties
+            # diverge from doc mode's deterministic pipeline order
+            # (r9 advice catch) → warned doc fallback instead
+            df, scan = self._maybe_scan_order(df, None)
+            if scan is None:
                 return None
-            self._scalar = True
-            from pyspark.sql.window import Window
-            df, order = self._rematerialize_order(df, order)
-            w = Window.orderBy(*_order_by(order))
-            vis = _vis_cols(df)
-            extras = [F.col(f"__ord{i}") for i in range(len(order))]
-            cur = (F.col(vis[0]) if len(vis) == 1
-                   else F.struct(*[F.col(c2) for c2 in vis]))
-            out = (df.select(F.lag(cur).over(w).alias("__prev"),
-                             cur.alias("__cur"), *extras)
-                   .filter(F.col("__prev").isNotNull())
-                   .select(F.array("__prev", "__cur").alias("value"), *extras))
-            self._order = [(F.col(f"__ord{i}"), d)
-                           for i, (_, d) in enumerate(order)]
-            return out
-        if name == "reverse":
-            if order is None:
-                return None
-            flipped = [(c2, not d) for c2, d in order]
-            self._order = flipped
-            return df.orderBy(*[c2.desc() if d else c2.asc()
-                                for c2, d in flipped])
-        if name in ("take_while", "drop_while", "takewhile", "dropwhile"):
-            # longest truthy prefix over the pipeline order: cumulative
-            # failure count (window min over !pred per the logical stages
-            # TakeWhile/DropWhile, jc/ir/logical.rs:16-57). The
-            # un-partitioned running sum is single-sequence by semantics.
-            if order is None:
-                return None
-            from pyspark.sql.window import Window
-            w = (Window.orderBy(*_order_by(order))
-                 .rowsBetween(Window.unboundedPreceding, 0))
-            node = args[0].value
-            if isinstance(node, A.Lambda):
-                env2 = env.bind(node.params[0], elem_tc())
-                ok = c.compile_cond(node.body, env2)
-            else:
-                ok = pred(node)
-            fail = F.when(F.coalesce(ok, F.lit(False)), F.lit(0)).otherwise(F.lit(1))
-            cum = F.sum(fail).over(w)
-            keep = cum == 0 if name.replace("_", "").startswith("take") else cum >= 1
-            self._order = order
-            return (df.withColumn("__tw", keep)
-                    .filter(F.col("__tw")).drop("__tw"))
-        if name == "flat_map":
-            body = args[0].value
-            if isinstance(body, A.Lambda):
-                env2 = env.bind(body.params[0], elem_tc())
-                tc = c.compile(body.body, env2)
-                body = body.body
-            else:
-                tc = c.compile(body, env)
-            if not isinstance(tc.dtype, T.ArrayType):
-                raise CompileError("flat_map body must produce an array")
-            el = tc.dtype.elementType
-            out = df.select(F.explode(tc.col).alias("__e"))
-            if isinstance(el, T.StructType):
-                self._scalar = False
-                return out.select("__e.*")
-            self._scalar = True
-            return out.select(F.col("__e").alias(self._scalar_name(body)))
-        if name in ("unique", "distinct"):
-            vis0 = _vis_cols(df)
-            if self._scalar and len(vis0) == 1 and isinstance(
-                    df.schema[vis0[0]].dataType,
-                    (T.StringType, T.NullType, T.VariantType)):
-                # scalar STRING rows key via val_to_key, where a NULL
-                # cell renders "null" and merges with the literal
-                # string "null" — the first occurrence (null-ness
-                # intact) wins (unique_arr_apply, collection.rs:77-86;
-                # r13, same collision class as the set ops; variant
-                # cells have no native equality at all). Key-based
-                # first-seen dedup, the unique_by lowering.
-                from jetro_spark.jql.compiler import _canon_str
-                canon = F.coalesce(
-                    _canon_str(F.col(vis0[0]),
-                               df.schema[vis0[0]].dataType),
-                    F.lit("null"))
-                if order is None:
-                    out = R.unique_by(df, canon)
-                else:
-                    from pyspark.sql.window import Window
-                    w = (Window.partitionBy(canon)
-                         .orderBy(*_order_by(order)))
-                    out = (df.withColumn("__uq_rn",
-                                         F.row_number().over(w))
-                           .filter(F.col("__uq_rn") == 1).drop("__uq_rn")
-                           .orderBy(*_order_by(order)))
-                self._order = order
-                return out
+            keys = keys + list(scan)
+        self._order = keys
+        return df.orderBy(*_order_by(keys))
+
+    def _take(self, df, args, env, order):
+        return self._positional(df, order, _lit_int(args[0].value))
+
+    def _skip(self, df, args, env, order):
+        return self._positional(df, order, None, _lit_int(args[0].value))
+
+    def _first(self, df, args, env, order):
+        # n == 1 is the scalar form (collection.rs first_apply unwraps
+        # to the element, Null when empty)
+        k = _opt_int(args, 1)
+        return self._positional(df, order, k, pad=k == 1)
+
+    def _last(self, df, args, env, order):
+        # reverse-sort + limit (logical stage Last, jc/ir/logical.rs:
+        # 16-57): needs the pipeline's order; unordered → doc fallback
+        k = _opt_int(args, 1)
+        if order is None or k < 0:
+            return None
+        out = self._positional(df, order, k, pad=k == 1, from_end=True)
+        # last(n>=2) keeps the ORIGINAL pipeline order (doc mode
+        # slices the tail; the inverted pick alone emitted the rows
+        # reversed — r11 probe catch): re-sort the n survivors
+        return out if k == 1 else out.orderBy(*_order_by(order))
+
+    def _nth(self, df, args, env, order):
+        return self._at(df, order, _lit_int(args[0].value))
+
+    def _enumerate(self, df, args, env, order):
+        # → rows of {index, value} over the pipeline order
+        # (ops/collection.rs:409). Dense global indexing is an
+        # inherently single-sequence operation (same class as
+        # take_while's running sum); unordered tables fall back.
+        if order is None:
+            return None
+        w = Window.orderBy(*_order_by(order))
+        hid = _hidden_cols(df)
+        # scalar pipelines keep the bare element as `value` (doc-mode
+        # semantics: value IS the element); only object rows wrap
+        out = df.select(
+            (F.row_number().over(w) - 1).cast("long").alias("index"),
+            _element(df).col.alias("value"), *hid)
+        self._order = [(F.col("index"), False)]
+        return out
+
+    def _chunk(self, df, args, env, order):
+        # groups of n consecutive rows → one row per chunk holding
+        # the group as an array (ops/collection.rs chunk). The
+        # per-chunk collect_list is bounded by the user's n — unlike
+        # group_collect there is no unbounded-group OOM surface.
+        if order is None or not args:
+            return None
+        self._scalar = True
+        n = _lit_int(args[0].value)
+        if n <= 0:
+            raise CompileError("chunk size must be positive")
+        w = Window.orderBy(*_order_by(order))
+        elem = _element(df)
+        rn = F.row_number().over(w) - 1
+        d2 = df.select((F.floor(rn / F.lit(n))).alias("__chunk"),
+                       rn.alias("__rn"), elem.col.alias("__e"))
+        out = (d2.groupBy(F.col("__chunk").alias("__ord0"))
+               .agg(F.transform(
+                   R.sort_by_field(
+                       F.collect_list(F.struct("__rn", "__e")), "__rn",
+                       payload_dt=elem.dtype),
+                   lambda s: s["__e"]).alias("value"))
+               .select("value", "__ord0")
+               .orderBy("__ord0"))
+        self._order = [(F.col("__ord0"), False)]  # chunk sequence order
+        return out
+
+    def _pairwise(self, df, args, env, order):
+        # overlapping [prev, cur] pairs over the pipeline order
+        # (ops/collection.rs:556): lag window, first row dropped.
+        # Order keys ride along as __ord columns (the _select_carry
+        # convention) since the projection replaces the data columns.
+        if order is None:
+            return None
+        self._scalar = True
+        df, order = self._rematerialize_order(df, order)
+        w = Window.orderBy(*_order_by(order))
+        extras = [F.col(f"__ord{i}") for i in range(len(order))]
+        cur = _element(df).col
+        out = (df.select(F.lag(cur).over(w).alias("__prev"),
+                         cur.alias("__cur"), *extras)
+               .filter(F.col("__prev").isNotNull())
+               .select(F.array("__prev", "__cur").alias("value"), *extras))
+        self._order = order
+        return out
+
+    def _reverse(self, df, args, env, order):
+        if order is None:
+            return None
+        flipped = [(c2, not d) for c2, d in order]
+        self._order = flipped
+        return df.orderBy(*_order_by(flipped))
+
+    def _while(self, df, args, env, order, *, take: bool):
+        # longest truthy prefix over the pipeline order: cumulative
+        # failure count (window min over !pred per the logical stages
+        # TakeWhile/DropWhile, jc/ir/logical.rs:16-57). The
+        # un-partitioned running sum is single-sequence by semantics.
+        if order is None:
+            return None
+        w = (Window.orderBy(*_order_by(order))
+             .rowsBetween(Window.unboundedPreceding, 0))
+        ok = self._pred(args[0].value, df, env)
+        fail = F.when(F.coalesce(ok, F.lit(False)), F.lit(0)).otherwise(F.lit(1))
+        cum = F.sum(fail).over(w)
+        keep = cum == 0 if take else cum >= 1
+        self._order = order
+        return (df.withColumn("__tw", keep)
+                .filter(F.col("__tw")).drop("__tw"))
+
+    def _flat_map(self, df, args, env, order):
+        body, env2 = self._lam(args[0].value, df, env)
+        tc = self.c.compile(body, env2)
+        if not isinstance(tc.dtype, T.ArrayType):
+            raise CompileError("flat_map body must produce an array")
+        el = tc.dtype.elementType
+        out = df.select(F.explode(tc.col).alias("__e"))
+        if isinstance(el, T.StructType):
+            self._scalar = False
+            return out.select("__e.*")
+        self._scalar = True
+        return out.select(F.col("__e").alias(self._scalar_name(body)))
+
+    def _unique(self, df, args, env, order):
+        vis0 = _vis_cols(df)
+        if self._scalar and len(vis0) == 1 and isinstance(
+                df.schema[vis0[0]].dataType,
+                (T.StringType, T.NullType, T.VariantType)):
+            # scalar STRING rows key via val_to_key, where a NULL
+            # cell renders "null" and merges with the literal
+            # string "null" — the first occurrence (null-ness
+            # intact) wins (unique_arr_apply, collection.rs:77-86;
+            # r13, same collision class as the set ops; variant
+            # cells have no native equality at all). Key-based
+            # first-seen dedup, the unique_by lowering.
+            canon = _canon_key(F.col(vis0[0]), df.schema[vis0[0]].dataType)
+            out = (R.unique_by(df, canon) if order is None
+                   else _first_per_key(df, [canon], order))
+        else:
             out = self._first_seen_dedup(df, order)
-            # the dedup restored the pipeline order physically — keep it
-            # carried so downstream position stages stay faithful (with
-            # the r8 surrogate this also fixes `$.t.unique().first()` on
-            # unsorted tables: distinct()'s shuffle order is arbitrary,
-            # first-seen order is not)
-            self._order = order
-            return out
-        if name == "unique_by":
-            from jetro_spark.jql.compiler import _canon_str, _family
-            n2 = args[0].value
-            n2 = n2.expr if isinstance(n2, A.Neg) else n2
-            if isinstance(n2, A.Lambda):
-                env2 = env.bind(n2.params[0], elem_tc())
-                ktc = c.compile(n2.body, env2)
-            else:
-                ktc = c.compile(n2, env)
-            col = ktc.col
-            if _family(ktc.dtype) in ("string", "null", "variant"):
-                # key values key via val_to_key: null renders "null"
-                # and merges with the literal (array.rs:273-292, r13 —
-                # matches the doc-mode m_unique_by wrapping)
-                col = F.coalesce(_canon_str(ktc.col, ktc.dtype),
-                                 F.lit("null"))
-            out = R.unique_by(df, col)
-            if order is None:
-                return out
-            # the min_by groupBy shuffles away the physical pipeline
-            # order position sinks rely on — restore it (winner rows
-            # keep their __ord columns); winner choice itself already
-            # follows pipeline order via the doc-order surrogate
-            self._order = order
-            return out.orderBy(*_order_by(order))
-        if name == "count":
-            self._scalar = True
-            if args:
-                return df.agg(F.count_if(pred(args[0].value)).alias("value"))
-            return df.agg(F.count(F.lit(1)).alias("value"))
-        if name == "len":
-            self._scalar = True
-            return df.agg(F.count(F.lit(1)).alias("value"))
-        if name in ("sum", "avg", "min", "max"):
-            from jetro_spark.jql.compiler import _skips_numeric_fold
-            was_scalar = self._scalar
-            self._scalar = True
-            if args:
-                vt = c.compile(args[0].value, env)
-                col, cdt = vt.col, vt.dtype
-            else:
-                vis = _vis_cols(df)
-                if not was_scalar:
-                    # no-arg reducer over OBJECT rows: the element is a
-                    # document, which num_fold SKIPS — sum [] = 0.0,
-                    # min/max/avg Null (r8 unsorted fuzz catch: the old
-                    # code summed whatever column happened to be first)
-                    base = F.first(F.lit(None).cast("double"))
-                    agg = (F.coalesce(base, F.lit(0.0))
-                           if name == "sum" else base)
-                    return df.limit(0).agg(agg.alias("value"))
-                col = F.col(vis[0])
-                cdt = df.schema[vis[0]].dataType
-            if _skips_numeric_fold(cdt):
-                # the reference's numeric reducers observe NO element of
-                # this type (num_fold skips non-Int/Float) → sum 0,
-                # min/max/avg Null — never a cast error
-                base = F.first(F.lit(None).cast("double"))
-                agg = F.coalesce(base, F.lit(0.0)) if name == "sum" else base
-                return df.limit(0).agg(agg.alias("value"))
-            agg = {"sum": lambda x: F.coalesce(F.sum(x), F.lit(0.0)),
-                   "avg": F.avg, "min": F.min, "max": F.max}[name](col)
-            return df.agg(agg.alias("value"))
-        if name in ("any", "exists"):
-            self._scalar = True
-            return df.agg(F.coalesce(F.bool_or(pred(args[0].value)),
-                                     F.lit(False)).alias("value"))
-        if name == "all":
-            self._scalar = True
-            return df.agg(F.coalesce(F.bool_and(pred(args[0].value)),
-                                     F.lit(True)).alias("value"))
-        if name == "approx_count_distinct":
-            self._scalar = True
-            col = c.compile(args[0].value, env).col if args else F.struct(*df.columns)
-            return df.agg(F.approx_count_distinct(col).alias("value"))
-        if name in ("min_by", "max_by"):
-            # empty pipeline → scalar Null (extreme_by_apply), padded
-            # as one all-null row like first/last/nth (r7 soak catch)
-            col, _ = key_col(args[0].value)
-            # strict-improvement fold semantics (array.rs:341-375):
-            # null keys compare Equal (cmp_vals, util.rs:133) so they
-            # never IMPROVE — nulls sort LAST here, winning only when
-            # every key is null — but a null-keyed FIRST element can
-            # never be beaten either: it wins outright (r11 probe
-            # catch; the old asc()/desc() crowned null keys on the
-            # nulls-first end). Ties keep the FIRST element in
-            # pipeline order — the carried order (or scan surrogate)
-            # is the secondary key.
-            o = (col.asc_nulls_last() if name == "min_by"
-                 else col.desc_nulls_last())
-            if not order:
-                # same _scan_ok gate as the _ORDER_HUNGRY stages: after
-                # an order-destroying stage the monotonic-id surrogate
-                # numbers shuffle-arbitrary rows, so a tie here would
-                # diverge from doc mode's first-in-pipeline-order winner
-                # (r9 advice catch) → warned doc fallback
-                df, order = self._maybe_scan_order(df, None)
-                if order is None:
-                    return None
-            sec = [c2.desc() if d2 else c2.asc() for c2, d2 in order]
-            if getattr(self, "_has_union", False):
-                # a Union upstream: the orderBy+limit(1) picks are the
-                # Sort+GlobalLimit-above-Union shape Spark 4.1's AQE
-                # can drop (see _ordered_prefix) — window-rank instead
-                from pyspark.sql.window import Window
+        # the dedup restored the pipeline order physically — keep it
+        # carried so downstream position stages stay faithful (with
+        # the r8 surrogate this also fixes `$.t.unique().first()` on
+        # unsorted tables: distinct()'s shuffle order is arbitrary,
+        # first-seen order is not)
+        self._order = order
+        return out
 
-                def _pick1(*keys):
-                    self._sort_seq = getattr(self, "_sort_seq", 0) + 1
-                    rn = f"__pfx{self._sort_seq}"
-                    return (df.withColumn(
-                        rn, F.row_number().over(Window.orderBy(*keys)))
-                        .filter(F.col(rn) == 1).drop(rn))
+    def _unique_by(self, df, args, env, order):
+        ktc, _desc = self._key(args[0].value, df, env)
+        col = ktc.col
+        if _family(ktc.dtype) in ("string", "null", "variant"):
+            # key values key via val_to_key: null renders "null"
+            # and merges with the literal (array.rs:273-292, r13 —
+            # matches the doc-mode m_unique_by wrapping)
+            col = _canon_key(ktc.col, ktc.dtype)
+        # the min_by groupBy shuffles away the physical pipeline
+        # order position sinks rely on — restore it (winner rows
+        # keep their __ord columns); winner choice itself already
+        # follows pipeline order via the doc-order surrogate
+        return self._reorder(R.unique_by(df, col), order)
 
-                extreme = _pick1(o, *sec)
-                pick_first = lambda: _pick1(*sec)  # noqa: E731
-            else:
-                extreme = df.orderBy(o, *sec).limit(1)
-                pick_first = lambda: df.orderBy(*sec).limit(1)  # noqa: E731
-            # the first-element-null probe only exists for NULLABLE
-            # keys (r12 advice): when the analyzer proves the key
-            # expression non-null, the override can never fire — skip
-            # the second TakeOrdered subplan and the union outright
-            if not df.select(col.alias("__xb_k")).schema["__xb_k"].nullable:
-                return self._pad_single_null(extreme)
-            first_null = (pick_first()
-                          .filter(col.isNull())
-                          .withColumn("__xb_pri", F.lit(0)))
-            # winner = min-priority branch row, chosen by an ungrouped
-            # min_by AGGREGATE — not orderBy(pri).limit(1): AQE can
-            # drop a Sort+Limit above a Union whose branch materializes
-            # empty (the r12 soak catch; see _pad_single_null). The
-            # aggregate also pads: empty union → one all-null row.
-            unioned = first_null.unionByName(
-                extreme.withColumn("__xb_pri", F.lit(1)))
-            fields = [f.name for f in extreme.schema.fields]
-            w = unioned.agg(F.min_by(
-                F.struct(*[F.col(c2) for c2 in fields]),
-                F.col("__xb_pri")).alias("__w"))
-            return w.select(*[F.col("__w").getField(c2).alias(c2)
-                              for c2 in fields])
-        def doc_ord():
-            """Fresh doc-order surrogate for ordered keyed collects.
-            Valid because _maybe_scan_order already vetted this df
-            (order carried ⇒ physically materialized; else scan-order
-            surrogate minted) — physical row order IS pipeline order,
-            and a partition-prefixed monotonic id captures it."""
-            self._sort_seq = getattr(self, "_sort_seq", 0) + 1
-            sid = f"__ord_go{self._sort_seq}"
-            return df.withColumn(sid, F.monotonically_increasing_id()), sid
+    def _count(self, df, args, env, order):
+        self._scalar = True
+        if args:
+            return df.agg(F.count_if(
+                self._pred(args[0].value, df, env)).alias("value"))
+        return df.agg(F.count(F.lit(1)).alias("value"))
 
-        if name == "group_by":
-            if order is None:
-                return None   # order-broken pipeline → warned fallback
-            d2, go = doc_ord()
-            # doc group_by keys an IndexMap: its KEY order (first-seen)
-            # is doc-observable when navigation follows (.keys(),
-            # field access, positional stages) — restore it like
-            # implode's group order (r10 soak catch: .group_by(g)
-            # .keys() collected groups in shuffle-arrival order)
-            tail_reads = getattr(self, "_tail_reads_order", True)
-            eo = f"__ord_gb{self._sort_seq}" if tail_reads else None
-            out = R.group_collect(d2, key_str_col(args[0].value),
-                                  order=go, payload_cols=_vis_cols(df),
-                                  emit_order=eo)
-            if eo is None:
-                return out
-            self._order = [(F.col(eo), False)]
-            return out.orderBy(F.col(eo).asc())
-        if name == "count_by":
-            # first-seen key order is doc-observable downstream, same
-            # as group_by (r10); count_by is not order-hungry, so mint
-            # the scan surrogate only when a tail actually reads order
-            tail_reads = getattr(self, "_tail_reads_order", True)
-            if not tail_reads:
-                return R.count_by(df, key_str_col(args[0].value))
-            if order is None:
-                df, order = self._maybe_scan_order(df, None)
-                if order is None:
-                    return None   # key order unrecoverable → fallback
-            d2, go = doc_ord()
-            eo = f"__ord_cb{self._sort_seq}"
-            out = R.count_by(d2, key_str_col(args[0].value), order=go,
-                             emit_order=eo)
-            self._order = [(F.col(eo), False)]
-            return out.orderBy(F.col(eo).asc())
-        if name == "index_by":
-            if order is None:
-                return None
-            d2, go = doc_ord()
-            tail_reads = getattr(self, "_tail_reads_order", True)
-            eo = f"__ord_ib{self._sort_seq}" if tail_reads else None
-            out = R.index_by(d2, key_str_col(args[0].value), order=go,
-                             payload_cols=_vis_cols(df), emit_order=eo)
-            if eo is None:
-                return out
-            self._order = [(F.col(eo), False)]
-            return out.orderBy(F.col(eo).asc())
-        if name == "equi_join":
-            # read the hint BEFORE resolving the table arg: a
-            # sub-pipeline arg ($.u.filter(...)) re-enters _pipeline
-            # and would clobber the lookahead with ITS tail
-            tail_reads = getattr(self, "_tail_reads_order", True)
-            self._pipe_end_ordered = True
-            other = self._resolve_table(args[0].value)
-            if other is None:
-                return None
-            # is the resolved table's physical order its doc order?
-            # (set by _pipeline for sub-pipeline args; a plain table
-            # scan runs an empty pipeline → True)
-            rt_ok = getattr(self, "_pipe_end_ordered", True)
-            lk, rk = _lit_str(args[1].value), _lit_str(args[2].value)
-            # a MISSING key field is a per-row None lookup in doc mode
-            # (equi_join_apply: o.get → None skips the row), so the
-            # join is empty — synthesize a typed null key instead of
-            # failing analysis (r9 soak catch: implode(v).equi_join(...)
-            # raised where doc mode returned the empty result)
-            synth = False
-            if lk not in _vis_cols(df):
-                dt2 = (other.schema[rk].dataType if rk in other.columns
-                       else T.StringType())
-                df = df.withColumn(lk, F.lit(None).cast(dt2))
-                synth = True
-            if rk not in other.columns:
-                dt2 = df.schema[lk].dataType
-                other = other.withColumn(rk, F.lit(None).cast(dt2))
-                synth = True
-            # key-match mode (r11 advice): a PRESENT-but-null key is
-            # the val_to_key "null" bucket and MATCHES (array.rs:
-            # 505-531) — only the synthesized missing-field key keeps
-            # plain == (every lookup misses → the empty join)
-            key_kw = ({} if synth else _join_key_kwargs(
-                df.schema[lk].dataType, other.schema[rk].dataType,
-                lk, rk))
-            # equi_join_apply walks the RECEIVER in order (array.rs:
-            # 489-548) and emits EVERY right match per receiver row in
-            # right-array order (array.rs:505-531), so the output's
-            # document order is (receiver position, right-array
-            # position) — the receiver sort below carries the first
-            # component, the rid surrogate the second. When
-            # no order is carried, mint the scan-order surrogate (r9) —
-            # previously the join went out unordered, _scan_ok flipped
-            # off, and every order-dependent downstream stage (or a
-            # min_by tie) doc-fell-back or silently diverged. Skip the
-            # sort when NO remaining stage reads order (lookahead in
-            # _pipeline): the relational contract owes no final-result
-            # order, and a post-join .map/.filter/.count_by chain must
-            # not pay a full sort it never observes (r9 bench catch:
-            # jql_equi_join +104% under the last-stage-only hint).
-            if order is None and tail_reads:
-                df, order = self._maybe_scan_order(df, order)
-            if order is not None:
-                # materialize the carried order into hidden columns
-                # BEFORE the merge: the right-wins column overwrite
-                # rebinds name-resolved order exprs — `sort(-v)
-                # .equi_join($.d, ...)` re-sorted by the RIGHT side's v
-                # (r11 soak catch via the duplicate-key d table), the
-                # same rebinding class _select_carry handles for map
-                df, order = self._rematerialize_order(df, order)
-            out_order = order
-            if order is not None:
-                # doc output order is (receiver position, RIGHT-ARRAY
-                # position): equi_join_apply indexes ALL right matches
-                # per key in right-array order (array.rs:505-514) and
-                # emits every match per receiver row (array.rs:526-531).
-                # The r9 receiver-only sort left a receiver row's
-                # multiple matches TIED — shuffle-arbitrary under
-                # duplicate right keys (r10 advice). Mint a right-side
-                # doc-order surrogate as the secondary sort key
-                # (appended whenever the receiver-order sort runs at
-                # all — the id mint is a free narrow projection); valid
-                # only when the right table's physical order is its doc
-                # order (plain scan / order-materialized sub-pipeline).
-                # When it isn't: warned doc fallback if a downstream
-                # stage reads order (as before r9), else keep the
-                # receiver-only sort — the ties are unobservable.
-                if not rt_ok:
-                    if tail_reads:
-                        return None
-                    self._order = order
-                    return (R.equi_join(df, other, lk, rk, **key_kw)
-                            .orderBy(*_order_by(order)))
-                self._sort_seq = getattr(self, "_sort_seq", 0) + 1
-                rid = f"__ord_rt{self._sort_seq}"
-                other = other.withColumn(rid,
-                                         F.monotonically_increasing_id())
-                out_order = order + [(F.col(rid), False)]
-            out = R.equi_join(df, other, lk, rk, **key_kw)
-            if order is None:
-                return out
-            # restore the pipeline order the join shuffle destroyed so
-            # position sinks downstream stay faithful
-            self._order = out_order
-            return out.orderBy(*_order_by(out_order))
-        if name == "explode":
-            return R.explode_field(df, _name_str(args[0].value))
-        if name == "implode":
-            if order is None:
-                return None
-            fld = _name_str(args[0].value)
-            d2, go = doc_ord()
-            # implode's OUTPUT ROW ORDER is doc-observable too: groups
-            # appear in first-occurrence order, and a downstream
-            # positional stage reads it (r9 fuzz catch: implode(v)
-            # .first() returned a shuffle-arbitrary group). Restore it
-            # via min(doc-order) per group — skipped when the tail is
-            # order-blind, like equi_join's receiver-order sort.
-            tail_reads = getattr(self, "_tail_reads_order", True)
-            imp_ord = f"__ord_imp{self._sort_seq}" if tail_reads else None
-            out = R.implode(d2, fld,
-                            group_cols=[c2 for c2 in _vis_cols(df)
-                                        if c2 != fld],
-                            order=go, emit_order=imp_ord)
-            if not tail_reads:
-                return out
-            self._order = [(F.col(imp_ord), False)]
-            return out.orderBy(F.col(imp_ord).asc())
-        if name == "pivot":
-            # pivot keys stringify via val_to_key like every other
-            # keyed reducer (pivot_apply keys an IndexMap) — render
-            # them canonically before the relational pivot
-            from jetro_spark.jql.compiler import _canon_str
+    def _len(self, df, args, env, order):
+        self._scalar = True
+        return df.agg(F.count(F.lit(1)).alias("value"))
 
-            def keyed_df(d3, *keys):
-                for kn in keys:
-                    d3 = d3.withColumn(kn, F.coalesce(
-                        _canon_str(F.col(kn), d3.schema[kn].dataType),
-                        F.lit("null")))
-                return d3
-            has_tail = getattr(self, "_has_tail", False)
-            if has_tail and len(args) == 3:
-                # the 3-arg grid's nested-object navigation has no
-                # row-shaped relational form — collapse to doc mode
-                return None
-            if order is None:
-                return None   # last-wins / first-per-cell read order
-            d2, go = doc_ord()
-            # a MISSING field arg is a per-row Null in doc mode (key →
-            # "null" bucket, value → null cell) — synthesize a typed
-            # null column instead of crashing the driver-side schema
-            # lookup (r10 soak catch: .map({k,v}).pivot(g, v) raised
-            # PySparkKeyError where doc mode pivoted under "null")
-            for nm in {_name_str(a.value) for a in args}:
-                if nm not in d2.columns:
-                    d2 = d2.withColumn(nm, F.lit(None).cast("string"))
-            if len(args) == 2:
-                kn = _name_str(args[0].value)
-                if has_tail:
-                    # NAVIGATION follows: emit the ordered-object ROW
-                    # form (objrepr, the count_by/group_by convention)
-                    # instead of the one-map row — a following stage
-                    # read that map rowset as plain rows (r10 soak
-                    # catch: .pivot(g, k).g2 was a one-sided
-                    # CompileError, .keys() an uncontrolled ObjError),
-                    # and collapsing at the pivot INPUT would funnel
-                    # the whole table through one task; this way the
-                    # pivot aggregates relationally and only |keys|
-                    # rows reach any downstream fallback.
-                    self._sort_seq = getattr(self, "_sort_seq", 0) + 1
-                    eo = f"__ord_pv{self._sort_seq}"
-                    out = R.pivot2_rows(keyed_df(d2, kn), kn,
-                                        _name_str(args[1].value),
-                                        order=go, emit_order=eo)
-                    self._order = [(F.col(eo), False)]
-                    return out.orderBy(F.col(eo).asc())
-                return R.pivot2(keyed_df(d2, kn), kn,
-                                _name_str(args[1].value), order=go)
-            rn2, cn = _name_str(args[0].value), _name_str(args[1].value)
-            return R.pivot3(keyed_df(d2, rn2, cn), rn2, cn,
-                            _name_str(args[2].value), order=go)
-        if name in ("to_csv", "to_tsv"):
-            self._scalar = True
-            # Relational form of the §2.1 sink: one formatted line per
-            # row (same cell quoting as the doc-mode string builder,
-            # helpers.rs:130-169) — the write-ready shape; doc mode's
-            # single joined string would be a driver-side cliff at
-            # table scale. Use JetroTables.write_csv for a real
-            # distributed file sink.
-            from jetro_spark.jql.compiler import _csv_cell
-            sep = "," if name == "to_csv" else "\t"
-            cols = _vis_cols(df)
-            line = F.concat_ws(sep, *[
-                _csv_cell(F.col(c2), df.schema[c2].dataType, sep)
-                for c2 in cols])
-            return df.select(line.alias("line"))
-        if name in ("diff", "intersect", "union"):
-            # diff_apply/intersect_apply/union_apply semantics
-            # (collection.rs:594-646): filter the RECEIVER by key
-            # membership in the other side — the receiver's DUPLICATES
-            # and order are preserved (subtract()/intersect() were
-            # dedup-ing SQL set ops AND lost the pipeline order;
-            # unionByName() appended everything — r7 catches). union =
-            # all of the receiver plus the other side's rows whose
-            # value is not in the receiver.
-            recv_scalar = self._scalar
-            self._pipe_end_ordered = True
-            other = self._resolve_table(args[0].value)
-            if other is None:
-                return None
-            # _resolve_table re-enters _pipeline for sub-pipeline args,
-            # clobbering _scalar with the OTHER side's shape — capture
-            # it, then restore the receiver's (r12)
-            oth_scalar = self._scalar
-            self._scalar = recv_scalar
-            # ordered union appends the other table's rows in the other
-            # ARRAY's own order via a monotonic-id tag — valid only when
-            # the resolved table's physical order is its doc order (same
-            # r10 gate as equi_join's right side; an order-destroying
-            # sub-pipeline arg would tag shuffle-arbitrary rows)
-            rt_ok = getattr(self, "_pipe_end_ordered", True)
+    def _numeric(self, df, args, env, order, *, agg, empty_zero: bool):
+        """sum/avg/min/max; ``empty_zero``: no number observed is 0.0
+        (sum), else Null."""
+        objects = not args and not self._scalar
+        self._scalar = True
+        col = cdt = None
+        if args:
+            vt = self.c.compile(args[0].value, env)
+            col, cdt = vt.col, vt.dtype
+        else:
             vis = _vis_cols(df)
-            ovis = [c2 for c2 in other.columns
-                    if not c2.startswith("__ord")]
-            canon_keys = False
-            ldt = rdt = None
-            if (recv_scalar and oth_scalar
-                    and len(vis) == 1 and len(ovis) == 1):
-                from jetro_spark.jql.compiler import (_canon_str,
-                                                      _family,
-                                                      _key_collide)
-                ldt = df.schema[vis[0]].dataType
-                rdt = other.schema[ovis[0]].dataType
-                if _key_collide(ldt, rdt):
-                    # scalar membership keys by val_to_key
-                    # (util.rs:216-226: string "3" matches long 3, a
-                    # NULL cell keys "null" and matches the literal
-                    # string "null", a string matches a container's
-                    # compact JSON — r12 catch + r13 ADVICE classes).
-                    # Native equality would make Spark ANSI-coerce and
-                    # crash at runtime on cross-family pairs.
-                    # diff/intersect keep the receiver's rows and type;
-                    # union keeps flowing to the generic path when the
-                    # output stays homogeneous (string/null pair, cond
-                    # canonicalized below via canon_keys), else its
-                    # output is heterogeneous → warned doc fallback
-                    # (m_union's variant lowering)
-                    canon_keys = {_family(ldt), _family(rdt)} <= {
-                        "string", "null"}
-                    if name == "union" and not canon_keys:
-                        return None
-                    if name != "union":
-                        lk2 = F.coalesce(_canon_str(F.col(vis[0]), ldt),
-                                         F.lit("null"))
-                        rk2 = F.coalesce(_canon_str(F.col(ovis[0]), rdt),
-                                         F.lit("null"))
-                        a4 = df.withColumn("__set_k", lk2).alias("__set_a")
-                        o4 = (other.select(rk2.alias("__set_k"))
-                              .alias("__set_o"))
-                        how = "left_anti" if name == "diff" else "left_semi"
-                        out = a4.join(
-                            o4, F.col("__set_a.__set_k")
-                            == F.col("__set_o.__set_k"), how).drop("__set_k")
-                        self._order = order
-                        return (out if order is None
-                                else out.orderBy(*_order_by(order)))
-                if vis[0] != ovis[0]:
-                    # scalar column NAMES are incidental projection
-                    # detail — align them so same-family scalars flow
-                    # the value-membership path (pre-fix, a name
-                    # mismatch took the cross-shape arm and kept rows
-                    # val_to_key says to drop)
-                    other = other.withColumnRenamed(ovis[0], vis[0])
-            if sorted(vis) != sorted(other.columns):
-                # cross-shape rows never compare equal (vals_eq):
-                # diff keeps everything, intersect keeps nothing;
-                # union would need a mixed-shape row set → fallback
-                if name == "diff":
-                    self._order = order
-                    return df
-                if name == "intersect":
-                    self._order = order
-                    return df.limit(0)
+            if not objects:
+                col, cdt = F.col(vis[0]), df.schema[vis[0]].dataType
+        # a no-arg reducer over OBJECT rows: the element is a document,
+        # which num_fold SKIPS (r8 unsorted fuzz catch: the old code
+        # summed whatever column happened to be first); likewise every
+        # element of a type the reference's numeric reducers do not
+        # observe (num_fold skips non-Int/Float) — never a cast error
+        if objects or _skips_numeric_fold(cdt):
+            base = F.first(F.lit(None).cast("double"))
+            none = F.coalesce(base, F.lit(0.0)) if empty_zero else base
+            return df.limit(0).agg(none.alias("value"))
+        return df.agg(agg(col).alias("value"))
+
+    def _quantify(self, df, args, env, order, *, agg, empty: bool):
+        self._scalar = True
+        return df.agg(F.coalesce(agg(self._pred(args[0].value, df, env)),
+                                 F.lit(empty)).alias("value"))
+
+    def _approx_count_distinct(self, df, args, env, order):
+        self._scalar = True
+        col = (self.c.compile(args[0].value, env).col if args
+               else F.struct(*df.columns))
+        return df.agg(F.approx_count_distinct(col).alias("value"))
+
+    def _extreme_by(self, df, args, env, order, *, desc: bool):
+        # empty pipeline → scalar Null (extreme_by_apply), padded
+        # as one all-null row like first/last/nth (r7 soak catch)
+        col = self._key(args[0].value, df, env)[0].col
+        # strict-improvement fold semantics (array.rs:341-375):
+        # null keys compare Equal (cmp_vals, util.rs:133) so they
+        # never IMPROVE — nulls sort LAST here, winning only when
+        # every key is null — but a null-keyed FIRST element can
+        # never be beaten either: it wins outright (r11 probe
+        # catch; the old asc()/desc() crowned null keys on the
+        # nulls-first end). Ties keep the FIRST element in
+        # pipeline order — the carried order (or scan surrogate)
+        # is the secondary key.
+        o = col.desc_nulls_last() if desc else col.asc_nulls_last()
+        if not order:
+            # same _scan_ok gate as the order-hungry stages: after
+            # an order-destroying stage the monotonic-id surrogate
+            # numbers shuffle-arbitrary rows, so a tie here would
+            # diverge from doc mode's first-in-pipeline-order winner
+            # (r9 advice catch) → warned doc fallback
+            df, order = self._maybe_scan_order(df, None)
+            if order is None:
                 return None
-            if not recv_scalar and len(vis) > 0:
-                from jetro_spark.jql.compiler import eq_comparable
-                lst = T.StructType([
-                    T.StructField(c2, df.schema[c2].dataType)
-                    for c2 in vis])
-                rst = T.StructType([
-                    T.StructField(c2, other.schema[c2].dataType)
-                    for c2 in vis])
-                if not eq_comparable(lst, rst):
-                    # same field NAMES but a cross-family field TYPE:
-                    # object rows key by their JSON serialization
-                    # (val_to_key → val_to_string), where a string
-                    # field renders QUOTED — never equal to a number
-                    # field. Native equality would ANSI-coerce and
-                    # crash (the r12 soak catch via the string-keyed
-                    # join vocab); these are the cross-shape arms
-                    if name == "diff":
-                        self._order = order
-                        return df
-                    if name == "intersect":
-                        self._order = order
-                        return df.limit(0)
-                    return None   # union: widen via the doc lowering
-            if name == "union":
-                a3 = df.select(*vis).alias("__set_a")
-                o3 = other.select(*vis).alias("__set_o")
-                cond = None
-                for v2 in vis:
-                    if canon_keys:
-                        # scalar string/null pair: membership keys by
-                        # val_to_key, where a NULL cell renders "null"
-                        # and matches the literal string (r13)
-                        from jetro_spark.jql.compiler import _canon_str
-                        eq2 = (F.coalesce(
-                            _canon_str(F.col(f"__set_a.{v2}"), ldt),
-                            F.lit("null"))
-                            == F.coalesce(
-                                _canon_str(F.col(f"__set_o.{v2}"), rdt),
-                                F.lit("null")))
-                    else:
-                        eq2 = (F.col(f"__set_a.{v2}")
-                               .eqNullSafe(F.col(f"__set_o.{v2}")))
-                    cond = eq2 if cond is None else (cond & eq2)
-                if order is None:
-                    self._order = None
-                    self._has_union = True
-                    newbies = o3.join(a3, cond, "left_anti")
-                    return df.select(*vis).unionByName(newbies)
-                if not rt_ok:
-                    return None   # append order unrecoverable → fallback
-                # ordered (r8; was a doc fallback): receiver rows keep
-                # their pipeline order and come first; appended rows
-                # (other-side values absent from the receiver, dups and
-                # all — union_apply never extends a_keys,
-                # collection.rs:611-626) follow in the other table's own
-                # order, tagged with a monotonic id (partition-prefixed,
-                # so it reproduces the scan order the doc path collects
-                # in). Sort spec = (priority, receiver keys, append id);
-                # the cross-group nulls in each key are tie-constant
-                # within their group. Hidden names carry a per-stage
-                # unique prefix: Column refs resolve by NAME at action
-                # time, so a second union overwriting `__ordu0` would
-                # corrupt an order list still pointing at it.
-                self._setop_seq = getattr(self, "_setop_seq", 0) + 1
-                p2 = f"__ordu{self._setop_seq}_"
-                recv = df
-                for i2, (c3, _d3) in enumerate(order):
-                    recv = recv.withColumn(f"{p2}k{i2}", c3)
-                o_tag = (other.select(*vis)
-                         .withColumn(f"{p2}id",
-                                     F.monotonically_increasing_id())
-                         .alias("__set_o"))
-                newbies = o_tag.join(a3, cond, "left_anti")
-                ord_ts = [recv.schema[f"{p2}k{i2}"].dataType
-                          for i2 in range(len(order))]
-                recv2 = recv.select(
-                    *vis,
-                    *[F.col(f"{p2}k{i2}") for i2 in range(len(order))],
-                    F.lit(None).cast("long").alias(f"{p2}id"),
-                    F.lit(0).alias(f"{p2}pri"))
-                newb2 = newbies.select(
-                    *vis,
-                    *[F.lit(None).cast(t2).alias(f"{p2}k{i2}")
-                      for i2, t2 in enumerate(ord_ts)],
-                    F.col(f"{p2}id"),
-                    F.lit(1).alias(f"{p2}pri"))
-                self._order = (
-                    [(F.col(f"{p2}pri"), False)] +
-                    [(F.col(f"{p2}k{i2}"), d3)
-                     for i2, (_c3, d3) in enumerate(order)] +
-                    [(F.col(f"{p2}id"), False)])
-                self._has_union = True
-                return recv2.unionByName(newb2)
-            a2, o2 = df.alias("__set_a"), other.select(*vis).alias("__set_o")
-            cond = None
-            for v2 in vis:
-                eq2 = F.col(f"__set_a.{v2}").eqNullSafe(F.col(f"__set_o.{v2}"))
-                cond = eq2 if cond is None else (cond & eq2)
-            how = "left_anti" if name == "diff" else "left_semi"
+        sec = _order_by(order)
+        if self._has_union:
+            # a Union upstream: the orderBy+limit(1) picks are the
+            # Sort+GlobalLimit-above-Union shape Spark 4.1's AQE
+            # can drop (see _ordered_prefix) — window-rank instead
+            def _pick1(*keys):
+                self._sort_seq += 1
+                rn = f"__pfx{self._sort_seq}"
+                return (df.withColumn(
+                    rn, F.row_number().over(Window.orderBy(*keys)))
+                    .filter(F.col(rn) == 1).drop(rn))
+
+            extreme = _pick1(o, *sec)
+            pick_first = lambda: _pick1(*sec)  # noqa: E731
+        else:
+            extreme = df.orderBy(o, *sec).limit(1)
+            pick_first = lambda: df.orderBy(*sec).limit(1)  # noqa: E731
+        # the first-element-null probe only exists for NULLABLE
+        # keys (r12 advice): when the analyzer proves the key
+        # expression non-null, the override can never fire — skip
+        # the second TakeOrdered subplan and the union outright
+        if not df.select(col.alias("__xb_k")).schema["__xb_k"].nullable:
+            return self._pad_single_null(extreme)
+        first_null = (pick_first()
+                      .filter(col.isNull())
+                      .withColumn("__xb_pri", F.lit(0)))
+        # winner = min-priority branch row, chosen by an ungrouped
+        # min_by AGGREGATE — not orderBy(pri).limit(1): AQE can
+        # drop a Sort+Limit above a Union whose branch materializes
+        # empty (the r12 soak catch; see _pad_single_null). The
+        # aggregate also pads: empty union → one all-null row.
+        unioned = first_null.unionByName(
+            extreme.withColumn("__xb_pri", F.lit(1)))
+        fields = [f.name for f in extreme.schema.fields]
+        w = unioned.agg(F.min_by(
+            F.struct(*[F.col(c2) for c2 in fields]),
+            F.col("__xb_pri")).alias("__w"))
+        return w.select(*[F.col("__w").getField(c2).alias(c2)
+                          for c2 in fields])
+
+    def _group_by(self, df, args, env, order):
+        # doc group_by keys an IndexMap: its KEY order (first-seen) is
+        # doc-observable when navigation follows (.keys(), field
+        # access, positional stages) — restored like implode's group
+        # order (r10 soak catch: .group_by(g).keys() collected groups
+        # in shuffle-arrival order)
+        if order is None:
+            return None   # order-broken pipeline → warned fallback
+        d2, go, eo = self._keyed_input(df, "gb")
+        return self._emit_sorted(R.group_collect(
+            d2, self._key_str(args[0].value, df, env), order=go,
+            payload_cols=_vis_cols(df), emit_order=eo), eo)
+
+    def _count_by(self, df, args, env, order):
+        # first-seen key order is doc-observable downstream, same
+        # as group_by (r10); count_by is not order-hungry, so mint
+        # the scan surrogate only when a tail actually reads order
+        if not self._tail_reads_order:
+            return R.count_by(df, self._key_str(args[0].value, df, env))
+        df, order = self._maybe_scan_order(df, order)
+        if order is None:
+            return None   # key order unrecoverable → fallback
+        d2, go, eo = self._keyed_input(df, "cb")
+        return self._emit_sorted(R.count_by(
+            d2, self._key_str(args[0].value, df, env), order=go,
+            emit_order=eo), eo)
+
+    def _index_by(self, df, args, env, order):
+        if order is None:
+            return None
+        d2, go, eo = self._keyed_input(df, "ib")
+        return self._emit_sorted(R.index_by(
+            d2, self._key_str(args[0].value, df, env), order=go,
+            payload_cols=_vis_cols(df), emit_order=eo), eo)
+
+    def _equi_join(self, df, args, env, order):
+        # read the hint BEFORE resolving the table arg: a
+        # sub-pipeline arg ($.u.filter(...)) re-enters _pipeline
+        # and would clobber the lookahead with ITS tail
+        tail_reads = self._tail_reads_order
+        self._pipe_end_ordered = True
+        other = self._resolve_table(args[0].value)
+        if other is None:
+            return None
+        # is the resolved table's physical order its doc order?
+        # (set by _pipeline for sub-pipeline args; a plain table
+        # scan runs an empty pipeline → True)
+        rt_ok = self._pipe_end_ordered
+        lk, rk = _lit_str(args[1].value), _lit_str(args[2].value)
+        # a MISSING key field is a per-row None lookup in doc mode
+        # (equi_join_apply: o.get → None skips the row), so the
+        # join is empty — synthesize a typed null key instead of
+        # failing analysis (r9 soak catch: implode(v).equi_join(...)
+        # raised where doc mode returned the empty result)
+        synth = False
+        if lk not in _vis_cols(df):
+            dt2 = (other.schema[rk].dataType if rk in other.columns
+                   else T.StringType())
+            df = df.withColumn(lk, F.lit(None).cast(dt2))
+            synth = True
+        if rk not in other.columns:
+            dt2 = df.schema[lk].dataType
+            other = other.withColumn(rk, F.lit(None).cast(dt2))
+            synth = True
+        # key-match mode (r11 advice): a PRESENT-but-null key is
+        # the val_to_key "null" bucket and MATCHES (array.rs:
+        # 505-531) — only the synthesized missing-field key keeps
+        # plain == (every lookup misses → the empty join)
+        key_kw = ({} if synth else _join_key_kwargs(
+            df.schema[lk].dataType, other.schema[rk].dataType,
+            lk, rk))
+        # equi_join_apply walks the RECEIVER in order (array.rs:
+        # 489-548) and emits EVERY right match per receiver row in
+        # right-array order (array.rs:505-531), so the output's
+        # document order is (receiver position, right-array
+        # position) — the receiver sort below carries the first
+        # component, the rid surrogate the second. When
+        # no order is carried, mint the scan-order surrogate (r9) —
+        # previously the join went out unordered, _scan_ok flipped
+        # off, and every order-dependent downstream stage (or a
+        # min_by tie) doc-fell-back or silently diverged. Skip the
+        # sort when NO remaining stage reads order (lookahead in
+        # _pipeline): the relational contract owes no final-result
+        # order, and a post-join .map/.filter/.count_by chain must
+        # not pay a full sort it never observes (r9 bench catch:
+        # jql_equi_join +104% under the last-stage-only hint).
+        if order is None and tail_reads:
+            df, order = self._maybe_scan_order(df, order)
+        if order is not None:
+            # materialize the carried order into hidden columns
+            # BEFORE the merge: the right-wins column overwrite
+            # rebinds name-resolved order exprs — `sort(-v)
+            # .equi_join($.d, ...)` re-sorted by the RIGHT side's v
+            # (r11 soak catch via the duplicate-key d table), the
+            # same rebinding class _select_carry handles for map
+            df, order = self._rematerialize_order(df, order)
+        out_order = order
+        if order is not None:
+            # doc output order is (receiver position, RIGHT-ARRAY
+            # position): equi_join_apply indexes ALL right matches
+            # per key in right-array order (array.rs:505-514) and
+            # emits every match per receiver row (array.rs:526-531).
+            # The r9 receiver-only sort left a receiver row's
+            # multiple matches TIED — shuffle-arbitrary under
+            # duplicate right keys (r10 advice). Mint a right-side
+            # doc-order surrogate as the secondary sort key
+            # (appended whenever the receiver-order sort runs at
+            # all — the id mint is a free narrow projection); valid
+            # only when the right table's physical order is its doc
+            # order (plain scan / order-materialized sub-pipeline).
+            # When it isn't: warned doc fallback if a downstream
+            # stage reads order (as before r9), else keep the
+            # receiver-only sort — the ties are unobservable.
+            if not rt_ok:
+                if tail_reads:
+                    return None
+                return self._reorder(
+                    R.equi_join(df, other, lk, rk, **key_kw), order)
+            self._sort_seq += 1
+            rid = f"__ord_rt{self._sort_seq}"
+            other = other.withColumn(rid, F.monotonically_increasing_id())
+            out_order = order + [(F.col(rid), False)]
+        # restore the pipeline order the join shuffle destroyed so
+        # position sinks downstream stay faithful
+        return self._reorder(R.equi_join(df, other, lk, rk, **key_kw),
+                             out_order)
+
+    def _explode(self, df, args, env, order):
+        return R.explode_field(df, _name_str(args[0].value))
+
+    def _implode(self, df, args, env, order):
+        # implode's OUTPUT ROW ORDER is doc-observable too: groups
+        # appear in first-occurrence order, and a downstream
+        # positional stage reads it (r9 fuzz catch: implode(v)
+        # .first() returned a shuffle-arbitrary group). Restore it
+        # via min(doc-order) per group — skipped when the tail is
+        # order-blind, like equi_join's receiver-order sort.
+        if order is None:
+            return None
+        fld = _name_str(args[0].value)
+        d2, go, eo = self._keyed_input(df, "imp")
+        return self._emit_sorted(R.implode(
+            d2, fld, group_cols=[c2 for c2 in _vis_cols(df) if c2 != fld],
+            order=go, emit_order=eo), eo)
+
+    def _pivot(self, df, args, env, order):
+        # pivot keys stringify via val_to_key like every other keyed
+        # reducer (pivot_apply keys an IndexMap) — rendered canonically
+        # before the relational pivot
+        if self._has_tail and len(args) == 3:
+            # the 3-arg grid's nested-object navigation has no
+            # row-shaped relational form — collapse to doc mode
+            return None
+        if order is None:
+            return None   # last-wins / first-per-cell read order
+        d2, go, _eo = self._keyed_input(df)
+        names = [_name_str(a.value) for a in args]
+        # a MISSING field arg is a per-row Null in doc mode (key →
+        # "null" bucket, value → null cell) — synthesize a typed
+        # null column instead of crashing the driver-side schema
+        # lookup (r10 soak catch: .map({k,v}).pivot(g, v) raised
+        # PySparkKeyError where doc mode pivoted under "null")
+        for nm in set(names):
+            if nm not in d2.columns:
+                d2 = d2.withColumn(nm, F.lit(None).cast("string"))
+        if len(args) == 2:
+            kn, vn = names
+            if self._has_tail:
+                # NAVIGATION follows: emit the ordered-object ROW
+                # form (objrepr, the count_by/group_by convention)
+                # instead of the one-map row — a following stage
+                # read that map rowset as plain rows (r10 soak
+                # catch: .pivot(g, k).g2 was a one-sided
+                # CompileError, .keys() an uncontrolled ObjError),
+                # and collapsing at the pivot INPUT would funnel
+                # the whole table through one task; this way the
+                # pivot aggregates relationally and only |keys|
+                # rows reach any downstream fallback.
+                self._sort_seq += 1
+                eo = f"__ord_pv{self._sort_seq}"
+                return self._emit_sorted(R.pivot2_rows(
+                    _canon_cols(d2, kn), kn, vn, order=go,
+                    emit_order=eo), eo)
+            return R.pivot2(_canon_cols(d2, kn), kn, vn, order=go)
+        rn2, cn, vn = names
+        return R.pivot3(_canon_cols(d2, rn2, cn), rn2, cn, vn, order=go)
+
+    def _delimited(self, df, args, env, order, *, sep: str):
+        # Relational form of the §2.1 to_csv/to_tsv sink: one formatted
+        # line per row (same cell quoting as the doc-mode string
+        # builder, helpers.rs:130-169) — the write-ready shape; doc
+        # mode's single joined string would be a driver-side cliff at
+        # table scale. Use JetroTables.write_csv for a real
+        # distributed file sink.
+        self._scalar = True
+        line = F.concat_ws(sep, *[
+            _csv_cell(F.col(c2), df.schema[c2].dataType, sep)
+            for c2 in _vis_cols(df)])
+        return df.select(line.alias("line"))
+
+    def _set_op(self, df, args, env, order, *, how: str | None):
+        """diff_apply/intersect_apply/union_apply semantics
+        (collection.rs:594-646): filter the RECEIVER by key membership
+        in the other side — the receiver's DUPLICATES and order are
+        preserved (subtract()/intersect() were dedup-ing SQL set ops
+        AND lost the pipeline order; unionByName() appended everything
+        — r7 catches). ``how`` is that filter's join: left_anti (diff)
+        or left_semi (intersect); None is union = all of the receiver
+        plus the other side's rows whose value is not in the
+        receiver."""
+        recv_scalar = self._scalar
+        self._pipe_end_ordered = True
+        other = self._resolve_table(args[0].value)
+        if other is None:
+            return None
+        # _resolve_table re-enters _pipeline for sub-pipeline args,
+        # clobbering _scalar with the OTHER side's shape — capture
+        # it, then restore the receiver's (r12)
+        oth_scalar = self._scalar
+        self._scalar = recv_scalar
+        # ordered union appends the other table's rows in the other
+        # ARRAY's own order via a monotonic-id tag — valid only when
+        # the resolved table's physical order is its doc order (same
+        # r10 gate as equi_join's right side; an order-destroying
+        # sub-pipeline arg would tag shuffle-arbitrary rows)
+        rt_ok = self._pipe_end_ordered
+        vis = _vis_cols(df)
+        ovis = _vis_cols(other)
+        canon_keys = False
+        ldt = rdt = None
+        if recv_scalar and oth_scalar and len(vis) == 1 and len(ovis) == 1:
+            ldt = df.schema[vis[0]].dataType
+            rdt = other.schema[ovis[0]].dataType
+            if _key_collide(ldt, rdt):
+                # scalar membership keys by val_to_key
+                # (util.rs:216-226: string "3" matches long 3, a
+                # NULL cell keys "null" and matches the literal
+                # string "null", a string matches a container's
+                # compact JSON — r12 catch + r13 ADVICE classes).
+                # Native equality would make Spark ANSI-coerce and
+                # crash at runtime on cross-family pairs.
+                # diff/intersect keep the receiver's rows and type;
+                # union keeps flowing to the generic path when the
+                # output stays homogeneous (string/null pair, cond
+                # canonicalized below via canon_keys), else its
+                # output is heterogeneous → warned doc fallback
+                # (m_union's variant lowering)
+                canon_keys = {_family(ldt), _family(rdt)} <= {
+                    "string", "null"}
+                if how is not None:
+                    a4 = (df.withColumn("__set_k",
+                                        _canon_key(F.col(vis[0]), ldt))
+                          .alias("__set_a"))
+                    o4 = (other.select(_canon_key(F.col(ovis[0]), rdt)
+                                       .alias("__set_k"))
+                          .alias("__set_o"))
+                    out = a4.join(
+                        o4, F.col("__set_a.__set_k")
+                        == F.col("__set_o.__set_k"), how).drop("__set_k")
+                    return self._reorder(out, order)
+                if not canon_keys:
+                    return None
+            if vis[0] != ovis[0]:
+                # scalar column NAMES are incidental projection
+                # detail — align them so same-family scalars flow
+                # the value-membership path (pre-fix, a name
+                # mismatch took the cross-shape arm and kept rows
+                # val_to_key says to drop)
+                other = other.withColumnRenamed(ovis[0], vis[0])
+
+        def row_t(d: DataFrame) -> T.StructType:
+            return T.StructType([T.StructField(c2, d.schema[c2].dataType)
+                                 for c2 in vis])
+
+        # cross-shape rows never compare equal (vals_eq), and neither
+        # do same-NAMED object rows with a cross-family field TYPE:
+        # object rows key by their JSON serialization (val_to_key →
+        # val_to_string), where a string field renders QUOTED — never
+        # equal to a number field; native equality would ANSI-coerce
+        # and crash (the r12 soak catch via the string-keyed join
+        # vocab). diff keeps everything, intersect keeps nothing;
+        # union would need a mixed-shape row set → doc fallback
+        if sorted(vis) != sorted(other.columns) or (
+                not recv_scalar and vis
+                and not eq_comparable(row_t(df), row_t(other))):
+            if how is None:
+                return None
             self._order = order
-            out = a2.join(o2, cond, how)
+            return df if how == "left_anti" else df.limit(0)
+        cond = None
+        for v2 in vis:
+            a, o = F.col(f"__set_a.{v2}"), F.col(f"__set_o.{v2}")
+            # a scalar string/null pair keys by val_to_key, where a NULL
+            # cell renders "null" and matches the literal string (r13)
+            eq2 = (_canon_key(a, ldt) == _canon_key(o, rdt) if canon_keys
+                   else a.eqNullSafe(o))
+            cond = eq2 if cond is None else (cond & eq2)
+        if how is not None:
             # anti/semi joins keep each receiver row at most once, so
             # no dedup — just restore the pipeline order the join
             # shuffle destroyed
-            return out if order is None else out.orderBy(*_order_by(order))
-        if name == "compact":
-            # drop null elements (ops/collection.rs:23); object rows are
-            # non-null structs, so multi-column inputs pass through
-            self._order = order
-            vis = _vis_cols(df)
-            if len(vis) == 1 and self._scalar:
-                return df.filter(F.col(vis[0]).isNotNull())
-            return df
-        if name == "flatten":
-            # array-of-arrays rows → element rows: explode IS the
-            # relational flatten; deeper levels flatten row-locally first
-            vis = _vis_cols(df)
-            if len(vis) != 1 or not self._scalar:
-                return None
-            col2, dt = F.col(vis[0]), df.schema[vis[0]].dataType
-            if not isinstance(dt, T.ArrayType):
-                return None
-            n = _opt_int(args, 1) or 1
-            for _ in range(n - 1):
-                if not isinstance(dt.elementType, T.ArrayType):
-                    break
-                col2, dt = F.flatten(col2), dt.elementType
-            el = dt.elementType
-            out = df.select(F.explode(col2).alias("__e"))
-            if isinstance(el, T.StructType):
-                self._scalar = False
-                return out.select("__e.*")
-            self._scalar = True
-            return out.select(F.col("__e").alias(vis[0]))
-        if name in ("find_first", "find_one"):
-            # filter(pred) + First (the TerminalExprArg lowering,
-            # defs.rs:975-1000) — so the no-match case is the scalar
-            # Null, padded exactly like first() (r13: the unpadded
-            # empty rowset diverged from doc mode's None)
-            self._order = order
-            hits = df.filter(pred(args[0].value))
-            if getattr(self, "_has_union", False):
-                h2, o2 = self._maybe_scan_order(hits, order)
-                if o2 is not None:
-                    return self._pad_single_null(
-                        self._ordered_prefix(h2, o2, 1))
-            return self._pad_single_null(hits.limit(1))
-        if name == "find_index":
-            # 0-based index of first match over the pipeline order, -1
-            # when absent (ops/array.rs:293); unordered → doc fallback
-            if order is None:
-                return None
-            self._scalar = True
-            from pyspark.sql.window import Window
-            w = Window.orderBy(*_order_by(order))
-            ok = pred(args[0].value)
-            d2 = df.select((F.row_number().over(w) - 1).alias("__fi_rn"),
-                           ok.alias("__fi_ok"))
-            return d2.filter(F.col("__fi_ok")).agg(
-                F.coalesce(F.min("__fi_rn"), F.lit(-1))
-                .cast("long").alias("value"))
-        if name in ("includes", "contains"):
-            # membership over the rowset → one-pass bool_or aggregation;
-            # null-safe (a null probe matches null cells — Val::Null
-            # keys as "null" in includes_apply) and TOTAL: a provably
-            # cross-kind probe is constant false, not a CompileError
-            from jetro_spark.jql.compiler import (_canon_str,
-                                                  eq_comparable,
-                                                  _key_collide,
-                                                  _reorder_struct_probe)
-            vis = _vis_cols(df)
-            vt = c.compile(args[0].value, env)
-            never = df.limit(0).agg(
-                F.coalesce(F.bool_or(F.lit(False)),
-                           F.lit(False)).alias("value"))
-            if len(vis) == 1 and self._scalar:
-                cell_t = df.schema[vis[0]].dataType
-                self._scalar = True
-                if _key_collide(cell_t, vt.dtype):
-                    # val_to_key canonical keys (same collision classes
-                    # as the set ops — "3" matches 3, null matches the
-                    # literal "null", a string matches a container's
-                    # compact JSON — r13)
-                    eqc = (F.coalesce(_canon_str(F.col(vis[0]), cell_t),
-                                      F.lit("null"))
-                           == F.coalesce(_canon_str(vt.col, vt.dtype),
-                                         F.lit("null")))
-                elif not eq_comparable(cell_t, vt.dtype):
-                    return never
-                else:
-                    eqc = F.col(vis[0]).eqNullSafe(
-                        _reorder_struct_probe(vt, cell_t))
-                return df.agg(F.coalesce(F.bool_or(eqc),
-                                         F.lit(False)).alias("value"))
+            out = df.alias("__set_a").join(
+                other.select(*vis).alias("__set_o"), cond, how)
+            return self._reorder(out, order)
+        a3 = df.select(*vis).alias("__set_a")
+        if order is None:
+            self._has_union = True
+            newbies = other.select(*vis).alias("__set_o").join(
+                a3, cond, "left_anti")
+            return df.select(*vis).unionByName(newbies)
+        if not rt_ok:
+            return None   # append order unrecoverable → fallback
+        # ordered (r8; was a doc fallback): receiver rows keep
+        # their pipeline order and come first; appended rows
+        # (other-side values absent from the receiver, dups and
+        # all — union_apply never extends a_keys,
+        # collection.rs:611-626) follow in the other table's own
+        # order, tagged with a monotonic id (partition-prefixed,
+        # so it reproduces the scan order the doc path collects
+        # in). Sort spec = (priority, receiver keys, append id);
+        # the cross-group nulls in each key are tie-constant
+        # within their group. Hidden names carry a per-stage
+        # unique prefix: Column refs resolve by NAME at action
+        # time, so a second union overwriting `__ordu0` would
+        # corrupt an order list still pointing at it.
+        self._setop_seq += 1
+        p2 = f"__ordu{self._setop_seq}_"
+        recv = df
+        for i2, (c3, _d3) in enumerate(order):
+            recv = recv.withColumn(f"{p2}k{i2}", c3)
+        o_tag = (other.select(*vis)
+                 .withColumn(f"{p2}id",
+                             F.monotonically_increasing_id())
+                 .alias("__set_o"))
+        newbies = o_tag.join(a3, cond, "left_anti")
+        ord_ts = [recv.schema[f"{p2}k{i2}"].dataType
+                  for i2 in range(len(order))]
+        recv2 = recv.select(
+            *vis,
+            *[F.col(f"{p2}k{i2}") for i2 in range(len(order))],
+            F.lit(None).cast("long").alias(f"{p2}id"),
+            F.lit(0).alias(f"{p2}pri"))
+        newb2 = newbies.select(
+            *vis,
+            *[F.lit(None).cast(t2).alias(f"{p2}k{i2}")
+              for i2, t2 in enumerate(ord_ts)],
+            F.col(f"{p2}id"),
+            F.lit(1).alias(f"{p2}pri"))
+        self._order = (
+            [(F.col(f"{p2}pri"), False)] +
+            [(F.col(f"{p2}k{i2}"), d3)
+             for i2, (_c3, d3) in enumerate(order)] +
+            [(F.col(f"{p2}id"), False)])
+        self._has_union = True
+        return recv2.unionByName(newb2)
+
+    def _compact(self, df, args, env, order):
+        # drop null elements (ops/collection.rs:23); object rows are
+        # non-null structs, so multi-column inputs pass through
+        self._order = order
+        vis = _vis_cols(df)
+        if len(vis) == 1 and self._scalar:
+            return df.filter(F.col(vis[0]).isNotNull())
+        return df
+
+    def _flatten(self, df, args, env, order):
+        # array-of-arrays rows → element rows: explode IS the
+        # relational flatten; deeper levels flatten row-locally first
+        vis = _vis_cols(df)
+        if len(vis) != 1 or not self._scalar:
+            return None
+        col2, dt = F.col(vis[0]), df.schema[vis[0]].dataType
+        if not isinstance(dt, T.ArrayType):
+            return None
+        n = _opt_int(args, 1) or 1
+        for _ in range(n - 1):
+            if not isinstance(dt.elementType, T.ArrayType):
+                break
+            col2, dt = F.flatten(col2), dt.elementType
+        el = dt.elementType
+        out = df.select(F.explode(col2).alias("__e"))
+        if isinstance(el, T.StructType):
+            self._scalar = False
+            return out.select("__e.*")
+        self._scalar = True
+        return out.select(F.col("__e").alias(vis[0]))
+
+    def _find_first(self, df, args, env, order):
+        # filter(pred) + First (the TerminalExprArg lowering,
+        # defs.rs:975-1000) — so the no-match case is the scalar
+        # Null, padded exactly like first() (r13: the unpadded
+        # empty rowset diverged from doc mode's None)
+        hits = df.filter(self._pred(args[0].value, df, env))
+        return self._positional(hits, order, 1, pad=True, guard=False)
+
+    def _find_index(self, df, args, env, order):
+        # 0-based index of first match over the pipeline order, -1
+        # when absent (ops/array.rs:293); unordered → doc fallback
+        if order is None:
+            return None
+        self._scalar = True
+        w = Window.orderBy(*_order_by(order))
+        ok = self._pred(args[0].value, df, env)
+        d2 = df.select((F.row_number().over(w) - 1).alias("__fi_rn"),
+                       ok.alias("__fi_ok"))
+        return d2.filter(F.col("__fi_ok")).agg(
+            F.coalesce(F.min("__fi_rn"), F.lit(-1))
+            .cast("long").alias("value"))
+
+    def _includes(self, df, args, env, order):
+        # membership over the rowset → one-pass bool_or aggregation;
+        # null-safe (a null probe matches null cells — Val::Null
+        # keys as "null" in includes_apply) and TOTAL: a provably
+        # cross-kind probe is constant false, not a CompileError
+        vis = _vis_cols(df)
+        vt = self.c.compile(args[0].value, env)
+        never = df.limit(0).agg(
+            F.coalesce(F.bool_or(F.lit(False)),
+                       F.lit(False)).alias("value"))
+        scalar, self._scalar = len(vis) == 1 and self._scalar, True
+        if scalar:
+            cell_t = df.schema[vis[0]].dataType
+            if _key_collide(cell_t, vt.dtype):
+                # val_to_key canonical keys (same collision classes
+                # as the set ops — "3" matches 3, null matches the
+                # literal "null", a string matches a container's
+                # compact JSON — r13)
+                eqc = (_canon_key(F.col(vis[0]), cell_t)
+                       == _canon_key(vt.col, vt.dtype))
+            elif not eq_comparable(cell_t, vt.dtype):
+                return never
+            else:
+                eqc = F.col(vis[0]).eqNullSafe(
+                    _reorder_struct_probe(vt, cell_t))
+        else:
             # object rowset: the pipeline is a list of row objects —
             # membership compares each ROW to the probe (includes_apply
             # Val::Arr arm); a non-object or schema-mismatched probe
             # never matches, a matching-schema struct probe does
             row_t = T.StructType([df.schema[v2] for v2 in vis])
-            self._scalar = True
             if not eq_comparable(row_t, vt.dtype):
                 return never
-            probe = _reorder_struct_probe(vt, row_t)
-            return df.agg(F.coalesce(
-                F.bool_or(F.struct(*[F.col(v2) for v2 in vis])
-                          .eqNullSafe(probe)),
-                F.lit(False)).alias("value"))
-        if name in ("index", "index_of"):
-            # first 0-based position of the value over the pipeline
-            # order, -1 when absent (ops/array.rs index)
-            if order is None:
-                return None
-            vis = _vis_cols(df)
-            if len(vis) != 1 or not self._scalar:
-                return None
-            from pyspark.sql.window import Window
-            from jetro_spark.jql.compiler import (_canon_str,
-                                                  eq_comparable,
-                                                  _cross_renders)
-            w = Window.orderBy(*_order_by(order))
-            self._scalar = True
-            vt = c.compile(args[0].value, env)
-            cell_t = df.schema[vis[0]].dataType
-            if (not eq_comparable(cell_t, vt.dtype)
-                    or _cross_renders(cell_t, vt.dtype)):
-                # the index family compares via TYPE-STRICT vals_eq —
-                # cross-kind probes (incl. string-vs-number, which
-                # Spark would ANSI-cast) never match → -1, total
-                return df.limit(0).agg(
-                    F.coalesce(F.min(F.lit(0)), F.lit(-1))
-                    .cast("long").alias("value"))
-            d2 = df.select((F.row_number().over(w) - 1).alias("__ix_rn"),
-                           (F.col(vis[0]) == vt.col).alias("__ix_ok"))
-            return d2.filter(F.col("__ix_ok")).agg(
-                F.coalesce(F.min("__ix_rn"), F.lit(-1))
-                .cast("long").alias("value"))
-        if name == "join":
-            # string join sink: one-pass collect + array_join; the rn tag
-            # keeps the pipeline order through the unordered agg
-            vis = _vis_cols(df)
-            if len(vis) != 1 or not self._scalar:
-                return None
-            self._scalar = True
-            sep = _lit_str(args[0].value) if args else ""
-            tagged, arr = _collected_elems(df, F.col(vis[0]), order,
-                                           elem_dt=df.schema[vis[0]].dataType)
-            return tagged.agg(F.array_join(arr, sep).alias("value"))
-        if name in ("indices_where", "indices_of", "last_index_of"):
-            # position queries over the pipeline order → one-pass agg of
-            # tagged row numbers (indices_where/_of: sorted index array;
-            # last_index_of: max index, -1 absent — ops/array.rs)
-            if order is None:
-                return None
-            vis = _vis_cols(df)
-            if name != "indices_where" and (len(vis) != 1
-                                            or not self._scalar):
-                return None
-            from pyspark.sql.window import Window
-            w = Window.orderBy(*_order_by(order))
-            if name == "indices_where":
-                ok = pred(args[0].value)
-            else:
-                v = c.compile(args[0].value, env).col
-                # eqNullSafe: doc-mode AR.indices_of finds null values
-                ok = F.col(vis[0]).eqNullSafe(v)
-            self._scalar = True
-            d2 = df.select((F.row_number().over(w) - 1).cast("long")
-                           .alias("__iw_rn"), ok.alias("__iw_ok"))
-            hits = d2.filter(F.col("__iw_ok"))
-            if name == "last_index_of":
-                return hits.agg(F.coalesce(F.max("__iw_rn"), F.lit(-1))
-                                .cast("long").alias("value"))
-            # array result → rows (the fallback's explode convention)
-            return (hits.agg(F.array_sort(F.collect_list("__iw_rn"))
-                             .alias("__v"))
-                    .select(F.explode_outer("__v").alias("value")))
-        if name == "to_json":
-            # whole-pipeline JSON sink: ordered collect + to_json — the
-            # same one-row driver-cliff class as join(sep); use
-            # write_csv/write_parquet for table-scale exports
-            vis = _vis_cols(df)
-            if len(vis) == 1 and self._scalar:
-                elem = F.col(vis[0])
-                ed: T.DataType = df.schema[vis[0]].dataType
-            else:
-                elem = F.struct(*[F.col(c2) for c2 in vis])
-                ed = T.StructType(
-                    [f for f in df.schema.fields if f.name in vis])
-            tagged, arr = _collected_elems(df, elem, order, elem_dt=ed)
-            self._scalar = True
-            return tagged.agg(F.to_json(arr).alias("value"))
-        if name == "window":
-            # sliding windows of n consecutive rows over the pipeline
-            # order (ops/collection.rs window): per-row frame collect,
-            # short tails dropped — bounded by the user's n like chunk
-            if order is None or not args:
-                return None
-            self._scalar = True
-            n = _lit_int(args[0].value)
-            if n <= 0:
-                raise CompileError("window size must be positive")
-            from pyspark.sql.window import Window
-            w = Window.orderBy(*_order_by(order))
-            vis = _vis_cols(df)
-            elem = (F.col(vis[0]) if len(vis) == 1
-                    else F.struct(*[F.col(c2) for c2 in vis]))
-            # struct wrapper: collect_list drops bare nulls, doc windows
-            # keep them ([7.5, null] is a valid window of 2)
-            win = F.transform(
-                F.collect_list(F.struct(elem.alias("__w_e"))).over(
-                    w.rowsBetween(Window.currentRow, n - 1)),
-                lambda s: s["__w_e"])
-            out = (df.select((F.row_number().over(w) - 1).alias("__ord0"),
-                             win.alias("value"))
-                   .filter(F.size("value") == n)
-                   .select("value", "__ord0"))
-            self._order = [(F.col("__ord0"), False)]
-            return out
-        if name == "partition":
-            # {pass: [...], fail: [...]} → one-pass agg with map-side
-            # partials; preserves pipeline order via the rn tag
-            ok = pred(args[0].value)
-            vis = _vis_cols(df)
-            elem = (F.col(vis[0]) if len(vis) == 1
-                    else F.struct(*[F.col(c2) for c2 in vis]))
-            m = F.coalesce(ok, F.lit(False))
-            if order is not None:
-                from pyspark.sql.window import Window
-                w = Window.orderBy(*_order_by(order))
-                tagged = df.select(F.row_number().over(w).alias("__p_rn"),
-                                   m.alias("__p_m"), elem.alias("__p_e"))
-                elem_pdt = (df.schema[vis[0]].dataType if len(vis) == 1
-                            else T.StructType([df.schema[c2]
-                                               for c2 in vis]))
-                arr = R.sort_by_field(
-                    F.collect_list(F.struct("__p_rn", "__p_m", "__p_e")),
-                    "__p_rn", payload_dt=elem_pdt)
-            else:
-                tagged = df.select(F.lit(0).alias("__p_rn"),
-                                   m.alias("__p_m"), elem.alias("__p_e"))
-                arr = F.collect_list(F.struct("__p_rn", "__p_m", "__p_e"))
-            keep = F.transform(F.filter(arr, lambda s: s["__p_m"]),
-                               lambda s: s["__p_e"])
-            drop = F.transform(F.filter(arr, lambda s: ~s["__p_m"]),
-                               lambda s: s["__p_e"])
-            return tagged.agg(keep.alias("pass"), drop.alias("fail"))
-        if name == "group_shape":
-            # group_shape(key_λ, shape_λ): groupBy the STRINGIFIED key
-            # (doc semantics, ops/array.rs:841-863), shape applied to the
-            # per-key collected array — parallel by key, unlike the doc
-            # fallback's whole-table collect
-            vis = _vis_cols(df)
-            if len(vis) == 1:
-                elem: Column = F.col(vis[0])
-                elem_dt: T.DataType = df.schema[vis[0]].dataType
-            else:
-                elem = F.struct(*[F.col(c2) for c2 in vis])
-                elem_dt = T.StructType(
-                    [f for f in df.schema.fields if f.name in vis])
-            key_fn, _kd = c._lam(args[0].value, env, elem_dt)
-            from jetro_spark.jql.compiler import _canon_str
-            if order is None:
-                return None   # group sequences read pipeline order (r9)
-            df, go = doc_ord()
-            # struct wrapper: collect_list drops bare null elements, doc
-            # group arrays keep them; sorted by the doc-order surrogate
-            # so the per-key sequence is pipeline order, not shuffle
-            # arrival order (r9)
-            wrapped = F.transform(
-                R.sort_by_field(F.collect_list(
-                    F.struct(F.col(go).alias("__o"), elem.alias("__e"))),
-                    payload_dt=elem_dt),
-                lambda s: s["__e"])
-            # first-seen key order is doc-observable when navigation
-            # follows, like group_by (r10)
-            tail_reads = getattr(self, "_tail_reads_order", True)
-            aggs = [wrapped.alias("__grp")]
-            eo = f"__ord_gs{self._sort_seq}" if tail_reads else None
-            if eo is not None:
-                aggs.append(F.min(F.col(go)).alias(eo))
-            # canonical val_to_key string like every keyed reducer:
-            # Null key renders as "null" (r10 soak catch — the bare
-            # cast left a SQL NULL key where doc mode groups under
-            # "null"), integral doubles drop the trailing .0
-            key_c = F.coalesce(_canon_str(key_fn(elem), _kd),
-                               F.lit("null"))
-            grouped = (df.groupBy(key_c.alias("key"))
-                       .agg(*aggs))
-            shape_fn, _sd = c._lam(args[1].value, env, T.ArrayType(elem_dt))
-            extras = [F.col(eo)] if eo is not None else []
-            out = grouped.select(F.col("key"),
-                                 shape_fn(F.col("__grp")).alias("value"),
-                                 *extras)
-            if eo is None:
-                return out
-            self._order = [(F.col(eo), False)]
-            return out.orderBy(F.col(eo).asc())
-        return None
+            eqc = F.struct(*[F.col(v2) for v2 in vis]).eqNullSafe(
+                _reorder_struct_probe(vt, row_t))
+        return df.agg(F.coalesce(F.bool_or(eqc),
+                                 F.lit(False)).alias("value"))
 
-    def _accumulate_window(self, df: DataFrame, args, env: Env,
-                           order: list | None) -> DataFrame | None:
-        """Relational accumulate for the running-sum lambda shape (see
-        _method_stage): window prefix sum over the pipeline order.
-        Returns None (→ doc fallback) for any other fold body, missing
-        order, or non-scalar init."""
+    def _index_of(self, df, args, env, order):
+        # first 0-based position of the value over the pipeline
+        # order, -1 when absent (ops/array.rs index)
+        if order is None:
+            return None
+        vis = _vis_cols(df)
+        if len(vis) != 1 or not self._scalar:
+            return None
+        w = Window.orderBy(*_order_by(order))
+        vt = self.c.compile(args[0].value, env)
+        cell_t = df.schema[vis[0]].dataType
+        if (not eq_comparable(cell_t, vt.dtype)
+                or _cross_renders(cell_t, vt.dtype)):
+            # the index family compares via TYPE-STRICT vals_eq —
+            # cross-kind probes (incl. string-vs-number, which
+            # Spark would ANSI-cast) never match → -1, total
+            return df.limit(0).agg(
+                F.coalesce(F.min(F.lit(0)), F.lit(-1))
+                .cast("long").alias("value"))
+        d2 = df.select((F.row_number().over(w) - 1).alias("__ix_rn"),
+                       (F.col(vis[0]) == vt.col).alias("__ix_ok"))
+        return d2.filter(F.col("__ix_ok")).agg(
+            F.coalesce(F.min("__ix_rn"), F.lit(-1))
+            .cast("long").alias("value"))
+
+    def _join(self, df, args, env, order):
+        # string join sink: one-pass collect + array_join; the rn tag
+        # keeps the pipeline order through the unordered agg
+        vis = _vis_cols(df)
+        if len(vis) != 1 or not self._scalar:
+            return None
+        sep = _lit_str(args[0].value) if args else ""
+        tagged, arr = _collected_elems(df, F.col(vis[0]), order,
+                                       elem_dt=df.schema[vis[0]].dataType)
+        return tagged.agg(F.array_join(arr, sep).alias("value"))
+
+    def _indices(self, df, args, env, order, *, of_value: bool,
+                 last: bool):
+        """Position queries over the pipeline order → one-pass agg of
+        tagged row numbers: the sorted index array of predicate matches
+        (indices_where) or of ``of_value`` matches (indices_of), or the
+        last one, -1 when absent (last_index_of; ops/array.rs)."""
+        if order is None:
+            return None
+        vis = _vis_cols(df)
+        if of_value and (len(vis) != 1 or not self._scalar):
+            return None
+        w = Window.orderBy(*_order_by(order))
+        if of_value:
+            v = self.c.compile(args[0].value, env).col
+            # eqNullSafe: doc-mode AR.indices_of finds null values
+            ok = F.col(vis[0]).eqNullSafe(v)
+        else:
+            ok = self._pred(args[0].value, df, env)
+        self._scalar = True
+        d2 = df.select((F.row_number().over(w) - 1).cast("long")
+                       .alias("__iw_rn"), ok.alias("__iw_ok"))
+        hits = d2.filter(F.col("__iw_ok"))
+        if last:
+            return hits.agg(F.coalesce(F.max("__iw_rn"), F.lit(-1))
+                            .cast("long").alias("value"))
+        # array result → rows (the fallback's explode convention)
+        return (hits.agg(F.array_sort(F.collect_list("__iw_rn"))
+                         .alias("__v"))
+                .select(F.explode_outer("__v").alias("value")))
+
+    def _to_json(self, df, args, env, order):
+        # whole-pipeline JSON sink: ordered collect + to_json — the
+        # same one-row driver-cliff class as join(sep); use
+        # write_csv/write_parquet for table-scale exports
+        elem = _element(df, self._scalar)
+        tagged, arr = _collected_elems(df, elem.col, order,
+                                       elem_dt=elem.dtype)
+        self._scalar = True
+        return tagged.agg(F.to_json(arr).alias("value"))
+
+    def _window(self, df, args, env, order):
+        # sliding windows of n consecutive rows over the pipeline
+        # order (ops/collection.rs window): per-row frame collect,
+        # short tails dropped — bounded by the user's n like chunk
+        if order is None or not args:
+            return None
+        self._scalar = True
+        n = _lit_int(args[0].value)
+        if n <= 0:
+            raise CompileError("window size must be positive")
+        w = Window.orderBy(*_order_by(order))
+        # struct wrapper: collect_list drops bare nulls, doc windows
+        # keep them ([7.5, null] is a valid window of 2)
+        win = F.transform(
+            F.collect_list(F.struct(_element(df).col.alias("__w_e"))).over(
+                w.rowsBetween(Window.currentRow, n - 1)),
+            lambda s: s["__w_e"])
+        out = (df.select((F.row_number().over(w) - 1).alias("__ord0"),
+                         win.alias("value"))
+               .filter(F.size("value") == n)
+               .select("value", "__ord0"))
+        self._order = [(F.col("__ord0"), False)]
+        return out
+
+    def _partition(self, df, args, env, order):
+        # {pass: [...], fail: [...]} → one-pass agg with map-side
+        # partials; preserves pipeline order via the rn tag
+        ok = self._pred(args[0].value, df, env)
+        elem = _element(df)
+        m = F.coalesce(ok, F.lit(False))
+        if order is not None:
+            w = Window.orderBy(*_order_by(order))
+            tagged = df.select(F.row_number().over(w).alias("__p_rn"),
+                               m.alias("__p_m"), elem.col.alias("__p_e"))
+            arr = R.sort_by_field(
+                F.collect_list(F.struct("__p_rn", "__p_m", "__p_e")),
+                "__p_rn", payload_dt=elem.dtype)
+        else:
+            tagged = df.select(F.lit(0).alias("__p_rn"),
+                               m.alias("__p_m"), elem.col.alias("__p_e"))
+            arr = F.collect_list(F.struct("__p_rn", "__p_m", "__p_e"))
+        keep = F.transform(F.filter(arr, lambda s: s["__p_m"]),
+                           lambda s: s["__p_e"])
+        drop = F.transform(F.filter(arr, lambda s: ~s["__p_m"]),
+                           lambda s: s["__p_e"])
+        return tagged.agg(keep.alias("pass"), drop.alias("fail"))
+
+    def _group_shape(self, df, args, env, order):
+        # group_shape(key_λ, shape_λ): groupBy the STRINGIFIED key
+        # (doc semantics, ops/array.rs:841-863), shape applied to the
+        # per-key collected array — parallel by key, unlike the doc
+        # fallback's whole-table collect
+        elem = _element(df)
+        key_fn, kd = self.c._lam(args[0].value, env, elem.dtype)
+        if order is None:
+            return None   # group sequences read pipeline order (r9)
+        # first-seen key order is doc-observable when navigation
+        # follows, like group_by (r10)
+        df, go, eo = self._keyed_input(df, "gs")
+        # struct wrapper: collect_list drops bare null elements, doc
+        # group arrays keep them; sorted by the doc-order surrogate
+        # so the per-key sequence is pipeline order, not shuffle
+        # arrival order (r9)
+        wrapped = F.transform(
+            R.sort_by_field(F.collect_list(
+                F.struct(F.col(go).alias("__o"), elem.col.alias("__e"))),
+                payload_dt=elem.dtype),
+            lambda s: s["__e"])
+        aggs = [wrapped.alias("__grp")]
+        if eo is not None:
+            aggs.append(F.min(F.col(go)).alias(eo))
+        # canonical val_to_key string like every keyed reducer:
+        # Null key renders as "null" (r10 soak catch — the bare
+        # cast left a SQL NULL key where doc mode groups under
+        # "null"), integral doubles drop the trailing .0
+        grouped = (df.groupBy(_canon_key(key_fn(elem.col), kd).alias("key"))
+                   .agg(*aggs))
+        shape_fn, _sd = self.c._lam(args[1].value, env,
+                                    T.ArrayType(elem.dtype))
+        extras = [F.col(eo)] if eo is not None else []
+        return self._emit_sorted(grouped.select(
+            F.col("key"), shape_fn(F.col("__grp")).alias("value"),
+            *extras), eo)
+
+    def _accumulate(self, df, args, env, order):
+        """Relational accumulate for the running-SUM lambda shape —
+        `(a, x) => a + <expr(x)>` (either operand order, optional scalar
+        init): a window prefix sum over the pipeline order. The general
+        fold (multiplication, conditionals) has no closed window form:
+        None (→ doc fallback) for any other fold body, missing order, or
+        non-scalar init."""
         if order is None or not args:
             return None
         lam = args[0].value
@@ -2589,10 +2359,9 @@ class JetroTables:
             out_t = "double"
         init = init.cast(out_t)
         term_col = term_col.cast(out_t)
-        from pyspark.sql.window import Window
         w = (Window.orderBy(*_order_by(order))
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        hid = [F.col(c2) for c2 in df.columns if c2.startswith("__ord")]
+        hid = _hidden_cols(df)
         # doc mode folds a + x null-PROPAGATINGLY (a null element poisons
         # the accumulator for every later position; the reference errors
         # there — add_vals has no null case — and the repo's documented
@@ -2626,12 +2395,7 @@ class JetroTables:
             return out if order is None else out.orderBy(*_order_by(order))
         if order is None:
             return df.select(*vis).distinct()
-        from pyspark.sql.window import Window
-        w = (Window.partitionBy(*[F.col(v2) for v2 in vis])
-             .orderBy(*_order_by(order)))
-        return (df.withColumn("__uq_rn", F.row_number().over(w))
-                .filter(F.col("__uq_rn") == 1).drop("__uq_rn")
-                .orderBy(*_order_by(order)))
+        return _first_per_key(df, [F.col(v2) for v2 in vis], order)
 
     def _pad_single_null(self, taken: DataFrame) -> DataFrame:
         """Guarantee exactly one row: ``taken`` (already ``limit(1)``-
@@ -2661,85 +2425,49 @@ class JetroTables:
         return w.select(*[F.col("__w").getField(f.name).alias(f.name)
                           for f in fields])
 
-    def _window_stage(self, df: DataFrame, name: str, args,
-                      order: list | None) -> DataFrame | None:
-        """Positional analytics over the pipeline's sequence order (§2.6).
+    def _window_fn(self, df, args, env, order, *, fn):
+        """Positional analytics over the pipeline's sequence order (§2.6):
+        ``fn(x, window, args)`` builds the column.
 
         Document mode treats the pipeline as one ordered array; a Spark
         DataFrame has no intrinsic row order, so the order comes from the
-        preceding ``.sort(...)`` stage (required). Lowering: a global
-        un-partitioned Window over the sort keys — faithful to the
-        single-sequence semantics and, like the reference's one-thread
-        scan (ops/collection.rs:124-343), inherently sequential; for
-        partition-parallel analytics at scale use the keyed forms in
-        operators/analytics.py (with_lag etc. take partition columns).
-        ``zscore`` instead lowers to a two-pass agg + broadcast join —
-        no single-partition window at all."""
-        from pyspark.sql.window import Window
-
+        preceding ``.sort(...)`` stage or the scan-order surrogate.
+        Lowering: a global un-partitioned Window over the sort keys —
+        faithful to the single-sequence semantics and, like the
+        reference's one-thread scan (ops/collection.rs:124-343),
+        inherently sequential; for partition-parallel analytics at scale
+        use the keyed forms in operators/analytics.py (with_lag etc. take
+        partition columns)."""
         if order is None:
             # unordered AND the scan-order surrogate is unavailable (a
             # shuffle upstream made row order arbitrary): the doc
             # fallback preserves semantics — raising here was a
             # one-sided error vs doc mode (r8 unsorted-pipeline fuzz)
             return None
-        data = _vis_cols(df)
-        if len(data) != 1:
-            raise CompileError(
-                f"{name}: expected a single projected column "
-                f"(use .map(field) first), got {data}")
-        cname = data[0]
-        dt = df.schema[cname].dataType
-        # numeric_options coercion (ops/collection.rs:89-105)
-        if isinstance(dt, (T.NumericType, T.NullType)):
-            x = F.col(cname).cast("double")
-        elif isinstance(dt, T.VariantType):
-            x = F.try_variant_get(F.col(cname), "$", "double")
-        else:
-            x = F.lit(None).cast("double")
+        cname, x = _window_operand(df)
         self._order = order
-        hid = [F.col(c) for c in df.columns if c.startswith("__ord")]
-        if name == "zscore":
-            stats = df.agg(F.avg(x).alias("__mean"),
-                           F.stddev_pop(x).alias("__sd"))
-            z = (F.when(x.isNull(), F.lit(None).cast("double"))
-                 .when(F.col("__sd") > 0, (x - F.col("__mean")) / F.col("__sd"))
-                 .when(F.col("__mean").isNull(), F.lit(None).cast("double"))
-                 .otherwise(F.lit(0.0)))
-            return df.crossJoin(F.broadcast(stats)).select(z.alias(cname), *hid)
-        w = Window.orderBy(*[c.desc() if d else c.asc() for c, d in order])
-        if name == "lag":
-            col = F.lag(x, _opt_int(args, 1)).over(w)
-        elif name == "lead":
-            col = F.lead(x, _opt_int(args, 1)).over(w)
-        elif name == "diff_window":
-            col = x - F.lag(x, 1).over(w)
-        elif name == "pct_change":
-            prev = F.lag(x, 1).over(w)
-            # pct_change guards `p != 0.0` → null (ops/collection.rs:264)
-            # while the `/` operator errors — so try_divide here
-            col = F.try_divide(x - prev, prev)
-        elif name in ("cummax", "cum_max"):
-            col = F.max(x).over(w.rowsBetween(Window.unboundedPreceding, 0))
-        elif name in ("cummin", "cum_min"):
-            col = F.min(x).over(w.rowsBetween(Window.unboundedPreceding, 0))
-        else:
-            n = _opt_int(args, None)
-            if n is None or n <= 0:
-                raise CompileError(f"{name}: window must be > 0")
-            agg = {"rolling_sum": F.sum, "rolling_avg": F.avg,
-                   "rolling_min": F.min, "rolling_max": F.max}[name]
-            body = agg(x).over(w.rowsBetween(1 - n, 0))
-            if name == "rolling_sum":
-                # full all-null window sums the empty set to 0.0
-                body = F.coalesce(body, F.lit(0.0))
-            col = F.when(F.row_number().over(w) >= n, body)
-        return df.select(col.alias(cname), *hid)
+        hid = _hidden_cols(df)
+        w = Window.orderBy(*_order_by(order))
+        return df.select(fn(x, w, args).alias(cname), *hid)
+
+    def _zscore(self, df, args, env, order):
+        # a two-pass agg + broadcast join — no single-partition window
+        if order is None:
+            return None
+        cname, x = _window_operand(df)
+        self._order = order
+        hid = _hidden_cols(df)
+        stats = df.agg(F.avg(x).alias("__mean"),
+                       F.stddev_pop(x).alias("__sd"))
+        z = (F.when(x.isNull(), F.lit(None).cast("double"))
+             .when(F.col("__sd") > 0, (x - F.col("__mean")) / F.col("__sd"))
+             .when(F.col("__mean").isNull(), F.lit(None).cast("double"))
+             .otherwise(F.lit(0.0)))
+        return df.crossJoin(F.broadcast(stats)).select(z.alias(cname), *hid)
 
     def _table_refs(self, nodes: list[A.Node]) -> set[str]:
         """Names of registered tables referenced via `$.<name>` anywhere
         in the given AST nodes (generic dataclass walk)."""
-        import dataclasses
         refs: set[str] = set()
 
         def walk(n):
@@ -2797,7 +2525,6 @@ class JetroTables:
         A live sort order rides into the collected array via a
         row_number tag so order-sensitive folds see the pipeline order
         (the window is single-partition, but so is the whole fallback)."""
-        import os
         limit = int(os.environ.get("JETRO_FALLBACK_MAX_BYTES",
                                    self.FALLBACK_MAX_BYTES))
         if limit:
@@ -2816,17 +2543,11 @@ class JetroTables:
             "single-task document pipeline", stacklevel=2)
         vis = _vis_cols(df)
         scalar = self._scalar and len(vis) == 1
-        if scalar:
-            elem = F.col(vis[0])
-            elem_dt: T.DataType = df.schema[vis[0]].dataType
-        else:
-            elem = F.struct(*[F.col(c) for c in vis])
-            elem_dt = T.StructType(
-                [f for f in df.schema.fields if f.name in vis])
-        tagged, arr = _collected_elems(df, elem, order or None,
-                                       elem_dt=elem_dt)
+        elem = _element(df, scalar)
+        tagged, arr = _collected_elems(df, elem.col, order or None,
+                                       elem_dt=elem.dtype)
         arr_df = tagged.agg(arr.alias("__arr"))
-        tc = TC(F.col("__arr"), T.ArrayType(elem_dt))
+        tc = TC(F.col("__arr"), T.ArrayType(elem.dtype))
         # table-arg builtins inside the collapsed pipeline (zip($.u),
         # append($.u.map(x)), ...) need `$` bound: collect each
         # REFERENCED table (same size ceiling) onto the one-row frame
@@ -2888,24 +2609,6 @@ class JetroTables:
         return out
 
 
-def _element_sink(step) -> bool:
-    """Does this final pipeline step return a single ELEMENT of the
-    stream (first/last n==1, nth, find_first, min/max/min_by/max_by)?
-    Element results keep their own shape — an array element stays one
-    array cell, never exploded back into rows."""
-    if not isinstance(step, A.Method):
-        return False
-    if step.name in ("first", "last"):
-        if not step.args:
-            return True
-        try:
-            return _lit_int(step.args[0].value) == 1
-        except Exception:
-            return False
-    return step.name in ("nth", "find_first", "find_one",
-                         "min_by", "max_by", "min", "max")
-
-
 def _opt_int(args, default=None):
     return _lit_int(args[0].value) if args else default
 
@@ -2930,3 +2633,212 @@ def _lit_str(node: A.Node) -> str:
     if isinstance(node, A.Literal) and isinstance(node.value, str):
         return node.value
     raise CompileError("expected string literal")
+
+
+# ------------------------------------------------------- the stage table
+
+
+@dataclasses.dataclass(frozen=True)
+class Stage:
+    """One builtin's relational lowering and the order traits the
+    pipeline reads. ``lower(tables, df, args, env, order)`` returns the
+    stage's frame, or None for the single-task doc fallback."""
+    lower: Callable
+    # reads the pipeline's sequence order: gets the scan-order surrogate
+    # when none is carried (historically these collapsed to the doc
+    # fallback on unsorted pipelines; since r8 they lower whenever the
+    # physical row order still IS the document order, see _scan_ok)
+    hungry: bool = False
+    # afterwards the PHYSICAL row order still equals the document order
+    # with no carried order: narrow transformations (filter/projection/
+    # generate/limit — no exchange, partition order kept) and
+    # single-row/scalar sinks (any order of one row is every order). A
+    # stage without it that completes with no carried order invalidates
+    # the scan-order surrogate for the rest of the pipeline.
+    keeps_scan: bool = False
+    # never READS the pipeline's order: projections, filters,
+    # order-insensitive reducers (multiset semantics), and keyed
+    # reducers whose doc/relational comparison contract is
+    # order-normalized (count_by). Everything else — positional stages,
+    # windows, sorts (stable ties), min_by/max_by (ties), first-seen/
+    # last-wins keyed reducers, and any stage that might doc-fallback —
+    # is conservatively an order CONSUMER.
+    blind: bool = False
+    # given its args, returns a single ELEMENT of the stream: an array
+    # element stays one array cell, never exploded back into rows
+    element: Callable[[list], bool] | None = None
+
+
+def _always(args) -> bool:
+    return True
+
+
+def _n_is_one(args) -> bool:
+    """first/last: only the n == 1 form returns an element."""
+    try:
+        return _opt_int(args, 1) == 1
+    except CompileError:
+        return False
+
+
+def _stage_entry(step) -> Stage | None:
+    """The table entry of a pipeline step: its builtin name resolved
+    through ALIASES, without touching the AST (the doc fallback still
+    compiles the step as spelled)."""
+    if not isinstance(step, A.Method):
+        return None
+    return STAGES.get(ALIASES.get(step.name, step.name))
+
+
+def _keeps_scan_order(step) -> bool:
+    if isinstance(step, (A.InlineFilter, A.MapShape, A.Index, A.Slice,
+                         A.Quantifier)):
+        return True
+    stage = _stage_entry(step)
+    return stage is not None and stage.keeps_scan
+
+
+def _order_blind(step) -> bool:
+    if isinstance(step, (A.InlineFilter, A.MapShape, A.Quantifier)):
+        return True
+    stage = _stage_entry(step)
+    return stage is not None and stage.blind
+
+
+def _element_sink(step) -> bool:
+    """Does this final pipeline step return a single ELEMENT of the
+    stream (see Stage.element)?"""
+    stage = _stage_entry(step)
+    return (stage is not None and stage.element is not None
+            and stage.element(step.args))
+
+
+def _win(fn) -> Callable:
+    return functools.partial(JetroTables._window_fn, fn=fn)
+
+
+def _running(agg) -> Callable:
+    return _win(lambda x, w, args: agg(x).over(
+        w.rowsBetween(Window.unboundedPreceding, 0)))
+
+
+def _rolling(agg, empty_zero: bool = False) -> Callable:
+    def fn(x, w, args):
+        n = _opt_int(args, None)
+        if n is None or n <= 0:
+            raise CompileError("rolling window must be > 0")
+        body = agg(x).over(w.rowsBetween(1 - n, 0))
+        if empty_zero:
+            # full all-null window sums the empty set to 0.0
+            body = F.coalesce(body, F.lit(0.0))
+        return F.when(F.row_number().over(w) >= n, body)
+    return _win(fn)
+
+
+def _pct_change(x, w, args):
+    prev = F.lag(x, 1).over(w)
+    # pct_change guards `p != 0.0` → null (ops/collection.rs:264)
+    # while the `/` operator errors — so try_divide here
+    return F.try_divide(x - prev, prev)
+
+
+_T = JetroTables
+_p = functools.partial
+# Canonical builtin name → Stage. A name with no entry (see ALIASES for
+# the spellings) has no relational lowering: its pipeline collapses to
+# the doc fallback.
+STAGES: dict[str, Stage] = {
+    "filter": Stage(_T._filter, keeps_scan=True, blind=True),
+    "map": Stage(_T._map, keeps_scan=True, blind=True),
+    "flat_map": Stage(_T._flat_map, keeps_scan=True),
+    "sort": Stage(_T._sort),
+    "take": Stage(_T._take, keeps_scan=True),
+    "skip": Stage(_T._skip, keeps_scan=True),
+    "first": Stage(_T._first, keeps_scan=True, element=_n_is_one),
+    "last": Stage(_T._last, hungry=True, element=_n_is_one),
+    "nth": Stage(_T._nth, hungry=True, element=_always),
+    "find_first": Stage(_T._find_first, element=_always),
+    "take_while": Stage(_p(_T._while, take=True), hungry=True),
+    "drop_while": Stage(_p(_T._while, take=False), hungry=True),
+    "reverse": Stage(_T._reverse, hungry=True),
+    "enumerate": Stage(_T._enumerate, hungry=True),
+    "pairwise": Stage(_T._pairwise, hungry=True),
+    "chunk": Stage(_T._chunk, hungry=True),
+    "window": Stage(_T._window, hungry=True),
+    "accumulate": Stage(_T._accumulate, hungry=True),
+    "partition": Stage(_T._partition, keeps_scan=True),
+    "unique": Stage(_T._unique, hungry=True),
+    "unique_by": Stage(_T._unique_by, hungry=True),
+    "compact": Stage(_T._compact, keeps_scan=True, blind=True),
+    "flatten": Stage(_T._flatten, keeps_scan=True),
+    "explode": Stage(_T._explode, keeps_scan=True, blind=True),
+    "implode": Stage(_T._implode, hungry=True),
+    # set ops keep the RECEIVER's document order (and ordered union
+    # appends the other table's own order) — unsorted pipelines take the
+    # order-restoring branches so the output sequence stays doc-faithful
+    # (r8 2500-soak catch: diff's left_anti shuffle order leaked into a
+    # downstream accumulate)
+    "diff": Stage(_p(_T._set_op, how="left_anti"), hungry=True),
+    "intersect": Stage(_p(_T._set_op, how="left_semi"), hungry=True),
+    "union": Stage(_p(_T._set_op, how=None), hungry=True),
+    "includes": Stage(_T._includes, keeps_scan=True, blind=True),
+    "index_of": Stage(_T._index_of, keeps_scan=True),
+    "find_index": Stage(_T._find_index),
+    "indices_where": Stage(_p(_T._indices, of_value=False, last=False)),
+    "indices_of": Stage(_p(_T._indices, of_value=True, last=False),
+                        keeps_scan=True),
+    "last_index_of": Stage(_p(_T._indices, of_value=True, last=True)),
+    "join": Stage(_T._join, keeps_scan=True),
+    "to_json": Stage(_T._to_json, keeps_scan=True),
+    "to_csv": Stage(_p(_T._delimited, sep=","), keeps_scan=True),
+    "to_tsv": Stage(_p(_T._delimited, sep="\t"), keeps_scan=True),
+    # aggregates (§2.4)
+    "count": Stage(_T._count, keeps_scan=True, blind=True),
+    "len": Stage(_T._len, keeps_scan=True, blind=True),
+    "sum": Stage(_p(_T._numeric, empty_zero=True,
+                    agg=lambda x: F.coalesce(F.sum(x), F.lit(0.0))),
+                 keeps_scan=True, blind=True),
+    "avg": Stage(_p(_T._numeric, agg=F.avg, empty_zero=False),
+                 keeps_scan=True, blind=True),
+    "min": Stage(_p(_T._numeric, agg=F.min, empty_zero=False),
+                 keeps_scan=True, blind=True, element=_always),
+    "max": Stage(_p(_T._numeric, agg=F.max, empty_zero=False),
+                 keeps_scan=True, blind=True, element=_always),
+    "any": Stage(_p(_T._quantify, agg=F.bool_or, empty=False),
+                 keeps_scan=True, blind=True),
+    "all": Stage(_p(_T._quantify, agg=F.bool_and, empty=True),
+                 keeps_scan=True, blind=True),
+    "approx_count_distinct": Stage(_T._approx_count_distinct,
+                                   keeps_scan=True, blind=True),
+    "min_by": Stage(_p(_T._extreme_by, desc=False), keeps_scan=True,
+                    element=_always),
+    "max_by": Stage(_p(_T._extreme_by, desc=True), keeps_scan=True,
+                    element=_always),
+    # keyed reducers whose doc semantics read pipeline order: group_by
+    # collects groups IN ORDER, index_by/pivot are last-wins, pivot3 /
+    # group_shape collect per-cell/per-group sequences (r9 —
+    # collect_list arrival order is arbitrary under real multi-mapper
+    # shuffles; these sort collected elements by a scan-order surrogate
+    # and fall back honestly when order is unrecoverable)
+    "group_by": Stage(_T._group_by, hungry=True),
+    "count_by": Stage(_T._count_by, blind=True),
+    "index_by": Stage(_T._index_by, hungry=True),
+    "pivot": Stage(_T._pivot, hungry=True),
+    "group_shape": Stage(_T._group_shape, hungry=True),
+    "equi_join": Stage(_T._equi_join, blind=True),
+    # positional analytics (§2.6): a global Window over the order
+    "lag": Stage(_win(lambda x, w, args: F.lag(x, _opt_int(args, 1))
+                      .over(w)), hungry=True),
+    "lead": Stage(_win(lambda x, w, args: F.lead(x, _opt_int(args, 1))
+                       .over(w)), hungry=True),
+    "diff_window": Stage(_win(lambda x, w, args: x - F.lag(x, 1).over(w)),
+                         hungry=True),
+    "pct_change": Stage(_win(_pct_change), hungry=True),
+    "cummax": Stage(_running(F.max), hungry=True),
+    "cummin": Stage(_running(F.min), hungry=True),
+    "rolling_sum": Stage(_rolling(F.sum, empty_zero=True), hungry=True),
+    "rolling_avg": Stage(_rolling(F.avg), hungry=True),
+    "rolling_min": Stage(_rolling(F.min), hungry=True),
+    "rolling_max": Stage(_rolling(F.max), hungry=True),
+    "zscore": Stage(_T._zscore, hungry=True),
+}

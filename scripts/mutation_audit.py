@@ -112,8 +112,8 @@ MUTATIONS = [
         "equi_join emits right matches in right-ARRAY order "
         "(array.rs:505-531)",
         ENGINE,
-        "                out_order = order + [(F.col(rid), False)]",
-        "                out_order = order + [(F.col(rid), True)]",
+        "            out_order = order + [(F.col(rid), False)]",
+        "            out_order = order + [(F.col(rid), True)]",
         [pytest("tests/test_regressions.py", "-k",
                 "right or null_bucket")],
     ),
@@ -139,16 +139,10 @@ def count_by''',
         "take_off_by_one",
         "take(n) keeps exactly n rows",
         ENGINE,
-        """        if name == "take":
-            if order is None and not self._scan_ok:
-                return None   # physical prefix != doc prefix (r10)
-            self._order = order
-            return df.limit(_lit_int(args[0].value))""",
-        """        if name == "take":
-            if order is None and not self._scan_ok:
-                return None   # physical prefix != doc prefix (r10)
-            self._order = order
-            return df.limit(_lit_int(args[0].value) + 1)""",
+        """    def _take(self, df, args, env, order):
+        return self._positional(df, order, _lit_int(args[0].value))""",
+        """    def _take(self, df, args, env, order):
+        return self._positional(df, order, _lit_int(args[0].value) + 1)""",
         [oracle("sort_take", "jql_sort_take")],
     ),
     (
@@ -156,10 +150,10 @@ def count_by''',
         'present-null join keys match under the val_to_key "null" '
         "bucket (util.rs:216-226) — r11 fix",
         ENGINE,
-        """            key_kw = ({} if synth else _join_key_kwargs(
-                df.schema[lk].dataType, other.schema[rk].dataType,
-                lk, rk))""",
-        """            key_kw = {}""",
+        """        key_kw = ({} if synth else _join_key_kwargs(
+            df.schema[lk].dataType, other.schema[rk].dataType,
+            lk, rk))""",
+        """        key_kw = {}""",
         [pytest("tests/test_regressions.py", "-k",
                 "null_bucket or cross_family_keys")],
     ),
@@ -185,10 +179,10 @@ def count_by''',
         "a null-keyed FIRST element wins min_by/max_by outright "
         "(nothing strictly improves on it) — relational sink",
         ENGINE,
-        '''            if not df.select(col.alias("__xb_k")).schema["__xb_k"].nullable:
-                return self._pad_single_null(extreme)''',
-        '''            if True:
-                return self._pad_single_null(extreme)''',
+        '''        if not df.select(col.alias("__xb_k")).schema["__xb_k"].nullable:
+            return self._pad_single_null(extreme)''',
+        '''        if True:
+            return self._pad_single_null(extreme)''',
         [pytest("tests/test_regressions.py", "-k",
                 "extreme_by_null_keys")],
     ),
@@ -238,16 +232,16 @@ def count_by''',
         "equi_join rematerializes the carried order into hidden slots "
         "BEFORE the right-wins merge (r11 soak catch)",
         ENGINE,
-        '''            if order is not None:
-                # materialize the carried order into hidden columns
-                # BEFORE the merge: the right-wins column overwrite
-                # rebinds name-resolved order exprs — `sort(-v)
-                # .equi_join($.d, ...)` re-sorted by the RIGHT side's v
-                # (r11 soak catch via the duplicate-key d table), the
-                # same rebinding class _select_carry handles for map
-                df, order = self._rematerialize_order(df, order)''',
-        '''            if order is not None:
-                pass''',
+        '''        if order is not None:
+            # materialize the carried order into hidden columns
+            # BEFORE the merge: the right-wins column overwrite
+            # rebinds name-resolved order exprs — `sort(-v)
+            # .equi_join($.d, ...)` re-sorted by the RIGHT side's v
+            # (r11 soak catch via the duplicate-key d table), the
+            # same rebinding class _select_carry handles for map
+            df, order = self._rematerialize_order(df, order)''',
+        '''        if order is not None:
+            pass''',
         [pytest("tests/test_regressions.py", "-k",
                 "survives_right_wins")],
     ),
@@ -342,9 +336,9 @@ def count_by''',
         "the set-op union stage must flag _has_union so positional "
         "sinks avoid a bare GlobalLimit above the Union (r13)",
         ENGINE,
-        '''                self._has_union = True
-                return recv2.unionByName(newb2)''',
-        '''                return recv2.unionByName(newb2)''',
+        '''        self._has_union = True
+        return recv2.unionByName(newb2)''',
+        '''        return recv2.unionByName(newb2)''',
         [pytest("tests/test_plan_audit.py", "-k", "setop_sinks")],
     ),
     (
