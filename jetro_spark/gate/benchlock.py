@@ -44,16 +44,17 @@ from jetro_spark.benchdoc import (
 N_ORDERS = 2_000
 ITEMS = 6
 
-_ENGINES: dict = {}
-
-
 def _jt(spark: SparkSession):
-    key = id(spark)
-    if key not in _ENGINES:
+    """The gate document's handle, built once per session. It is kept on
+    the session object (as ``session.load_tables`` keeps its memo), so
+    it ends with the session."""
+    jt = spark.__dict__.get("_jetro_benchlock")
+    if jt is None:
         from jetro_spark.jql.engine import Jetro
 
-        _ENGINES[key] = Jetro.from_value(spark, synth_doc(N_ORDERS, ITEMS))
-    return _ENGINES[key]
+        jt = Jetro.from_value(spark, synth_doc(N_ORDERS, ITEMS))
+        spark.__dict__["_jetro_benchlock"] = jt
+    return jt
 
 
 def _q(name: str):

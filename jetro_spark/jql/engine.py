@@ -640,6 +640,59 @@ class JetroDocs:
         return self.df.withColumn(name, self._compile(expr))
 
 
+@dataclasses.dataclass(frozen=True)
+class Pipe:
+    """The pipeline between two stages. Each stage lowering takes the
+    incoming Pipe and returns the outgoing one (or None for the doc
+    fallback)."""
+    df: DataFrame
+    # sequence order: list of (Column, desc) sort keys set by a .sort(...)
+    # stage and threaded through order-preserving stages so positional
+    # analytics (lag/rolling/... §2.6) can window on it
+    order: list | None = None
+    # the element is a bare scalar (after `map(v)`), not an object row —
+    # a single-column DataFrame is ambiguous (`map({v: v})` also has one
+    # column), so the projection that produced it says which
+    scalar: bool = False
+    # the PHYSICAL row order still is the document order (root scan +
+    # order-preserving stages) — the precondition for the scan-order
+    # surrogate _maybe_scan_order hands to order-dependent stages
+    scan_ok: bool = True
+
+    def then(self, df: DataFrame, order: list | None = None,
+             scalar: bool | None = None) -> "Pipe":
+        """The pipe a stage emits as ``df``: the order is dropped unless
+        the stage names it, the element shape kept unless it names one."""
+        return Pipe(df, order, self.scalar if scalar is None else scalar,
+                    self.scan_ok)
+
+
+@dataclasses.dataclass
+class Query:
+    """What one query shares with every scope nested in it (let bodies,
+    table arguments, comprehensions)."""
+    # a set-op union stage emitted a plan Union: positional sinks then
+    # avoid GlobalLimit above it (Spark 4.1 AQE drop — see
+    # _ordered_prefix / SCALE.md)
+    has_union: bool = False
+    # makes hidden column names unique within the plan
+    seq: int = 0
+
+    def fresh(self) -> int:
+        self.seq += 1
+        return self.seq
+
+
+@dataclasses.dataclass(frozen=True)
+class Tail:
+    """The query a stage is lowered in and its order-demand lookahead."""
+    q: Query
+    # some later stage reads the pipeline order (or the caller demands it)
+    reads_order: bool
+    # some stage follows
+    more: bool
+
+
 class JetroTables:
     """Relational-mode engine over named tables (the 100 TB path).
 
@@ -659,43 +712,10 @@ class JetroTables:
         # is a let-bound sub-plan whose terminal physical order is NOT
         # its doc order (keyed reducer with no order restore, multi-
         # generator comprehension join, set-comp dedup). Pipelines over
-        # an untrusted table start with _scan_ok off, so order-hungry
+        # an untrusted table start with scan_ok off, so order-hungry
         # stages take the warned fallback instead of silently numbering
         # shuffle-arbitrary rows with the scan surrogate.
         self._tables_ordered: dict[str, bool] = ordered or {}
-        # pipeline sequence order: list of (Column, desc) sort keys set by
-        # a .sort(...) stage and threaded through order-preserving stages
-        # so positional analytics (lag/rolling/... §2.6) can window on it
-        self._order: list | None = None
-        # True while the current pipeline's PHYSICAL row order still is
-        # its document order (root scan + order-preserving stages) — the
-        # precondition for the scan-order surrogate _maybe_scan_order
-        # hands to order-dependent stages on unsorted pipelines
-        self._scan_ok: bool = True
-        # True when the pipeline's element is a bare scalar (after
-        # `map(v)`), False for object rows — a single-column DataFrame is
-        # ambiguous (`map({v: v})` also has one column), so the engine
-        # tracks which projection produced it for the doc fallback
-        self._scalar: bool = False
-        self._new_query()
-
-    def _new_query(self) -> None:
-        """Reset the per-query pipeline state, so nothing one query
-        learned (a Union in its plan, hidden-name counters) leaks into
-        the next query on this handle."""
-        # True once a set-op union stage emitted a plan Union: positional
-        # sinks then avoid GlobalLimit above it (Spark 4.1 AQE drop —
-        # see _ordered_prefix / SCALE.md)
-        self._has_union = False
-        # counters that make hidden column names unique within a plan
-        self._sort_seq = 0
-        self._setop_seq = 0
-        # order-demand lookahead for the stage being lowered (_pipeline)
-        self._tail_reads_order = True
-        self._has_tail = False
-        # is the last compiled pipeline's physical row order its
-        # document order? Read by _let and table-argument stages.
-        self._pipe_end_ordered = True
 
     # row-scope env: bare idents resolve to F.col via TC(row=True);
     # let-bound scalars shadow nothing (row fields win — locals are
@@ -710,7 +730,7 @@ class JetroTables:
     def query(self, expr: str) -> DataFrame:
         node = parse(expr)
         try:
-            return self.compile_node(node)
+            return self.compile_node(node)[0]
         except AnalysisException as exc:
             # same totality contract as document mode (_analyzed_select):
             # an ill-typed stage combination (e.g. summing an
@@ -815,20 +835,22 @@ class JetroTables:
                 return False
         return True
 
-    def compile_node(self, node: A.Node,
-                     demand_order: bool = False) -> DataFrame:
-        self._new_query()
+    def compile_node(self, node: A.Node, demand_order: bool = False,
+                     q: Query | None = None) -> tuple[DataFrame, bool]:
+        """Compile ``node`` to ``(frame, ordered)``: ``ordered`` is its
+        order trust — whether the frame's PHYSICAL row order is its
+        document order, which a let binding or table argument over it
+        relies on. ``q`` is the enclosing query (a new one when None)."""
+        q = q or Query()
         if isinstance(node, A.Comp) and node.kind in ("list", "gen", "set"):
-            df = self._comp(node, want_order=demand_order)
-            if df is not None:
+            out = self._comp(node, want_order=demand_order)
+            if out is not None:
                 # order trust requires BOTH a reason the output is in
                 # doc order (demanded materialization, or the single-gen
                 # scan carry) AND trusted generator sources — _comp
                 # ignores the demand over untrusted sources (r11)
-                self._pipe_end_ordered = (
-                    (demand_order or self._comp_ordered(node))
-                    and self._comp_trusted(node))
-                return df
+                return out[0], ((demand_order or self._comp_ordered(node))
+                                and self._comp_trusted(node))
         # method chain on a comprehension root: `[...].first()` lowered
         # the comp, then errored "requires a table-rooted pipeline" —
         # a one-sided error vs doc mode (r10). Run the remaining steps
@@ -838,41 +860,52 @@ class JetroTables:
                 and node.base.kind in ("list", "gen", "set"):
             want = demand_order or any(not _order_blind(s)
                                        for s in node.steps)
-            df = self._comp(node.base, want_order=want)
-            if df is not None:
-                # _select_body just set self._scalar for the comp value
-                return self._pipeline(
-                    df, node.steps,
-                    scan_ok=((want or self._comp_ordered(node.base))
-                             and self._comp_trusted(node.base)),
-                    scalar=self._scalar, demand_order=demand_order)
-        if isinstance(node, A.Path) and isinstance(node.base, A.Root):
-            if node.steps and isinstance(node.steps[0], A.Field) \
-                    and node.steps[0].name in self.tables:
-                nm = node.steps[0].name
-                return self._pipeline(
-                    self.tables[nm], node.steps[1:],
-                    scan_ok=self._tables_ordered.get(nm, True),
-                    demand_order=demand_order)
-        # let-bound sub-plan referenced bare: `top.count()` / `top`
-        if isinstance(node, A.Path) and isinstance(node.base, A.Ident) \
-                and node.base.name in self.tables:
-            nm = node.base.name
-            return self._pipeline(
-                self.tables[nm], node.steps,
-                scan_ok=self._tables_ordered.get(nm, True),
-                demand_order=demand_order)
-        if isinstance(node, A.Ident) and node.name in self.tables:
-            self._pipe_end_ordered = self._tables_ordered.get(node.name, True)
-            return self.tables[node.name]
+            out = self._comp(node.base, want_order=want)
+            if out is not None:
+                scan_ok = ((want or self._comp_ordered(node.base))
+                           and self._comp_trusted(node.base))
+                return self._pipeline(Pipe(out[0], None, out[1], scan_ok),
+                                      node.steps, q, demand_order)
+        out = self._resolve_table(node, q, demand_order)
+        if out is not None:
+            return out
         if isinstance(node, A.Let):
-            return self._let(node, demand_order)
+            return self._let(node, q, demand_order)
         raise CompileError("relational mode requires a table-rooted pipeline "
                            f"($.<table>...); tables: {sorted(self.tables)}")
 
+    def _source(self, node: A.Node) -> tuple[str, list[A.Node]] | None:
+        """``(table, remaining steps)`` when ``node`` reads a table:
+        `$.t…`, a let-bound sub-plan `t…`, or a bare `t`."""
+        if isinstance(node, A.Ident):
+            return (node.name, []) if node.name in self.tables else None
+        if not isinstance(node, A.Path):
+            return None
+        if isinstance(node.base, A.Root) and node.steps \
+                and isinstance(node.steps[0], A.Field) \
+                and node.steps[0].name in self.tables:
+            return node.steps[0].name, node.steps[1:]
+        if isinstance(node.base, A.Ident) and node.base.name in self.tables:
+            return node.base.name, node.steps
+        return None
+
+    def _resolve_table(self, node: A.Node, q: Query,
+                       demand_order: bool = False
+                       ) -> tuple[DataFrame, bool] | None:
+        """A table-rooted pipeline (see _source) → ``(frame, ordered)``;
+        None for any other node. Table arguments (`equi_join($.u, …)`,
+        `union(d)` over a let-bound `d`, r10) come through here too."""
+        src = self._source(node)
+        if src is None:
+            return None
+        nm, steps = src
+        p = Pipe(self.tables[nm], scan_ok=self._tables_ordered.get(nm, True))
+        return self._pipeline(p, steps, q, demand_order)
+
     # --------------------------------------------------- comprehensions
 
-    def _let(self, n: A.Let, demand_order: bool = False) -> DataFrame:
+    def _let(self, n: A.Let, q: Query,
+             demand_order: bool) -> tuple[DataFrame, bool]:
         """Relational let: a table-rooted binding becomes a NAMED
         SUB-PLAN — the body sees it as another table (so
         `let top = $.orders.filter(p > x) in top.count()` is one plan,
@@ -886,59 +919,45 @@ class JetroTables:
         dropping the demand here let the keyed reducer skip its doc-
         order restore — the binding ended untrusted and the sink fell
         back (or silently diverged via the comp path) where the r10
-        binding-exit demand should have materialized the order."""
+        binding-exit demand should have materialized the order.
+
+        The body compiles in a child scope of the same query ``q``, so
+        what the binding's plan holds (a Union) still shapes the body's
+        positional sinks."""
         try:
-            self._pipe_end_ordered = True
             # demand_order: a binding's consumer is unknown — compile
             # as if an order-reading stage followed, so keyed reducers
             # / joins materialize their doc order instead of skipping
             # the restore under the order-blind-tail optimization (r10:
             # `let a = $.s.sort(-v).group_by(g) in a.first()` silently
             # returned the physically-first group)
-            bound = self.compile_node(n.value, demand_order=True)
+            bound, trust = self.compile_node(n.value, True, q)
         except CompileError:
             bound = None
         if bound is not None:
-            # record whether the bound sub-plan's PHYSICAL order is its
-            # doc order (set by _pipeline / the comp branches): body
-            # pipelines over an untrusted binding must not mint the
-            # scan-order surrogate (r10 — `let a = $.s.group_by(g) in
-            # a.last()` silently returned a shuffle-arbitrary row)
-            trust = self._pipe_end_ordered
+            # body pipelines over an untrusted binding (its PHYSICAL
+            # order is not its doc order) must not mint the scan-order
+            # surrogate (r10 — `let a = $.s.group_by(g) in a.last()`
+            # silently returned a shuffle-arbitrary row)
             child = JetroTables(self.spark, {**self.tables, n.name: bound},
                                 scalars=self._scalars,
                                 ordered={**self._tables_ordered,
                                          n.name: trust})
-            out = child.compile_node(n.body, demand_order=demand_order)
-            # the body compiled in the CHILD scope — surface its order
-            # trust on self, read by an enclosing _let / join caller
-            # (nested bindings, r11 advice)
-            self._pipe_end_ordered = child._pipe_end_ordered
-            return out
-        scalar = self.c.compile(n.value, Env(locals=dict(self._scalars)))
-        child = JetroTables(self.spark, self.tables,
-                            scalars={**self._scalars, n.name: scalar},
-                            ordered=self._tables_ordered)
-        out = child.compile_node(n.body, demand_order=demand_order)
-        self._pipe_end_ordered = child._pipe_end_ordered
-        return out
+        else:
+            scalar = self.c.compile(n.value, Env(locals=dict(self._scalars)))
+            child = JetroTables(self.spark, self.tables,
+                                scalars={**self._scalars, n.name: scalar},
+                                ordered=self._tables_ordered)
+        return child.compile_node(n.body, demand_order, q)
 
     def _table_of(self, src: A.Node) -> str | None:
-        if (isinstance(src, A.Path) and isinstance(src.base, A.Root)
-                and src.steps and isinstance(src.steps[0], A.Field)
-                and src.steps[0].name in self.tables and len(src.steps) == 1):
-            return src.steps[0].name
-        # let-bound sub-plan as generator source: `for x in a` (r10 —
-        # was a one-sided 'requires a table-rooted pipeline' error)
-        if isinstance(src, A.Ident) and src.name in self.tables:
-            return src.name
-        if (isinstance(src, A.Path) and isinstance(src.base, A.Ident)
-                and not src.steps and src.base.name in self.tables):
-            return src.base.name
-        return None
+        """The table a comprehension generator reads whole (`$.t`, a
+        let-bound `t`, r10), else None."""
+        s = self._source(src)
+        return s[0] if s is not None and not s[1] else None
 
-    def _comp(self, n: A.Comp,
-              want_order: bool = False) -> DataFrame | None:
+    def _comp(self, n: A.Comp, want_order: bool = False
+              ) -> tuple[DataFrame, bool] | None:
         """[v for x in $.t if p] → t.filter(p).select(v) — one scan, no
         collect (comprehension AST ast.rs:69-114).
 
@@ -947,7 +966,8 @@ class JetroTables:
         (Catalyst rewrites the `if` equality predicate into an inner
         equi-join — broadcast or shuffled hash, its choice); a source
         rooted at an earlier var (`for li in o.items`) becomes an
-        explode. No driver-side product is ever built."""
+        explode. No driver-side product is ever built. Returns the
+        frame and whether its element is a bare scalar."""
         gens = n.gens or [(n.vars, n.source)]
         # an untrusted source's physical order is NOT its doc order —
         # never mint order tags over it; compile order-free and let the
@@ -971,7 +991,7 @@ class JetroTables:
         return self._select_body(df, n.value, env)
 
     def _set_body(self, df: DataFrame, value: A.Node, env: Env,
-                  want_order: bool) -> DataFrame:
+                  want_order: bool) -> tuple[DataFrame, bool]:
         """Set-comprehension projection: doc sets are insertion-ordered
         (IndexSet) — with ``want_order`` the dedup keeps each value's
         FIRST occurrence position and sorts by it (precondition: df's
@@ -979,25 +999,26 @@ class JetroTables:
         or _comp_multi's post-sort); otherwise a plain distinct (the
         multiset contract owes no order on a final result)."""
         if not want_order:
-            return self._select_body(df, value, env).distinct()
+            out, scalar = self._select_body(df, value, env)
+            return out.distinct(), scalar
         d2 = df.withColumn("__ord_cm", F.monotonically_increasing_id())
         tc = self.c.compile(value, env)
-        if isinstance(tc.dtype, T.StructType):
-            self._scalar = False
+        scalar = not isinstance(tc.dtype, T.StructType)
+        if not scalar:
             proj = d2.select(tc.col.alias("__s"), "__ord_cm") \
                      .select("__s.*", "__ord_cm")
         else:
-            self._scalar = True
             proj = d2.select(tc.col.alias(self._scalar_name(value)),
                              "__ord_cm")
         cols = [c2 for c2 in proj.columns if c2 != "__ord_cm"]
         return (proj.groupBy(*cols)
                 .agg(F.min("__ord_cm").alias("__ord_cm"))
-                .orderBy("__ord_cm").drop("__ord_cm"))
+                .orderBy("__ord_cm").drop("__ord_cm")), scalar
 
     def _comp_multi(self, n: A.Comp,
                     gens: list[tuple[list[str], A.Node]],
-                    want_order: bool = False) -> DataFrame | None:
+                    want_order: bool = False
+                    ) -> tuple[DataFrame, bool] | None:
         t0 = self._table_of(gens[0][1])
         if t0 is None or any(len(vs) != 1 for vs, _ in gens):
             return None
@@ -1047,15 +1068,16 @@ class JetroTables:
             return self._set_body(df, n.value, env, want_order)
         return self._select_body(df, n.value, env)
 
-    def _select_body(self, df: DataFrame, body: A.Node, env: Env) -> DataFrame:
+    def _select_body(self, df: DataFrame, body: A.Node,
+                     env: Env) -> tuple[DataFrame, bool]:
+        """``df`` projected to ``body``, and whether that is a bare
+        scalar."""
         tc = self.c.compile(body, env)
         if isinstance(tc.dtype, T.StructType):
             # object-shaped map → one column per field (CollapseProject
             # folds the star-expansion into a single Project)
-            self._scalar = False
-            return df.select(tc.col.alias("__s")).select("__s.*")
-        self._scalar = True
-        return df.select(tc.col.alias(self._scalar_name(body)))
+            return df.select(tc.col.alias("__s")).select("__s.*"), False
+        return df.select(tc.col.alias(self._scalar_name(body))), True
 
     @staticmethod
     def _scalar_name(body: A.Node) -> str:
@@ -1071,95 +1093,77 @@ class JetroTables:
 
     # -------------------------------------------------------- pipeline
 
-    def _pipeline(self, df: DataFrame, steps: list[A.Node],
-                  scan_ok: bool = True, scalar: bool = False,
-                  demand_order: bool = False) -> DataFrame:
-        """``demand_order`` (r10): compile as if an order-reading stage
+    def _pipeline(self, p: Pipe, steps: list[A.Node], q: Query,
+                  demand_order: bool) -> tuple[DataFrame, bool]:
+        """Lower ``steps`` stage by stage from ``p``; return the frame
+        and its order trust (see compile_node).
+
+        ``demand_order`` (r10): compile as if an order-reading stage
         followed the last step — a LET BINDING's consumer is unknown at
         binding time, so order-restoring stages (keyed reducers, joins,
         ordered union) must materialize their doc order instead of
         skipping the restore under the order-blind-tail optimization."""
-        saved, self._order = self._order, None
-        saved_sc, self._scalar = self._scalar, scalar
-        saved_scan, self._scan_ok = self._scan_ok, scan_ok
-        saved_last, saved_tail = self._tail_reads_order, self._has_tail
-        try:
-            i = 0
-            while i < len(steps):
-                step = steps[i]
-                pre_order = self._order
-                # order-demand lookahead: the relational contract owes
-                # no order on the FINAL result (multiset compare), so an
-                # order-preserving join only pays its receiver-order
-                # sort when some REMAINING stage actually reads order
-                # (positional, window, tie-sensitive, or unknown)
-                self._tail_reads_order = demand_order or any(
-                    not _order_blind(s) for s in steps[i + 1:])
-                self._has_tail = demand_order or i + 1 < len(steps)
-                out = self._stage(df, step)
-                if out is None:
-                    # single-task fallback emits results in document
-                    # order → trustworthy as a table arg (see below)
-                    self._pipe_end_ordered = True
-                    return self._doc_fallback(df, steps[i:], pre_order)
-                if self._order is None and not _keeps_scan_order(step):
-                    # a reordering stage ran with no carried order: the
-                    # physical order is now shuffle-arbitrary, so the
-                    # scan-order surrogate is off the table downstream
-                    self._scan_ok = False
-                df = out
-                i += 1
-            # terminal order trust, read by a CALLER that consumed this
-            # pipeline as a table arg (equi_join's right side needs the
-            # right-ARRAY order, r10 advice): physical row order is the
-            # document order iff an order is carried (carried ⇒
-            # physically materialized, see _keyed_input) or the
-            # scan-order surrogate is still valid
-            self._pipe_end_ordered = (self._order is not None
-                                      or self._scan_ok)
-        finally:
-            self._order = saved
-            self._scalar = saved_sc
-            self._scan_ok = saved_scan
-            self._tail_reads_order = saved_last
-            self._has_tail = saved_tail
-        hidden = [c for c in df.columns if c.startswith("__ord")]
-        return df.drop(*hidden) if hidden else df
+        for i, step in enumerate(steps):
+            # order-demand lookahead: the relational contract owes no
+            # order on the FINAL result (multiset compare), so an
+            # order-preserving join only pays its receiver-order sort
+            # when some REMAINING stage actually reads order
+            # (positional, window, tie-sensitive, or unknown)
+            tail = Tail(q, demand_order or any(not _order_blind(s)
+                                               for s in steps[i + 1:]),
+                        demand_order or i + 1 < len(steps))
+            out = self._stage(p, step, tail)
+            if out is None:
+                # the single-task fallback emits results in document
+                # order → trustworthy as a table arg
+                return self._doc_fallback(p.df, steps[i:], p.order,
+                                          scalar=p.scalar), True
+            if out.order is None and not _keeps_scan_order(step):
+                # a reordering stage ran with no carried order: the
+                # physical order is now shuffle-arbitrary, so the
+                # scan-order surrogate is off the table downstream
+                out = dataclasses.replace(out, scan_ok=False)
+            p = out
+        # physical row order is the document order iff an order is
+        # carried (carried ⇒ physically materialized, see _keyed_input)
+        # or the scan-order surrogate is still valid
+        hidden = [c for c in p.df.columns if c.startswith("__ord")]
+        return (p.df.drop(*hidden) if hidden else p.df,
+                p.order is not None or p.scan_ok)
 
-    def _stage(self, df: DataFrame, step: A.Node) -> DataFrame | None:
-        env = self._row_env(df)
-        order, self._order = self._order, None  # stages opt back in
+    def _stage(self, p: Pipe, step: A.Node, tail: Tail) -> Pipe | None:
+        env = self._row_env(p.df)
         if isinstance(step, A.InlineFilter):
-            self._order = order
-            return df.filter(self.c.compile_cond(step.pred, env))
+            return p.then(p.df.filter(self.c.compile_cond(step.pred, env)),
+                          p.order)
         if isinstance(step, A.MapShape):
+            df = p.df
             if step.pred is not None:
                 df = df.filter(self.c.compile_cond(step.pred, env))
                 env = self._row_env(df)
-            return self._select_carry(df, step.shape, env, order)
+            return self._select_carry(p.then(df, p.order), step.shape, env)
         if isinstance(step, A.Index):
             try:
                 i = _lit_int(step.expr)
             except CompileError:
                 return None
-            return self._at(df, order, i)
+            return self._at(p, tail.q, i)
         if isinstance(step, A.Slice):
             a = step.start or 0
             if a < 0 or (step.stop is not None and step.stop < a):
                 return None
             return self._positional(
-                df, order, None if step.stop is None else step.stop - a, a)
+                p, tail.q, None if step.stop is None else step.stop - a, a)
         if isinstance(step, A.Quantifier):
-            self._order = order
-            return df  # `?` null-safe is free; `!` asserted at action time
+            return p  # `?` null-safe is free; `!` asserted at action time
         stage = _stage_entry(step)
         if stage is None:
             return None
         if stage.hungry:
-            df, order = self._maybe_scan_order(df, order)
-        return stage.lower(self, df, step.args, env, order)
+            p = self._maybe_scan_order(p, tail.q)
+        return stage.lower(self, p, step.args, env, tail)
 
-    def _maybe_scan_order(self, df: DataFrame, order: list | None):
+    def _maybe_scan_order(self, p: Pipe, q: Query) -> Pipe:
         """Hand an order-dependent stage the SCAN-ORDER surrogate when
         no order is carried but the physical row order still is the
         document order (r8): a partition-prefixed monotonic id sorts to
@@ -1167,18 +1171,17 @@ class JetroTables:
         so `$.t.take_while(...)`, `.reverse()`, `.pairwise()` etc. on an
         unsorted table lower instead of collapsing to one task. Unique
         hidden name per use (Column refs resolve by name)."""
-        if order is not None or not self._scan_ok:
-            return df, order
-        self._sort_seq += 1
-        sid = f"__ord_sc{self._sort_seq}"
-        return (df.withColumn(sid, F.monotonically_increasing_id()),
-                [(F.col(sid), False)])
+        if p.order is not None or not p.scan_ok:
+            return p
+        sid = f"__ord_sc{q.fresh()}"
+        return p.then(p.df.withColumn(sid, F.monotonically_increasing_id()),
+                      [(F.col(sid), False)])
 
-    def _ordered_prefix(self, df: DataFrame, order: list,
+    def _ordered_prefix(self, df: DataFrame, order: list, q: Query,
                         n: int | None, offset: int = 0) -> DataFrame:
         """``offset``/``limit`` as a row_number window filter — NO
-        GlobalLimit node. Used for positional sinks when the pipeline
-        contains a Union (``self._has_union``): Spark 4.1's AQE
+        GlobalLimit node. Used for positional sinks when the query
+        contains a Union (``Query.has_union``): Spark 4.1's AQE
         re-optimization can DROP a Sort+GlobalLimit directly above a
         Union after one branch materializes empty (the r12 soak catch;
         minimal engine repro pinned in
@@ -1189,8 +1192,7 @@ class JetroTables:
         limit (and its whole-stage-codegen TakeOrderedAndProject) is
         kept."""
         w = Window.orderBy(*_order_by(order))
-        self._sort_seq += 1
-        rn = f"__pfx{self._sort_seq}"
+        rn = f"__pfx{q.fresh()}"
         keep = (F.col(rn) > offset) if n is None else (
             (F.col(rn) > offset) & (F.col(rn) <= offset + n))
         return (df.withColumn(rn, F.row_number().over(w))
@@ -1212,49 +1214,47 @@ class JetroTables:
         return (df.select(*cols, *keys),
                 [(F.col(f"__ord{i}"), d) for i, (_c, d) in enumerate(order)])
 
-    def _select_carry(self, df: DataFrame, body: A.Node, env: Env,
-                      order: list | None) -> DataFrame:
+    def _select_carry(self, p: Pipe, body: A.Node, env: Env) -> Pipe:
         """_select_body, but when a sort order is live the sort keys ride
         along as hidden ``__ord{i}`` columns (stripped at pipeline end) so
         a later window builtin can still order by them after the
         projection dropped the original key columns. Body fields and
         keys come from ONE projection of the input frame: every chained
         select/drop/rename is an eager JVM analysis."""
-        if not order:
-            return self._select_body(df, body, env)
+        if not p.order:
+            df, scalar = self._select_body(p.df, body, env)
+            return p.then(df, scalar=scalar)
         # the CALLER's env: rebuilding it dropped any lambda-param binding
         # (`map(x => ...)` under a live sort compiled x.* to the
         # missing-field null — r8 fuzz catch)
         tc = self.c.compile(body, env)
-        if isinstance(tc.dtype, T.StructType):
-            self._scalar = False
+        scalar = not isinstance(tc.dtype, T.StructType)
+        if not scalar:
             cols = [tc.col.getField(f.name).alias(f.name)
                     for f in tc.dtype.fields]
         else:
-            self._scalar = True
             cols = [tc.col.alias(self._scalar_name(body))]
-        out, self._order = self._rematerialize_order(df, order, cols)
-        return out
+        df, order = self._rematerialize_order(p.df, p.order, cols)
+        return p.then(df, order, scalar)
 
     # ------------------------------------------------- stage arguments
 
-    def _lam(self, node: A.Node, df: DataFrame, env: Env):
+    def _lam(self, node: A.Node, p: Pipe, env: Env):
         """(body, env) to compile a stage argument in. A one-param
         lambda binds its param to the element, as in doc mode: the BARE
         column of a scalar pipeline (after map(v), `x => x * 2` sees the
         element), else the row struct (see _element)."""
         if isinstance(node, A.Lambda):
             return node.body, env.bind(node.params[0],
-                                       _element(df, self._scalar))
+                                       _element(p.df, p.scalar))
         return node, env
 
-    def _pred(self, node: A.Node, df: DataFrame, env: Env) -> Column:
+    def _pred(self, node: A.Node, p: Pipe, env: Env) -> Column:
         # condition context: bare comparisons push down to parquet and
         # keep join keys extractable (see Compiler.compile_cond)
-        return self.c.compile_cond(*self._lam(node, df, env))
+        return self.c.compile_cond(*self._lam(node, p, env))
 
-    def _key(self, node: A.Node, df: DataFrame,
-             env: Env) -> tuple[TC, bool]:
+    def _key(self, node: A.Node, p: Pipe, env: Env) -> tuple[TC, bool]:
         """A key argument and whether it sorts descending. A direct
         `-key` is the documented DESCENDING syntax (purely syntactic —
         works on any key type); a LAMBDA body is evaluated per element,
@@ -1263,21 +1263,21 @@ class JetroTables:
         desc = isinstance(node, A.Neg)
         if desc:
             node = node.expr
-        return self.c.compile(*self._lam(node, df, env)), desc
+        return self.c.compile(*self._lam(node, p, env)), desc
 
-    def _key_str(self, node: A.Node, df: DataFrame, env: Env) -> Column:
+    def _key_str(self, node: A.Node, p: Pipe, env: Env) -> Column:
         """Keyed-reducer key → the reference's canonical key STRING
         (val_to_key): integral doubles render without the trailing .0 —
         matches the doc-mode _key_lam wrapping."""
-        tc, _desc = self._key(node, df, env)
+        tc, _desc = self._key(node, p, env)
         return _canon_key(tc.col, tc.dtype)
 
     # -------------------------------------------- shared stage shapes
 
-    def _positional(self, df: DataFrame, order: list | None,
-                    n: int | None, offset: int | None = None, *,
-                    pad: bool = False, from_end: bool = False,
-                    guard: bool = True) -> DataFrame | None:
+    def _positional(self, p: Pipe, q: Query, n: int | None,
+                    offset: int | None = None, *, pad: bool = False,
+                    from_end: bool = False,
+                    guard: bool = True) -> Pipe | None:
         """Rows ``[offset, offset + n)`` of the pipeline order (``n``
         None: to the end), counted from the back when ``from_end``.
         ``pad``: the scalar form — one element, the reference's Null
@@ -1285,48 +1285,49 @@ class JetroTables:
         there is none, as one all-null row (_pad_single_null).
 
         The plain shape is ``offset``/``limit``, over an inverted sort
-        from the back. A Union upstream (``_has_union``) takes the
+        from the back. A Union in the query (``q.has_union``) takes the
         row_number window filter instead (see _ordered_prefix). The
         physical prefix is the document prefix only while an order is
         carried or the scan order still holds (r10): with ``guard``,
         anything else is None — the warned doc fallback."""
-        if guard and order is None and not self._scan_ok:
+        if guard and p.order is None and not p.scan_ok:
             return None
-        self._order = order
+        s = p
         if from_end:
-            order = [(c, not d) for c, d in order]
-        if self._has_union:
-            df, order = self._maybe_scan_order(df, order)
-        if self._has_union and order is not None:
-            out = self._ordered_prefix(df, order, n, offset or 0)
+            s = p.then(p.df, [(c, not d) for c, d in p.order])
+        if q.has_union:
+            s = self._maybe_scan_order(s, q)
+        df, order = s.df, s.order
+        if q.has_union and order is not None:
+            out = self._ordered_prefix(df, order, q, n, offset or 0)
         else:
             if from_end:
                 df = df.orderBy(*_order_by(order))
             if offset is not None:
                 df = df.offset(offset)
             out = df if n is None else df.limit(n)
-        return self._pad_single_null(out) if pad else out
+        return p.then(self._pad_single_null(out) if pad else out, p.order)
 
-    def _at(self, df: DataFrame, order: list | None,
-            i: int) -> DataFrame | None:
+    def _at(self, p: Pipe, q: Query, i: int) -> Pipe | None:
         """Element ``i`` of the pipeline order (``[i]``, ``nth``);
         negative counts from the back, off the scan-order surrogate when
         unsorted (r8). Out of bounds is Null (value.rs get_index)."""
         if i >= 0:
-            return self._positional(df, order, 1, i, pad=True)
-        df, order = self._maybe_scan_order(df, order)
-        if order is None:
+            return self._positional(p, q, 1, i, pad=True)
+        p = self._maybe_scan_order(p, q)
+        if p.order is None:
             return None
-        return self._positional(df, order, 1, -i - 1, pad=True,
-                                from_end=True)
+        return self._positional(p, q, 1, -i - 1, pad=True, from_end=True)
 
-    def _reorder(self, out: DataFrame, order: list | None) -> DataFrame:
+    @staticmethod
+    def _reorder(p: Pipe, out: DataFrame, order: list | None) -> Pipe:
         """Carry ``order`` and re-sort by it: the stage's shuffle
         destroyed the physical pipeline order position sinks rely on."""
-        self._order = order
-        return out if order is None else out.orderBy(*_order_by(order))
+        return p.then(out if order is None
+                      else out.orderBy(*_order_by(order)), order)
 
-    def _keyed_input(self, df: DataFrame, tag: str | None = None):
+    @staticmethod
+    def _keyed_input(df: DataFrame, tail: Tail, tag: str | None = None):
         """``(df, go, eo)`` for an ordered keyed collect: ``df`` tagged
         with a fresh doc-order surrogate ``go`` — valid because the
         stage's input order was vetted (carried ⇒ physically
@@ -1336,32 +1337,31 @@ class JetroTables:
         column when a later stage reads order (doc keyed results are
         insertion-ordered IndexMaps; r10), else None — see
         _emit_sorted."""
-        self._sort_seq += 1
-        go = f"__ord_go{self._sort_seq}"
-        eo = (f"__ord_{tag}{self._sort_seq}"
-              if tag and self._tail_reads_order else None)
+        n = tail.q.fresh()
+        go = f"__ord_go{n}"
+        eo = f"__ord_{tag}{n}" if tag and tail.reads_order else None
         return df.withColumn(go, F.monotonically_increasing_id()), go, eo
 
-    def _emit_sorted(self, out: DataFrame, eo: str | None) -> DataFrame:
+    @staticmethod
+    def _emit_sorted(p: Pipe, out: DataFrame, eo: str | None) -> Pipe:
         if eo is None:
-            return out
-        self._order = [(F.col(eo), False)]
-        return out.orderBy(F.col(eo).asc())
+            return p.then(out)
+        return p.then(out.orderBy(F.col(eo).asc()), [(F.col(eo), False)])
 
     # ------------------------------------------------ stage lowerings
-    # Each lowers one builtin: (df, args, env, order) → its frame, or
-    # None for the doc fallback. STAGES (end of module) maps builtin
-    # names to them with their order traits.
+    # Each lowers one builtin: (pipe, args, env, tail) → the outgoing
+    # pipe, or None for the doc fallback. STAGES (end of module) maps
+    # builtin names to them with their order traits.
 
-    def _filter(self, df, args, env, order):
-        self._order = order
-        return df.filter(self._pred(args[0].value, df, env))
+    def _filter(self, p, args, env, tail):
+        return p.then(p.df.filter(self._pred(args[0].value, p, env)),
+                      p.order)
 
-    def _map(self, df, args, env, order):
-        return self._select_carry(df, *self._lam(args[0].value, df, env),
-                                  order)
+    def _map(self, p, args, env, tail):
+        return self._select_carry(p, *self._lam(args[0].value, p, env))
 
-    def _sort(self, df, args, env, order):
+    def _sort(self, p, args, env, tail):
+        df, order = p.df, p.order
         if not args:
             keys = [(F.col(x), False) for x in _vis_cols(df)]
         elif (len(args) == 1 and isinstance(args[0].value, A.Lambda)
@@ -1370,11 +1370,11 @@ class JetroTables:
             # shapes lower to a natural sort over the element (struct
             # ordering = field-order lexicographic, same as doc mode's
             # whole-element compare); see _sort_args
-            keys = [(_element(df, self._scalar).col,
+            keys = [(_element(df, p.scalar).col,
                      comparator_desc(args[0].value))]
         else:
             keys = [(tc.col, desc) for tc, desc in
-                    (self._key(a.value, df, env) for a in args)]
+                    (self._key(a.value, p, env) for a in args)]
         # null keys sort FIRST both directions (doc-mode convention;
         # the reference's null-equal comparator is non-transitive
         # and unimplementable as a distributed total order) — as an
@@ -1397,73 +1397,70 @@ class JetroTables:
             # monotonic id numbers shuffle-arbitrary rows and ties
             # diverge from doc mode's deterministic pipeline order
             # (r9 advice catch) → warned doc fallback instead
-            df, scan = self._maybe_scan_order(df, None)
-            if scan is None:
+            scan = self._maybe_scan_order(p, tail.q)
+            if scan.order is None:
                 return None
-            keys = keys + list(scan)
-        self._order = keys
-        return df.orderBy(*_order_by(keys))
+            df, keys = scan.df, keys + list(scan.order)
+        return p.then(df.orderBy(*_order_by(keys)), keys)
 
-    def _take(self, df, args, env, order):
-        return self._positional(df, order, _lit_int(args[0].value))
+    def _take(self, p, args, env, tail):
+        return self._positional(p, tail.q, _lit_int(args[0].value))
 
-    def _skip(self, df, args, env, order):
-        return self._positional(df, order, None, _lit_int(args[0].value))
+    def _skip(self, p, args, env, tail):
+        return self._positional(p, tail.q, None, _lit_int(args[0].value))
 
-    def _first(self, df, args, env, order):
+    def _first(self, p, args, env, tail):
         # n == 1 is the scalar form (collection.rs first_apply unwraps
         # to the element, Null when empty)
         k = _opt_int(args, 1)
-        return self._positional(df, order, k, pad=k == 1)
+        return self._positional(p, tail.q, k, pad=k == 1)
 
-    def _last(self, df, args, env, order):
+    def _last(self, p, args, env, tail):
         # reverse-sort + limit (logical stage Last, jc/ir/logical.rs:
         # 16-57): needs the pipeline's order; unordered → doc fallback
         k = _opt_int(args, 1)
-        if order is None or k < 0:
+        if p.order is None or k < 0:
             return None
-        out = self._positional(df, order, k, pad=k == 1, from_end=True)
+        out = self._positional(p, tail.q, k, pad=k == 1, from_end=True)
         # last(n>=2) keeps the ORIGINAL pipeline order (doc mode
         # slices the tail; the inverted pick alone emitted the rows
         # reversed — r11 probe catch): re-sort the n survivors
-        return out if k == 1 else out.orderBy(*_order_by(order))
+        return out if k == 1 else self._reorder(p, out.df, p.order)
 
-    def _nth(self, df, args, env, order):
-        return self._at(df, order, _lit_int(args[0].value))
+    def _nth(self, p, args, env, tail):
+        return self._at(p, tail.q, _lit_int(args[0].value))
 
-    def _enumerate(self, df, args, env, order):
+    def _enumerate(self, p, args, env, tail):
         # → rows of {index, value} over the pipeline order
         # (ops/collection.rs:409). Dense global indexing is an
         # inherently single-sequence operation (same class as
         # take_while's running sum); unordered tables fall back.
-        if order is None:
+        if p.order is None:
             return None
-        w = Window.orderBy(*_order_by(order))
-        hid = _hidden_cols(df)
+        df = p.df
+        w = Window.orderBy(*_order_by(p.order))
         # scalar pipelines keep the bare element as `value` (doc-mode
         # semantics: value IS the element); only object rows wrap
         out = df.select(
             (F.row_number().over(w) - 1).cast("long").alias("index"),
-            _element(df).col.alias("value"), *hid)
-        self._order = [(F.col("index"), False)]
-        return out
+            _element(df).col.alias("value"), *_hidden_cols(df))
+        return p.then(out, [(F.col("index"), False)])
 
-    def _chunk(self, df, args, env, order):
+    def _chunk(self, p, args, env, tail):
         # groups of n consecutive rows → one row per chunk holding
         # the group as an array (ops/collection.rs chunk). The
         # per-chunk collect_list is bounded by the user's n — unlike
         # group_collect there is no unbounded-group OOM surface.
-        if order is None or not args:
+        if p.order is None or not args:
             return None
-        self._scalar = True
         n = _lit_int(args[0].value)
         if n <= 0:
             raise CompileError("chunk size must be positive")
-        w = Window.orderBy(*_order_by(order))
-        elem = _element(df)
+        w = Window.orderBy(*_order_by(p.order))
+        elem = _element(p.df)
         rn = F.row_number().over(w) - 1
-        d2 = df.select((F.floor(rn / F.lit(n))).alias("__chunk"),
-                       rn.alias("__rn"), elem.col.alias("__e"))
+        d2 = p.df.select((F.floor(rn / F.lit(n))).alias("__chunk"),
+                         rn.alias("__rn"), elem.col.alias("__e"))
         out = (d2.groupBy(F.col("__chunk").alias("__ord0"))
                .agg(F.transform(
                    R.sort_by_field(
@@ -1472,18 +1469,17 @@ class JetroTables:
                    lambda s: s["__e"]).alias("value"))
                .select("value", "__ord0")
                .orderBy("__ord0"))
-        self._order = [(F.col("__ord0"), False)]  # chunk sequence order
-        return out
+        # carries the chunk sequence order
+        return p.then(out, [(F.col("__ord0"), False)], scalar=True)
 
-    def _pairwise(self, df, args, env, order):
+    def _pairwise(self, p, args, env, tail):
         # overlapping [prev, cur] pairs over the pipeline order
         # (ops/collection.rs:556): lag window, first row dropped.
         # Order keys ride along as __ord columns (the _select_carry
         # convention) since the projection replaces the data columns.
-        if order is None:
+        if p.order is None:
             return None
-        self._scalar = True
-        df, order = self._rematerialize_order(df, order)
+        df, order = self._rematerialize_order(p.df, p.order)
         w = Window.orderBy(*_order_by(order))
         extras = [F.col(f"__ord{i}") for i in range(len(order))]
         cur = _element(df).col
@@ -1491,49 +1487,45 @@ class JetroTables:
                          cur.alias("__cur"), *extras)
                .filter(F.col("__prev").isNotNull())
                .select(F.array("__prev", "__cur").alias("value"), *extras))
-        self._order = order
-        return out
+        return p.then(out, order, scalar=True)
 
-    def _reverse(self, df, args, env, order):
-        if order is None:
+    def _reverse(self, p, args, env, tail):
+        if p.order is None:
             return None
-        flipped = [(c2, not d) for c2, d in order]
-        self._order = flipped
-        return df.orderBy(*_order_by(flipped))
+        return self._reorder(p, p.df, [(c2, not d) for c2, d in p.order])
 
-    def _while(self, df, args, env, order, *, take: bool):
+    def _while(self, p, args, env, tail, *, take: bool):
         # longest truthy prefix over the pipeline order: cumulative
         # failure count (window min over !pred per the logical stages
         # TakeWhile/DropWhile, jc/ir/logical.rs:16-57). The
         # un-partitioned running sum is single-sequence by semantics.
-        if order is None:
+        if p.order is None:
             return None
-        w = (Window.orderBy(*_order_by(order))
+        w = (Window.orderBy(*_order_by(p.order))
              .rowsBetween(Window.unboundedPreceding, 0))
-        ok = self._pred(args[0].value, df, env)
+        ok = self._pred(args[0].value, p, env)
         fail = F.when(F.coalesce(ok, F.lit(False)), F.lit(0)).otherwise(F.lit(1))
         cum = F.sum(fail).over(w)
         keep = cum == 0 if take else cum >= 1
-        self._order = order
-        return (df.withColumn("__tw", keep)
-                .filter(F.col("__tw")).drop("__tw"))
+        return p.then(p.df.withColumn("__tw", keep)
+                      .filter(F.col("__tw")).drop("__tw"), p.order)
 
-    def _flat_map(self, df, args, env, order):
-        body, env2 = self._lam(args[0].value, df, env)
+    def _flat_map(self, p, args, env, tail):
+        body, env2 = self._lam(args[0].value, p, env)
         tc = self.c.compile(body, env2)
         if not isinstance(tc.dtype, T.ArrayType):
             raise CompileError("flat_map body must produce an array")
         el = tc.dtype.elementType
-        out = df.select(F.explode(tc.col).alias("__e"))
+        out = p.df.select(F.explode(tc.col).alias("__e"))
         if isinstance(el, T.StructType):
-            self._scalar = False
-            return out.select("__e.*")
-        self._scalar = True
-        return out.select(F.col("__e").alias(self._scalar_name(body)))
+            return p.then(out.select("__e.*"), scalar=False)
+        return p.then(out.select(F.col("__e").alias(self._scalar_name(body))),
+                      scalar=True)
 
-    def _unique(self, df, args, env, order):
+    def _unique(self, p, args, env, tail):
+        df, order = p.df, p.order
         vis0 = _vis_cols(df)
-        if self._scalar and len(vis0) == 1 and isinstance(
+        if p.scalar and len(vis0) == 1 and isinstance(
                 df.schema[vis0[0]].dataType,
                 (T.StringType, T.NullType, T.VariantType)):
             # scalar STRING rows key via val_to_key, where a NULL
@@ -1553,11 +1545,10 @@ class JetroTables:
         # the r8 surrogate this also fixes `$.t.unique().first()` on
         # unsorted tables: distinct()'s shuffle order is arbitrary,
         # first-seen order is not)
-        self._order = order
-        return out
+        return p.then(out, order)
 
-    def _unique_by(self, df, args, env, order):
-        ktc, _desc = self._key(args[0].value, df, env)
+    def _unique_by(self, p, args, env, tail):
+        ktc, _desc = self._key(args[0].value, p, env)
         col = ktc.col
         if _family(ktc.dtype) in ("string", "null", "variant"):
             # key values key via val_to_key: null renders "null"
@@ -1568,24 +1559,23 @@ class JetroTables:
         # order position sinks rely on — restore it (winner rows
         # keep their __ord columns); winner choice itself already
         # follows pipeline order via the doc-order surrogate
-        return self._reorder(R.unique_by(df, col), order)
+        return self._reorder(p, R.unique_by(p.df, col), p.order)
 
-    def _count(self, df, args, env, order):
-        self._scalar = True
+    def _count(self, p, args, env, tail):
+        n = F.count(F.lit(1))
         if args:
-            return df.agg(F.count_if(
-                self._pred(args[0].value, df, env)).alias("value"))
-        return df.agg(F.count(F.lit(1)).alias("value"))
+            n = F.count_if(self._pred(args[0].value, p, env))
+        return p.then(p.df.agg(n.alias("value")), scalar=True)
 
-    def _len(self, df, args, env, order):
-        self._scalar = True
-        return df.agg(F.count(F.lit(1)).alias("value"))
+    def _len(self, p, args, env, tail):
+        return p.then(p.df.agg(F.count(F.lit(1)).alias("value")),
+                      scalar=True)
 
-    def _numeric(self, df, args, env, order, *, agg, empty_zero: bool):
+    def _numeric(self, p, args, env, tail, *, agg, empty_zero: bool):
         """sum/avg/min/max; ``empty_zero``: no number observed is 0.0
         (sum), else Null."""
-        objects = not args and not self._scalar
-        self._scalar = True
+        df = p.df
+        objects = not args and not p.scalar
         col = cdt = None
         if args:
             vt = self.c.compile(args[0].value, env)
@@ -1602,24 +1592,25 @@ class JetroTables:
         if objects or _skips_numeric_fold(cdt):
             base = F.first(F.lit(None).cast("double"))
             none = F.coalesce(base, F.lit(0.0)) if empty_zero else base
-            return df.limit(0).agg(none.alias("value"))
-        return df.agg(agg(col).alias("value"))
+            return p.then(df.limit(0).agg(none.alias("value")), scalar=True)
+        return p.then(df.agg(agg(col).alias("value")), scalar=True)
 
-    def _quantify(self, df, args, env, order, *, agg, empty: bool):
-        self._scalar = True
-        return df.agg(F.coalesce(agg(self._pred(args[0].value, df, env)),
-                                 F.lit(empty)).alias("value"))
+    def _quantify(self, p, args, env, tail, *, agg, empty: bool):
+        ok = self._pred(args[0].value, p, env)
+        return p.then(p.df.agg(F.coalesce(agg(ok), F.lit(empty))
+                               .alias("value")), scalar=True)
 
-    def _approx_count_distinct(self, df, args, env, order):
-        self._scalar = True
+    def _approx_count_distinct(self, p, args, env, tail):
         col = (self.c.compile(args[0].value, env).col if args
-               else F.struct(*df.columns))
-        return df.agg(F.approx_count_distinct(col).alias("value"))
+               else F.struct(*p.df.columns))
+        return p.then(p.df.agg(F.approx_count_distinct(col).alias("value")),
+                      scalar=True)
 
-    def _extreme_by(self, df, args, env, order, *, desc: bool):
+    def _extreme_by(self, p, args, env, tail, *, desc: bool):
         # empty pipeline → scalar Null (extreme_by_apply), padded
         # as one all-null row like first/last/nth (r7 soak catch)
-        col = self._key(args[0].value, df, env)[0].col
+        df, order = p.df, p.order
+        col = self._key(args[0].value, p, env)[0].col
         # strict-improvement fold semantics (array.rs:341-375):
         # null keys compare Equal (cmp_vals, util.rs:133) so they
         # never IMPROVE — nulls sort LAST here, winning only when
@@ -1631,22 +1622,22 @@ class JetroTables:
         # is the secondary key.
         o = col.desc_nulls_last() if desc else col.asc_nulls_last()
         if not order:
-            # same _scan_ok gate as the order-hungry stages: after
+            # same scan_ok gate as the order-hungry stages: after
             # an order-destroying stage the monotonic-id surrogate
             # numbers shuffle-arbitrary rows, so a tie here would
             # diverge from doc mode's first-in-pipeline-order winner
             # (r9 advice catch) → warned doc fallback
-            df, order = self._maybe_scan_order(df, None)
-            if order is None:
+            scan = self._maybe_scan_order(p, tail.q)
+            if scan.order is None:
                 return None
+            df, order = scan.df, scan.order
         sec = _order_by(order)
-        if self._has_union:
+        if tail.q.has_union:
             # a Union upstream: the orderBy+limit(1) picks are the
             # Sort+GlobalLimit-above-Union shape Spark 4.1's AQE
             # can drop (see _ordered_prefix) — window-rank instead
             def _pick1(*keys):
-                self._sort_seq += 1
-                rn = f"__pfx{self._sort_seq}"
+                rn = f"__pfx{tail.q.fresh()}"
                 return (df.withColumn(
                     rn, F.row_number().over(Window.orderBy(*keys)))
                     .filter(F.col(rn) == 1).drop(rn))
@@ -1661,7 +1652,7 @@ class JetroTables:
         # expression non-null, the override can never fire — skip
         # the second TakeOrdered subplan and the union outright
         if not df.select(col.alias("__xb_k")).schema["__xb_k"].nullable:
-            return self._pad_single_null(extreme)
+            return p.then(self._pad_single_null(extreme))
         first_null = (pick_first()
                       .filter(col.isNull())
                       .withColumn("__xb_pri", F.lit(0)))
@@ -1676,57 +1667,52 @@ class JetroTables:
         w = unioned.agg(F.min_by(
             F.struct(*[F.col(c2) for c2 in fields]),
             F.col("__xb_pri")).alias("__w"))
-        return w.select(*[F.col("__w").getField(c2).alias(c2)
-                          for c2 in fields])
+        return p.then(w.select(*[F.col("__w").getField(c2).alias(c2)
+                                 for c2 in fields]))
 
-    def _group_by(self, df, args, env, order):
+    def _group_by(self, p, args, env, tail):
         # doc group_by keys an IndexMap: its KEY order (first-seen) is
         # doc-observable when navigation follows (.keys(), field
         # access, positional stages) — restored like implode's group
         # order (r10 soak catch: .group_by(g).keys() collected groups
         # in shuffle-arrival order)
-        if order is None:
+        if p.order is None:
             return None   # order-broken pipeline → warned fallback
-        d2, go, eo = self._keyed_input(df, "gb")
-        return self._emit_sorted(R.group_collect(
-            d2, self._key_str(args[0].value, df, env), order=go,
-            payload_cols=_vis_cols(df), emit_order=eo), eo)
+        d2, go, eo = self._keyed_input(p.df, tail, "gb")
+        return self._emit_sorted(p, R.group_collect(
+            d2, self._key_str(args[0].value, p, env), order=go,
+            payload_cols=_vis_cols(p.df), emit_order=eo), eo)
 
-    def _count_by(self, df, args, env, order):
+    def _count_by(self, p, args, env, tail):
         # first-seen key order is doc-observable downstream, same
         # as group_by (r10); count_by is not order-hungry, so mint
         # the scan surrogate only when a tail actually reads order
-        if not self._tail_reads_order:
-            return R.count_by(df, self._key_str(args[0].value, df, env))
-        df, order = self._maybe_scan_order(df, order)
-        if order is None:
+        if not tail.reads_order:
+            return p.then(R.count_by(p.df,
+                                     self._key_str(args[0].value, p, env)))
+        p = self._maybe_scan_order(p, tail.q)
+        if p.order is None:
             return None   # key order unrecoverable → fallback
-        d2, go, eo = self._keyed_input(df, "cb")
-        return self._emit_sorted(R.count_by(
-            d2, self._key_str(args[0].value, df, env), order=go,
+        d2, go, eo = self._keyed_input(p.df, tail, "cb")
+        return self._emit_sorted(p, R.count_by(
+            d2, self._key_str(args[0].value, p, env), order=go,
             emit_order=eo), eo)
 
-    def _index_by(self, df, args, env, order):
-        if order is None:
+    def _index_by(self, p, args, env, tail):
+        if p.order is None:
             return None
-        d2, go, eo = self._keyed_input(df, "ib")
-        return self._emit_sorted(R.index_by(
-            d2, self._key_str(args[0].value, df, env), order=go,
-            payload_cols=_vis_cols(df), emit_order=eo), eo)
+        d2, go, eo = self._keyed_input(p.df, tail, "ib")
+        return self._emit_sorted(p, R.index_by(
+            d2, self._key_str(args[0].value, p, env), order=go,
+            payload_cols=_vis_cols(p.df), emit_order=eo), eo)
 
-    def _equi_join(self, df, args, env, order):
-        # read the hint BEFORE resolving the table arg: a
-        # sub-pipeline arg ($.u.filter(...)) re-enters _pipeline
-        # and would clobber the lookahead with ITS tail
-        tail_reads = self._tail_reads_order
-        self._pipe_end_ordered = True
-        other = self._resolve_table(args[0].value)
-        if other is None:
+    def _equi_join(self, p, args, env, tail):
+        arg = self._resolve_table(args[0].value, tail.q)
+        if arg is None:
             return None
-        # is the resolved table's physical order its doc order?
-        # (set by _pipeline for sub-pipeline args; a plain table
-        # scan runs an empty pipeline → True)
-        rt_ok = self._pipe_end_ordered
+        # rt_ok: is the resolved table's physical order its doc order?
+        other, rt_ok = arg
+        df, order = p.df, p.order
         lk, rk = _lit_str(args[1].value), _lit_str(args[2].value)
         # a MISSING key field is a per-row None lookup in doc mode
         # (equi_join_apply: o.get → None skips the row), so the
@@ -1757,7 +1743,7 @@ class JetroTables:
         # position) — the receiver sort below carries the first
         # component, the rid surrogate the second. When
         # no order is carried, mint the scan-order surrogate (r9) —
-        # previously the join went out unordered, _scan_ok flipped
+        # previously the join went out unordered, scan_ok flipped
         # off, and every order-dependent downstream stage (or a
         # min_by tie) doc-fell-back or silently diverged. Skip the
         # sort when NO remaining stage reads order (lookahead in
@@ -1765,8 +1751,9 @@ class JetroTables:
         # order, and a post-join .map/.filter/.count_by chain must
         # not pay a full sort it never observes (r9 bench catch:
         # jql_equi_join +104% under the last-stage-only hint).
-        if order is None and tail_reads:
-            df, order = self._maybe_scan_order(df, order)
+        if order is None and tail.reads_order:
+            scan = self._maybe_scan_order(p.then(df), tail.q)
+            df, order = scan.df, scan.order
         if order is not None:
             # materialize the carried order into hidden columns
             # BEFORE the merge: the right-wins column overwrite
@@ -1793,48 +1780,47 @@ class JetroTables:
             # stage reads order (as before r9), else keep the
             # receiver-only sort — the ties are unobservable.
             if not rt_ok:
-                if tail_reads:
+                if tail.reads_order:
                     return None
                 return self._reorder(
-                    R.equi_join(df, other, lk, rk, **key_kw), order)
-            self._sort_seq += 1
-            rid = f"__ord_rt{self._sort_seq}"
+                    p, R.equi_join(df, other, lk, rk, **key_kw), order)
+            rid = f"__ord_rt{tail.q.fresh()}"
             other = other.withColumn(rid, F.monotonically_increasing_id())
             out_order = order + [(F.col(rid), False)]
         # restore the pipeline order the join shuffle destroyed so
         # position sinks downstream stay faithful
-        return self._reorder(R.equi_join(df, other, lk, rk, **key_kw),
+        return self._reorder(p, R.equi_join(df, other, lk, rk, **key_kw),
                              out_order)
 
-    def _explode(self, df, args, env, order):
-        return R.explode_field(df, _name_str(args[0].value))
+    def _explode(self, p, args, env, tail):
+        return p.then(R.explode_field(p.df, _name_str(args[0].value)))
 
-    def _implode(self, df, args, env, order):
+    def _implode(self, p, args, env, tail):
         # implode's OUTPUT ROW ORDER is doc-observable too: groups
         # appear in first-occurrence order, and a downstream
         # positional stage reads it (r9 fuzz catch: implode(v)
         # .first() returned a shuffle-arbitrary group). Restore it
         # via min(doc-order) per group — skipped when the tail is
         # order-blind, like equi_join's receiver-order sort.
-        if order is None:
+        if p.order is None:
             return None
         fld = _name_str(args[0].value)
-        d2, go, eo = self._keyed_input(df, "imp")
-        return self._emit_sorted(R.implode(
-            d2, fld, group_cols=[c2 for c2 in _vis_cols(df) if c2 != fld],
+        d2, go, eo = self._keyed_input(p.df, tail, "imp")
+        return self._emit_sorted(p, R.implode(
+            d2, fld, group_cols=[c2 for c2 in _vis_cols(p.df) if c2 != fld],
             order=go, emit_order=eo), eo)
 
-    def _pivot(self, df, args, env, order):
+    def _pivot(self, p, args, env, tail):
         # pivot keys stringify via val_to_key like every other keyed
         # reducer (pivot_apply keys an IndexMap) — rendered canonically
         # before the relational pivot
-        if self._has_tail and len(args) == 3:
+        if tail.more and len(args) == 3:
             # the 3-arg grid's nested-object navigation has no
             # row-shaped relational form — collapse to doc mode
             return None
-        if order is None:
+        if p.order is None:
             return None   # last-wins / first-per-cell read order
-        d2, go, _eo = self._keyed_input(df)
+        d2, go, _eo = self._keyed_input(p.df, tail)
         names = [_name_str(a.value) for a in args]
         # a MISSING field arg is a per-row Null in doc mode (key →
         # "null" bucket, value → null cell) — synthesize a typed
@@ -1846,7 +1832,7 @@ class JetroTables:
                 d2 = d2.withColumn(nm, F.lit(None).cast("string"))
         if len(args) == 2:
             kn, vn = names
-            if self._has_tail:
+            if tail.more:
                 # NAVIGATION follows: emit the ordered-object ROW
                 # form (objrepr, the count_by/group_by convention)
                 # instead of the one-map row — a following stage
@@ -1857,29 +1843,29 @@ class JetroTables:
                 # the whole table through one task; this way the
                 # pivot aggregates relationally and only |keys|
                 # rows reach any downstream fallback.
-                self._sort_seq += 1
-                eo = f"__ord_pv{self._sort_seq}"
-                return self._emit_sorted(R.pivot2_rows(
+                eo = f"__ord_pv{tail.q.fresh()}"
+                return self._emit_sorted(p, R.pivot2_rows(
                     _canon_cols(d2, kn), kn, vn, order=go,
                     emit_order=eo), eo)
-            return R.pivot2(_canon_cols(d2, kn), kn, vn, order=go)
+            return p.then(R.pivot2(_canon_cols(d2, kn), kn, vn, order=go))
         rn2, cn, vn = names
-        return R.pivot3(_canon_cols(d2, rn2, cn), rn2, cn, vn, order=go)
+        return p.then(R.pivot3(_canon_cols(d2, rn2, cn), rn2, cn, vn,
+                               order=go))
 
-    def _delimited(self, df, args, env, order, *, sep: str):
+    def _delimited(self, p, args, env, tail, *, sep: str):
         # Relational form of the §2.1 to_csv/to_tsv sink: one formatted
         # line per row (same cell quoting as the doc-mode string
         # builder, helpers.rs:130-169) — the write-ready shape; doc
         # mode's single joined string would be a driver-side cliff at
         # table scale. Use JetroTables.write_csv for a real
         # distributed file sink.
-        self._scalar = True
+        df = p.df
         line = F.concat_ws(sep, *[
             _csv_cell(F.col(c2), df.schema[c2].dataType, sep)
             for c2 in _vis_cols(df)])
-        return df.select(line.alias("line"))
+        return p.then(df.select(line.alias("line")), scalar=True)
 
-    def _set_op(self, df, args, env, order, *, how: str | None):
+    def _set_op(self, p, args, env, tail, *, how: str | None):
         """diff_apply/intersect_apply/union_apply semantics
         (collection.rs:594-646): filter the RECEIVER by key membership
         in the other side — the receiver's DUPLICATES and order are
@@ -1889,27 +1875,22 @@ class JetroTables:
         or left_semi (intersect); None is union = all of the receiver
         plus the other side's rows whose value is not in the
         receiver."""
-        recv_scalar = self._scalar
-        self._pipe_end_ordered = True
-        other = self._resolve_table(args[0].value)
-        if other is None:
+        arg = self._resolve_table(args[0].value, tail.q)
+        if arg is None:
             return None
-        # _resolve_table re-enters _pipeline for sub-pipeline args,
-        # clobbering _scalar with the OTHER side's shape — capture
-        # it, then restore the receiver's (r12)
-        oth_scalar = self._scalar
-        self._scalar = recv_scalar
         # ordered union appends the other table's rows in the other
         # ARRAY's own order via a monotonic-id tag — valid only when
-        # the resolved table's physical order is its doc order (same
-        # r10 gate as equi_join's right side; an order-destroying
-        # sub-pipeline arg would tag shuffle-arbitrary rows)
-        rt_ok = self._pipe_end_ordered
+        # the resolved table's physical order is its doc order
+        # (rt_ok, the same r10 gate as equi_join's right side; an
+        # order-destroying sub-pipeline arg would tag
+        # shuffle-arbitrary rows)
+        other, rt_ok = arg
+        df, order = p.df, p.order
         vis = _vis_cols(df)
         ovis = _vis_cols(other)
         canon_keys = False
         ldt = rdt = None
-        if recv_scalar and oth_scalar and len(vis) == 1 and len(ovis) == 1:
+        if p.scalar and len(vis) == 1 and len(ovis) == 1:
             ldt = df.schema[vis[0]].dataType
             rdt = other.schema[ovis[0]].dataType
             if _key_collide(ldt, rdt):
@@ -1938,7 +1919,7 @@ class JetroTables:
                     out = a4.join(
                         o4, F.col("__set_a.__set_k")
                         == F.col("__set_o.__set_k"), how).drop("__set_k")
-                    return self._reorder(out, order)
+                    return self._reorder(p, out, order)
                 if not canon_keys:
                     return None
             if vis[0] != ovis[0]:
@@ -1962,12 +1943,11 @@ class JetroTables:
         # vocab). diff keeps everything, intersect keeps nothing;
         # union would need a mixed-shape row set → doc fallback
         if sorted(vis) != sorted(other.columns) or (
-                not recv_scalar and vis
+                not p.scalar and vis
                 and not eq_comparable(row_t(df), row_t(other))):
             if how is None:
                 return None
-            self._order = order
-            return df if how == "left_anti" else df.limit(0)
+            return p.then(df if how == "left_anti" else df.limit(0), order)
         cond = None
         for v2 in vis:
             a, o = F.col(f"__set_a.{v2}"), F.col(f"__set_o.{v2}")
@@ -1982,13 +1962,13 @@ class JetroTables:
             # shuffle destroyed
             out = df.alias("__set_a").join(
                 other.select(*vis).alias("__set_o"), cond, how)
-            return self._reorder(out, order)
+            return self._reorder(p, out, order)
         a3 = df.select(*vis).alias("__set_a")
         if order is None:
-            self._has_union = True
+            tail.q.has_union = True
             newbies = other.select(*vis).alias("__set_o").join(
                 a3, cond, "left_anti")
-            return df.select(*vis).unionByName(newbies)
+            return p.then(df.select(*vis).unionByName(newbies))
         if not rt_ok:
             return None   # append order unrecoverable → fallback
         # ordered (r8; was a doc fallback): receiver rows keep
@@ -2004,8 +1984,7 @@ class JetroTables:
         # unique prefix: Column refs resolve by NAME at action
         # time, so a second union overwriting `__ordu0` would
         # corrupt an order list still pointing at it.
-        self._setop_seq += 1
-        p2 = f"__ordu{self._setop_seq}_"
+        p2 = f"__ordu{tail.q.fresh()}_"
         recv = df
         for i2, (c3, _d3) in enumerate(order):
             recv = recv.withColumn(f"{p2}k{i2}", c3)
@@ -2027,28 +2006,29 @@ class JetroTables:
               for i2, t2 in enumerate(ord_ts)],
             F.col(f"{p2}id"),
             F.lit(1).alias(f"{p2}pri"))
-        self._order = (
+        union_order = (
             [(F.col(f"{p2}pri"), False)] +
             [(F.col(f"{p2}k{i2}"), d3)
              for i2, (_c3, d3) in enumerate(order)] +
             [(F.col(f"{p2}id"), False)])
-        self._has_union = True
-        return recv2.unionByName(newb2)
+        tail.q.has_union = True
+        return p.then(recv2.unionByName(newb2), union_order)
 
-    def _compact(self, df, args, env, order):
+    def _compact(self, p, args, env, tail):
         # drop null elements (ops/collection.rs:23); object rows are
         # non-null structs, so multi-column inputs pass through
-        self._order = order
+        df = p.df
         vis = _vis_cols(df)
-        if len(vis) == 1 and self._scalar:
-            return df.filter(F.col(vis[0]).isNotNull())
-        return df
+        if len(vis) == 1 and p.scalar:
+            df = df.filter(F.col(vis[0]).isNotNull())
+        return p.then(df, p.order)
 
-    def _flatten(self, df, args, env, order):
+    def _flatten(self, p, args, env, tail):
         # array-of-arrays rows → element rows: explode IS the
         # relational flatten; deeper levels flatten row-locally first
+        df = p.df
         vis = _vis_cols(df)
-        if len(vis) != 1 or not self._scalar:
+        if len(vis) != 1 or not p.scalar:
             return None
         col2, dt = F.col(vis[0]), df.schema[vis[0]].dataType
         if not isinstance(dt, T.ArrayType):
@@ -2061,45 +2041,43 @@ class JetroTables:
         el = dt.elementType
         out = df.select(F.explode(col2).alias("__e"))
         if isinstance(el, T.StructType):
-            self._scalar = False
-            return out.select("__e.*")
-        self._scalar = True
-        return out.select(F.col("__e").alias(vis[0]))
+            return p.then(out.select("__e.*"), scalar=False)
+        return p.then(out.select(F.col("__e").alias(vis[0])), scalar=True)
 
-    def _find_first(self, df, args, env, order):
+    def _find_first(self, p, args, env, tail):
         # filter(pred) + First (the TerminalExprArg lowering,
         # defs.rs:975-1000) — so the no-match case is the scalar
         # Null, padded exactly like first() (r13: the unpadded
         # empty rowset diverged from doc mode's None)
-        hits = df.filter(self._pred(args[0].value, df, env))
-        return self._positional(hits, order, 1, pad=True, guard=False)
+        hits = p.df.filter(self._pred(args[0].value, p, env))
+        return self._positional(p.then(hits, p.order), tail.q, 1, pad=True,
+                                guard=False)
 
-    def _find_index(self, df, args, env, order):
+    def _find_index(self, p, args, env, tail):
         # 0-based index of first match over the pipeline order, -1
         # when absent (ops/array.rs:293); unordered → doc fallback
-        if order is None:
+        if p.order is None:
             return None
-        self._scalar = True
-        w = Window.orderBy(*_order_by(order))
-        ok = self._pred(args[0].value, df, env)
-        d2 = df.select((F.row_number().over(w) - 1).alias("__fi_rn"),
-                       ok.alias("__fi_ok"))
-        return d2.filter(F.col("__fi_ok")).agg(
+        w = Window.orderBy(*_order_by(p.order))
+        ok = self._pred(args[0].value, p, env)
+        d2 = p.df.select((F.row_number().over(w) - 1).alias("__fi_rn"),
+                         ok.alias("__fi_ok"))
+        return p.then(d2.filter(F.col("__fi_ok")).agg(
             F.coalesce(F.min("__fi_rn"), F.lit(-1))
-            .cast("long").alias("value"))
+            .cast("long").alias("value")), scalar=True)
 
-    def _includes(self, df, args, env, order):
+    def _includes(self, p, args, env, tail):
         # membership over the rowset → one-pass bool_or aggregation;
         # null-safe (a null probe matches null cells — Val::Null
         # keys as "null" in includes_apply) and TOTAL: a provably
         # cross-kind probe is constant false, not a CompileError
+        df = p.df
         vis = _vis_cols(df)
         vt = self.c.compile(args[0].value, env)
-        never = df.limit(0).agg(
+        never = p.then(df.limit(0).agg(
             F.coalesce(F.bool_or(F.lit(False)),
-                       F.lit(False)).alias("value"))
-        scalar, self._scalar = len(vis) == 1 and self._scalar, True
-        if scalar:
+                       F.lit(False)).alias("value")), scalar=True)
+        if len(vis) == 1 and p.scalar:
             cell_t = df.schema[vis[0]].dataType
             if _key_collide(cell_t, vt.dtype):
                 # val_to_key canonical keys (same collision classes
@@ -2123,18 +2101,18 @@ class JetroTables:
                 return never
             eqc = F.struct(*[F.col(v2) for v2 in vis]).eqNullSafe(
                 _reorder_struct_probe(vt, row_t))
-        return df.agg(F.coalesce(F.bool_or(eqc),
-                                 F.lit(False)).alias("value"))
+        return p.then(df.agg(F.coalesce(F.bool_or(eqc),
+                                        F.lit(False)).alias("value")),
+                      scalar=True)
 
-    def _index_of(self, df, args, env, order):
+    def _index_of(self, p, args, env, tail):
         # first 0-based position of the value over the pipeline
         # order, -1 when absent (ops/array.rs index)
-        if order is None:
-            return None
+        df = p.df
         vis = _vis_cols(df)
-        if len(vis) != 1 or not self._scalar:
+        if p.order is None or len(vis) != 1 or not p.scalar:
             return None
-        w = Window.orderBy(*_order_by(order))
+        w = Window.orderBy(*_order_by(p.order))
         vt = self.c.compile(args[0].value, env)
         cell_t = df.schema[vis[0]].dataType
         if (not eq_comparable(cell_t, vt.dtype)
@@ -2142,77 +2120,78 @@ class JetroTables:
             # the index family compares via TYPE-STRICT vals_eq —
             # cross-kind probes (incl. string-vs-number, which
             # Spark would ANSI-cast) never match → -1, total
-            return df.limit(0).agg(
+            return p.then(df.limit(0).agg(
                 F.coalesce(F.min(F.lit(0)), F.lit(-1))
-                .cast("long").alias("value"))
+                .cast("long").alias("value")))
         d2 = df.select((F.row_number().over(w) - 1).alias("__ix_rn"),
                        (F.col(vis[0]) == vt.col).alias("__ix_ok"))
-        return d2.filter(F.col("__ix_ok")).agg(
+        return p.then(d2.filter(F.col("__ix_ok")).agg(
             F.coalesce(F.min("__ix_rn"), F.lit(-1))
-            .cast("long").alias("value"))
+            .cast("long").alias("value")))
 
-    def _join(self, df, args, env, order):
+    def _join(self, p, args, env, tail):
         # string join sink: one-pass collect + array_join; the rn tag
         # keeps the pipeline order through the unordered agg
+        df = p.df
         vis = _vis_cols(df)
-        if len(vis) != 1 or not self._scalar:
+        if len(vis) != 1 or not p.scalar:
             return None
         sep = _lit_str(args[0].value) if args else ""
-        tagged, arr = _collected_elems(df, F.col(vis[0]), order,
+        tagged, arr = _collected_elems(df, F.col(vis[0]), p.order,
                                        elem_dt=df.schema[vis[0]].dataType)
-        return tagged.agg(F.array_join(arr, sep).alias("value"))
+        return p.then(tagged.agg(F.array_join(arr, sep).alias("value")))
 
-    def _indices(self, df, args, env, order, *, of_value: bool,
+    def _indices(self, p, args, env, tail, *, of_value: bool,
                  last: bool):
         """Position queries over the pipeline order → one-pass agg of
         tagged row numbers: the sorted index array of predicate matches
         (indices_where) or of ``of_value`` matches (indices_of), or the
         last one, -1 when absent (last_index_of; ops/array.rs)."""
-        if order is None:
-            return None
+        df = p.df
         vis = _vis_cols(df)
-        if of_value and (len(vis) != 1 or not self._scalar):
+        if p.order is None or (of_value
+                               and (len(vis) != 1 or not p.scalar)):
             return None
-        w = Window.orderBy(*_order_by(order))
+        w = Window.orderBy(*_order_by(p.order))
         if of_value:
             v = self.c.compile(args[0].value, env).col
             # eqNullSafe: doc-mode AR.indices_of finds null values
             ok = F.col(vis[0]).eqNullSafe(v)
         else:
-            ok = self._pred(args[0].value, df, env)
-        self._scalar = True
+            ok = self._pred(args[0].value, p, env)
         d2 = df.select((F.row_number().over(w) - 1).cast("long")
                        .alias("__iw_rn"), ok.alias("__iw_ok"))
         hits = d2.filter(F.col("__iw_ok"))
         if last:
-            return hits.agg(F.coalesce(F.max("__iw_rn"), F.lit(-1))
-                            .cast("long").alias("value"))
-        # array result → rows (the fallback's explode convention)
-        return (hits.agg(F.array_sort(F.collect_list("__iw_rn"))
-                         .alias("__v"))
-                .select(F.explode_outer("__v").alias("value")))
+            out = hits.agg(F.coalesce(F.max("__iw_rn"), F.lit(-1))
+                           .cast("long").alias("value"))
+        else:
+            # array result → rows (the fallback's explode convention)
+            out = (hits.agg(F.array_sort(F.collect_list("__iw_rn"))
+                            .alias("__v"))
+                   .select(F.explode_outer("__v").alias("value")))
+        return p.then(out, scalar=True)
 
-    def _to_json(self, df, args, env, order):
+    def _to_json(self, p, args, env, tail):
         # whole-pipeline JSON sink: ordered collect + to_json — the
         # same one-row driver-cliff class as join(sep); use
         # write_csv/write_parquet for table-scale exports
-        elem = _element(df, self._scalar)
-        tagged, arr = _collected_elems(df, elem.col, order,
+        elem = _element(p.df, p.scalar)
+        tagged, arr = _collected_elems(p.df, elem.col, p.order,
                                        elem_dt=elem.dtype)
-        self._scalar = True
-        return tagged.agg(F.to_json(arr).alias("value"))
+        return p.then(tagged.agg(F.to_json(arr).alias("value")), scalar=True)
 
-    def _window(self, df, args, env, order):
+    def _window(self, p, args, env, tail):
         # sliding windows of n consecutive rows over the pipeline
         # order (ops/collection.rs window): per-row frame collect,
         # short tails dropped — bounded by the user's n like chunk
-        if order is None or not args:
+        if p.order is None or not args:
             return None
-        self._scalar = True
+        df = p.df
         n = _lit_int(args[0].value)
         if n <= 0:
             raise CompileError("window size must be positive")
-        w = Window.orderBy(*_order_by(order))
+        w = Window.orderBy(*_order_by(p.order))
         # struct wrapper: collect_list drops bare nulls, doc windows
         # keep them ([7.5, null] is a valid window of 2)
         win = F.transform(
@@ -2223,17 +2202,17 @@ class JetroTables:
                          win.alias("value"))
                .filter(F.size("value") == n)
                .select("value", "__ord0"))
-        self._order = [(F.col("__ord0"), False)]
-        return out
+        return p.then(out, [(F.col("__ord0"), False)], scalar=True)
 
-    def _partition(self, df, args, env, order):
+    def _partition(self, p, args, env, tail):
         # {pass: [...], fail: [...]} → one-pass agg with map-side
         # partials; preserves pipeline order via the rn tag
-        ok = self._pred(args[0].value, df, env)
+        df = p.df
+        ok = self._pred(args[0].value, p, env)
         elem = _element(df)
         m = F.coalesce(ok, F.lit(False))
-        if order is not None:
-            w = Window.orderBy(*_order_by(order))
+        if p.order is not None:
+            w = Window.orderBy(*_order_by(p.order))
             tagged = df.select(F.row_number().over(w).alias("__p_rn"),
                                m.alias("__p_m"), elem.col.alias("__p_e"))
             arr = R.sort_by_field(
@@ -2247,20 +2226,20 @@ class JetroTables:
                            lambda s: s["__p_e"])
         drop = F.transform(F.filter(arr, lambda s: ~s["__p_m"]),
                            lambda s: s["__p_e"])
-        return tagged.agg(keep.alias("pass"), drop.alias("fail"))
+        return p.then(tagged.agg(keep.alias("pass"), drop.alias("fail")))
 
-    def _group_shape(self, df, args, env, order):
+    def _group_shape(self, p, args, env, tail):
         # group_shape(key_λ, shape_λ): groupBy the STRINGIFIED key
         # (doc semantics, ops/array.rs:841-863), shape applied to the
         # per-key collected array — parallel by key, unlike the doc
         # fallback's whole-table collect
-        elem = _element(df)
+        elem = _element(p.df)
         key_fn, kd = self.c._lam(args[0].value, env, elem.dtype)
-        if order is None:
+        if p.order is None:
             return None   # group sequences read pipeline order (r9)
         # first-seen key order is doc-observable when navigation
         # follows, like group_by (r10)
-        df, go, eo = self._keyed_input(df, "gs")
+        df, go, eo = self._keyed_input(p.df, tail, "gs")
         # struct wrapper: collect_list drops bare null elements, doc
         # group arrays keep them; sorted by the doc-order surrogate
         # so the per-key sequence is pipeline order, not shuffle
@@ -2282,17 +2261,18 @@ class JetroTables:
         shape_fn, _sd = self.c._lam(args[1].value, env,
                                     T.ArrayType(elem.dtype))
         extras = [F.col(eo)] if eo is not None else []
-        return self._emit_sorted(grouped.select(
+        return self._emit_sorted(p, grouped.select(
             F.col("key"), shape_fn(F.col("__grp")).alias("value"),
             *extras), eo)
 
-    def _accumulate(self, df, args, env, order):
+    def _accumulate(self, p, args, env, tail):
         """Relational accumulate for the running-SUM lambda shape —
         `(a, x) => a + <expr(x)>` (either operand order, optional scalar
         init): a window prefix sum over the pipeline order. The general
         fold (multiplication, conditionals) has no closed window form:
         None (→ doc fallback) for any other fold body, missing order, or
         non-scalar init."""
+        df, order = p.df, p.order
         if order is None or not args:
             return None
         lam = args[0].value
@@ -2375,8 +2355,7 @@ class JetroTables:
         out = df.select(
             F.when(seen_null == 1, F.lit(None).cast(out_t))
             .otherwise(run).alias("value"), *hid)
-        self._order = order
-        return out
+        return p.then(out, order)
 
     def _first_seen_dedup(self, df: DataFrame, order) -> DataFrame:
         """Dedup on the VISIBLE columns only, keeping the FIRST
@@ -2425,7 +2404,7 @@ class JetroTables:
         return w.select(*[F.col("__w").getField(f.name).alias(f.name)
                           for f in fields])
 
-    def _window_fn(self, df, args, env, order, *, fn):
+    def _window_fn(self, p, args, env, tail, *, fn):
         """Positional analytics over the pipeline's sequence order (§2.6):
         ``fn(x, window, args)`` builds the column.
 
@@ -2438,24 +2417,24 @@ class JetroTables:
         inherently sequential; for partition-parallel analytics at scale
         use the keyed forms in operators/analytics.py (with_lag etc. take
         partition columns)."""
-        if order is None:
+        if p.order is None:
             # unordered AND the scan-order surrogate is unavailable (a
             # shuffle upstream made row order arbitrary): the doc
             # fallback preserves semantics — raising here was a
             # one-sided error vs doc mode (r8 unsorted-pipeline fuzz)
             return None
+        df = p.df
         cname, x = _window_operand(df)
-        self._order = order
-        hid = _hidden_cols(df)
-        w = Window.orderBy(*_order_by(order))
-        return df.select(fn(x, w, args).alias(cname), *hid)
+        w = Window.orderBy(*_order_by(p.order))
+        return p.then(df.select(fn(x, w, args).alias(cname),
+                                *_hidden_cols(df)), p.order)
 
-    def _zscore(self, df, args, env, order):
+    def _zscore(self, p, args, env, tail):
         # a two-pass agg + broadcast join — no single-partition window
-        if order is None:
+        if p.order is None:
             return None
+        df = p.df
         cname, x = _window_operand(df)
-        self._order = order
         hid = _hidden_cols(df)
         stats = df.agg(F.avg(x).alias("__mean"),
                        F.stddev_pop(x).alias("__sd"))
@@ -2463,7 +2442,8 @@ class JetroTables:
              .when(F.col("__sd") > 0, (x - F.col("__mean")) / F.col("__sd"))
              .when(F.col("__mean").isNull(), F.lit(None).cast("double"))
              .otherwise(F.lit(0.0)))
-        return df.crossJoin(F.broadcast(stats)).select(z.alias(cname), *hid)
+        return p.then(df.crossJoin(F.broadcast(stats))
+                      .select(z.alias(cname), *hid), p.order)
 
     def _table_refs(self, nodes: list[A.Node]) -> set[str]:
         """Names of registered tables referenced via `$.<name>` anywhere
@@ -2471,8 +2451,10 @@ class JetroTables:
         refs: set[str] = set()
 
         def walk(n):
-            if isinstance(n, A.Path) and isinstance(n.base, A.Root)                     and n.steps and isinstance(n.steps[0], A.Field)                     and n.steps[0].name in self.tables:
-                refs.add(n.steps[0].name)
+            src = (self._source(n) if isinstance(n, A.Path)
+                   and isinstance(n.base, A.Root) else None)
+            if src is not None:
+                refs.add(src[0])
             if dataclasses.is_dataclass(n) and not isinstance(n, type):
                 for f in dataclasses.fields(n):
                     walk(getattr(n, f.name))
@@ -2484,25 +2466,6 @@ class JetroTables:
             walk(n)
         return refs
 
-    def _resolve_table(self, node: A.Node) -> DataFrame | None:
-        if isinstance(node, A.Path) and isinstance(node.base, A.Root) \
-                and len(node.steps) >= 1 and isinstance(node.steps[0], A.Field) \
-                and node.steps[0].name in self.tables:
-            nm = node.steps[0].name
-            return self._pipeline(self.tables[nm], node.steps[1:],
-                                  scan_ok=self._tables_ordered.get(nm, True))
-        # a LET-BOUND sub-plan as the table arg: `let d = ... in
-        # $.s.equi_join(d, ...)` parses the arg as an Ident path (r10)
-        if isinstance(node, A.Path) and isinstance(node.base, A.Ident) \
-                and node.base.name in self.tables:
-            nm = node.base.name
-            return self._pipeline(self.tables[nm], node.steps,
-                                  scan_ok=self._tables_ordered.get(nm, True))
-        if isinstance(node, A.Ident) and node.name in self.tables:
-            self._pipe_end_ordered = self._tables_ordered.get(node.name, True)
-            return self.tables[node.name]
-        return None
-
     # ------------------------------------------------------- fallback
 
     # collect_list ceiling for _doc_fallback: above this Catalyst size
@@ -2511,7 +2474,8 @@ class JetroTables:
     FALLBACK_MAX_BYTES = 1 << 30
 
     def _doc_fallback(self, df: DataFrame, steps: list[A.Node],
-                      order: list | None = None) -> DataFrame:
+                      order: list | None = None, *,
+                      scalar: bool = False) -> DataFrame:
         """Collapse remaining stages to document mode over a collected
         array. Correct for any builtin; single-task — the scale
         cliff is explicit: warned below the size ceiling, refused above
@@ -2524,7 +2488,8 @@ class JetroTables:
         element-typed builtin downstream (includes/join/flatten/…).
         A live sort order rides into the collected array via a
         row_number tag so order-sensitive folds see the pipeline order
-        (the window is single-partition, but so is the whole fallback)."""
+        (the window is single-partition, but so is the whole fallback).
+        ``scalar``: the pipeline's element is a bare scalar (Pipe.scalar)."""
         limit = int(os.environ.get("JETRO_FALLBACK_MAX_BYTES",
                                    self.FALLBACK_MAX_BYTES))
         if limit:
@@ -2542,7 +2507,7 @@ class JetroTables:
             "jql: stage has no relational lowering; collapsing to a "
             "single-task document pipeline", stacklevel=2)
         vis = _vis_cols(df)
-        scalar = self._scalar and len(vis) == 1
+        scalar = scalar and len(vis) == 1
         elem = _element(df, scalar)
         tagged, arr = _collected_elems(df, elem.col, order or None,
                                        elem_dt=elem.dtype)
@@ -2641,13 +2606,13 @@ def _lit_str(node: A.Node) -> str:
 @dataclasses.dataclass(frozen=True)
 class Stage:
     """One builtin's relational lowering and the order traits the
-    pipeline reads. ``lower(tables, df, args, env, order)`` returns the
-    stage's frame, or None for the single-task doc fallback."""
+    pipeline reads. ``lower(tables, pipe, args, env, tail)`` returns the
+    outgoing Pipe, or None for the single-task doc fallback."""
     lower: Callable
     # reads the pipeline's sequence order: gets the scan-order surrogate
     # when none is carried (historically these collapsed to the doc
     # fallback on unsorted pipelines; since r8 they lower whenever the
-    # physical row order still IS the document order, see _scan_ok)
+    # physical row order still IS the document order, see Pipe.scan_ok)
     hungry: bool = False
     # afterwards the PHYSICAL row order still equals the document order
     # with no carried order: narrow transformations (filter/projection/

@@ -139,10 +139,10 @@ def count_by''',
         "take_off_by_one",
         "take(n) keeps exactly n rows",
         ENGINE,
-        """    def _take(self, df, args, env, order):
-        return self._positional(df, order, _lit_int(args[0].value))""",
-        """    def _take(self, df, args, env, order):
-        return self._positional(df, order, _lit_int(args[0].value) + 1)""",
+        """    def _take(self, p, args, env, tail):
+        return self._positional(p, tail.q, _lit_int(args[0].value))""",
+        """    def _take(self, p, args, env, tail):
+        return self._positional(p, tail.q, _lit_int(args[0].value) + 1)""",
         [oracle("sort_take", "jql_sort_take")],
     ),
     (
@@ -180,9 +180,9 @@ def count_by''',
         "(nothing strictly improves on it) — relational sink",
         ENGINE,
         '''        if not df.select(col.alias("__xb_k")).schema["__xb_k"].nullable:
-            return self._pad_single_null(extreme)''',
+            return p.then(self._pad_single_null(extreme))''',
         '''        if True:
-            return self._pad_single_null(extreme)''',
+            return p.then(self._pad_single_null(extreme))''',
         [pytest("tests/test_regressions.py", "-k",
                 "extreme_by_null_keys")],
     ),
@@ -333,13 +333,24 @@ def count_by''',
     ),
     (
         "has_union_flag_dropped",
-        "the set-op union stage must flag _has_union so positional "
-        "sinks avoid a bare GlobalLimit above the Union (r13)",
+        "the set-op union stage must flag its query (Query.has_union) so "
+        "positional sinks avoid a bare GlobalLimit above the Union (r13)",
         ENGINE,
-        '''        self._has_union = True
-        return recv2.unionByName(newb2)''',
-        '''        return recv2.unionByName(newb2)''',
+        '''        tail.q.has_union = True
+        return p.then(recv2.unionByName(newb2), union_order)''',
+        '''        return p.then(recv2.unionByName(newb2), union_order)''',
         [pytest("tests/test_plan_audit.py", "-k", "setop_sinks")],
+    ),
+    (
+        "let_body_fresh_query",
+        "a let body shares its binding's query, so a Union in the "
+        "binding still routes the body's positional sinks through the "
+        "row_number prefix",
+        ENGINE,
+        '''        return child.compile_node(n.body, demand_order, q)''',
+        '''        return child.compile_node(n.body, demand_order)''',
+        [pytest("tests/test_stage_table.py", "-k",
+                "let_bound_union")],
     ),
     (
         "setop_keys_null_safe",

@@ -140,7 +140,7 @@ _MID = st.sampled_from([
     ".map(patch @ {w: 7.5})",
     # r14 (verdict item 5): patch/chain-writes composed OVER
     # union-carrying pipelines and window-guarded positional picks —
-    # the union stage sets _has_union, so the take/skip in these cells
+    # the union stage sets Query.has_union, so the take/skip in these cells
     # lower through the row_number window guard, and the patch then
     # rebinds fields on the union-widened (nullable-k / padded-field)
     # rows; the two lowering families had never met in one pipeline
@@ -579,7 +579,7 @@ def test_let_bound_pipelines_agree(spark, mids, sink):
 # SOURCES — the binding feeds a comprehension generator, an equi_join
 # table arg, or a nested outer binding; each consumer reads the
 # binding's doc order (or its honest disclaim) through a different
-# code path (_comp/_table_of, _resolve_table, _let threading)
+# code path (_comp, _resolve_table, _let — each reads it via _source)
 _LET_BODY = st.sampled_from([
     "[x.k for x in a]{s}",
     "[x.v for x in a if x.v > 40]{s}",

@@ -47,3 +47,13 @@ def test_all_registry_outputs_scalar_typed(spark):
         if bad:
             offenders[name] = bad
     assert not offenders, f"non-scalar gate outputs: {offenders}"
+
+
+def test_benchlock_handle_is_cached_per_session(spark):
+    """The bench_lock document handle is built once per session and
+    lives on the session object, not in a module map keyed on id()."""
+    from jetro_spark.gate.benchlock import _jt
+
+    assert _jt(spark) is _jt(spark)
+    assert _jt(spark.newSession()) is not _jt(spark)
+

@@ -226,7 +226,7 @@ def test_doc_fallback_scalar_pipelines_unwrap(spark, seq_tables):
 
 def test_doc_fallback_single_field_object_not_unwrapped(spark, seq_tables):
     """map({v: v}) makes single-COLUMN object rows — the fallback must
-    keep the struct wrapper so x.v still resolves (the _scalar flag
+    keep the struct wrapper so x.v still resolves (the Pipe.scalar flag
     disambiguates what a 1-column DataFrame means)."""
     jt = JetroTables(spark, seq_tables)
     with pytest.warns(UserWarning, match="no relational lowering"):
@@ -278,7 +278,7 @@ def test_fallback_refuses_large_table_ref(spark, monkeypatch):
             jt.query("$.s.sort(k).map(v).zip($.lineitem.map(l_quantity))")
 
 
-# --------------------- round-5 review regressions (_scalar flag, nulls)
+# ----------------- round-5 review regressions (Pipe.scalar flag, nulls)
 
 
 def test_unordered_find_index_keeps_object_shape(spark, seq_tables):

@@ -152,7 +152,7 @@ def test_explicit_broadcasts_survive(plans):
 
 # JQL pipeline rows whose SEMANTICS are a single ordered sequence
 # (global running accumulation / enumeration): the un-partitioned window
-# is the operator's definition, documented in engine._window_stage; the
+# is the operator's definition, documented in engine._window_fn; the
 # keyed scale-parallel forms live in operators/analytics.py.
 _GLOBAL_SEQ_OK = {"jql_accumulate", "jql_enumerate", "jql_sort_take"}
 
@@ -275,7 +275,7 @@ def test_no_unguarded_limit_above_union_in_setop_sinks(spark):
     """Every engine lowering that composes a positional pick above a
     set-op union — first/take/skip/nth/last/min_by/max_by/[i]/[a:b]/
     find_first, ordered and unordered — must come out window-guarded
-    (engine._has_union routes them through _ordered_prefix)."""
+    (engine.Query.has_union routes them through _ordered_prefix)."""
     import warnings
 
     from jetro_spark.jql.engine import JetroTables

@@ -1091,9 +1091,9 @@ def test_comp_over_untrusted_table_takes_warned_fallback(spark):
                           ordered={"s": trust, "u": True})
         with W.catch_warnings():
             W.simplefilter("ignore")
-            jt2.compile_node(par.parse("[x.k for x in $.s]"),
-                             demand_order=True)
-        assert getattr(jt2, "_pipe_end_ordered") is trust
+            _df, ordered = jt2.compile_node(par.parse("[x.k for x in $.s]"),
+                                            demand_order=True)
+        assert ordered is trust
 
     untrusted = JetroTables(spark, {"s": t, "u": u},
                             ordered={"s": False, "u": True})
@@ -1582,7 +1582,7 @@ def test_find_first_no_match_pads_scalar_null(spark):
 # (see scripts/aqe_repro.py and SCALE.md "AQE Sort+GlobalLimit-above-
 # Union drop"). When this pin fails, the container's Spark changed:
 # re-run `python scripts/aqe_repro.py 200` — if 0 runs leak, the
-# upstream bug is fixed and the `_has_union` window guard
+# upstream bug is fixed and the `Query.has_union` window guard
 # (jql/engine.py _ordered_prefix and its call sites) can retire,
 # restoring TakeOrderedAndProject to union+positional picks. Then
 # update this pin and SCALE.md.
@@ -1602,7 +1602,7 @@ def test_aqe_sentinel_spark_build_pinned(spark):
     assert build == _AQE_BUG_SPARK_BUILD, (
         "Spark build changed — re-run `python scripts/aqe_repro.py "
         "200`; if the drop no longer reproduces, retire the "
-        "_has_union window guard (engine._ordered_prefix) and update "
+        "Query.has_union window guard (engine._ordered_prefix) and update "
         "this pin + SCALE.md. Observed build: %r" % (build,))
 
 
@@ -1611,7 +1611,7 @@ def test_aqe_sentinel_spark_build_pinned(spark):
     reason="upstream Spark 4.1 AQE drops a Sort+GlobalLimit above a "
            "Union whose branch materializes empty (flaky, ~5-15%/run "
            "at 8 cores); XPASS across rounds on a NEW Spark build "
-           "means the fix landed and the _has_union window guard can "
+           "means the fix landed and the Query.has_union window guard can "
            "retire — see scripts/aqe_repro.py and SCALE.md")
 def test_aqe_union_limit_drop_upstream_sentinel(spark):
     """Behavioral half of the sentinel: the r12 minimal repro RAW —

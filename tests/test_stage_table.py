@@ -157,3 +157,44 @@ def test_union_flag_does_not_outlive_its_query(spark):
     assert "Window" not in plan and "GlobalLimit" in plan
     assert plan == fresh
     assert [r["id"] for r in reused.collect()] == [0, 1]
+
+
+# a limit directly above a Union: the shape Spark 4.1 AQE can drop
+_LIMIT_ON_UNION = re.compile(
+    r"GlobalLimit \d+\n\s*\+- LocalLimit \d+\n\s*\+- Union")
+
+
+@pytest.mark.parametrize("sink", ["take(2)", "first()", "skip(1)"])
+def test_let_bound_union_keeps_the_row_number_prefix(spark, sink):
+    """A union compiled in a let binding shapes the body's positional
+    sinks like the un-let spelling: the body shares the binding's query,
+    so the sink takes the row_number prefix, not a limit on the Union."""
+    t = spark.createDataFrame([(i, float(i)) for i in range(6)],
+                              "id long, v double")
+    u = spark.createDataFrame([(9, 9.0), (2, 2.0)], "id long, v double")
+    tables = {"t": t, "u": u}
+    let = JetroTables(spark, tables).query(
+        f"let a = $.t.union($.u) in a.{sink}")
+    plain = JetroTables(spark, tables).query(f"$.t.union($.u).{sink}")
+    plan = _plan(let)
+    assert "row_number()" in plan
+    assert not _LIMIT_ON_UNION.search(plan), plan
+    assert ([tuple(r) for r in let.collect()]
+            == [tuple(r) for r in plain.collect()])
+
+
+@pytest.mark.parametrize("sink", [
+    "count(x => x.v > 2)", "any(x => x.v > 2)", "all(x => x.v > 2)",
+    "find_index(x => x.v > 2)"])
+def test_lambda_sinks_see_one_column_object_rows(spark, sink):
+    """A one-column OBJECT pipeline (`map({v: v})`) binds a predicate
+    sink's lambda param to the row object, as filter and doc mode do."""
+    from jetro_spark.jql.engine import Jetro
+
+    rows = [{"k": i, "v": float(i)} for i in range(5)]
+    t = spark.createDataFrame([(r["k"], r["v"]) for r in rows],
+                              "k long, v double")
+    expr = f"$.s.sort(k).map({{v: v}}).{sink}"
+    want = Jetro.from_value(spark, {"s": rows}).collect(expr)
+    got = JetroTables(spark, {"s": t}).query(expr).collect()
+    assert [r["value"] for r in got] == [want]
