@@ -171,11 +171,11 @@ def main() -> None:
     from jetro_spark.benchdoc import BENCH_QUERIES, synth_doc
     from jetro_spark.jql.engine import Jetro
 
-    # local=True (the default) materializes the parsed doc once into a
-    # JVM LocalRelation — Catalyst then folds every Project-shaped doc
-    # query driver-side, so execution launches zero Spark jobs (there is
-    # no point distributing a single document; the reference is likewise
-    # one in-process thread over a cached parse).
+    # Ingest parses the doc once into a JVM LocalRelation — Catalyst
+    # then folds every Project-shaped doc query driver-side, so execution
+    # launches zero Spark jobs (there is no point distributing a single
+    # document; the reference is likewise one in-process thread over a
+    # cached parse).
     jt = Jetro.from_value(spark, synth_doc(20_000, 6))
     # 5 warmups + best-of-15 since r07 (2 + best-of-7 r05-r06; the
     # reference's own protocol is 3 warmups + 20 iterations best/median,

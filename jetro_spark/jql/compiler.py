@@ -276,16 +276,20 @@ class Env:
     current: TC | None = None
     locals: dict = dc_field(default_factory=dict)
     py_eval: object = None
+    # relational row scope: builds the TC `@` denotes (the pipeline
+    # element), while bare identifiers resolve against ``current`` (the
+    # row); a new ``current`` is also the new `@`
+    at: object = None
 
     def bind(self, name: str, tc: TC) -> "Env":
         return Env(self.root, self.current, {**self.locals, name: tc},
-                   self.py_eval)
+                   self.py_eval, self.at)
 
     def with_current(self, tc: TC) -> "Env":
         return Env(self.root, tc, self.locals, self.py_eval)
 
     def with_root(self, tc: TC) -> "Env":
-        return Env(tc, self.current, self.locals, self.py_eval)
+        return Env(tc, self.current, self.locals, self.py_eval, self.at)
 
 
 def field_access(tc: TC, name: str) -> TC:
@@ -356,6 +360,8 @@ class Compiler:
         return env.root
 
     def c_Current(self, n: A.Current, env: Env) -> TC:
+        if env.at is not None:
+            return env.at()
         if env.current is None:
             raise CompileError("@ outside lambda/pipe context")
         return env.current

@@ -63,7 +63,6 @@ from jetro_spark.localrel import (
     fresh_execute,
     local_doc_frame,
     plan_size_estimate,
-    to_local_relation,
 )
 from jetro_spark.operators import relational as R
 
@@ -131,21 +130,6 @@ def _union_struct_dyn(sts: list[T.StructType]) -> T.StructType:
             f.name, f.dataType if u is not None else T.VariantType(),
             nullable))
     return T.StructType(out)
-
-
-def _to_row(v, dt: T.DataType):
-    if v is None:
-        return None
-    if isinstance(dt, T.VariantType):
-        return T.VariantVal.parseJson(json.dumps(v))
-    if isinstance(dt, T.StructType):
-        src = v if isinstance(v, dict) else {}
-        return tuple(_to_row(src.get(f.name), f.dataType) for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return [_to_row(x, dt.elementType) for x in v]
-    if isinstance(dt, T.DoubleType) and isinstance(v, int):
-        return float(v)
-    return v
 
 
 def to_python(v):
@@ -364,9 +348,9 @@ def _analyzed_select(df: DataFrame, col: Column) -> DataFrame:
         ) from exc
 
 
-# Compiled plans (and warm handles) one Jetro handle keeps, one per
-# expression string. An entry holds a plan's driver-side objects only;
-# the bound caps a long-lived handle fed ever-new expressions.
+# Compiled plans (and warm handles) one Jetro or JetroDocs handle keeps,
+# one per expression string. An entry holds a plan's driver-side objects
+# only; the bound caps a long-lived handle fed ever-new expressions.
 PLAN_CACHE_MAX = 256
 
 
@@ -381,58 +365,14 @@ class Jetro:
     """Document-mode handle: ``Jetro.from_bytes(spark, data).collect(expr)``.
     Reference API: jc/lib.rs:354-380 (from_bytes), :477 (collect)."""
 
-    def __init__(self, spark: SparkSession, value, *,
-                 checkpoint: bool = False, local: bool | None = None):
+    def __init__(self, spark: SparkSession, value):
         wrapped = value if isinstance(value, dict) else {"__root__": value}
         self.schema: T.StructType = infer_schema(wrapped)
         self._wrapped_scalar = not isinstance(value, dict)
-        if local is None:
-            local = not checkpoint
-        if local and not checkpoint:
-            # Zero-job ingest: JSON → driver-side JVM from_json eval →
-            # LocalRelation. No createDataFrame, so no job whose task
-            # embeds the multi-MB pickled document (the TaskSetManager
-            # large-task warning this retires). Falls through to the
-            # createDataFrame path on any unsupported shape.
-            folded = local_doc_frame(spark, wrapped, self.schema)
-            if folded is not None:
-                self.df = folded
-                self.spark = spark
-                self._plan_cache = {}
-                self._warm_cache = {}
-                return
-        row = _to_row(wrapped, self.schema)
-        df = spark.createDataFrame(
-            [(row,)], T.StructType([T.StructField("__doc", self.schema, False)]))
-        if local:
-            # One document = one row: distribute nothing. Rebuilding the
-            # frame as a JVM LocalRelation lets Catalyst's
-            # ConvertToLocalRelation rule evaluate Project-shaped queries
-            # eagerly on the driver — collect() returns with ZERO jobs,
-            # dropping the ~40-80 ms single-task dispatch floor.
-            # Table-scale pipelines (JetroTables/JetroDocs) never come
-            # through here. When conversion succeeds it supersedes
-            # checkpoint (the LocalRelation already embeds the
-            # materialized rows — there is no lineage left to truncate).
-            converted = to_local_relation(df)
-            if converted is not None:
-                df = converted
-                checkpoint = False
-            else:
-                # No classic-JVM surface (Spark Connect, version drift):
-                # without the LocalRelation fold the frame stays a
-                # ParallelCollectionRDD whose partitions embed the whole
-                # document — every downstream task would ship it. Fall
-                # back to a lineage-truncating checkpoint instead.
-                checkpoint = True
-        if checkpoint:
-            # A ParallelCollectionRDD embeds the document in its Partition
-            # objects, so EVERY downstream task ships the whole doc (MBs)
-            # even on a cache hit. localCheckpoint truncates the lineage:
-            # tasks then reference storage blocks by id. Worth the one-off
-            # materialization for large documents queried repeatedly.
-            df = df.coalesce(1).localCheckpoint(eager=True)
-        self.df = df
+        # One document = one row, parsed and folded driver-side into a
+        # LocalRelation: Project-shaped queries over it collect with
+        # zero Spark jobs (localrel.local_doc_frame)
+        self.df = local_doc_frame(spark, wrapped, self.schema)
         self.spark = spark
         # expr -> compiled DataFrame, or the CompileError it raised
         self._plan_cache: dict[str, DataFrame | CompileError] = {}
@@ -441,18 +381,14 @@ class Jetro:
         self._warm_cache: dict[str, object] = {}
 
     @classmethod
-    def from_bytes(cls, spark: SparkSession, data: bytes | str,
-                   *, checkpoint: bool = False,
-                   local: bool | None = None) -> "Jetro":
+    def from_bytes(cls, spark: SparkSession, data: bytes | str) -> "Jetro":
         if isinstance(data, bytes):
             data = data.decode("utf-8")
-        return cls(spark, json.loads(data), checkpoint=checkpoint, local=local)
+        return cls(spark, json.loads(data))
 
     @classmethod
-    def from_value(cls, spark: SparkSession, value,
-                   *, checkpoint: bool = False,
-                   local: bool | None = None) -> "Jetro":
-        return cls(spark, value, checkpoint=checkpoint, local=local)
+    def from_value(cls, spark: SparkSession, value) -> "Jetro":
+        return cls(spark, value)
 
     def root(self) -> TC:
         base = TC(F.col("__doc"), self.schema, doc=True)
@@ -628,7 +564,7 @@ class JetroDocs:
             # schema-changing patch guards (each row would need its own
             # schema) — those raise at compile time
             col = Compiler().compile(parse(expr), env).col
-            self._plan_cache[expr] = col
+            _remember(self._plan_cache, expr, col)
         return col
 
     def frame(self, expr: str) -> DataFrame:
@@ -717,12 +653,14 @@ class JetroTables:
         # shuffle-arbitrary rows with the scan surrogate.
         self._tables_ordered: dict[str, bool] = ordered or {}
 
-    # row-scope env: bare idents resolve to F.col via TC(row=True);
-    # let-bound scalars shadow nothing (row fields win — locals are
-    # consulted by the compiler before row scope, so seed them last)
-    def _row_env(self, df: DataFrame) -> Env:
+    # row-scope env: bare idents resolve to F.col via TC(row=True) and
+    # `@` is the pipeline element (see _element); let-bound scalars
+    # shadow nothing (row fields win — locals are consulted by the
+    # compiler before row scope, so seed them last)
+    def _row_env(self, df: DataFrame, scalar: bool = False) -> Env:
         return Env(root=None, current=TC(None, df.schema, row=True),
-                   locals=dict(self._scalars))
+                   locals=dict(self._scalars),
+                   at=functools.partial(_element, df, scalar))
 
     def _row_tc(self, df: DataFrame) -> TC:
         return TC(None, df.schema, row=True)
@@ -1132,7 +1070,7 @@ class JetroTables:
                 p.order is not None or p.scan_ok)
 
     def _stage(self, p: Pipe, step: A.Node, tail: Tail) -> Pipe | None:
-        env = self._row_env(p.df)
+        env = self._row_env(p.df, p.scalar)
         if isinstance(step, A.InlineFilter):
             return p.then(p.df.filter(self.c.compile_cond(step.pred, env)),
                           p.order)
@@ -1140,7 +1078,7 @@ class JetroTables:
             df = p.df
             if step.pred is not None:
                 df = df.filter(self.c.compile_cond(step.pred, env))
-                env = self._row_env(df)
+                env = self._row_env(df, p.scalar)
             return self._select_carry(p.then(df, p.order), step.shape, env)
         if isinstance(step, A.Index):
             try:

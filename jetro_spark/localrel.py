@@ -1,32 +1,28 @@
-"""Driver-local execution for small documents via LocalRelation folding.
+"""Driver-local execution for documents via LocalRelation folding.
 
 Document-mode queries operate on ONE row (the document), so distributing
 them buys nothing: a single-task Spark job costs ~40-80 ms of scheduler
-dispatch regardless of the work inside. Catalyst already has the right
-tool — the ``ConvertToLocalRelation`` optimizer rule evaluates
-Project/Filter plans over a ``LocalRelation`` eagerly on the driver, so
-``collect()``/``executeCollect()`` return without launching a single job.
-
-PySpark's ``createDataFrame`` builds a ``LogicalRDD`` (data enters through
-an RDD of pickled rows), which that rule cannot see.  ``to_local_relation``
-materializes a DataFrame once and rebuilds it as a true JVM
-``LocalRelation``, flipping every downstream Project-shaped query onto the
-zero-job path.  Table-scale data must NOT go through here — this is the
-single-node small-data path; the distributed path (parquet scans,
-checkpointed docs) is unchanged.  Reference parity: jetro evaluates the
-whole document in-process on one thread (jc/lib.rs:477 collect); this is
-the Spark-idiomatic equivalent for data that fits in one hand.
+dispatch regardless of the work inside. Catalyst's
+``ConvertToLocalRelation`` rule evaluates Project/Filter plans over a
+``LocalRelation`` eagerly on the driver, so ``collect()`` returns
+without launching a job — and ``local_doc_frame`` builds every
+document's frame as such a LocalRelation. Table-scale data never comes
+through here. Reference parity: jetro evaluates the whole document
+in-process on one thread (jc/lib.rs:477 collect).
 
 Uses py4j access to Spark-internal classes (stable across Spark 4.x
-classic; absent under Spark Connect) — every entry point degrades
-gracefully to ``None`` so callers can fall back to the RDD-backed path.
+classic; absent under Spark Connect); every entry point degrades
+gracefully (see ``has_classic_surface``).
 """
 
 from __future__ import annotations
 
+import json
 import threading
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 try:  # py4j ships with classic pyspark; absent under pure Spark Connect
     from py4j.protocol import Py4JError, Py4JJavaError
@@ -56,7 +52,7 @@ def has_classic_surface(spark) -> bool:
     and warm-query paths need. False under Spark Connect, where every
     caller takes its documented degradation:
 
-    - ``to_local_relation`` → None (doc frames stay RDD-backed; queries
+    - ``local_doc_frame`` → the parse is ``localCheckpoint``ed (queries
       run as regular 1-row distributed jobs — correct, ~40-80 ms/job)
     - ``compile_warm`` / ``fresh_execute`` → None (``execute()`` times a
       noop-sink materialization and reports -1 rows)
@@ -77,94 +73,55 @@ def _jvm_bits(df: DataFrame):
     return spark, jvm, jspark
 
 
-def to_local_relation(df: DataFrame) -> DataFrame | None:
-    """Execute ``df`` once and rebuild it as a LocalRelation-backed frame.
-
-    Returns None when the JVM surface is unavailable (Spark Connect,
-    future version drift) — callers fall back to the distributed path.
-    """
-    try:
-        spark, jvm, jspark = _jvm_bits(df)
-        qe = df._jdf.queryExecution()  # type: ignore[attr-defined]
-        rows = qe.executedPlan().executeCollect()
-        attrs = qe.optimizedPlan().output()
-        jlist = jvm.java.util.ArrayList()
-        for r in rows:
-            jlist.add(r.copy())
-        seq = jvm.org.apache.spark.api.python.PythonUtils.toSeq(jlist)
-        local_relation = jvm.org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-        stream_none = getattr(local_relation, "apply$default$4")()
-        lr = local_relation(attrs, seq, False, stream_none)
-        jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(jspark, lr)
-        return DataFrame(jdf, spark)
-    except Exception as exc:
-        if _surface_missing(exc):
-            return None
-        raise
+def _has_variant(dt) -> bool:
+    if isinstance(dt, T.ArrayType):
+        return _has_variant(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return any(_has_variant(f.dataType) for f in dt.fields)
+    return isinstance(dt, T.VariantType)
 
 
-def local_doc_frame(spark, value, schema) -> DataFrame | None:
-    """Build the one-row ``__doc`` frame as a LocalRelation WITHOUT a
-    Spark job or a data-bearing task.
-
-    ``to_local_relation`` on a ``createDataFrame`` frame must run one
-    job whose single task embeds the whole pickled document — harmless
-    semantically, but a multi-MB task (TaskSetManager warns above
-    1000 KiB) that ships the doc through the scheduler instead of the
-    driver evaluating it in place. This path keeps the document
-    driver-side end to end: serialize to JSON, plan
-    ``from_json(lit(json), schema)`` over ``SELECT 1``'s
-    OneRowRelation, and evaluate that Project's expressions directly
-    (``eval_local_project``) — the JSON parse happens in the JVM on
-    the driver thread, zero jobs, zero tasks.
-
-    FAILFAST + a null check guard fidelity: the JSON round-trip is
-    exact for the document value space (documents ARE parsed JSON), and
-    any parse surprise raises or returns null → caller falls back to
-    the createDataFrame path. Returns None when the value doesn't
-    JSON-serialize, the schema contains VariantType (from_json's
-    variant handling is not bit-pinned against our _to_row), or the
-    classic JVM surface is unavailable.
-    """
-    import json as _json
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def _has_variant(dt) -> bool:
-        if isinstance(dt, T.StructType):
-            return any(_has_variant(f.dataType) for f in dt.fields)
-        if isinstance(dt, T.ArrayType):
-            return _has_variant(dt.elementType)
-        if isinstance(dt, T.MapType):
-            return _has_variant(dt.keyType) or _has_variant(dt.valueType)
-        return dt.typeName() == "variant"
-
-    if _has_variant(schema):
-        return None
-    try:
-        js = _json.dumps(value)
-    except (TypeError, ValueError):
-        return None
-    try:
-        one = spark.sql("SELECT 1")
-        df = one.select(F.from_json(F.lit(js), schema,
-                                    {"mode": "FAILFAST"}).alias("__doc"))
-        return eval_local_project(df, reject_all_null=True)
-    except Exception as exc:
-        if _surface_missing(exc):
-            return None
-        raise
+def _sql_nulls(c: Column, dt) -> Column:
+    """``c`` with every JSON null that from_json parsed into a variant
+    null (a variant field or array element) as SQL NULL, the document
+    model's null — `x == null` does not match a variant null."""
+    if isinstance(dt, T.VariantType):
+        return F.when(~F.is_variant_null(c), c)
+    if isinstance(dt, T.ArrayType) and _has_variant(dt.elementType):
+        return F.transform(c, lambda x: _sql_nulls(x, dt.elementType))
+    if isinstance(dt, T.StructType):
+        for f in dt.fields:
+            if _has_variant(f.dataType):
+                c = c.withField(f.name,
+                                _sql_nulls(c.getField(f.name), f.dataType))
+    return c
 
 
-def eval_local_project(df: DataFrame,
-                       reject_all_null: bool = False) -> DataFrame | None:
+def local_doc_frame(spark, value, schema) -> DataFrame:
+    """The one-row ``__doc`` frame of a document, built with no Spark
+    job: ``from_json(lit(json), schema)`` over ``SELECT 1`` is evaluated
+    on the driver and folded into a LocalRelation
+    (``eval_local_project``), so no task embeds the document. The JSON
+    round-trip is exact for the document value space (documents ARE
+    parsed JSON); FAILFAST raises on a parse surprise, and so does a
+    parse that evaluates to null. Without the classic JVM surface
+    (Spark Connect) the parse is ``localCheckpoint``ed instead."""
+    parsed = F.from_json(F.lit(json.dumps(value)), schema,
+                         {"mode": "FAILFAST"})
+    doc = F.coalesce(_sql_nulls(parsed, schema),
+                     F.raise_error(F.lit("document parsed to null")))
+    df = spark.sql("SELECT 1").select(doc.alias("__doc"))
+    folded = eval_local_project(df)
+    # this plan is always a Project over OneRowRelation, so None means
+    # the classic JVM surface is missing
+    return df.localCheckpoint(eager=True) if folded is None else folded
+
+
+def eval_local_project(df: DataFrame) -> DataFrame | None:
     """Evaluate a Project over OneRowRelation/1-row-LocalRelation
     DRIVER-SIDE (interpreted expression eval, no job) and rebuild the
     result as a LocalRelation frame. Returns None when the plan isn't
-    that shape, the surface is missing, or (``reject_all_null``) every
-    output value evaluated to null — the from_json-sentinel for a
-    parse the FAILFAST mode didn't catch."""
+    that shape or the surface is missing."""
     try:
         spark, jvm, jspark = _jvm_bits(df)
         qe = df._jdf.queryExecution()  # type: ignore[attr-defined]
@@ -183,14 +140,8 @@ def eval_local_project(df: DataFrame,
         pl = plan.projectList()
         n = pl.size()
         arr = spark._sc._gateway.new_array(jvm.java.lang.Object, n)
-        all_null = True
         for i in range(n):
-            v = pl.apply(i).eval(input_row)
-            if v is not None:
-                all_null = False
-            arr[i] = v
-        if reject_all_null and all_null:
-            return None
+            arr[i] = pl.apply(i).eval(input_row)
         out_row = jvm.org.apache.spark.sql.catalyst.expressions \
             .GenericInternalRow(arr)
         jlist = jvm.java.util.ArrayList()

@@ -436,6 +436,19 @@ def count_by''',
         '''    dup_groups = (groups.filter(F.col("__sd_gn") > 2)''',
         [pytest("tests/test_llm.py", "-k", "precollapse")],
     ),
+    # --- ingest: the one document path (from_json into a LocalRelation)
+    (
+        "infer_schema_alphabetical",
+        "document schemas keep insertion order (IndexMap, value.rs:47); "
+        "struct fields sorted by name — read.json's order — change what "
+        "order-observing queries return",
+        ENGINE,
+        """            T.StructField(k, infer_schema(x), x is None)
+            for k, x in v.items()])""",
+        """            T.StructField(k, infer_schema(x), x is None)
+            for k, x in sorted(v.items())])""",
+        [pytest("tests/test_regression_parity.py")],
+    ),
     # --- r14: remove/unique val_to_key semantics (r13 verdict item 4)
     (
         "remove_path_arg_predicate",

@@ -101,6 +101,9 @@ HAND_PICKED = [
     "let a = (let b = 1 in $.s.sort(-v).group_by(g)) in a.first()",
     "let a = $.s.sort(k) in let b = a.union($.u) in b.take(2)",
     "let a = $.s.group_by(g) in a.last()",
+    # `@` in stage arguments is the pipeline element
+    "$.s.map(v).filter(@ > 2)", "$.s.map(v).map(@ * 2)",
+    "$.s.map(v).flat_map([@, @ + 100.0]).len()",
     # predicate sinks over one-column object rows
     "$.s.sort(k).map({v: v}).count(x => x.v > 40)",
     "$.s.sort(k).map({v: v}).find_index(x => x.v > 40)",

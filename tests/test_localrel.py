@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from jetro_spark.jql.engine import Jetro
-from jetro_spark.localrel import fresh_execute, is_local_plan, to_local_relation
+from jetro_spark.localrel import fresh_execute, is_local_plan
 
 
 DOC = {"orders": [{"id": i, "total": 100.0 * i, "status": "shipped" if i % 2 else "new"}
@@ -25,23 +25,6 @@ def test_doc_frame_folds_to_local_relation(spark):
     assert is_local_plan(df)
     assert jt.collect("$.orders.filter(total > 500).map(id)") == [
         i for i in range(6, 21)]
-
-
-def test_checkpoint_superseded_by_local_fold(spark):
-    # Explicit checkpoint=True with local=True: the LocalRelation fold
-    # already embeds the materialized rows — checkpoint is skipped and
-    # the frame still folds.
-    jt = Jetro.from_value(spark, DOC, checkpoint=True, local=True)
-    assert is_local_plan(jt.df)
-
-
-def test_checkpointed_path_still_correct(spark):
-    # local=False keeps the distributed path (checkpoint truncates
-    # lineage); results must match the folded path exactly.
-    jt = Jetro.from_value(spark, DOC, checkpoint=True, local=False)
-    assert not is_local_plan(jt.df)
-    assert jt.collect("$.orders.map(total).sum()") == sum(
-        100.0 * i for i in range(1, 21))
 
 
 def test_fresh_execute_counts_rows(spark):
@@ -97,21 +80,12 @@ def test_warm_query_nondeterministic_falls_back(spark):
     assert compile_warm(df) is None
 
 
-def test_to_local_relation_roundtrip(spark):
-    df = spark.range(5).selectExpr("id", "id * 2 as dbl")
-    lr = to_local_relation(df)
-    assert lr is not None
-    assert is_local_plan(lr)
-    assert [(r["id"], r["dbl"]) for r in lr.collect()] == [
-        (i, 2 * i) for i in range(5)]
-
-
 # ---------------------------------------------- Spark Connect degradation
 #
 # The classic py4j surface (_jvm/_jdf) is absent under Spark Connect.
 # Every localrel entry point must degrade to None there, and doc mode
-# must stay CORRECT through its documented fallbacks (RDD-backed frames,
-# noop-sink execute). The degraded path is simulated by making
+# must stay CORRECT through its documented fallbacks (a checkpointed
+# parse, noop-sink execute). The degraded path is simulated by making
 # _jvm_bits raise the same surface-missing error Connect raises; the
 # real-Connect-session test runs when grpcio is available, and otherwise
 # asserts the capability gap itself (never a skip — see its docstring).
@@ -138,7 +112,6 @@ def test_degraded_entry_points_return_none(spark, monkeypatch):
     from jetro_spark import localrel as L
     _break_jvm_surface(monkeypatch)
     df = spark.range(3)
-    assert L.to_local_relation(df) is None
     assert L.compile_warm(df) is None
     assert L.fresh_execute(df) is None
 
@@ -148,6 +121,7 @@ def test_doc_mode_correct_without_classic_surface(spark, monkeypatch):
     only the zero-job fold is lost, not semantics."""
     _break_jvm_surface(monkeypatch)
     jt = Jetro.from_value(spark, DOC)
+    assert not is_local_plan(jt.df)  # the parse is checkpointed instead
     assert jt.collect("$.orders.filter(total > 500).map(id)") == \
         list(range(6, 21))
     assert jt.collect("$.orders.map(total).sum()") == 21000.0
@@ -211,8 +185,7 @@ def test_doc_mode_over_real_connect_session_or_probe():
 
 def test_local_doc_frame_zero_job_and_values(spark):
     """The r7 zero-job ingest: builds a LocalRelation without any Spark
-    job (no data-bearing task), value-identical to the createDataFrame
-    path, UnsafeRow-backed."""
+    job (no data-bearing task), UnsafeRow-backed."""
     from pyspark.sql import functions as F
 
     from jetro_spark.localrel import is_local_plan, local_doc_frame
@@ -233,22 +206,45 @@ def test_local_doc_frame_zero_job_and_values(spark):
     assert row["d"] is None
 
 
-def test_local_doc_frame_falls_back_on_variant(spark):
+def test_variant_doc_ingests_with_zero_jobs(spark):
+    """A document with variant fields (a heterogeneous array, a field
+    whose type differs across elements) takes the same zero-job parse
+    as any other document, and a null element of a variant array stays
+    a SQL NULL."""
+    doc = {"xs": [1, "x", True, {"a": 1}, None],
+           "ys": [{"v": 1}, {"v": "s"}, {"v": None}]}
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    jt = Jetro.from_value(spark, doc)
+    assert len(tracker.getJobIdsForGroup(None) or []) == before
+    assert is_local_plan(jt.df)
+    assert jt.collect("$.xs") == [1, "x", True, {"a": 1}, None]
+    assert jt.collect("$.ys.map(v)") == [1, "s", None]
+    assert jt.collect("$.xs.filter(@ == null).len()") == 1
+    assert jt.collect("$.ys.filter(v == null).len()") == 1
+
+
+def test_unserializable_value_raises_type_error(spark):
+    with pytest.raises(TypeError):
+        Jetro.from_value(spark, {"a": object()})
+
+
+def test_null_parse_raises(spark, monkeypatch):
+    """A parse that evaluates to null is an error, never an empty
+    document. FAILFAST already refuses a null root; from_json maps a
+    blank text to null without parsing it, which the guard catches."""
+    from types import SimpleNamespace
+
     from pyspark.sql import types as T
 
-    from jetro_spark.localrel import local_doc_frame
+    from jetro_spark import localrel as L
 
-    schema = T.StructType([T.StructField("v", T.VariantType())])
-    assert local_doc_frame(spark, {"v": 1}, schema) is None
-
-
-def test_local_doc_frame_falls_back_on_unserializable(spark):
-    from jetro_spark.localrel import local_doc_frame
-    from jetro_spark.jql.engine import infer_schema
-
-    ok = {"a": 1}
-    assert local_doc_frame(spark, {"a": object()},
-                           infer_schema(ok)) is None
+    schema = T.StructType([T.StructField("a", T.LongType())])
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        L.local_doc_frame(spark, None, schema)
+    monkeypatch.setattr(L, "json", SimpleNamespace(dumps=lambda v: " "))
+    with pytest.raises(Exception, match="document parsed to null"):
+        L.local_doc_frame(spark, {"a": 1}, schema)
 
 
 def test_eval_local_project_rejects_non_project(spark):

@@ -142,6 +142,22 @@ def test_doc_mode_equivalence(spark, seq_tables):
     assert j.collect("$.s.sort(k).map(v).nth(-2)") == 9.0
 
 
+@pytest.mark.parametrize("expr", [
+    "$.s.map(v).filter(@ > 2)",
+    "$.s.map(v).map(@ * 2)",
+    "$.s.map(v).flat_map([@, @ + 100.0]).len()",
+])
+def test_at_is_the_pipeline_element(spark, seq_tables, expr):
+    """`@` in a stage argument is the pipeline element, as in doc mode:
+    the bare column after map(v), not the row scope."""
+    doc = {"s": [{"k": i, "v": v}
+                 for i, v in enumerate([3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0])]}
+    want = Jetro.from_value(spark, doc).collect(expr)
+    vals, _ = rel(spark, seq_tables, expr)
+    got = [v for (v,) in vals]
+    assert got == (want if isinstance(want, list) else [want])
+
+
 # ------------------------- round-5 lowerings (fallback-surface shrink)
 
 

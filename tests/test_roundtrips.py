@@ -13,7 +13,7 @@ import pytest
 
 import jetro_spark.jql.engine as engine
 from jetro_spark.jql.compiler import CompileError, Compiler
-from jetro_spark.jql.engine import Jetro, JetroTables
+from jetro_spark.jql.engine import Jetro, JetroDocs, JetroTables
 
 # the benchmark's rel_session `sort_take` and `group_by` templates
 SORT_TAKE = (
@@ -130,3 +130,14 @@ def test_plan_cache_evicts_the_oldest(spark, compiles, monkeypatch):
     assert j.collect(exprs[0]) == [1, 2]  # evicted: compiled again
     assert compiles["n"] > 0
     assert list(j._plan_cache) == [exprs[2], exprs[0]]
+    # the multi-document engine keeps the same bound
+    docs = JetroDocs.from_json_strings(spark, spark.createDataFrame(
+        [('{"id": 1, "total": 10.0}',)], "j string"), "j")
+    exprs = ["$.id", "$.total", "$.total * 2"]
+    for e in exprs:
+        docs.frame(e)
+    assert list(docs._plan_cache) == exprs[1:]
+    compiles["n"] = 0
+    assert docs.frame(exprs[0]).first()["value"] == 1  # compiled again
+    assert compiles["n"] > 0
+    assert list(docs._plan_cache) == [exprs[2], exprs[0]]
