@@ -2430,7 +2430,7 @@ def m_union(self, recv, args, env):
         # struct: the receiver's missing fields become nulls, which is
         # also how downstream field access sees them (missing ≡ null).
         # A field whose types CONFLICT across the two sides widens to
-        # VARIANT (the _union_struct_dyn convention — r12: first-wins
+        # VARIANT (document ingest's convention — r12: first-wins
         # made the widen cast 'g0' string→bigint and ANSI-crash)
         u0 = union_struct([ea, eb])
         at = {f.name: f.dataType for f in ea.fields}

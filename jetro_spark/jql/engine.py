@@ -18,7 +18,11 @@ Two execution modes share one expression compiler (SURVEY.md §7.1):
 
 Schema inference for documents is ours, not spark.read.json's: Spark
 sorts JSON fields alphabetically, but jetro objects are insertion-ordered
-(IndexMap, value.rs:47) and field order is observable in results.
+(IndexMap, value.rs:47) and field order is observable in results. One
+walk interns the document's shapes (``Shapes``) and builds one Spark type
+per distinct shape, so a uniform array of n objects costs one struct
+type (jetro's ObjVec keeps one key set per object array, value.rs:52-84).
+Shapes that conflict widen to variant, at whatever depth they meet.
 """
 
 from __future__ import annotations
@@ -54,8 +58,6 @@ from jetro_spark.jql.compiler import (
     eq_comparable,
     field_access,
     is_objrepr,
-    unify,
-    union_struct,
 )
 from jetro_spark.jql.parser import parse
 from jetro_spark.localrel import (
@@ -69,67 +71,136 @@ from jetro_spark.operators import relational as R
 # ------------------------------------------------------------ doc ingest
 
 
-def infer_schema(v) -> T.DataType:
-    """Insertion-order-preserving schema inference (vs read.json's
-    alphabetical sort). Int→Long, Float→Double (value.rs:27-29).
+# Atom shapes are their kinds (Int→Long, Float→Double, value.rs:27-29);
+# they hold ids 0-4 of every Shapes table.
+_ATOMS = (T.NullType(), T.BooleanType(), T.LongType(), T.DoubleType(),
+          T.StringType())
+_NULL = 0
+_ATOM_IDS = {type(None): 0, bool: 1, int: 2, float: 3, str: 4}
 
-    Nullability is computed EXACTLY from the literal (r14): a struct
-    field is nullable only when its value IS null somewhere (or the
-    field is missing in some array element — _union_struct_dyn), an
-    array has containsNull only when a null element exists. Sound
-    because the inferred schema describes one pinned literal document,
-    and the claims let the compiler skip impossible-null scaffolding
-    (the string-unique null/"null" collision fixup, null probes).
-    Multi-document SAMPLED inference must NOT inherit these claims —
-    JetroDocs parses via from_json, whose runtime schema Spark forces
-    nullable (and self.schema is read back from the parsed column), so
-    unsampled documents can't violate a tight flag."""
-    if v is None:
-        return T.NullType()
-    if isinstance(v, bool):
-        return T.BooleanType()
-    if isinstance(v, int):
-        return T.LongType()
-    if isinstance(v, float):
-        return T.DoubleType()
-    if isinstance(v, str):
-        return T.StringType()
-    if isinstance(v, dict):
-        return T.StructType([
-            T.StructField(k, infer_schema(x), x is None)
-            for k, x in v.items()])
-    if isinstance(v, (list, tuple)):
-        elem_schemas = [infer_schema(x) for x in v]
-        has_null = any(x is None for x in v)
-        structs = [s for s in elem_schemas if isinstance(s, T.StructType)]
-        if structs and len(structs) == len(elem_schemas):
-            return T.ArrayType(_union_struct_dyn(structs), has_null)
-        u = unify(elem_schemas)
-        if u is None:
+
+class Shapes:
+    """Interned JSON value shapes, each mapped once to its Spark type.
+
+    An object's shape is its ordered ``(key, shape)`` pairs; an array's
+    is its distinct non-null element shapes in first-seen order plus
+    whether some element is null. Equal shapes share one id, so a
+    uniform array of n objects is one shape (the reference's ``ObjVec``:
+    one key set for a whole object array, value.rs:52-84) and its
+    struct type is built once, however large n is."""
+
+    def __init__(self):
+        self._ids: dict[tuple, int] = {}
+        self._shapes: list[tuple | None] = [None] * len(_ATOMS)
+        self._types: dict[int, T.DataType] = dict(enumerate(_ATOMS))
+
+    @property
+    def built(self) -> int:
+        """How many non-atom Spark types this table has built."""
+        return len(self._types) - len(_ATOMS)
+
+    def shape(self, v) -> int:
+        """The shape id of a JSON value (dict/list/tuple/str/int/float/
+        bool/None); anything else raises TypeError."""
+        sid = _ATOM_IDS.get(type(v))
+        if sid is not None:
+            return sid
+        if isinstance(v, dict):
+            key = ("o", tuple([(k, self.shape(x)) for k, x in v.items()]))
+        elif isinstance(v, (list, tuple)):
+            elems = dict.fromkeys(map(self.shape, v))
+            key = ("a", tuple(e for e in elems if e != _NULL),
+                   _NULL in elems)
+        else:  # a subclassed scalar (an IntEnum, a str subclass)
+            for kind, sid in _ATOM_IDS.items():
+                if isinstance(v, kind):
+                    return sid
+            raise TypeError(f"cannot infer schema for {type(v).__name__}")
+        sid = self._ids.get(key)
+        if sid is None:
+            sid = self._ids[key] = len(self._shapes)
+            self._shapes.append(key)
+        return sid
+
+    def dtype(self, sid: int) -> T.DataType:
+        """The Spark type of shape ``sid``, built on first request."""
+        dt = self._types.get(sid)
+        if dt is None:
+            dt = self._types[sid] = self._build(self._shapes[sid])
+        return dt
+
+    def _build(self, shape: tuple) -> T.DataType:
+        if shape[0] == "o":
+            return T.StructType([T.StructField(k, self.dtype(s), s == _NULL)
+                                 for k, s in shape[1]])
+        _, elems, has_null = shape
+        dts = [self.dtype(s) for s in elems]
+        if dts and not has_null and all(isinstance(d, T.StructType)
+                                        for d in dts):
+            return T.ArrayType(_merge_structs(dts, exact=True), False)
+        u = _merge(dts)
+        if isinstance(u, T.VariantType):
             # heterogeneous elements ([1, "x", true]) — variant keeps
             # each element's dynamic kind (mirrors the reference's Val)
-            return T.ArrayType(T.VariantType())
-        return T.ArrayType(u or T.NullType(), has_null)
-    raise TypeError(f"cannot infer schema for {type(v).__name__}")
+            return T.ArrayType(u)
+        return T.ArrayType(u, has_null)
 
 
-def _union_struct_dyn(sts: list[T.StructType]) -> T.StructType:
-    """union_struct, but a field whose types CONFLICT across elements
-    (v: 1 vs v: "hello") becomes variant instead of first-wins.
-    A field is nullable only when it is MISSING in some element (the
-    null pad) or null somewhere it appears (r14 exact-nullability)."""
-    merged = union_struct(sts)
-    out = []
-    for f in merged.fields:
-        present = [st[f.name] for st in sts if f.name in st.fieldNames()]
-        dts = [pf.dataType for pf in present]
-        nullable = (len(present) < len(sts)
-                    or any(pf.nullable for pf in present))
-        u = unify(dts)
-        out.append(T.StructField(
-            f.name, f.dataType if u is not None else T.VariantType(),
-            nullable))
-    return T.StructType(out)
+def infer_schema(v) -> T.DataType:
+    """Insertion-order-preserving schema inference (vs read.json's
+    alphabetical sort), one Spark type per distinct shape (``Shapes``).
+
+    Nullability is EXACT for the one literal document: an object's
+    field, or a field of an array whose elements are all objects, is
+    nullable only where its value is null or missing in some element,
+    and an array has containsNull only where a null element exists.
+    Other unions of differing shapes (under a null element, or one
+    array level down) make every field and element nullable, as
+    compiler.unify does. Elements whose shapes conflict (1 vs "x", at
+    any depth) widen to variant at the level of the conflict. The
+    exact claims let the compiler skip impossible-null scaffolding (the
+    string-unique null/"null" collision fixup, null probes). JetroDocs
+    sampling may use them too: from_json forces its output schema
+    nullable, and the handle reads self.schema back from the parsed
+    column, so unsampled documents cannot violate a tight flag."""
+    shapes = Shapes()
+    return shapes.dtype(shapes.shape(v))
+
+
+def _merge(dts: list[T.DataType]) -> T.DataType:
+    """compiler.unify for ingest: a conflict widens to variant, at
+    whatever depth it occurs, where unify returns None (and its array
+    and struct cases type the conflicting elements void or last-wins)."""
+    non_null = [d for d in dts if not isinstance(d, T.NullType)]
+    if not non_null:
+        return T.NullType()
+    first = non_null[0]
+    if all(d == first for d in non_null):
+        return first
+    if all(isinstance(d, (T.LongType, T.DoubleType)) for d in non_null):
+        return T.DoubleType()  # not all equal, so some are double
+    if all(isinstance(d, T.StructType) for d in non_null):
+        return _merge_structs(non_null, exact=False)
+    if all(isinstance(d, T.ArrayType) for d in non_null):
+        return T.ArrayType(_merge([d.elementType for d in non_null]))
+    return T.VariantType()
+
+
+def _merge_structs(sts: list[T.StructType], exact: bool) -> T.StructType:
+    """Field-by-name union of struct types, first-seen order. With
+    ``exact`` (an array whose elements are all objects) a field is
+    nullable only when it is MISSING in some element (the null pad) or
+    null somewhere it appears; otherwise every field is nullable, as
+    compiler.union_struct makes it."""
+    fields: dict[str, list[T.StructField]] = {}
+    for st in sts:
+        for f in st.fields:
+            fields.setdefault(f.name, []).append(f)
+    return T.StructType([
+        T.StructField(name, _merge([f.dataType for f in fs]),
+                      not exact or len(fs) < len(sts)
+                      or any(f.nullable for f in fs))
+        for name, fs in fields.items()])
 
 
 def to_python(v):
@@ -548,11 +619,12 @@ class JetroDocs:
                     if r[0] is not None]
             if not rows:
                 raise ValueError("no sample documents to infer a schema from")
-            schemas = [infer_schema(json.loads(s)) for s in rows]
-            structs = [s for s in schemas if isinstance(s, T.StructType)]
-            if len(structs) != len(schemas):
+            docs = [json.loads(s) for s in rows]
+            if not all(isinstance(d, dict) for d in docs):
                 raise ValueError("every document must be a JSON object")
-            schema = _union_struct_dyn(structs)
+            # the sample as one object array: one shape walk, and the
+            # exact field union of its distinct document shapes
+            schema = infer_schema(docs).elementType
         parsed = df.withColumn(doc_col, F.from_json(F.col(json_col), schema))
         return cls(spark, parsed, doc_col)
 

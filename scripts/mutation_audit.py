@@ -443,11 +443,23 @@ def count_by''',
         "struct fields sorted by name — read.json's order — change what "
         "order-observing queries return",
         ENGINE,
-        """            T.StructField(k, infer_schema(x), x is None)
-            for k, x in v.items()])""",
-        """            T.StructField(k, infer_schema(x), x is None)
-            for k, x in sorted(v.items())])""",
+        """            key = ("o", tuple([(k, self.shape(x)) for k, x in v.items()]))""",
+        """            key = ("o", tuple([(k, self.shape(x))
+                               for k, x in sorted(v.items())]))""",
         [pytest("tests/test_regression_parity.py")],
+    ),
+    (
+        "infer_schema_null_blind",
+        "an array's shape (the type memo's key) includes whether a null "
+        "element occurs — without it [1, null] reuses the type built "
+        "for [1, 2] and claims containsNull=false",
+        ENGINE,
+        """            key = ("a", tuple(e for e in elems if e != _NULL),
+                   _NULL in elems)""",
+        """            key = ("a", tuple(e for e in elems if e != _NULL),
+                   False)""",
+        [pytest("tests/test_ingest_schema.py", "-k",
+                "null_element_is_part_of_the_shape")],
     ),
     # --- r14: remove/unique val_to_key semantics (r13 verdict item 4)
     (

@@ -202,7 +202,7 @@ def test_unique_nullable_map_path_keeps_fixup(spark):
 
 def test_unique_missing_field_nullable_union(spark):
     """A field MISSING in some array elements null-pads (union_struct),
-    so _union_struct_dyn must mark it nullable and unique() must keep
+    so schema inference must mark it nullable and unique() must keep
     the collision fixup for it."""
     jt = Jetro.from_value(
         spark, {"s": [{"c": "null", "d": 1}, {"d": 2}, {"c": "b", "d": 3}]})
