@@ -318,13 +318,13 @@ QUERIES = {
     # rolling_avg: first n-1 positions null; rounded — Spark and DuckDB
     # disagree in the last float ulp of a sliding mean
     "jql_window": _q(
-        "$.events.sort(event_id).map(value).rolling_avg(7).map(value.round(4))"),
+        "$.events.sort(event_id).map(value).rolling_avg(7).map(@.round(4))"),
     # chained window stages, exact doubles (subtract + running max)
     "jql_window_chain": _q(
         "$.events.sort(event_id).map(value).diff_window().cummax()"),
     # zscore lowers to a two-pass agg + broadcast join, not a window
     "jql_zscore": _q(
-        "$.events.sort(event_id).map(value).zscore().map(value.round(4))"),
+        "$.events.sort(event_id).map(value).zscore().map(@.round(4))"),
     # pipeline-position stages with native lowerings (logical stages
     # Last/Nth/Reverse/TakeWhile/DropWhile/FlatMap, jc/ir/logical.rs:
     # 16-57) — none of these may hit the single-task doc fallback

@@ -33,6 +33,7 @@ import json
 import os
 import warnings
 from collections.abc import Callable
+from decimal import Decimal
 
 from pyspark.errors.exceptions.base import AnalysisException
 from pyspark.sql import Column, DataFrame, Row, SparkSession
@@ -211,7 +212,7 @@ def to_python(v):
     a plain insertion-ordered dict with last-wins on duplicate keys,
     matching jetro's Val::Obj presentation (IndexMap, value.rs:47)."""
     if isinstance(v, T.VariantVal):
-        return v.toPython()
+        return _variant_numbers(v.toPython())
     if isinstance(v, Row):
         v = {k: to_python(x) for k, x in zip(v.__fields__, v)}
         if v and all(k == f"__p{i}" for i, k in enumerate(v)):
@@ -226,6 +227,20 @@ def to_python(v):
             return out
     elif isinstance(v, dict):
         v = {k: to_python(x) for k, x in v.items()}
+    return v
+
+
+def _variant_numbers(v):
+    """A variant's decoded value with every ``Decimal`` (Spark's variant
+    stores a JSON number with a fraction or outside the long range as a
+    decimal) as jetro's number: a float when it has digits after the
+    point, else an int."""
+    if isinstance(v, Decimal):
+        return float(v) if v.as_tuple().exponent < 0 else int(v)
+    if isinstance(v, list):
+        return [_variant_numbers(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _variant_numbers(x) for k, x in v.items()}
     return v
 
 
@@ -670,9 +685,13 @@ class Pipe:
     def then(self, df: DataFrame, order: list | None = None,
              scalar: bool | None = None) -> "Pipe":
         """The pipe a stage emits as ``df``: the order is dropped unless
-        the stage names it, the element shape kept unless it names one."""
-        return Pipe(df, order, self.scalar if scalar is None else scalar,
-                    self.scan_ok)
+        the stage names it, the element shape kept unless it names one.
+        A bare element is one column, so a stage that emits more
+        (enumerate's ``{index, value}``, a keyed reducer's rows) emits
+        objects."""
+        if scalar is None:
+            scalar = self.scalar and len(_vis_cols(df)) == 1
+        return Pipe(df, order, scalar, self.scan_ok)
 
 
 @dataclasses.dataclass
@@ -730,7 +749,10 @@ class JetroTables:
     # shadow nothing (row fields win — locals are consulted by the
     # compiler before row scope, so seed them last)
     def _row_env(self, df: DataFrame, scalar: bool = False) -> Env:
-        return Env(root=None, current=TC(None, df.schema, row=True),
+        # a scalar pipeline's element is a bare value, not a row: a bare
+        # name is a field access on it, null as in document mode
+        schema = T.StructType([]) if scalar else df.schema
+        return Env(root=None, current=TC(None, schema, row=True),
                    locals=dict(self._scalars),
                    at=functools.partial(_element, df, scalar))
 

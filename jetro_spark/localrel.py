@@ -8,7 +8,9 @@ dispatch regardless of the work inside. Catalyst's
 without launching a job — and ``local_doc_frame`` builds every
 document's frame as such a LocalRelation. Table-scale data never comes
 through here. Reference parity: jetro evaluates the whole document
-in-process on one thread (jc/lib.rs:477 collect).
+in-process on one thread (jc/lib.rs:477 collect). Table schemas are
+read on the driver too (``parquet_schemas``): from the parquet footers,
+with no schema-inference job.
 
 Uses py4j access to Spark-internal classes (stable across Spark 4.x
 classic; absent under Spark Connect); every entry point degrades
@@ -18,6 +20,7 @@ gracefully (see ``has_classic_surface``).
 from __future__ import annotations
 
 import json
+import os
 import threading
 
 from pyspark.sql import Column, DataFrame
@@ -66,11 +69,10 @@ def has_classic_surface(spark) -> bool:
         return False
 
 
-def _jvm_bits(df: DataFrame):
-    spark = df.sparkSession
+def _jvm_bits(spark):
     jvm = spark._jvm  # type: ignore[attr-defined]
     jspark = spark._jsparkSession  # type: ignore[attr-defined]
-    return spark, jvm, jspark
+    return jvm, jspark
 
 
 def _has_variant(dt) -> bool:
@@ -123,7 +125,8 @@ def eval_local_project(df: DataFrame) -> DataFrame | None:
     result as a LocalRelation frame. Returns None when the plan isn't
     that shape or the surface is missing."""
     try:
-        spark, jvm, jspark = _jvm_bits(df)
+        spark = df.sparkSession
+        jvm, jspark = _jvm_bits(spark)
         qe = df._jdf.queryExecution()  # type: ignore[attr-defined]
         plan = qe.optimizedPlan()
         if plan.nodeName() != "Project":
@@ -263,7 +266,8 @@ def compile_warm(df: DataFrame) -> WarmQuery | None:
     initialization, which the py4j name-cache pitfall above prevents).
     """
     try:
-        spark, jvm, jspark = _jvm_bits(df)
+        spark = df.sparkSession
+        jvm, jspark = _jvm_bits(spark)
         key = "spark.sql.optimizer.excludedRules"
         # the conf is session-global: serialize the set/optimize/restore
         # so concurrent compile_warm calls can't restore a stale value
@@ -313,7 +317,8 @@ def fresh_execute(df: DataFrame) -> int | None:
     (bench_lock.rs:11-18).  Returns None when the JVM surface is missing.
     """
     try:
-        spark, jvm, jspark = _jvm_bits(df)
+        spark = df.sparkSession
+        jvm, jspark = _jvm_bits(spark)
         jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
             jspark, df._jdf.logicalPlan())  # type: ignore[attr-defined]
         return len(jdf.queryExecution().executedPlan().executeCollect())
@@ -321,3 +326,42 @@ def fresh_execute(df: DataFrame) -> int | None:
         if _surface_missing(exc):
             return None
         raise
+
+
+def parquet_schemas(spark, paths: list[str]) -> list[T.StructType]:
+    """The Spark schema of each parquet file in ``paths``, as
+    ``spark.read.parquet(path).schema`` infers it, but with no Spark
+    job. Inference reads each footer inside a one-task job (~60 ms of
+    scheduling per path); here every file's footer is read in ONE
+    driver-side ``readParquetFootersInParallel`` call (a thread pool)
+    and converted by Spark's own ``ParquetFileFormat.readSchema``,
+    which honours the session's parquet confs (nanosAsLong among them:
+    set confs before calling). A path that is not a plain file (a
+    table directory), or a session without the classic JVM surface
+    (Spark Connect), takes the inferring read."""
+    files = [p for p in paths if os.path.isfile(p)]
+    try:
+        jvm, jspark = _jvm_bits(spark)
+        conf = jspark.sessionState().newHadoopConf()
+        statuses = jvm.java.util.ArrayList()
+        for p in files:
+            path = jvm.org.apache.hadoop.fs.Path(p)
+            statuses.add(path.getFileSystem(conf).getFileStatus(path))
+        to_seq = jvm.org.apache.spark.api.python.PythonUtils.toSeq
+        fmt = getattr(getattr(jvm.org.apache.spark.sql.execution
+                              .datasources.parquet, "ParquetFileFormat$"),
+                      "MODULE$")
+        footers = fmt.readParquetFootersInParallel(
+            conf, to_seq(statuses), False)
+        read = {}
+        for i, p in enumerate(files):
+            one = to_seq(jvm.java.util.Collections.singletonList(
+                footers.apply(i)))
+            read[p] = T.StructType.fromJson(json.loads(
+                fmt.readSchema(one, jspark).get().json()))
+    except Exception as exc:
+        if not _surface_missing(exc):
+            raise
+        read = {}
+    return [read[p] if p in read else spark.read.parquet(p).schema
+            for p in paths]

@@ -13,6 +13,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from jetro_spark.localrel import parquet_schemas
 from jetro_spark.timeutil import with_event_timestamp
 
 TABLES = (
@@ -156,16 +157,20 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Load the driver's parquet tables; optionally register temp views.
 
-    Results are memoized per (session, sf_dir): re-reading parquet footers
-    and re-inferring schemas added ~0.1-0.3 s of fixed cost to EVERY gate
-    query (each calls load_tables) — the cached DataFrames are lazy plans,
-    so reuse is free and safe. The memo lives on the session object, so
-    it ends with the session. A weakly keyed map would never drop an
-    entry: the cached frames hold their session.
+    Loading runs no Spark job. ``spark.read.parquet`` infers a schema
+    with one job per table, ~1 s for the ten tables on a fresh session;
+    here every schema comes from the file footers on the driver
+    (``localrel.parquet_schemas``) and each frame is a read with that
+    schema. Results are memoized per (session, sf_dir), so the gate
+    queries, which each call load_tables, share one set of frames
+    (lazy plans: reuse is free and safe). The memo lives on the
+    session object, so it ends with the session. A weakly keyed map
+    would never drop an entry: the cached frames hold their session.
 
     The driver's parquet carries nanosecond timestamps (TIMESTAMP(NANOS));
     Spark reads those only with the legacy nanosAsLong conf, under which
-    they surface as timestamp_ntz — set it on whatever session we're given.
+    they surface as bigint — set it on whatever session we're given,
+    before the schemas are read.
     """
     memo = spark.__dict__.setdefault("_jetro_tables", {})
     cached = memo.get(sf_dir)
@@ -175,12 +180,12 @@ def load_tables(
                 df.createOrReplaceTempView(name)
         return dict(cached)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    paths = {name: os.path.join(sf_dir, f"{name}.parquet") for name in TABLES}
+    paths = {name: p for name, p in paths.items() if os.path.exists(p)}
+    schemas = parquet_schemas(spark, list(paths.values()))
     dfs: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = spark.read.parquet(path)
+    for (name, path), schema in zip(paths.items(), schemas):
+        df = spark.read.schema(schema).parquet(path)
         try:
             import pyarrow.parquet as pq
 

@@ -16,9 +16,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jetro_spark.localrel import parquet_schemas
 from jetro_spark.timeutil import ts_to_timestamp
-
-_STREAM_SCHEMA_CACHE: dict[tuple[str, str], T.StructType] = {}
 
 
 def event_time(c: Column) -> Column:
@@ -57,31 +56,23 @@ def read_table_stream(spark: SparkSession, sf_dir: str, table: str,
     link = os.path.join(d, f"{table}.parquet")
     if not os.path.exists(link):
         os.symlink(src, link)
-    # File streams need an explicit schema; take it from the batch reader
-    # so ts keeps whatever physical representation this testdata
-    # generation uses (bigint nanos under nanosAsLong, or µs timestamp).
-    # The legacy conf is needed only for this one schema probe — restore
-    # the caller's value after (leaving it flipped would silently change
-    # how ALL later batch reads in a non-get_spark session decode
-    # TIMESTAMP(NANOS) columns), and cache per (session, file) so
-    # repeated stream builds don't re-read footers.
-    # spark.app.id is stable for the session's lifetime and never reused
-    # the way id(spark) can be after GC (classic and Connect both expose
-    # it); a fresh session gets a fresh cache entry.
-    key = (spark.conf.get("spark.app.id", "?"), src)
-    schema = _STREAM_SCHEMA_CACHE.get(key)
-    if schema is None:
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        old = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
-        try:
-            schema = spark.read.parquet(src).schema
-        finally:
-            if old is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, old)
-        _STREAM_SCHEMA_CACHE[key] = schema
+    # File streams need an explicit schema; take it from the footer, as
+    # the batch tables do, so ts keeps whatever physical representation
+    # this testdata generation uses (bigint nanos under nanosAsLong, or
+    # µs timestamp). The legacy conf is needed only for this one schema
+    # read — restore the caller's value after (leaving it flipped would
+    # silently change how ALL later batch reads in a non-get_spark
+    # session decode TIMESTAMP(NANOS) columns).
+    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(conf_key, None)
+    spark.conf.set(conf_key, "true")
+    try:
+        [schema] = parquet_schemas(spark, [src])
+    finally:
+        if old is None:
+            spark.conf.unset(conf_key)
+        else:
+            spark.conf.set(conf_key, old)
     r = spark.readStream.schema(schema).option("nanosAsLong", "true")
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))

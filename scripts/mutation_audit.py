@@ -461,6 +461,25 @@ def count_by''',
         [pytest("tests/test_ingest_schema.py", "-k",
                 "null_element_is_part_of_the_shape")],
     ),
+    # --- table load: schemas from the parquet footers, no Spark job
+    (
+        "footer_schema_before_nanos_conf",
+        "load_tables reads the footer schemas AFTER setting nanosAsLong: "
+        "Spark's footer converter reads the session conf, and without it "
+        "a TIMESTAMP(NANOS) column does not convert",
+        "jetro_spark/session.py",
+        """    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    paths = {name: os.path.join(sf_dir, f"{name}.parquet") for name in TABLES}
+    paths = {name: p for name, p in paths.items() if os.path.exists(p)}
+    schemas = parquet_schemas(spark, list(paths.values()))
+""",
+        """    paths = {name: os.path.join(sf_dir, f"{name}.parquet") for name in TABLES}
+    paths = {name: p for name, p in paths.items() if os.path.exists(p)}
+    schemas = parquet_schemas(spark, list(paths.values()))
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+""",
+        [pytest("tests/test_load_tables.py", "-k", "nanosecond")],
+    ),
     # --- r14: remove/unique val_to_key semantics (r13 verdict item 4)
     (
         "remove_path_arg_predicate",

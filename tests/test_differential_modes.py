@@ -651,3 +651,26 @@ def test_let_bound_sources_agree(spark, mids, body, sink, nested):
         doc_cmp = [_j(next(iter(e.values()))) for e in doc_out]
     assert doc_cmp == rel_cmp, (
         f"order divergence for {expr!r}:\n doc={doc_out}\n rel={rel_out}")
+
+
+@pytest.mark.parametrize("expr,want", [
+    ("$.s.map(x).filter(x > 2)", []),
+    ("$.s.map(x).map(x)", [None] * 4),
+    ("$.s.map(x).filter(@ > 2)", [3.0, 4.0]),
+    ("let t = 2 in $.s.map(x).filter(@ > t)", [3.0, 4.0]),
+    ("$.s.map(x).map({y: x, z: @})",
+     [{"y": None, "z": float(i)} for i in range(1, 5)]),
+])
+def test_scalar_pipeline_bare_name_is_a_field_of_the_element(
+        spark, expr, want):
+    """In a scalar pipeline a bare name is a field access on the element
+    (null on a number), as in document mode — not the frame column that
+    holds the elements, which has the name the map read. `@` and
+    let-bound names still resolve."""
+    doc = {"s": [{"x": float(i)} for i in range(1, 5)]}
+    df = spark.createDataFrame([(float(i),) for i in range(1, 5)],
+                               "x double")
+    doc_out = Jetro.from_value(spark, doc).collect(expr)
+    assert doc_out == want
+    rel_out = _rel_result(JetroTables(spark, {"s": df}).query(expr))
+    assert _norm(rel_out) == _norm(want), (expr, rel_out)

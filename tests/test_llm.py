@@ -957,6 +957,47 @@ def test_hashed_embedding_idf_downweights_ubiquitous_tokens(spark):
     assert min(idfv[nz[0]], idfv[nz[1]]) < max(idfv[nz[0]], idfv[nz[1]])
 
 
+def test_hashed_embedding_idf_null_id_contract(spark):
+    """idf=True: a null-id document counts in the corpus size N but not
+    in any bucket's document frequency, and gets the zero vector. Pinned
+    against weights computed by hand: tf ln(1 + count), idf
+    ln((N+1)/(df+1)) + 1, each rounded to 6 dp, then L2-normalized."""
+    import hashlib
+    import math
+
+    from jetro_spark.llm.similarity import hashed_embedding
+
+    dim, seed = 64, 9
+    docs = spark.createDataFrame(
+        [(1, "apple banana"), (2, "banana cherry cherry"),
+         (None, "apple apple durian")], "doc_id long, text string")
+
+    def bucket(tok):
+        h = hashlib.md5(f"{tok}:{seed}".encode()).hexdigest()
+        return int(h[:8], 16) % dim
+
+    toks = ("apple", "banana", "cherry", "durian")
+    assert len({bucket(t) for t in toks}) == len(toks)  # no collisions
+    n = 3  # the null-id document counts in N ...
+    df = {"apple": 1, "banana": 2, "cherry": 1}  # ... but in no df
+
+    def expect(counts):
+        v = [0.0] * dim
+        for tok, c in counts.items():
+            idf = round(math.log((n + 1) / (df[tok] + 1)) + 1, 6)
+            v[bucket(tok)] = round(round(math.log(1 + c), 6) * idf, 6)
+        norm = math.sqrt(sum(x * x for x in v))
+        return [x / norm for x in v]
+
+    got = {r["doc_id"]: r["embedding"] for r in
+           hashed_embedding(docs, dim=dim, seed=seed, idf=True).collect()}
+    assert set(got) == {1, 2, None}
+    for doc_id, counts in ((1, {"apple": 1, "banana": 1}),
+                           (2, {"banana": 1, "cherry": 2})):
+        assert got[doc_id] == pytest.approx(expect(counts), abs=1e-9)
+    assert got[None] == [0.0] * dim
+
+
 def test_pii_mask(spark):
     """r9: emails masked before phones (a number inside an address must
     never half-match the phone shape); non-PII text untouched."""

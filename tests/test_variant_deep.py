@@ -7,6 +7,8 @@ variant instead of a lossy string cast.
 
 from __future__ import annotations
 
+import json
+
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
@@ -67,3 +69,18 @@ def test_conflicting_leaf_types_keep_their_kind(spark):
 def test_depth_bound_does_not_truncate_reasonable_docs(spark):
     nested = '{"x": {"x": {"x": {"x": {"x": {"x": 1}}}}}}'
     assert variant_q(spark, nested, "$..x.len()") == 6
+
+
+def test_variant_numbers_collect_as_jetro_numbers(spark):
+    # the variant stores 2.5 (and any number outside the long range) as
+    # a decimal; collected, it is a float or an int like every other
+    # number, so the result is JSON again
+    j = Jetro.from_value(spark, {"r": [1, "x", 2.5, {"b": [0.25, 7]},
+                                       12345678901234567890]})
+    assert j.collect("$.r[2]") == 2.5
+    got = j.collect("$.r")
+    assert json.loads(json.dumps(got)) == [1, "x", 2.5, {"b": [0.25, 7]},
+                                           12345678901234567890]
+    assert [type(x) for x in got[:3]] == [int, str, float]
+    assert type(got[4]) is int
+    assert json.dumps(j.collect("$.r[3].b")) == "[0.25, 7]"
