@@ -67,24 +67,6 @@ def jt_truthy(col: Column, dtype: T.DataType | None = None) -> Column:
     return col.isNotNull()
 
 
-def jt_filter_cond(col: Column, dtype: T.DataType | None = None) -> Column:
-    """Truthiness for DataFrame Filter/Join conditions. Spark already
-    treats a null condition as false there, so booleans stay BARE:
-    wrapping them in coalesce(=, false) blocks Catalyst's equi-join key
-    extraction (ExtractEquiJoinKeys needs naked `a = b` conjuncts) and
-    downgrades hash joins to BroadcastNestedLoopJoin."""
-    if isinstance(dtype, T.BooleanType):
-        return col
-    return jt_truthy(col, dtype)
-
-
-def jt_pred(col: Column) -> Column:
-    """Wrap a boolean predicate so NULL compares as false (jetro ordered
-    comparison of incomparable values → false, never null).
-    Reference: jetro-core/src/util.rs:140-168."""
-    return F.coalesce(col, F.lit(False))
-
-
 def jt_div(a: Column, b: Column) -> Column:
     """Jetro ``/`` is always float division (int/int promotes to double).
     Reference: jetro-core/src/parse/ast.rs:368-370."""

@@ -1,18 +1,24 @@
-"""Object transforms & path operations (SURVEY.md §2.7-2.8).
+"""Object transforms & path reads (SURVEY.md §2.7-2.8).
 
 Jetro objects are insertion-ordered maps (IndexMap, value.rs:47). Two
 Spark representations, both handled here:
 
 - **struct** (static schema — the common case after JSON ingest): key
-  sets are plan-time constants, so keys/pick/omit/merge/rename/set/
-  update/has compile to pure struct rebuilds — zero runtime key lookup,
-  full whole-stage codegen.
+  sets are plan-time constants, so keys/pick/omit/merge/rename/has
+  compile to pure struct rebuilds — zero runtime key lookup, full
+  whole-stage codegen.
 - **objrepr** ``array<struct<key,value>>`` (dynamic keys — group_by
   output, transform_keys results): runtime entry manipulation with array
   HOFs.
 
 Functions take (Column, DataType) and return (Column, DataType) so the
 compiler keeps static types flowing.
+
+This module writes at no path. Every write at a path — ``set``,
+``update``, ``set_path``, ``del_path``, ``del_paths``,
+``unflatten_keys``, and ``patch`` and the chain writes — goes through
+the one struct writer in ``jetro_spark.jql.patch``. The shaping ops
+here (pick/omit/rename/merge/...) take key lists, not paths.
 
 Reference: ops/path.rs:203-350 (path ops), ops/array.rs:1006-1072
 (transform/filter keys/values), ops/collection.rs:648-730 (entries,
@@ -50,7 +56,7 @@ def _objrepr(value_dt: T.DataType) -> T.ArrayType:
         T.StructField("value", value_dt, True)]))
 
 
-def _require_struct(dt) -> T.StructType:
+def require_struct(dt) -> T.StructType:
     if not isinstance(dt, T.StructType):
         raise ObjError(f"expected object (struct), got {dt}")
     return dt
@@ -61,13 +67,13 @@ def _require_struct(dt) -> T.StructType:
 
 def keys(col: Column, dt: T.DataType):
     """Reference: ops/array.rs:1042."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     return F.array(*[F.lit(f.name) for f in st.fields]), T.ArrayType(T.StringType())
 
 
 def values(col: Column, dt: T.DataType):
     """Reference: ops/misc.rs:21."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     vdt = _unify([f.dataType for f in st.fields])
     return (F.array(*[col.getField(f.name).cast(vdt) for f in st.fields]),
             T.ArrayType(vdt))
@@ -76,7 +82,7 @@ def values(col: Column, dt: T.DataType):
 def entries(col: Column, dt: T.DataType):
     """entries / to_pairs → ordered [{key, value}].
     Reference: ops/collection.rs:648."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     vdt = _unify([f.dataType for f in st.fields])
     arr = F.array(*[
         F.struct(F.lit(f.name).alias("key"),
@@ -109,7 +115,7 @@ def from_pairs(col: Column, dt: T.DataType):
 
 def invert(col: Column, dt: T.DataType):
     """{k: v} → {str(v): k}. Reference: ops/collection.rs:688."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     arr = F.array(*[
         F.struct(col.getField(f.name).cast("string").alias("key"),
                  F.lit(f.name).alias("value"))
@@ -123,7 +129,7 @@ def invert(col: Column, dt: T.DataType):
 def pick(col: Column, dt: T.DataType, picks: list[tuple[str, str]]):
     """pick(k, alias: src, …) — subset with optional renames; missing
     source keys yield null fields. Reference: ops/path.rs:225-276."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     names = set(st.fieldNames())
     cols, fields = [], []
     for out_name, src in picks:
@@ -138,7 +144,7 @@ def pick(col: Column, dt: T.DataType, picks: list[tuple[str, str]]):
 
 def omit(col: Column, dt: T.DataType, drop: list[str]):
     """Reference: ops/path.rs:277-316."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     keep = [f for f in st.fields if f.name not in set(drop)]
     return (F.struct(*[col.getField(f.name).alias(f.name) for f in keep]),
             T.StructType(keep))
@@ -147,7 +153,7 @@ def omit(col: Column, dt: T.DataType, drop: list[str]):
 def merge(a: Column, adt: T.DataType, b: Column, bdt: T.DataType):
     """Shallow right-wins merge, left key order then new right keys.
     Reference: ops/collection.rs:697."""
-    ast, bst = _require_struct(adt), _require_struct(bdt)
+    ast, bst = require_struct(adt), require_struct(bdt)
     bnames = set(bst.fieldNames())
     cols, fields = [], []
     for f in ast.fields:
@@ -167,7 +173,7 @@ def merge(a: Column, adt: T.DataType, b: Column, bdt: T.DataType):
 def deep_merge(a: Column, adt: T.DataType, b: Column, bdt: T.DataType):
     """Recursive merge: nested objects merge, everything else right wins.
     Reference: util.rs:457-516."""
-    ast, bst = _require_struct(adt), _require_struct(bdt)
+    ast, bst = require_struct(adt), require_struct(bdt)
     bnames = set(bst.fieldNames())
     cols, fields = [], []
     for f in ast.fields:
@@ -194,7 +200,7 @@ def deep_merge(a: Column, adt: T.DataType, b: Column, bdt: T.DataType):
 def defaults(a: Column, adt: T.DataType, b: Column, bdt: T.DataType):
     """Left wins; right only fills nulls / missing keys.
     Reference: ops/collection.rs:715."""
-    ast, bst = _require_struct(adt), _require_struct(bdt)
+    ast, bst = require_struct(adt), require_struct(bdt)
     bnames = set(bst.fieldNames())
     cols, fields = [], []
     for f in ast.fields:
@@ -215,7 +221,7 @@ def defaults(a: Column, adt: T.DataType, b: Column, bdt: T.DataType):
 
 def rename(col: Column, dt: T.DataType, mapping: dict[str, str]):
     """rename({old: new}) keeps position. Reference: ops/collection.rs:730."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     cols, fields = [], []
     for f in st.fields:
         nm = mapping.get(f.name, f.name)
@@ -224,30 +230,10 @@ def rename(col: Column, dt: T.DataType, mapping: dict[str, str]):
     return F.struct(*cols), T.StructType(fields)
 
 
-def set_key(col: Column, dt: T.DataType, key: str, value: Column,
-            vdt: T.DataType):
-    """set(k, v): replace in place or append. Reference: mod.rs:232."""
-    st = _require_struct(dt)
-    cols, fields = [], []
-    replaced = False
-    for f in st.fields:
-        if f.name == key:
-            cols.append(value.alias(key))
-            fields.append(T.StructField(key, vdt, True))
-            replaced = True
-        else:
-            cols.append(col.getField(f.name).alias(f.name))
-            fields.append(f)
-    if not replaced:
-        cols.append(value.alias(key))
-        fields.append(T.StructField(key, vdt, True))
-    return F.struct(*cols), T.StructType(fields)
-
-
 def has_keys(col: Column, dt: T.DataType, names: list[str]):
     """has(k, …): all keys present — a plan-time constant on structs.
     Reference: ops/misc.rs:123."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     present = set(st.fieldNames())
     return F.lit(all(n in present for n in names)), T.BooleanType()
 
@@ -267,7 +253,7 @@ def transform_keys(col: Column, dt: T.DataType, fn):
 def transform_values(col: Column, dt: T.DataType, fn_with_dt):
     """Values transformed per field, struct shape kept.
     ``fn_with_dt(col, dtype) -> (col, dtype)``. Reference: ops/array.rs:1017."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     cols, fields = [], []
     for f in st.fields:
         v, vdt = fn_with_dt(col.getField(f.name), f.dataType)
@@ -284,7 +270,7 @@ def filter_keys(col: Column, dt: T.DataType, pred):
 
 def filter_values(col: Column, dt: T.DataType, pred_with_dt):
     """Reference: ops/array.rs:1039."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     ent, ent_dt = entries(col, dt)
     vdt = ent_dt.elementType["value"].dataType
     return F.filter(ent, lambda e: pred_with_dt(e["value"], vdt)), ent_dt
@@ -293,7 +279,7 @@ def filter_values(col: Column, dt: T.DataType, pred_with_dt):
 # -------------------------------------------------------------- path ops
 
 
-def _split_path(path: str) -> list[str]:
+def split_path(path: str) -> list[str]:
     return [p for p in path.split(".") if p]
 
 
@@ -301,7 +287,7 @@ def get_path(col: Column, dt: T.DataType, path: str):
     """get_path("a.b.c") — deep get, null when absent.
     Reference: ops/path.rs:203."""
     cur, cur_dt = col, dt
-    for p in _split_path(path):
+    for p in split_path(path):
         if isinstance(cur_dt, T.StructType) and p in cur_dt.fieldNames():
             cur, cur_dt = cur.getField(p), cur_dt[p].dataType
         else:
@@ -313,7 +299,7 @@ def has_path(col: Column, dt: T.DataType, path: str):
     """Structural presence — plan-time on static schemas.
     Reference: ops/path.rs:210."""
     cur_dt = dt
-    for p in _split_path(path):
+    for p in split_path(path):
         if isinstance(cur_dt, T.StructType) and p in cur_dt.fieldNames():
             cur_dt = cur_dt[p].dataType
         else:
@@ -321,56 +307,10 @@ def has_path(col: Column, dt: T.DataType, path: str):
     return F.lit(True), T.BooleanType()
 
 
-def set_path(col: Column, dt: T.DataType, path: str, value: Column,
-             vdt: T.DataType):
-    """set_path("a.b.c", v): immutable deep set, intermediate objects
-    created as needed. Reference: ops/path.rs:324."""
-    parts = _split_path(path)
-
-    def rec(c: Column, d: T.DataType, i: int):
-        if i == len(parts):
-            return value, vdt
-        key = parts[i]
-        st = d if isinstance(d, T.StructType) else T.StructType([])
-        inner_c = c.getField(key) if key in st.fieldNames() else F.lit(None)
-        inner_dt = st[key].dataType if key in st.fieldNames() else T.StructType([])
-        new_c, new_dt = rec(inner_c, inner_dt, i + 1)
-        # when d isn't a struct the receiver column is never referenced by
-        # set_key (empty field list), so a null placeholder is safe
-        return set_key(c if isinstance(d, T.StructType) else F.lit(None),
-                       st, key, new_c, new_dt)
-
-    return rec(col, dt, 0)
-
-
-def del_path(col: Column, dt: T.DataType, path: str):
-    """Reference: ops/path.rs:317."""
-    parts = _split_path(path)
-
-    def rec(c: Column, d: T.DataType, i: int):
-        st = _require_struct(d)
-        key = parts[i]
-        if key not in st.fieldNames():
-            return c, d
-        if i == len(parts) - 1:
-            return omit(c, d, [key])
-        new_c, new_dt = rec(c.getField(key), st[key].dataType, i + 1)
-        return set_key(c, st, key, new_c, new_dt)
-
-    return rec(col, dt, 0)
-
-
-def del_paths(col: Column, dt: T.DataType, paths: list[str]):
-    """Reference: ops/path.rs:331."""
-    for p in paths:
-        col, dt = del_path(col, dt, p)
-    return col, dt
-
-
 def flatten_keys(col: Column, dt: T.DataType):
     """Nested object → flat {"a.b.c": leaf} (objrepr, document order).
     Reference: ops/path.rs:342."""
-    st = _require_struct(dt)
+    st = require_struct(dt)
     leaves: list[tuple[str, Column, T.DataType]] = []
 
     def walk(c: Column, d: T.DataType, prefix: str) -> None:
@@ -387,17 +327,3 @@ def flatten_keys(col: Column, dt: T.DataType):
         F.struct(F.lit(k).alias("key"), c.cast(vdt).alias("value"))
         for k, c, _ in leaves])
     return arr, _objrepr(vdt)
-
-
-def unflatten_keys(col: Column, dt: T.DataType):
-    """Flat {"a.b.c": v} struct (dotted static field names) → nested
-    struct. Static-schema inverse of flatten_keys; dynamic objrepr input
-    would need runtime schema synthesis, which Spark cannot express.
-    Reference: ops/path.rs:350."""
-    st = _require_struct(dt)
-    out_c: Column = F.lit(None)
-    out_dt: T.DataType = T.StructType([])
-    for f in st.fields:
-        out_c, out_dt = set_path(out_c, out_dt, f.name, col.getField(f.name),
-                                 f.dataType)
-    return out_c, out_dt

@@ -42,91 +42,40 @@ def _modules():
             jql, llm, ranking, hof, streaming, benchlock)
 
 
-# The driver's correctness run samples the FIRST 50 registry rows; this
-# tier lists one representative per operator family so the sample spans
-# the whole surface (relational core, extended joins, scalars, windows,
-# time series, profiling, JQL language, LLM-pipeline ops, HOFs,
-# streaming, doc-suite) instead of exhausting itself on the first two
-# modules. Every row still runs in the full local gate
+# A correctness run that samples only the FIRST 50 registry rows reads
+# this tier first: at least one representative per operator family, so
+# the sample spans the whole surface instead of exhausting itself on the
+# first two modules. A row rotated out still runs in the full local gate
 # (scripts/check_oracle.py); tiering changes sampling coverage only.
 _TIER1 = [
     # relational core
     "filter_map", "sort_take", "group_agg", "join3_revenue", "count_by",
     "index_by", "max_by", "pivot", "implode", "approx_count_distinct",
-    # extended joins ("salted_join" rotated out in r10 for gram_overlap;
-    # "range_join" rotated out in r11 for mm_resize — asof_join keeps
-    # the non-equi join shape driver-visible and the join family keeps
-    # four tier-1 reps; rotated-out rows still run in the full local
-    # gate)
+    # extended joins
     "equi_join", "asof_join", "join_semi",
-    # r14 rotation (verdict item 1): "bucketed_join" rotates out — the
-    # join family keeps three tier-1 reps (equi/asof/semi) and
-    # bucketed_join still runs in the full local gate.
-    # scalar functions ("encoding" rotated out in r7 for simhash_pairs;
-    # "parse_cast" rotated out in r8 for bm25_topk so the new ranking
-    # family is driver-visible — the scalar family keeps two
-    # representatives; every rotated-out row still runs in the full
-    # local gate)
+    # scalar functions
     "string_case", "regex_ops",
-    # corpus-statistics ranking (r8)
+    # corpus-statistics ranking
     "bm25_topk",
-    # window builtins ("win_zscore" rotated out in r14 — win_lag_lead
-    # keeps the window family driver-visible)
+    # window builtins
     "win_lag_lead",
-    # time series ("rollup_gapfill" rotated out in r9 for funnel_step;
-    # "sessionize" rotated out in r10 for funnel_unordered;
-    # "funnel_unordered" rotated out in r13 for semantic_keep —
-    # funnel_step keeps the funnel family driver-visible)
+    # time series
     "time_bucket", "funnel_step",
     # profiling / contracts
     "group_quantiles", "profile_table", "check_constraints",
-    # JQL language (doc + relational modes). r14 adds "path_ops" —
-    # §2.8's only gate row (get/set/del/has_path, flatten/unflatten
-    # keys), never driver-visible through r13.
+    # JQL language (doc + relational modes)
     "jql_filter_map", "jql_patch", "jql_window", "jql_comprehension",
     "jql_variant_deep", "deep_search", "path_ops",
-    # LLM-pipeline operators (r9 rotations: ann_topk → temp_mixture so
-    # the sampling family gets a tier-1 rep — ann_ivf_trained already
-    # embeds the brute-force recall baseline in-plan; label_centroids →
-    # tfidf_embed; text_stats → pii_mask — quality_filters keeps the
-    # text-stats style covered)
-    # r12 rotation (verdict item 3): dedup_lines (C4 line rule) and
-    # dedup_spans (Lee et al. exact-substring spans) — the two most
-    # distinctive corpus-dedup operators — become driver-visible;
-    # simhash_pairs rotates out (the dedup family keeps four reps:
-    # exact, lsh, cluster, lines/spans) and pack_cumsum rotates out
-    # (pipeline_demo exercises packing downstream). Rotated-out rows
-    # still run in the full local gate.
+    # LLM-pipeline operators: dedup, semantic dedup, sampling,
+    # similarity, ranking, text, multimodal
     "dedup_exact", "dedup_lsh", "dedup_cluster", "dedup_lines",
     "dedup_spans",
-    # r13 rotation (verdict item 1): semantic_dedup (SemDeDup pairs)
-    # and semantic_keep (the retention row whose DuckDB unbounded-pairs
-    # anti-select oracle PROVES the r12 byte-exact pre-collapse is
-    # output-invariant) become driver-visible — the r12 headline scale
-    # fix had no driver CORRECTNESS row. Rotated out: funnel_unordered
-    # (funnel_step keeps the family) and mm_decode (mm_resize runs
-    # decode downstream). Both still run in the full local gate.
     "semantic_dedup", "semantic_keep",
     "temp_mixture",
-    # r10 rotation: gram_overlap (cross-source shared-n-gram counts)
-    # joins the tier-1 text family alongside pii_mask/quality_filters
-    # r14 rotation (verdict item 1): ann_pq (the recall-gated IVF-PQ —
-    # the hardest similarity row) and ngram_lm (bigram-LM perplexity,
-    # the ranking family's heaviest row) become driver-visible;
-    # quality_filters rotates out (pii_mask/gram_overlap keep the text
-    # family covered). All rotated-out rows still run in the full
-    # local gate.
     "ann_ivf_trained", "ann_pq", "tfidf_embed", "ngram_lm", "pii_mask",
     "gram_overlap", "pipeline_demo",
-    # r11 rotation: the two r10 operators become driver-visible —
-    # mm_resize (aspect-preserving image resize plumbing, replaces
-    # range_join) and quality_logit (hashed-feature linear quality
-    # classifier, replaces doc_bl_q10 — doc_bl_q5 keeps the doc
-    # bench-suite family covered)
     "mm_resize", "quality_logit",
-    # HOFs / streaming / doc-suite. r14: "stream_state" (the
-    # applyInPandasWithState leg) becomes driver-visible; "hof_stream"
-    # rotates out (the jql_* rows keep HOF lowering covered).
+    # HOFs / streaming / doc-suite
     "win_tumbling", "stream_interval_join", "stream_state", "doc_bl_q5",
 ]
 

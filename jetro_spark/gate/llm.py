@@ -30,7 +30,7 @@ def _docs(spark: SparkSession, sf_dir: str, fan: bool = False) -> DataFrame:
     a win exactly where per-row compute (tokenize/hash/explode)
     dominates, a loss where a map-side partial aggregate would have
     collapsed the data before its first exchange (r14 measurements in
-    OPTIMIZATION_r14.md)."""
+    SCALE.md, "Measured decisions")."""
     d = load_tables(spark, sf_dir, register=False)["documents"]
     return fan_out(d) if fan else d
 

@@ -23,6 +23,7 @@ Reference: jetro-core/src/parse/ast.rs (AST), jc/compile/compiler.rs
 
 from __future__ import annotations
 
+import dataclasses
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column
@@ -48,7 +49,6 @@ from jetro_spark.functions.core import (
     jt_type_of,
 )
 from jetro_spark.jql import ast as A
-from jetro_spark.jql.parser import parse
 
 NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
            T.FloatType, T.DoubleType, T.DecimalType)
@@ -290,6 +290,13 @@ class Env:
 
     def with_root(self, tc: TC) -> "Env":
         return Env(tc, self.current, self.locals, self.py_eval, self.at)
+
+
+def _no_py_eval(env: Env) -> Env:
+    """``env`` for a per-element lambda body: ``py_eval`` evaluates against
+    the one-row document frame, where a lambda variable does not
+    resolve, so the body compiles as if it had no document context."""
+    return dataclasses.replace(env, py_eval=None)
 
 
 def field_access(tc: TC, name: str) -> TC:
@@ -859,6 +866,7 @@ class Compiler:
             params, body = node.params, node.body
         else:
             params, body = [], node
+        env = _no_py_eval(env)
 
         def env_for(x: Column) -> Env:
             e = env.with_current(TC(x, elem_dt))
@@ -881,6 +889,7 @@ class Compiler:
         if not isinstance(node, A.Lambda) or len(node.params) != 2:
             raise CompileError("expected a two-parameter lambda")
         pa, pb = node.params
+        env = _no_py_eval(env)
 
         def env_for(a: Column, b: Column) -> Env:
             return env.bind(pa, TC(a, dt_a)).bind(pb, TC(b, dt_b))
@@ -2344,28 +2353,47 @@ def m_intersect(self, recv, args, env):
     return TC(AR.intersect(recv.col, other.col), recv.dtype)
 
 
-def _widen_elems(arr: Column, st: T.StructType, to: T.StructType) -> Column:
-    """array<struct st> → array<struct to>: fields absent from st pad
-    with typed nulls (the _deep_collect pad, applied element-wise).
-    A VARIANT target field (cross-family conflict, r12) converts via
-    to_variant — a plain cast would ANSI-coerce (string→bigint crashed
-    the union widen on the first non-numeric key)."""
+def names_differ(a: T.DataType, b: T.DataType) -> bool:
+    """Both are structs and, at some level of their common fields, their
+    field-name lists differ — where a struct cast fails (or pairs the
+    fields by position) and ``widen_struct`` must rebuild by name."""
+    if not (isinstance(a, T.StructType) and isinstance(b, T.StructType)):
+        return False
+    if a.fieldNames() != b.fieldNames():
+        return True
+    return any(names_differ(fa.dataType, fb.dataType)
+               for fa, fb in zip(a.fields, b.fields))
+
+
+def widen_struct(c: Column, st: T.StructType, to: T.StructType) -> Column:
+    """struct ``st`` → struct ``to`` by field name: fields absent from st
+    pad with typed nulls (the _deep_collect pad), struct fields whose
+    names differ widen the same way, others cast. A VARIANT target field
+    (cross-family conflict, r12) converts via to_variant — a plain cast
+    would ANSI-coerce (string→bigint crashed the union widen on the
+    first non-numeric key). Serves union's element widen and the
+    element writes of ``patch``."""
     from jetro_spark.functions.core import to_variant
 
     names = {f.name: f.dataType for f in st.fields}
 
-    def conv(c: Column, f: T.StructField) -> Column:
+    def conv(f: T.StructField) -> Column:
         if f.name not in names:
-            return F.lit(None).cast(f.dataType.simpleString()).alias(f.name)
-        src = names[f.name]
+            return F.lit(None).cast(f.dataType.simpleString())
+        src, sub = names[f.name], c.getField(f.name)
         if isinstance(f.dataType, T.VariantType) \
                 and not isinstance(src, T.VariantType):
-            return to_variant(c.getField(f.name), src).alias(f.name)
-        return (c.getField(f.name).cast(f.dataType.simpleString())
-                .alias(f.name))
+            return to_variant(sub, src)
+        if names_differ(src, f.dataType):
+            return widen_struct(sub, src, f.dataType)
+        return sub.cast(f.dataType.simpleString())
 
-    return F.transform(arr, lambda c: F.struct(
-        *[conv(c, f) for f in to.fields]))
+    return F.struct(*[conv(f).alias(f.name) for f in to.fields])
+
+
+def _widen_elems(arr: Column, st: T.StructType, to: T.StructType) -> Column:
+    """array<struct st> → array<struct to>, element-wise widen_struct."""
+    return F.transform(arr, lambda c: widen_struct(c, st, to))
 
 
 def m_union(self, recv, args, env):
@@ -3300,6 +3328,21 @@ def m_rename(self, recv, args, env):
     return TC(c, d)
 
 
+def _write_keys(self, recv, keys, leaf, env, require_object=True):
+    """A path builtin's write (set/update/set_path/del_path): the one
+    struct writer, ``patch.write_keys``."""
+    from jetro_spark.jql.patch import write_keys
+
+    if require_object:
+        OB.require_struct(recv.dtype)
+    return write_keys(self, recv, keys, leaf, env)
+
+
+def _value(self, node, env) -> TC:
+    v = self.compile(node, env)
+    return TC(v.col, v.dtype or T.NullType())
+
+
 def m_set(self, recv, args, env):
     if len(args) == 1:
         # non-rooted chain-write form: `x | set(v)` / `o.id.set(99)` in a
@@ -3307,9 +3350,8 @@ def m_set(self, recv, args, env):
         # phaseb_lambda_body_writes_dont_leak_outside)
         return self.compile(args[0].value, env)
     key = _const_str(args, 0)
-    v = self.compile(args[1].value, env)
-    c, d = OB.set_key(recv.col, recv.dtype, key, v.col, v.dtype or T.NullType())
-    return TC(c, d)
+    v = _value(self, args[1].value, env)
+    return _write_keys(self, recv, [key], lambda old: v, env)
 
 
 def m_modify(self, recv, args, env):
@@ -3326,10 +3368,11 @@ def m_update(self, recv, args, env):
         fn, odt = self._lam(args[0].value, env, recv.dtype)
         return TC(fn(recv.col), odt or recv.dtype)
     key = _const_str(args, 0)
-    old = field_access(recv, key)
-    fn, odt = self._lam(args[1].value, env, old.dtype)
-    c, d = OB.set_key(recv.col, recv.dtype, key, fn(old.col), odt or T.NullType())
-    return TC(c, d)
+
+    def leaf(old: TC) -> TC:
+        fn, odt = self._lam(args[1].value, env, old.dtype)
+        return TC(fn(old.col), odt or T.NullType())
+    return _write_keys(self, recv, [key], leaf, env)
 
 
 def m_has(self, recv, args, env):
@@ -3387,18 +3430,25 @@ def m_has_path(self, recv, args, env):
 
 
 def m_set_path(self, recv, args, env):
-    v = self.compile(args[1].value, env)
-    c, d = OB.set_path(recv.col, recv.dtype, _const_str(args, 0), v.col,
-                       v.dtype or T.NullType())
-    return TC(c, d)
+    """set_path("a.b.c", v): missing or non-object intermediates become
+    objects, on any receiver. Reference: ops/path.rs:324."""
+    v = _value(self, args[1].value, env)
+    return _write_keys(self, recv, OB.split_path(_const_str(args, 0)),
+                       lambda old: v, env, require_object=False)
 
 
 def m_del_path(self, recv, args, env):
-    c, d = OB.del_path(recv.col, recv.dtype, _const_str(args, 0))
-    return TC(c, d)
+    """Reference: ops/path.rs:317."""
+    from jetro_spark.jql.patch import delete_leaf
+
+    return _write_keys(self, recv, OB.split_path(_const_str(args, 0)),
+                       delete_leaf, env)
 
 
 def m_del_paths(self, recv, args, env):
+    """Reference: ops/path.rs:331."""
+    from jetro_spark.jql.patch import delete_leaf
+
     arr = args[0].value
     if not isinstance(arr, A.ArrLit):
         raise CompileError("del_paths expects a literal array of paths")
@@ -3407,8 +3457,23 @@ def m_del_paths(self, recv, args, env):
         if not (isinstance(e.expr, A.Literal) and isinstance(e.expr.value, str)):
             raise CompileError("del_paths expects string literals")
         paths.append(e.expr.value)
-    c, d = OB.del_paths(recv.col, recv.dtype, paths)
-    return TC(c, d)
+    for p in paths:
+        recv = _write_keys(self, recv, OB.split_path(p), delete_leaf, env)
+    return recv
+
+
+def m_unflatten_keys(self, recv, args, env):
+    """Flat {"a.b.c": v} struct (dotted static field names) → nested
+    struct: one set_path per field, onto an empty object. Static-schema
+    inverse of flatten_keys; dynamic objrepr input would need runtime
+    schema synthesis, which Spark cannot express. Reference:
+    ops/path.rs:350."""
+    out = TC(F.lit(None), T.StructType([]))
+    for f in OB.require_struct(recv.dtype).fields:
+        v = TC(recv.col.getField(f.name), f.dataType)
+        out = _write_keys(self, out, OB.split_path(f.name),
+                          lambda old, v=v: v, env, require_object=False)
+    return out
 
 
 # ------------------------------------------- positional analytics (§2.6)
@@ -3528,7 +3593,7 @@ METHODS = {
     # path ops (§2.8)
     "get_path": m_get_path, "has_path": m_has_path,
     "set_path": m_set_path, "del_path": m_del_path, "del_paths": m_del_paths,
-    "flatten_keys": _ob1(OB.flatten_keys), "unflatten_keys": _ob1(OB.unflatten_keys),
+    "flatten_keys": _ob1(OB.flatten_keys), "unflatten_keys": m_unflatten_keys,
     # strings (§2.9)
     "upper": _s1(S.upper), "lower": _s1(S.lower),
     "capitalize": _s1(S.capitalize), "title_case": _s1(S.title_case),
@@ -3580,11 +3645,3 @@ METHODS = {
     "round": m_round, "abs": _s1(S.abs_, None),
 }
 METHODS.update({a: METHODS[c] for a, c in ALIASES.items()})
-
-
-# ---------------------------------------------------------------------------
-
-
-def compile_expr(src: str, root: TC) -> TC:
-    """Parse + compile a jetro expression against a document root."""
-    return Compiler().compile(parse(src), Env(root=root))

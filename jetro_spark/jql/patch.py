@@ -1,4 +1,12 @@
-"""Patch compilation: immutable deep writes as plan-time struct rebuilds.
+"""Path writes: immutable deep writes as plan-time struct rebuilds.
+
+This module is the one struct writer. ``patch`` clauses, chain writes
+(``.set``/``.modify``/``.delete``/``.unset``) and the path builtins
+(``set``/``update``/``set_path``/``del_path``/``del_paths``,
+``unflatten_keys``) all write through ``_write``; they differ only in
+the leaf callback that gives the new value at the end of the path
+(``leaf(old: TC) -> TC | _DELETE``). ``functions/objects.py`` keeps the
+object ops that have no path (pick/omit/merge/rename, ...).
 
 ``patch TARGET { path: value when guard?, ... }`` builds a NEW document;
 clauses apply sequentially, each seeing the previous clause's output,
@@ -24,6 +32,10 @@ Static-schema nuances vs the dynamic reference:
   one document, so the guard is a scalar — this mirrors the reference,
   which is single-document too). Inside HOF lambdas there is no such
   scalar context and those clauses are a compile error.
+- An array write that changes only SOME elements (`[n]`, `[* if p]`)
+  gives every element one type: the union of the old and new element
+  structs, null-padded. A field DELETEd from those elements therefore
+  reads back as null instead of being absent.
 """
 
 from __future__ import annotations
@@ -34,12 +46,27 @@ from pyspark.sql import types as T
 
 from jetro_spark.functions.core import jt_truthy
 from jetro_spark.jql import ast as A
-from jetro_spark.jql.compiler import TC, CompileError, _probe, unify
+from jetro_spark.jql.compiler import (TC, CompileError, _probe, names_differ,
+                                      unify, widen_struct)
 
-# leaf-delete sentinel: returned by _write when the remaining steps are
-# empty and the clause value is DELETE; each step handler turns it into
-# the matching removal (drop field / remove element / filter)
+# leaf-delete sentinel: returned by a leaf (and so by _write when the
+# remaining steps are empty); each step handler turns it into the
+# matching removal (drop field / remove element / filter)
 _DELETE = object()
+
+
+def delete_leaf(old: TC):
+    """The leaf of a DELETE: patch `DELETE` values, `.delete()`/`.unset`,
+    del_path and del_paths."""
+    return _DELETE
+
+
+def _value_leaf(comp, value: A.Node, env):
+    """The leaf of a patch clause or chain write: DELETE, or ``value``
+    compiled with `@` bound to the pre-write value at the path."""
+    if isinstance(value, A.Delete):
+        return delete_leaf
+    return lambda old: comp.compile(value, env.with_current(old))
 
 
 class PatchError(CompileError):
@@ -110,7 +137,8 @@ def compile_patch(comp, n: A.Patch, env):
 
 def _apply_clause(comp, col, dt, cl: A.PatchClause, env, orig):
     steps = [A.PatchStep("field", name=cl.root)] + list(cl.steps)
-    applied = _write(comp, col, dt, steps, cl.value, env)
+    applied = _write(comp, col, dt, steps, _value_leaf(comp, cl.value, env),
+                     env)
     if applied is _DELETE:  # `patch $ { x: DELETE }` with root-only path
         raise PatchError("internal: root-level DELETE must be handled by "
                          "the field step")
@@ -141,27 +169,37 @@ def _apply_clause(comp, col, dt, cl: A.PatchClause, env, orig):
         "the guard is not decidable in this context")
 
 
+def write_keys(comp, recv: TC, keys: list[str], leaf, env) -> TC:
+    """The path builtins' write: ``leaf`` at the field path ``keys`` below
+    ``recv`` (one key for set/update, the dotted path's parts for
+    set_path/del_path). Missing or non-object intermediates are created
+    for a value and left alone for a DELETE, as in a patch clause."""
+    steps = [A.PatchStep("field", name=k) for k in keys]
+    r = _write(comp, recv.col, recv.dtype, steps, leaf, env)
+    if r is _DELETE:
+        raise CompileError("cannot delete at an empty path")
+    return TC(*r)
+
+
 # ----------------------------------------------------------------- write
 
 
-def _write(comp, col: Column, dt, steps: list[A.PatchStep], value: A.Node, env):
-    """Apply one clause's write at `steps` below (col, dt). Returns
+def _write(comp, col: Column, dt, steps: list[A.PatchStep], leaf, env):
+    """Apply one write at `steps` below (col, dt), with ``leaf(old)``
+    giving the new value at the end of the path. Returns
     (new_col, new_dtype) or the _DELETE sentinel (leaf deletes)."""
     if not steps:
-        if isinstance(value, A.Delete):
-            return _DELETE
-        # `@` in the value = pre-write value at this path
-        v = comp.compile(value, env.with_current(TC(col, dt)))
-        return v.col, v.dtype
+        new = leaf(TC(col, dt))
+        return new if new is _DELETE else (new.col, new.dtype)
     st, rest = steps[0], steps[1:]
     if st.kind == "field":
-        return _write_field(comp, col, dt, st.name, rest, value, env)
+        return _write_field(comp, col, dt, st.name, rest, leaf, env)
     if st.kind == "index":
-        return _write_index(comp, col, dt, st, rest, value, env)
+        return _write_index(comp, col, dt, st, rest, leaf, env)
     if st.kind in ("wild", "wild_if"):
-        return _write_wild(comp, col, dt, st.pred, rest, value, env)
+        return _write_wild(comp, col, dt, st.pred, rest, leaf, env)
     if st.kind == "descendant":
-        return _write_descendant(comp, col, dt, st.name, rest, value, env)
+        return _write_descendant(comp, col, dt, st.name, rest, leaf, env)
     raise PatchError(f"unsupported patch step kind {st.kind!r}")
 
 
@@ -184,23 +222,23 @@ def _rebuild(col: Column, dt: T.StructType, name: str, new) -> tuple[Column, T.S
     if not seen and new is not _DELETE:
         cols.append(new[0].alias(name))
         fields.append(T.StructField(name, new[1], True))
-    if not cols:  # deleting the last field of a struct
-        return F.struct(F.lit(None).alias("__empty")), \
-            T.StructType([T.StructField("__empty", T.NullType(), True)])
+    # deleting the last field leaves the empty object: F.struct()
     return F.struct(*cols), T.StructType(fields)
 
 
-def _write_field(comp, col, dt, name, rest, value, env):
+def _write_field(comp, col, dt, name, rest, leaf, env):
     if isinstance(dt, T.StructType) and name in dt.fieldNames():
         sub_dt = dt[name].dataType
-        r = _write(comp, col.getField(name), sub_dt, rest, value, env)
+        r = _write(comp, col.getField(name), sub_dt, rest, leaf, env)
         return _rebuild(col, dt, name, r)
     # missing field (or non-object parent): synthesize, matching the
     # reference's walker which replaces non-objects and creates missing
     # intermediates (chain_write.rs batched_patch_insert_missing_field)
-    r = _write(comp, F.lit(None), T.NullType(), rest, value, env)
-    if r is _DELETE:
-        return col, dt  # deleting a missing field: no-op
+    r = _write(comp, F.lit(None), T.NullType(), rest, leaf, env)
+    if r is _DELETE or (rest and isinstance(r[1], T.NullType)):
+        # nothing was written below the missing field (a DELETE, or an
+        # index/wildcard step into the absent value): no-op
+        return col, dt
     if isinstance(dt, T.StructType):
         return _rebuild(col, dt, name, r)
     return F.struct(r[0].alias(name)), \
@@ -208,8 +246,14 @@ def _write_field(comp, col, dt, name, rest, value, env):
 
 
 def _coerce(c: Column, have, want) -> Column:
+    """An element of type ``have`` as the array's new element type. A
+    struct whose field names differ (a field added or deleted) is
+    rebuilt by name with null padding; a cast would fail, or pair the
+    fields by position."""
     if have == want or want is None:
         return c
+    if names_differ(have, want):
+        return widen_struct(c, have, want)
     return c.cast(want)
 
 
@@ -227,7 +271,7 @@ def _nullable(dt: T.DataType) -> T.DataType:
 
 def _unify_elem(comp, a, b):
     """The element type both the rewritten and the untouched elements of
-    an array write are cast to. Fully nullable: Spark refuses a cast that
+    an array write are converted to. Fully nullable: Spark refuses a cast that
     makes a nullable field NOT NULL, and Spark may type a rebuilt element
     nullable where the document's inferred schema says NOT NULL (element
     writes on ingested documents raised
@@ -239,7 +283,7 @@ def _unify_elem(comp, a, b):
     return _nullable(u)
 
 
-def _write_index(comp, col, dt, st: A.PatchStep, rest, value, env):
+def _write_index(comp, col, dt, st: A.PatchStep, rest, leaf, env):
     if not isinstance(dt, T.ArrayType):
         return col, dt  # indexing a non-array: no-op (reference: no panic)
     elem = dt.elementType
@@ -251,34 +295,38 @@ def _write_index(comp, col, dt, st: A.PatchStep, rest, value, env):
         pos = F.lit(st.index)
     else:
         pos = F.size(col) + F.lit(st.index)
-    probe = _write(comp, _probe(elem), elem, rest, value, env)
+    probe = _write(comp, _probe(elem), elem, rest, leaf, env)
     if probe is _DELETE:
         return F.filter(col, lambda x, i: i != pos), dt
     ndt = _unify_elem(comp, elem, probe[1])
 
     def tx(x: Column, i: Column) -> Column:
-        nc, nd = _write(comp, x, elem, rest, value, env)
+        nc, nd = _write(comp, x, elem, rest, leaf, env)
         return F.when(i == pos, _coerce(nc, nd, ndt)) \
             .otherwise(_coerce(x, elem, ndt))
 
     return F.transform(col, tx), T.ArrayType(ndt)
 
 
-def _write_wild(comp, col, dt, pred, rest, value, env):
+def _write_wild(comp, col, dt, pred, rest, leaf, env):
     if not isinstance(dt, T.ArrayType):
         return col, dt
     elem = dt.elementType
     # `[* if pred]` context = the element (SYNTAX.md:469-484)
     pred_fn = comp._pred(pred, env, elem) if pred is not None else None
-    probe = _write(comp, _probe(elem), elem, rest, value, env)
+    probe = _write(comp, _probe(elem), elem, rest, leaf, env)
     if probe is _DELETE:
         if pred_fn is None:
             return F.array().cast(dt), dt
         return F.filter(col, lambda x: ~pred_fn(x)), dt
     ndt = _unify_elem(comp, elem, probe[1])
+    if pred_fn is None and names_differ(probe[1], ndt):
+        # every element is rewritten: the fields the write deleted stay
+        # deleted instead of coming back null-padded
+        ndt = _nullable(probe[1])
 
     def tx(x: Column) -> Column:
-        nc, nd = _write(comp, x, elem, rest, value, env)
+        nc, nd = _write(comp, x, elem, rest, leaf, env)
         new = _coerce(nc, nd, ndt)
         if pred_fn is None:
             return new
@@ -287,7 +335,7 @@ def _write_wild(comp, col, dt, pred, rest, value, env):
     return F.transform(col, tx), T.ArrayType(ndt)
 
 
-def _write_descendant(comp, col, dt, name, rest, value, env):
+def _write_descendant(comp, col, dt, name, rest, leaf, env):
     """`..field` patch step: apply the write at EVERY field named `name`
     anywhere below (plan-time schema walk, same strategy as read-side
     deep search — SURVEY.md §2.10)."""
@@ -297,7 +345,7 @@ def _write_descendant(comp, col, dt, name, rest, value, env):
             for f in d.fields:
                 sub = c.getField(f.name)
                 if f.name == name:
-                    r = _write(comp, sub, f.dataType, rest, value, env)
+                    r = _write(comp, sub, f.dataType, rest, leaf, env)
                     if r is _DELETE:
                         continue
                     nc, nd = r
@@ -305,10 +353,8 @@ def _write_descendant(comp, col, dt, name, rest, value, env):
                     nc, nd = walk(sub, f.dataType)
                 cols.append(nc.alias(f.name))
                 fields.append(T.StructField(f.name, nd, True))
-            if not cols:
-                # every field deleted → EMPTY object {}, not the
-                # original (tier1_chain_descendant_delete)
-                return F.expr("named_struct()"), T.StructType([])
+            # every field deleted → EMPTY object {}, not the original
+            # (tier1_chain_descendant_delete)
             return F.struct(*cols), T.StructType(fields)
         if isinstance(d, T.ArrayType):
             # element dtype is uniform → walk a probe for the new dtype,

@@ -210,17 +210,6 @@ def minhash_lsh_pairs(
     return verified
 
 
-def minhash_lsh_dedup(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", **kw) -> DataFrame:
-    """Keep one representative per near-duplicate group: drop every doc
-    that matched a lower-id doc (min-id representative — a single pass,
-    not full transitive closure; chains A~B~C with A!~C keep A and C,
-    which is the standard one-round LSH-dedup contract)."""
-    pairs = minhash_lsh_pairs(df, id_col, text_col, **kw)
-    losers = pairs.select(F.col("b_id").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
-
-
 # ------------------------------------------------------------- simhash
 
 

@@ -27,6 +27,7 @@ ENGINE = "jetro_spark/jql/engine.py"
 RELATIONAL = "jetro_spark/operators/relational.py"
 ARRAYS = "jetro_spark/functions/arrays.py"
 CORE = "jetro_spark/functions/core.py"
+PATCH = "jetro_spark/jql/patch.py"
 
 
 def oracle(*names: str) -> list[str]:
@@ -479,6 +480,33 @@ def count_by''',
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 """,
         [pytest("tests/test_load_tables.py", "-k", "nanosecond")],
+    ),
+    # --- path writes: the one struct writer (jql/patch.py)
+    (
+        "empty_object_sentinel",
+        "deleting the last field of an object leaves the EMPTY object; "
+        "a placeholder field leaks into results",
+        PATCH,
+        """    # deleting the last field leaves the empty object: F.struct()
+    return F.struct(*cols), T.StructType(fields)""",
+        """    if not cols:
+        return F.struct(F.lit(None).alias("__empty")), \\
+            T.StructType([T.StructField("__empty", T.NullType(), True)])
+    return F.struct(*cols), T.StructType(fields)""",
+        [pytest("tests/test_patch.py", "-k",
+                "last_field_leaves_an_empty_object")],
+    ),
+    (
+        "element_write_cast",
+        "an element write that adds or deletes a field null-pads the "
+        "elements by field name; a struct cast fails (or pairs the "
+        "fields by position)",
+        PATCH,
+        """    if names_differ(have, want):
+        return widen_struct(c, have, want)
+    return c.cast(want)""",
+        """    return c.cast(want)""",
+        [pytest("tests/test_patch.py", "-k", "null_pads")],
     ),
     # --- r14: remove/unique val_to_key semantics (r13 verdict item 4)
     (

@@ -121,3 +121,29 @@ def test_flatten_unflatten_keys(spark, j):
                     "address.city": "Tokyo", "address.zip": "123"}
     j2 = Jetro.from_value(spark, {"flat": {"a.b": 1, "a.c": 2, "d": 3}})
     assert j2.collect("$.flat.unflatten_keys()") == {"a": {"b": 1, "c": 2}, "d": 3}
+
+
+def test_del_path_empty_path_is_a_compile_error(j):
+    from jetro_spark.jql.compiler import CompileError
+
+    with pytest.raises(CompileError):
+        j.collect('$.del_path("")')
+
+
+def test_del_path_below_a_non_object_deletes_nothing(spark):
+    doc = {"a": 1, "b": {"c": 2}}
+    jn = Jetro.from_value(spark, doc)
+    assert jn.collect('$.del_path("a.b")') == doc
+    assert jn.collect('$.del_path("q.x")') == doc
+    assert jn.collect('$.del_paths(["a.b", "b.c"])') == {"a": 1, "b": {}}
+
+
+@pytest.mark.parametrize("expr", [
+    '$.user.id.set("x", 1)', '$.user.id.update("x", v => v)',
+    '$.user.id.del_path("x")', '$.user.id.del_paths(["x"])',
+])
+def test_path_writes_refuse_a_non_object_receiver(j, expr):
+    from jetro_spark.functions.objects import ObjError
+
+    with pytest.raises(ObjError):
+        j.collect(expr)

@@ -392,3 +392,70 @@ def test_patch_array_element_on_not_null_schema(spark, ingest, expr, edit):
     else:
         j = Jetro.from_bytes(spark, json.dumps(doc).encode())
     assert j.collect(expr) == want
+
+
+# ------------------------------------------- one writer: deletes and pads
+
+
+@pytest.mark.parametrize("expr", [
+    "patch $ { a.x: DELETE }", "$.a.x.delete()", "$.a.unset(x)",
+])
+def test_deleting_the_last_field_leaves_an_empty_object(J, expr):
+    assert J({"a": {"x": 1}, "b": 2}, expr) == {"a": {}, "b": 2}
+
+
+def test_wildcard_delete_of_the_last_element_field(J):
+    assert J({"s": [{"k": 1}, {"k": 2}]}, "patch $ { s[*].k: DELETE }") == \
+        {"s": [{}, {}]}
+
+
+def test_wildcard_delete_of_a_nested_field(J):
+    doc = {"s": [{"k": 1, "a": {"x": 1, "y": 2}}]}
+    assert J(doc, "patch $ { s[*].a.x: DELETE }") == \
+        {"s": [{"k": 1, "a": {"y": 2}}]}
+
+
+def test_filtered_element_delete_null_pads_the_field(J):
+    # the untouched elements keep the field, so the one static element
+    # type keeps it too: the deleted field reads back as null (README,
+    # known differences)
+    assert J({"s": [{"k": 1}, {"k": 2}]},
+             "patch $ { s[* if k > 1].k: DELETE }") == \
+        {"s": [{"k": 1}, {"k": None}]}
+
+
+def test_filtered_element_field_add_null_pads_the_rest(J):
+    assert J({"s": [{"k": 1, "a": {"x": 1}}, {"k": 2, "a": {"x": 2}}]},
+             "patch $ { s[* if k > 1].a.y: 1 }") == \
+        {"s": [{"k": 1, "a": {"x": 1, "y": None}},
+               {"k": 2, "a": {"x": 2, "y": 1}}]}
+
+
+def test_delete_below_a_missing_field_is_a_no_op(J):
+    assert J({"n": 1}, "patch $ { q.x: DELETE }") == {"n": 1}
+    assert J({"n": 1}, "patch $ { n.x: DELETE }") == {"n": 1}
+
+
+def test_relational_delete_of_the_last_column_agrees(spark, J):
+    from jetro_spark.jql.engine import JetroTables
+
+    expr = "$.t.map(patch @ {g: DELETE})"
+    df = spark.createDataFrame([("a",), ("b",)], "g string")
+    out = JetroTables(spark, {"t": df}).query(expr)
+    rel = [r.asDict(recursive=True) for r in out.collect()]
+    assert rel == J({"t": [{"g": "a"}, {"g": "b"}]}, expr) == [{}, {}]
+
+
+def test_schema_changing_guard_inside_a_lambda_raises_patch_error(J):
+    # the guard reads the lambda's element, which no one-row evaluation
+    # of the document can resolve: both modes refuse it at compile time
+    from jetro_spark.jql.patch import PatchError
+
+    with pytest.raises(PatchError):
+        J({"s": [{"v": 1.0}, {"v": 3.0}]},
+          "$.s.map(patch @ { z: 1 when @.v > 2 })")
+
+
+def test_from_json_inside_a_lambda_raises_compile_error(J):
+    with pytest.raises(CompileError):
+        J({"s": ['{"a": 1}']}, "$.s.map(@.from_json())")
