@@ -31,6 +31,7 @@ import dataclasses
 import functools
 import json
 import os
+import threading
 import warnings
 from collections.abc import Callable
 from decimal import Decimal
@@ -62,6 +63,8 @@ from jetro_spark.jql.compiler import (
 )
 from jetro_spark.jql.parser import parse
 from jetro_spark.localrel import (
+    WarmValue,
+    compile_value,
     compile_warm,
     fresh_execute,
     local_doc_frame,
@@ -447,6 +450,15 @@ def _remember(cache: dict, key, value) -> None:
     cache[key] = value
 
 
+@dataclasses.dataclass(eq=False)
+class _Plan:
+    """A ``Jetro`` handle's cache entry for one expression: the compiled
+    frame and the ``WarmValue`` that ``collect`` builds from it on first
+    use (False: not built yet; None: not buildable for this plan)."""
+    df: DataFrame
+    value: WarmValue | None | bool = False
+
+
 class Jetro:
     """Document-mode handle: ``Jetro.from_bytes(spark, data).collect(expr)``.
     Reference API: jc/lib.rs:354-380 (from_bytes), :477 (collect)."""
@@ -460,8 +472,9 @@ class Jetro:
         # zero Spark jobs (localrel.local_doc_frame)
         self.df = local_doc_frame(spark, wrapped, self.schema)
         self.spark = spark
-        # expr -> compiled DataFrame, or the CompileError it raised
-        self._plan_cache: dict[str, DataFrame | CompileError] = {}
+        # expr -> its compiled plan, or the CompileError it raised
+        self._plan_cache: dict[str, _Plan | CompileError] = {}
+        self._value_lock = threading.Lock()
         # expr -> WarmQuery | None (None = warm path unavailable, use
         # fresh_execute); False sentinel = not yet compiled
         self._warm_cache: dict[str, object] = {}
@@ -500,16 +513,17 @@ class Jetro:
         calls"): deep-search expressions spend 0.5-1.3 s building the
         schema-walk Column tree through py4j — paid once. A CompileError
         is memoized too and raised again. At most ``PLAN_CACHE_MAX``
-        expressions are kept; the oldest goes first."""
-        return self._frame(expr)
+        expressions are kept; the oldest goes first. ``collect`` does not
+        run this frame once its plan has a ``WarmValue``."""
+        return self._plan(expr).df
 
-    def _frame(self, expr: str, node: A.Node | None = None) -> DataFrame:
+    def _plan(self, expr: str, node: A.Node | None = None) -> _Plan:
         plan = self._plan_cache.get(expr)
         if plan is None:
             try:
                 tc = Compiler().compile(parse(expr) if node is None else node,
                                         self._env())
-                plan = _analyzed_select(self.df, tc.col.alias("value"))
+                plan = _Plan(_analyzed_select(self.df, tc.col.alias("value")))
             except CompileError as exc:
                 plan = exc
             _remember(self._plan_cache, expr, plan)
@@ -554,11 +568,20 @@ class Jetro:
     def collect(self, expr: str):
         """Evaluate and return a plain Python value (jetro collect()).
 
-        Reuses the compiled plan that ``frame``/``execute`` memoize, so a
-        repeated expression skips parsing, compilation and analysis and
-        only runs the plan (a handle's document never changes, so the
-        plan stays valid). ``rec(λ)`` expressions are not cached: their
-        fixpoint loop compiles each step against the value before it."""
+        Caches the plan, not the result (a handle's document never
+        changes, so the plan stays valid). The first call per expression
+        compiles it, as ``frame`` does, and builds the plan's
+        ``localrel.WarmValue``: the projection Catalyst's LocalRelation
+        fold evaluates. Every call, the first included, evaluates that
+        whole projection over the document in the JVM — with no new
+        Dataset, optimizer run or physical plan — and converts the row
+        with ``to_python``. Where the handle cannot be built (no classic
+        JVM surface, a plan that is not a Project over the one-row
+        document, a nondeterministic expression, one the fold leaves to
+        later optimizer rules) each call runs the frame's ``first()``
+        instead, with the same values. ``rec(λ)`` expressions are not
+        cached: their fixpoint loop compiles each step against the value
+        before it."""
         node = None
         if expr not in self._plan_cache:
             node = parse(expr)
@@ -580,7 +603,17 @@ class Jetro:
                     value = nxt
                 raise CompileError(
                     "rec: exceeded 10000 iterations without fixpoint")
-        return to_python(self._frame(expr, node).first()["value"])
+        plan = self._plan(expr, node)
+        handle = plan.value
+        if handle is False:
+            # one handle per plan: handles built from one analyzed plan
+            # would share its expression objects across their locks
+            with self._value_lock:
+                if plan.value is False:
+                    plan.value = compile_value(plan.df)
+                handle = plan.value
+        row = plan.df.first() if handle is None else handle.run()
+        return to_python(row["value"])
 
     def _collect_node(self, node: A.Node):
         tc = Compiler().compile(node, self._env())

@@ -35,7 +35,9 @@ Static-schema nuances vs the dynamic reference:
 - An array write that changes only SOME elements (`[n]`, `[* if p]`)
   gives every element one type: the union of the old and new element
   structs, null-padded. A field DELETEd from those elements therefore
-  reads back as null instead of being absent.
+  reads back as null instead of being absent. An unguarded `[*]` write
+  rewrites every element, so its element type is the written one, as
+  under `map`.
 """
 
 from __future__ import annotations
@@ -319,11 +321,13 @@ def _write_wild(comp, col, dt, pred, rest, leaf, env):
         if pred_fn is None:
             return F.array().cast(dt), dt
         return F.filter(col, lambda x: ~pred_fn(x)), dt
-    ndt = _unify_elem(comp, elem, probe[1])
-    if pred_fn is None and names_differ(probe[1], ndt):
-        # every element is rewritten: the fields the write deleted stay
-        # deleted instead of coming back null-padded
+    if pred_fn is None:
+        # every element is rewritten: the new element type is the
+        # written one, as `map` gives it (`xs[*]: 1` over doubles is
+        # [1, 1]; a deleted field stays deleted, not null-padded)
         ndt = _nullable(probe[1])
+    else:
+        ndt = _unify_elem(comp, elem, probe[1])
 
     def tx(x: Column) -> Column:
         nc, nd = _write(comp, x, elem, rest, leaf, env)

@@ -12,6 +12,12 @@ in-process on one thread (jc/lib.rs:477 collect). Table schemas are
 read on the driver too (``parquet_schemas``): from the parquet footers,
 with no schema-inference job.
 
+Repeated queries keep their plan, not their result: ``WarmValue``
+(``Jetro.collect``) and ``WarmQuery`` (``Jetro.execute``) hold a query's
+projection and the document's pinned row, and every call evaluates the
+whole projection again in the JVM without building a new Dataset or
+QueryExecution.
+
 Uses py4j access to Spark-internal classes (stable across Spark 4.x
 classic; absent under Spark Connect); every entry point degrades
 gracefully (see ``has_classic_surface``).
@@ -19,13 +25,17 @@ gracefully (see ``has_classic_surface``).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import threading
+from types import SimpleNamespace
 
-from pyspark.sql import Column, DataFrame
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import _load_from_socket
 
 try:  # py4j ships with classic pyspark; absent under pure Spark Connect
     from py4j.protocol import Py4JError, Py4JJavaError
@@ -57,6 +67,9 @@ def has_classic_surface(spark) -> bool:
 
     - ``local_doc_frame`` → the parse is ``localCheckpoint``ed (queries
       run as regular 1-row distributed jobs — correct, ~40-80 ms/job)
+    - ``compile_value`` → None (``Jetro.collect`` runs the frame's
+      ``first()`` on every call — same values, a new QueryExecution
+      each time)
     - ``compile_warm`` / ``fresh_execute`` → None (``execute()`` times a
       noop-sink materialization and reports -1 rows)
     - the doc-fallback size refusal degrades to warn-only (no plan
@@ -205,6 +218,116 @@ def is_local_plan(df: DataFrame) -> bool:
     except Exception as exc:
         if _surface_missing(exc):
             return False
+        raise
+
+
+def _module(package, name: str):
+    """The instance of Scala ``object name`` in a py4j package view."""
+    return getattr(getattr(package, name + "$"), "MODULE$")
+
+
+@functools.cache
+def _value_surface(jvm) -> SimpleNamespace:
+    """The JVM classes, objects and static methods ``compile_value`` and
+    ``WarmValue`` call, resolved once per gateway (each py4j class
+    lookup is a round trip per package segment), with Spark's Python
+    picklers registered once."""
+    catalyst = jvm.org.apache.spark.sql.catalyst
+    python = jvm.org.apache.spark.api.python
+    evaluate_python = jvm.org.apache.spark.sql.execution.python \
+        .EvaluatePython
+    evaluate_python.registerPicklers()
+    return SimpleNamespace(
+        fold=_module(catalyst.optimizer, "ConvertToLocalRelation"),
+        empty_relation=_module(catalyst.plans.logical, "LocalRelation").apply,
+        project=catalyst.plans.logical.Project,
+        projection=catalyst.expressions.InterpretedMutableProjection,
+        to_java=evaluate_python.toJava,
+        single=jvm.scala.collection.Iterator.single,
+        pickler=python.SerDeUtil.AutoBatchedPickler,
+        serve=python.PythonRDD.serveIterator)
+
+
+_ROWS = BatchedSerializer(CPickleSerializer())
+
+
+class WarmValue:
+    """Plan-once / evaluate-per-call handle for ``Jetro.collect``.
+
+    Holds what ``ConvertToLocalRelation`` folds on every fresh
+    ``first()``: an ``InterpretedMutableProjection`` of the query's
+    project list (the fold's own evaluator), the document's pinned row
+    and the output schema. ``run()`` evaluates the WHOLE projection over
+    the row on every call — the plan is cached, never the result — and
+    ships the row to Python through ``Dataset.collectToPython``'s own
+    chain (``EvaluatePython.toJava`` → ``AutoBatchedPickler`` →
+    ``PythonRDD.serveIterator`` → ``_load_from_socket``), so the
+    returned ``Row`` is the one ``first()`` returns. No call builds a
+    Dataset, runs the optimizer or plans anything.
+
+    Evaluation is serialized per handle: the projection reuses one
+    output row, and interpreted higher-order functions keep their
+    lambda variables in the shared expression tree."""
+
+    def __init__(self, surface, proj, row, schema, binary_as_bytes: bool):
+        self._s = surface
+        self._proj = proj
+        self._row = row
+        self._schema = schema
+        self._binary_as_bytes = binary_as_bytes
+        self._lock = threading.Lock()
+
+    def run(self) -> Row:
+        """Evaluate the projection over the pinned row; the result row."""
+        s = self._s
+        with self._lock:
+            # toJava copies the reused output row into fresh objects
+            # before the next evaluation may overwrite it
+            out = s.to_java(self._proj.apply(self._row), self._schema,
+                            self._binary_as_bytes)
+        sock = s.serve(s.pickler(s.single(out)), "serve-DataFrame")
+        (row,) = _load_from_socket(sock, _ROWS)
+        return row
+
+
+def compile_value(df: DataFrame) -> WarmValue | None:
+    """Build the ``WarmValue`` of a Project-over-LocalRelation frame from
+    the analyzed plan it already holds. The optimizer's own Finish
+    Analysis rule gives the plan ``ConvertToLocalRelation`` folds first;
+    its project list becomes the handle's projection. No optimizer batch
+    runs, nothing is evaluated and no conf is set.
+
+    Returns None — ``collect`` keeps ``first()`` — when the JVM surface
+    is missing (Spark Connect), the plan is not a Project over a one-row
+    LocalRelation, an expression is nondeterministic (the fold would
+    initialize those per query), or the fold refuses the project list:
+    it holds an expression that only a later optimizer rule makes
+    evaluable (``UpdateFields`` from ``withField``/``dropFields``,
+    ``With``)."""
+    try:
+        jvm, jspark = _jvm_bits(df.sparkSession)
+        s = _value_surface(jvm)
+        state = jspark.sessionState()
+        plan = state.optimizer().FinishAnalysis().apply(
+            df._jdf.queryExecution().analyzed())  # type: ignore[attr-defined]
+        if plan.nodeName() != "Project" or not plan.deterministic():
+            return None
+        child = plan.child()
+        if child.nodeName() != "LocalRelation":
+            return None
+        rows = child.data()
+        if rows.size() != 1:
+            return None
+        exprs, attrs = plan.projectList(), child.output()
+        # the fold's own test, run over zero rows so nothing is evaluated
+        probe = s.project(exprs, s.empty_relation(attrs))
+        if s.fold.apply(probe).nodeName() != "LocalRelation":
+            return None
+        return WarmValue(s, s.projection(exprs, attrs), rows.head(),
+                         plan.schema(), state.conf().pysparkBinaryAsBytes())
+    except Exception as exc:
+        if _surface_missing(exc):
+            return None
         raise
 
 

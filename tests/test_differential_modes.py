@@ -293,10 +293,11 @@ def _rel_result(out_df):
         d = {c: _canon_cell(r[c]) for c in vis}
         if len(vis) == 1:
             out.append(d[vis[0]])
-        elif all(v is None for v in d.values()):
+        elif d and all(v is None for v in d.values()):
             # relational repr of the scalar-Null result (first/last/nth
             # on an empty pipeline): a DataFrame cannot hold a null ROW,
-            # so it appears as an all-null row (engine._pad_single_null)
+            # so it appears as an all-null row (engine._pad_single_null).
+            # A row with no visible columns is the empty object {}.
             out.append(None)
         else:
             out.append(d)

@@ -5,9 +5,15 @@ should evaluate Project-shaped doc queries eagerly on the driver.
 
 from __future__ import annotations
 
-import pytest
+import json
+import threading
 
-from jetro_spark.jql.engine import Jetro
+import pytest
+import test_examples_parity
+import test_regression_parity
+from pyspark.sql import functions as F
+
+from jetro_spark.jql.engine import Jetro, to_python
 from jetro_spark.localrel import fresh_execute, is_local_plan
 
 
@@ -253,3 +259,124 @@ def test_eval_local_project_rejects_non_project(spark):
     # an aggregate over a table scan is not Project-over-OneRow/Local
     df = spark.range(10).groupBy().count()
     assert eval_local_project(df) is None
+
+
+# ------------------------------------------ warm collect (WarmValue)
+
+
+def _parity_cases() -> list[tuple[dict, str]]:
+    """Every non-xfail (document, expression) of the two parity suites."""
+    reg = test_regression_parity
+    cases = [(test_examples_parity.WORLD, e)
+             for e, _ in test_examples_parity.CASES]
+    cases += [(json.loads(reg.BOOKS_JSON if doc == "BOOKS" else doc), e)
+              for doc, e, _, xfail in reg.CASES if not xfail]
+    return cases
+
+
+_PARITY = _parity_cases()
+_PARITY_ENGINES: dict[str, Jetro] = {}
+
+
+@pytest.mark.parametrize("doc,expr", _PARITY,
+                         ids=[f"{i}_{e[:45]}" for i, (_, e)
+                              in enumerate(_PARITY)])
+def test_warm_collect_matches_first(spark, doc, expr):
+    key = json.dumps(doc)
+    if key not in _PARITY_ENGINES:
+        _PARITY_ENGINES[key] = Jetro.from_value(spark, doc)
+    jt = _PARITY_ENGINES[key]
+    got = jt.collect(expr)
+    assert jt._plan_cache[expr].value is not None  # the warm path ran
+    # json.dumps also tells 1 from 1.0 and compares object key order
+    assert json.dumps(got) == json.dumps(
+        to_python(jt.frame(expr).first()["value"]))
+
+
+@pytest.mark.parametrize("build", [
+    # a nondeterministic projection: the fold would initialize it per query
+    lambda jt: jt.df.select((F.rand() * 10).alias("value")),
+    # not a Project over the document
+    lambda jt: jt.df.groupBy().count(),
+], ids=["nondeterministic", "aggregate"])
+def test_value_handle_refuses_what_the_fold_does_not_evaluate(spark, build):
+    from jetro_spark.localrel import compile_value
+
+    assert compile_value(build(Jetro.from_value(spark, DOC))) is None
+
+
+def test_collect_keeps_first_where_there_is_no_value_handle(spark):
+    # explode rebuilds elements with withField: its UpdateFields is
+    # evaluable only once an optimizer rule rewrites it, so the fold
+    # refuses the project list and collect runs first()
+    jt = Jetro.from_value(spark, DOC)
+    expr = "$.orders.take(2).map({id, tags: [status]}).explode(tags)"
+    want = [{"id": 1, "tags": "shipped"}, {"id": 2, "tags": "new"}]
+    assert jt.collect(expr) == want
+    assert jt._plan_cache[expr].value is None
+    assert jt.collect(expr) == want
+
+
+def test_collect_without_classic_surface_runs_first(spark, monkeypatch):
+    exprs = ["$.orders.filter(total > 500).map(id)",
+             "$.orders.map({id, status}).take(2)",
+             "patch $ { orders[*].total: @ * 2 } | @.orders.map(total).sum()"]
+    want = [Jetro.from_value(spark, DOC).collect(e) for e in exprs]
+    _break_jvm_surface(monkeypatch)
+    jt = Jetro.from_value(spark, DOC)
+    firsts = {"n": 0}
+    first = type(jt.df).first
+
+    def counted(self):
+        firsts["n"] += 1
+        return first(self)
+
+    monkeypatch.setattr(type(jt.df), "first", counted)
+    for n in (1, 2):  # the failed build is remembered, not retried
+        assert [jt.collect(e) for e in exprs] == want
+        assert firsts["n"] == n * len(exprs)
+    assert all(jt._plan_cache[e].value is None for e in exprs)
+
+
+def test_threads_share_one_warm_value(spark, monkeypatch):
+    # higher-order functions keep their lambda variables in the shared
+    # expression tree: the handle's lock keeps concurrent evaluations
+    # from reading each other's elements, and the threads' first calls
+    # build one handle between them
+    import sys
+
+    import jetro_spark.jql.engine as engine
+
+    builds = {"n": 0}
+    compile_value = engine.compile_value
+
+    def counted(df):
+        builds["n"] += 1
+        return compile_value(df)
+
+    monkeypatch.setattr(engine, "compile_value", counted)
+    jt = Jetro.from_value(spark, DOC)
+    expr = ("$.orders.filter(total > 500)"
+            ".map({id, status, double: total * 2})")
+    want = to_python(jt.frame(expr).first()["value"])
+    n_threads, calls = 6, 10  # more threads than a 4-core machine has cores
+    start = threading.Barrier(n_threads)
+    got: list = []
+
+    def work():
+        start.wait(timeout=60)
+        got.extend(jt.collect(expr) for _ in range(calls))
+
+    threads = [threading.Thread(target=work) for _ in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got == [want] * (n_threads * calls)
+    assert builds["n"] == 1

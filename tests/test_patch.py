@@ -459,3 +459,19 @@ def test_schema_changing_guard_inside_a_lambda_raises_patch_error(J):
 def test_from_json_inside_a_lambda_raises_compile_error(J):
     with pytest.raises(CompileError):
         J({"s": ['{"a": 1}']}, "$.s.map(@.from_json())")
+
+
+@pytest.mark.parametrize("doc,expr,mapped,want", [
+    ({"xs": [1.5, 2.5]}, "patch $ { xs[*]: 1 } | @.xs", "$.xs.map(1)",
+     [1, 1]),
+    ({"s": [{"v": 1.5, "k": "a"}, {"v": 2.5, "k": "b"}]},
+     "patch $ { s[*].v: 1 } | @.s", "$.s.map({v: 1, k: k})",
+     [{"v": 1, "k": "a"}, {"v": 1, "k": "b"}]),
+], ids=["element", "element_field"])
+def test_unguarded_wildcard_write_keeps_the_written_type(J, doc, expr,
+                                                         mapped, want):
+    # every element is rewritten, so the old element type does not
+    # survive: 1 stays an integer, as under map (json.dumps tells 1
+    # from 1.0, which == does not)
+    assert json.dumps(J(doc, expr)) == json.dumps(J(doc, mapped)) \
+        == json.dumps(want)

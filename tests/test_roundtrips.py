@@ -3,7 +3,9 @@
 Query building is dominated by py4j calls, not Spark work: these tests
 pin the settings and caches that keep those calls few — call-site
 capture off in ``get_spark``, plan reuse in ``Jetro.collect``, and one
-projection for a map under a live sort in relational mode."""
+projection for a map under a live sort in relational mode — and that a
+repeated ``Jetro.collect`` evaluates its cached plan with no Spark
+action."""
 
 from __future__ import annotations
 
@@ -97,6 +99,53 @@ def test_repeated_collect_reuses_the_plan(spark, compiles, expr, want):
     # and the plan is the one frame() hands out
     assert j.frame(expr) is j.frame(expr)
     assert compiles["n"] == 0
+
+
+def test_repeated_collect_evaluates_without_a_spark_action(spark,
+                                                          monkeypatch):
+    from jetro_spark.localrel import WarmValue
+
+    j = Jetro.from_value(spark, DOC)
+    expr = "$.orders.filter(total > 20).map(id)"
+    assert j.collect(expr) == [2]
+    runs = {"n": 0}
+    run = WarmValue.run
+
+    def counted(self):
+        runs["n"] += 1
+        return run(self)
+
+    def first(self):
+        raise AssertionError("a warm collect ran DataFrame.first")
+
+    monkeypatch.setattr(WarmValue, "run", counted)
+    monkeypatch.setattr(type(j.df), "first", first)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = len(tracker.getJobIdsForGroup(None) or [])
+    for n in range(1, 4):
+        assert j.collect(expr) == [2]
+        # the handle evaluated the query again: the plan is cached, the
+        # result is not
+        assert runs["n"] == n
+    assert len(tracker.getJobIdsForGroup(None) or []) == jobs
+
+
+@pytest.mark.parametrize("expr", [
+    "$.orders.filter(total > 20).map(id)",
+    "patch $ { orders[*].total: @ * 2 } | @.orders.map(total)",
+], ids=["read", "patch"])
+def test_repeated_collect_round_trips(spark, py4j_calls, expr):
+    # 9 calls measured: the projection's apply, toJava, the one-row
+    # iterator, the pickler, serveIterator and four reads of the socket
+    # address. A first()-based collect made 8 (limit, collectToPython,
+    # two call-site updates, the same four reads): what a hit saves is
+    # the JVM-side QueryExecution work behind those calls (analysis,
+    # every optimizer batch, physical planning), not round trips.
+    j = Jetro.from_value(spark, DOC)
+    j.collect(expr)
+    py4j_calls["n"] = 0
+    j.collect(expr)
+    assert py4j_calls["n"] == 9
 
 
 def test_repeated_collect_raises_the_compile_error_again(spark, compiles):
